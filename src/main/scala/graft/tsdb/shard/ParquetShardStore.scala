@@ -1,15 +1,19 @@
 package graft.tsdb.shard
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.metadata.{CompressionCodecName, FileMetaData}
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.io.api.{Binary, RecordConsumer}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type, Types}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.ChunkDecode
 import graft.tsdb.{ChunkCodec, Matcher}
@@ -35,6 +39,15 @@ import ParquetShardSchema._
   *
   * READ is Spark-declarative end to end and keeps the reference's IO
   * shape at 100 TB:
+  *   0. planning is footer reads, not Spark jobs: shard 0's labels footer
+  *      gives the [[ShardMeta]] and the labels schema, its chunks
+  *      footer the chunks schema, and the glob reads take those
+  *      schemas instead of inferring them — building any read frame
+  *      (`meta`, `labelNames`, `series`, every `select*`) starts zero
+  *      Spark jobs. File listing starts no job either, up to Spark's
+  *      parallel-listing threshold
+  *      (`spark.sql.sources.parallelPartitionDiscovery.threshold`,
+  *      32 paths by default);
   *   1. matchers filter the SMALL labels file — predicates push into
   *      its parquet scan (`PushedFilters` on `l_*` columns);
   *   2. survivors broadcast-join the chunks scan on (shard,
@@ -391,32 +404,67 @@ object ParquetShardStore {
   // read
   // ---------------------------------------------------------------
 
-  /** Footer metadata — one footer read, metadata-sized
-    * (FromLabelsFile, schema_builder.go:58-76). */
-  def meta(spark: SparkSession, dir: String): ShardMeta = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(s"$dir/0.labels.parquet"), conf))
-    try {
-      val kv = reader.getFooter.getFileMetaData.getKeyValueMetaData
+  /** Shard 0's footers, read without a Spark job (FromLabelsFile,
+    * schema_builder.go:58-76): the labels footer gives the
+    * [[ShardMeta]] and the labels schema, the chunks footer — opened
+    * only when a plan reads the chunks files — the chunks schema.
+    * Shard 0 is the file Spark's own inference would open: the first
+    * of the sorted glob.
+    */
+  private[graft] final class ShardFooters(spark: SparkSession, val dir: String) {
+    private val labelsFooter = footer(spark, s"$dir/0.labels.parquet")
+    lazy val meta: ShardMeta = {
+      val kv = labelsFooter.getKeyValueMetaData
       ShardMeta(kv.get(MinTMd).toLong, kv.get(MaxTMd).toLong,
         kv.get(DataColSizeMd).toLong,
         Option(kv.get(FamilyMaskMd)).map(_.toInt))
-    } finally reader.close()
+    }
+    lazy val labelsSchema: StructType = sparkSchema(spark, labelsFooter)
+    /** Label names recovered from the self-describing `l_*` columns. */
+    lazy val labelNames: Seq[String] =
+      labelsSchema.fieldNames.toSeq.flatMap(extractLabelFromColumn).sorted
+    lazy val chunksSchema: StructType =
+      sparkSchema(spark, footer(spark, s"$dir/0.chunks.parquet"))
+
+    def labels: DataFrame = scan("labels", labelsSchema)
+    def chunks: DataFrame = scan("chunks", chunksSchema)
+    private def scan(kind: String, schema: StructType): DataFrame =
+      spark.read.schema(schema).parquet(s"$dir/*.$kind.parquet")
   }
+
+  /** One file's footer, row-group metadata skipped. */
+  private def footer(spark: SparkSession, path: String): FileMetaData = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(path), conf),
+      HadoopReadOptions.builder(conf)
+        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+    try reader.getFooter.getFileMetaData finally reader.close()
+  }
+
+  /** The schema Spark's parquet inference derives from a footer: the
+    * same converter under the session conf, every field nullable as
+    * the file source makes it. */
+  private def sparkSchema(spark: SparkSession, md: FileMetaData): StructType =
+    StructType(new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+      .convert(md.getSchema).fields.map(_.copy(nullable = true)))
+
+  /** Footer metadata — one footer read, metadata-sized
+    * (FromLabelsFile, schema_builder.go:58-76). */
+  def meta(spark: SparkSession, dir: String): ShardMeta =
+    new ShardFooters(spark, dir).meta
 
   /** Label names recovered from the labels file's self-describing
     * schema — how FromLabelsFile rebuilds the label universe. */
   def labelNames(spark: SparkSession, dir: String): Seq[String] =
-    spark.read.parquet(s"$dir/*.labels.parquet").schema.fieldNames.toSeq
-      .flatMap(extractLabelFromColumn).sorted
+    new ShardFooters(spark, dir).labelNames
 
-  private def withShardRow(df: DataFrame, suffix: String): DataFrame =
-    df.withColumn("_shard", regexp_extract(
-        col("_metadata.file_name"), s"^(\\d+)\\.$suffix\\.parquet$$", 1)
-        .cast("int"))
-      .withColumn("_row", col("_metadata.row_index"))
+  /** `_shard` (the number in the file name) and `_row` (the row
+    * index in that file): the key that aligns the dual files. */
+  private def shardRow(kind: String): Seq[org.apache.spark.sql.Column] = Seq(
+    regexp_extract(col("_metadata.file_name"),
+      s"^(\\d+)\\.$kind\\.parquet$$", 1).cast("int").as("_shard"),
+    col("_metadata.row_index").as("_row"))
 
   /** Samples of series matching `matchers` in `[mintMs, maxtMs)` —
     * output: one column per label (nulls where the series lacks it) +
@@ -426,7 +474,7 @@ object ParquetShardStore {
   def select(spark: SparkSession, dir: String, mintMs: Long, maxtMs: Long,
       matchers: Seq[Matcher] = Nil, tsCol: String = "ts",
       valueCol: String = "value"): DataFrame =
-    selectImpl(spark, dir, mintMs, maxtMs, matchers,
+    selectImpl(new ShardFooters(spark, dir), mintMs, maxtMs, matchers,
       xorDecode(mintMs, maxtMs), Seq(col("_s.value").as(valueCol)), tsCol)
 
   private def xorDecode(mintMs: Long, maxtMs: Long)
@@ -451,7 +499,7 @@ object ParquetShardStore {
   def selectHist(spark: SparkSession, dir: String, mintMs: Long,
       maxtMs: Long, matchers: Seq[Matcher] = Nil,
       tsCol: String = "ts"): DataFrame =
-    selectImpl(spark, dir, mintMs, maxtMs, matchers,
+    selectImpl(new ShardFooters(spark, dir), mintMs, maxtMs, matchers,
       histDecode(mintMs, maxtMs), histOutput, tsCol)
 
   private def histDecode(mintMs: Long, maxtMs: Long)
@@ -466,7 +514,7 @@ object ParquetShardStore {
   def selectFloatHist(spark: SparkSession, dir: String, mintMs: Long,
       maxtMs: Long, matchers: Seq[Matcher] = Nil,
       tsCol: String = "ts"): DataFrame =
-    selectImpl(spark, dir, mintMs, maxtMs, matchers,
+    selectImpl(new ShardFooters(spark, dir), mintMs, maxtMs, matchers,
       floatHistDecode(mintMs, maxtMs), histOutput, tsCol)
 
   private def floatHistDecode(mintMs: Long, maxtMs: Long)
@@ -496,9 +544,9 @@ object ParquetShardStore {
     */
   def series(spark: SparkSession, dir: String,
       matchers: Seq[Matcher] = Nil): DataFrame = {
-    val names = labelNames(spark, dir)
-    val labels = spark.read.parquet(s"$dir/*.labels.parquet")
-      .select(names.map(n => col(labelToColumn(n)).as(n)): _*)
+    val f = new ShardFooters(spark, dir)
+    val labels = f.labels
+      .select(f.labelNames.map(n => col(labelToColumn(n)).as(n)): _*)
     Matcher.compile(matchers).map(labels.filter).getOrElse(labels)
   }
 
@@ -515,16 +563,14 @@ object ParquetShardStore {
       colDurationMs: Long = DefaultColDurationMs,
       samplesPerChunk: Int = 120, shards: Int = 1,
       bloomFilterLabels: Seq[String] = Nil): Unit = {
-    require(dirs.nonEmpty, "need at least one shard directory")
-    val names = labelNames(spark, dirs.head)
-    require(dirs.forall(d => labelNames(spark, d) == names),
-      "all inputs must share one label universe (the reference merges " +
-        "blocks of one tenant/schema)")
-    dirs.foreach(assertSingleFamily(spark, _,
+    val inputs = shardInputs(spark, dirs)
+    inputs.foreach(assertSingleFamily(_,
       1 << graft.tsdb.ChunkCodec.EncXor.toInt, "XOR (float-sample)"))
-    val scans = dirs.map { d =>
-      val m = meta(spark, d)
-      select(spark, d, m.mintMs, m.maxtMs + 1)
+    val names = inputs.head.labelNames
+    val scans = inputs.map { f =>
+      val (lo, hi) = fullRange(f)
+      selectImpl(f, lo, hi, Nil, xorDecode(lo, hi),
+        Seq(col("_s.value").as("value")), "ts")
     }
     // materialize the merge ONCE: write() consumes its input for the
     // bounds aggregation, the labels pass and the chunk encode — each
@@ -538,6 +584,23 @@ object ParquetShardStore {
       samplesPerChunk, shards, bloomFilterLabels = bloomFilterLabels)
   }
 
+  /** One footer read per input dir of a merge, shared by the label-
+    * universe check, the family guard and the scan plans. */
+  private def shardInputs(spark: SparkSession, dirs: Seq[String])
+      : Seq[ShardFooters] = {
+    require(dirs.nonEmpty, "need at least one shard directory")
+    val inputs = dirs.map(new ShardFooters(spark, _))
+    val names = inputs.head.labelNames
+    require(inputs.forall(_.labelNames == names),
+      "all inputs must share one label universe (the reference merges " +
+        "blocks of one tenant/schema)")
+    inputs
+  }
+
+  /** A dir's whole footer range as a half-open select window. */
+  private def fullRange(f: ShardFooters): (Long, Long) =
+    (f.meta.mintMs, f.meta.maxtMs + 1)
+
   /** Loud-refusal guard for the family-specific compactors: a
     * reference-written cell may MIX chunkenc families (a series that
     * changed sample type — one appender per family per column,
@@ -548,17 +611,16 @@ object ParquetShardStore {
     * header-walk aggregation over the in-range cells (bodies never
     * parsed).
     */
-  private def assertSingleFamily(spark: SparkSession, dir: String,
+  private def assertSingleFamily(f: ShardFooters,
       allowedMask: Int, what: String): Unit = {
-    val m = meta(spark, dir)
     // graft-written shards record the writer's family bitmask in the
     // footer — the guard is then one metadata read. The data walk
     // below only runs for shards WITHOUT the key (reference-written,
     // or pre-mask graft shards), whose cells may genuinely mix
     // families.
-    val got = m.familyMask.getOrElse {
-      val (joined, dataCols, _, _) =
-        pruned(spark, dir, m.mintMs, m.maxtMs + 1, Nil)
+    val got = f.meta.familyMask.getOrElse {
+      val (lo, hi) = fullRange(f)
+      val (joined, dataCols, _, _) = pruned(f, lo, hi, Nil)
       if (dataCols.isEmpty) return
       import graft.functions.ChunkFamilies.families
       val maskCol = dataCols
@@ -570,7 +632,7 @@ object ParquetShardStore {
     }
     if ((got & ~allowedMask) != 0)
       throw new IllegalArgumentException(
-        s"shard dir $dir holds chunkenc families beyond the $what " +
+        s"shard dir ${f.dir} holds chunkenc families beyond the $what " +
           s"merge's (family bitmask $got, allowed $allowedMask): a " +
           "family-specific merge would silently drop the foreign " +
           "frames - merge one chunkenc family at a time")
@@ -591,17 +653,14 @@ object ParquetShardStore {
       samplesPerChunk: Int = 120, shards: Int = 1,
       bloomFilterLabels: Seq[String] = Nil,
       gauge: Boolean = false): Unit = {
-    require(dirs.nonEmpty, "need at least one shard directory")
-    val names = labelNames(spark, dirs.head)
-    require(dirs.forall(d => labelNames(spark, d) == names),
-      "all inputs must share one label universe (the reference merges " +
-        "blocks of one tenant/schema)")
-    dirs.foreach(assertSingleFamily(spark, _,
+    val inputs = shardInputs(spark, dirs)
+    inputs.foreach(assertSingleFamily(_,
       1 << graft.tsdb.HistChunkCodec.EncHistogram.toInt,
       "integer-histogram"))
-    val scans = dirs.zipWithIndex.map { case (d, pri) =>
-      val m = meta(spark, d)
-      selectHist(spark, d, m.mintMs, m.maxtMs + 1)
+    val names = inputs.head.labelNames
+    val scans = inputs.zipWithIndex.map { case (f, pri) =>
+      val (lo, hi) = fullRange(f)
+      selectImpl(f, lo, hi, Nil, histDecode(lo, hi), histOutput, "ts")
         .withColumn("_pri", lit(pri))
     }
     val valueCols = Seq("zero_count", "pos_idx", "pos_counts",
@@ -650,11 +709,12 @@ object ParquetShardStore {
       maxtMs: Long, matchers: Seq[Matcher], chunkBytesQuota: Long,
       tsCol: String = "ts", valueCol: String = "value"): DataFrame = {
     // ONE pruned frame serves the quota aggregation AND the select:
-    // pruned() costs a footer read, a labels-glob schema inference
-    // and the matcher compile - paying it twice doubled the
-    // metadata IO of every strict select (ChunkStore.selectStrict,
-    // the declared same-contract sibling, already shared it)
-    val pr = pruned(spark, dir, mintMs, maxtMs, matchers)
+    // pruned() costs two footer reads and the matcher
+    // compile - paying it twice doubled the metadata IO of every
+    // strict select (ChunkStore.selectStrict, the declared
+    // same-contract sibling, already shared it). The quota
+    // aggregation is the only Spark work before the caller's action.
+    val pr = pruned(new ShardFooters(spark, dir), mintMs, maxtMs, matchers)
     enforceChunkBytesQuotaOn(pr, chunkBytesQuota)
     selectImplFrom(pr, mintMs, maxtMs,
       xorDecode(mintMs, maxtMs), Seq(col("_s.value").as(valueCol)), tsCol)
@@ -667,7 +727,7 @@ object ParquetShardStore {
   def selectHistStrict(spark: SparkSession, dir: String, mintMs: Long,
       maxtMs: Long, matchers: Seq[Matcher], chunkBytesQuota: Long,
       tsCol: String = "ts"): DataFrame = {
-    val pr = pruned(spark, dir, mintMs, maxtMs, matchers)
+    val pr = pruned(new ShardFooters(spark, dir), mintMs, maxtMs, matchers)
     enforceChunkBytesQuotaOn(pr, chunkBytesQuota)
     selectImplFrom(pr, mintMs, maxtMs,
       histDecode(mintMs, maxtMs), histOutput, tsCol)
@@ -678,7 +738,7 @@ object ParquetShardStore {
   def selectFloatHistStrict(spark: SparkSession, dir: String, mintMs: Long,
       maxtMs: Long, matchers: Seq[Matcher], chunkBytesQuota: Long,
       tsCol: String = "ts"): DataFrame = {
-    val pr = pruned(spark, dir, mintMs, maxtMs, matchers)
+    val pr = pruned(new ShardFooters(spark, dir), mintMs, maxtMs, matchers)
     enforceChunkBytesQuotaOn(pr, chunkBytesQuota)
     selectImplFrom(pr, mintMs, maxtMs,
       floatHistDecode(mintMs, maxtMs), histOutput, tsCol)
@@ -703,18 +763,15 @@ object ParquetShardStore {
     * window → data-column pruning, and the row-index broadcast join.
     * Nothing is decoded yet.
     */
-  private def pruned(spark: SparkSession, dir: String, mintMs: Long,
+  private def pruned(f: ShardFooters, mintMs: Long,
       maxtMs: Long, matchers: Seq[Matcher])
       : (DataFrame, Seq[String], Seq[String], Boolean) = {
     require(maxtMs > mintMs, s"empty range [$mintMs, $maxtMs)")
-    val m = meta(spark, dir)
-    val names = labelNames(spark, dir)
+    val m = f.meta
+    val names = f.labelNames
 
-    val labelsRaw = withShardRow(
-      spark.read.parquet(s"$dir/*.labels.parquet"), "labels")
-    val labels = labelsRaw.select(
-      (names.map(n => col(labelToColumn(n)).as(n)) ++
-        Seq(col("_shard"), col("_row"))): _*)
+    val labels = f.labels.select(
+      (names.map(n => col(labelToColumn(n)).as(n)) ++ shardRow("labels")): _*)
     val matched = Matcher.compile(matchers)
       .map(labels.filter).getOrElse(labels)
 
@@ -731,20 +788,19 @@ object ParquetShardStore {
     val overlaps = mintMs <= m.maxtMs && maxtMs > m.mintMs && lo <= hi
     val dataCols = if (overlaps) (lo to hi).map(dataColumn) else Seq(dataColumn(0))
 
-    val chunks = withShardRow(
-        spark.read.parquet(s"$dir/*.chunks.parquet"), "chunks")
-      .select((dataCols.map(col) ++ Seq(col("_shard"), col("_row"))): _*)
+    val chunks = f.chunks
+      .select((dataCols.map(col) ++ shardRow("chunks")): _*)
 
     (chunks.join(broadcast(matched), Seq("_shard", "_row"))
       .filter(lit(overlaps)), dataCols, names, overlaps)
   }
 
-  private def selectImpl(spark: SparkSession, dir: String, mintMs: Long,
+  private def selectImpl(f: ShardFooters, mintMs: Long,
       maxtMs: Long, matchers: Seq[Matcher],
       decode: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
       sampleOutput: Seq[org.apache.spark.sql.Column],
       tsCol: String): DataFrame =
-    selectImplFrom(pruned(spark, dir, mintMs, maxtMs, matchers),
+    selectImplFrom(pruned(f, mintMs, maxtMs, matchers),
       mintMs, maxtMs, decode, sampleOutput, tsCol)
 
   private def selectImplFrom(
