@@ -5,7 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main: times every registered query at the given scale
   * factor and prints ONE JSON line the driver collects into
   * BENCH_r{N}.json. The same line is also written verbatim to
-  * `bench_out.json` in the working directory, and a compact (<1 KB)
+  * `bench_out_<cpus>c.json` in the working directory (one file per
+  * core count, so an 8-core run never overwrites a 32-core run's
+  * per-query map), and a compact (<1 KB)
   * summary line prints LAST, so both a whole-stdout line scan and a
   * bounded tail capture can recover the results (rounds 1–12 lost
   * the line to sbt's "[info] " prefix + tail truncation).
@@ -149,10 +151,15 @@ object Bench {
       None
   }
 
+  /** The full result line's file, named per core count
+    * (`SPARK_GRAFT_CPUS`, the run's `local[N]`). */
+  private def benchOutFile: String =
+    s"bench_out_${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}c.json"
+
   /** Emit the results: the full one-line JSON (the 12-round stdout
     * contract, unchanged) plus two robustness channels the r12
     * verdict asked for — the same line written verbatim to
-    * `bench_out.json` in the working directory, and a compact
+    * [[benchOutFile]] in the working directory, and a compact
     * (<1 KB) summary line printed LAST so a bounded stdout-tail
     * capture always contains one complete parseable JSON line (the
     * full line is ~6 KB and every driver tail in rounds 1–12
@@ -164,13 +171,13 @@ object Bench {
     println(fullLine)
     // child JVMs (runChild) share the parent's cwd: they print their
     // one-liner (the parent regex-scrapes it) but must not clobber
-    // the parent run's bench_out.json
+    // the parent run's result file
     if (!sys.env.get("SPARK_GRAFT_BENCH_CHILD").contains("1")) {
       try java.nio.file.Files.write(
-        java.nio.file.Paths.get("bench_out.json"),
+        java.nio.file.Paths.get(benchOutFile),
         (fullLine + "\n").getBytes("UTF-8"))
       catch { case t: Throwable =>
-        System.err.println(s"[bench] bench_out.json write failed: $t") }
+        System.err.println(s"[bench] $benchOutFile write failed: $t") }
       println(compactMid)
     }
   }
@@ -187,7 +194,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     emitResult(
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"errors":$errors,"passes":$passes,"isolated":true,"sf":"$sfDir"}""",
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"errors":$errors,"passes":$passes,"isolated":true,"queries_file":"bench_out.json","sf":"$sfDir"}""")
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"errors":$errors,"passes":$passes,"isolated":true,"queries_file":"$benchOutFile","sf":"$sfDir"}""")
   }
 
   def main(args: Array[String]): Unit = {
@@ -524,6 +531,6 @@ object Bench {
       .mkString(""","phase_sec":{""", ",", "}")
     emitResult(
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"errors":$errors,"passes":$passes,"light_passes":$lightPasses,"wall_sec":$wallSec%.1f$phaseJson$runBand$isoJson$pinnedJson$sf1Json$sf3xJson,"sf":"$sfDir"}""",
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"errors":$errors,"passes":$passes,"wall_sec":$wallSec%.1f$runBand,"queries_file":"bench_out.json","sf":"$sfDir"}""")
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"errors":$errors,"passes":$passes,"wall_sec":$wallSec%.1f$runBand,"queries_file":"$benchOutFile","sf":"$sfDir"}""")
   }
 }

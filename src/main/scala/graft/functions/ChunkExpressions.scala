@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, RowOrdering, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, TypeUtils}
 import org.apache.spark.sql.types._
 
 import graft.tsdb.{ChunkCodec, HistChunkCodec}
@@ -340,4 +341,114 @@ object ChunkFamilies {
   import org.apache.spark.sql.graft.ColumnBridge
   def families(blob: Column): Column =
     ColumnBridge.column(ChunkFamilies(ColumnBridge.expression(blob)))
+}
+
+/** `merge_sample_runs(runs)`: k-way last-writer-wins merge of the
+  * decoded sample arrays ("runs") of ONE series — the series-grain
+  * kernel of shard compaction (the reference's chunk-series merge,
+  * convert/merge.go). `runs` is `array<struct<pri, samples>>`:
+  * `pri` any orderable priority, `samples` an array of sample structs
+  * whose field 0 is the ms timestamp (long), sorted by it. The
+  * sample struct is otherwise opaque, so XOR and histogram samples
+  * share the kernel. Output: the merged samples, sorted by ts, exactly
+  * one per distinct ts:
+  *   - the run with the HIGHEST `pri` holding that ts wins;
+  *   - within the winning run, its LAST sample at that ts (in the
+  *     run's stored order) wins.
+  * Null runs and null sample arrays contribute nothing; a run whose
+  * timestamps decrease throws (a merge of unsorted input would
+  * silently mis-order the output).
+  */
+case class MergeSampleRuns(child: Expression) extends UnaryExpression {
+
+  private def runType: StructType =
+    child.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
+  private def sampleType: StructType =
+    runType(1).dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StructType(Array(pri, StructField(_, ArrayType(
+        StructType(fs), _), _, _))), _)
+        if RowOrdering.isOrderable(pri.dataType) && fs.nonEmpty &&
+          fs(0).dataType == LongType =>
+      TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      "merge_sample_runs expects array<struct<pri: orderable, samples: " +
+        s"array<struct<ts: bigint, ...>>>>, got ${t.catalogString}")
+  }
+
+  override def dataType: DataType = ArrayType(sampleType, containsNull = false)
+
+  @transient private lazy val priOrdering =
+    TypeUtils.getInterpretedOrdering(runType(0).dataType)
+
+  override def nullSafeEval(runs: Any): Any =
+    SampleRuns.merge(runs.asInstanceOf[ArrayData], priOrdering,
+      runType(0).dataType, sampleType.length)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ord = ctx.addReferenceObj("priOrdering", priOrdering, "scala.math.Ordering")
+    val priType = ctx.addReferenceObj("priType", runType(0).dataType,
+      "org.apache.spark.sql.types.DataType")
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.SampleRuns.merge($c, $ord, $priType, ${sampleType.length});")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+
+  override def prettyName: String = "merge_sample_runs"
+}
+
+/** The [[MergeSampleRuns]] kernel, static for the generated code. */
+object SampleRuns {
+  def merge(runs: ArrayData, priOrdering: Ordering[Any], priType: DataType,
+      sampleArity: Int): ArrayData = {
+    // ascending priority: a later run overrides an earlier one
+    val samples = (0 until runs.numElements()).iterator
+      .filterNot(runs.isNullAt)
+      .map(runs.getStruct(_, 2))
+      .filterNot(_.isNullAt(1))
+      .toArray
+      .sortBy(_.get(0, priType))(priOrdering)
+      .map { run =>
+        val a = run.getArray(1)
+        (0 until a.numElements()).filterNot(a.isNullAt)
+          .map(a.getStruct(_, sampleArity)).toArray
+      }
+    val ts = samples.map(_.map(_.getLong(0)))
+    val k = samples.length
+    val cur = new Array[Int](k)
+    def at(r: Int, t: Long): Boolean = cur(r) < ts(r).length && ts(r)(cur(r)) == t
+    val out = new java.util.ArrayList[Any]()
+    var more = true
+    while (more) {
+      more = false
+      var t = Long.MaxValue
+      var r = 0
+      while (r < k) {
+        if (cur(r) < ts(r).length && (!more || ts(r)(cur(r)) < t)) {
+          t = ts(r)(cur(r)); more = true
+        }
+        r += 1
+      }
+      if (more) {
+        var winner: Any = null
+        r = 0
+        while (r < k) {
+          if (at(r, t)) {
+            while (at(r, t)) cur(r) += 1
+            if (cur(r) < ts(r).length && ts(r)(cur(r)) < t)
+              throw new IllegalArgumentException(
+                s"sample run not sorted by timestamp: ${ts(r)(cur(r))} after $t")
+            // the run's last sample at t
+            winner = samples(r)(cur(r) - 1)
+          }
+          r += 1
+        }
+        out.add(winner)
+      }
+    }
+    new GenericArrayData(out)
+  }
 }

@@ -10,13 +10,14 @@ import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.io.api.{Binary, RecordConsumer}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type, Types}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.StructType
 
-import graft.functions.ChunkDecode
-import graft.tsdb.{ChunkCodec, Matcher}
+import graft.functions.{ChunkDecode, MergeSampleRuns}
+import graft.tsdb.{ChunkCodec, ChunkencHistCodec, HistChunkCodec, Matcher}
 import ParquetShardSchema._
 
 /** Write and query shards in the reference's EXACT physical layout
@@ -26,14 +27,20 @@ import ParquetShardSchema._
   * bytes a parquet-common reader (search/materialize.go) opens
   * directly, so data converted by either side is queryable by both.
   *
-  * WRITE is one wide shuffle at series grain (the converter's sort,
-  * convert/convert.go:366 — paid once at ingest): groupBy(labels) →
-  * per-series sorted samples → range-repartition into `shards` by
-  * the sort labels → each task re-encodes its series' samples into
-  * per-window XOR chunk frames ([[graft.tsdb.ChunkCodec]], the same
-  * codec the chunk gates pin bit-exactly) and streams TWO row-aligned
-  * parquet files through parquet-java. Imperative per-partition IO is
-  * justified the same way as the TSDB block writer: the dual-file
+  * WRITE is a sample-grain front half feeding one series-grain tail
+  * ([[writeSeries]]), shared by every write and every merge. The
+  * front half of [[write]]/[[writeHist]]/[[writeFloatHist]] is one
+  * wide shuffle (the converter's sort, convert/convert.go:366 — paid
+  * once at ingest): groupBy(labels) → per-series sorted samples →
+  * range-repartition into `shards` by the sort labels. The front half
+  * of [[mergeShards]]/[[mergeShardsHist]] range-repartitions the
+  * inputs' series rows instead and merges them per series. The tail
+  * takes the arranged series rows: each task re-encodes its series'
+  * samples into per-window chunk frames ([[graft.tsdb.ChunkCodec]],
+  * the same codec the chunk gates pin bit-exactly, or the chunkenc
+  * histogram codecs) and streams TWO row-aligned parquet files
+  * through parquet-java. Imperative per-partition IO is justified
+  * the same way as the TSDB block writer: the dual-file
   * row-alignment contract and footer key-value metadata are file-
   * format mechanics no Catalyst operator expresses.
   *
@@ -92,10 +99,23 @@ object ParquetShardStore {
     writeImpl(df, dir, labelCols, tsCol,
       Seq(col(valueCol).cast("double").as("value")),
       sampleFields = 2, colDurationMs, shards, rowGroupSize,
-      bloomFilterLabels,
-      (slice: org.apache.spark.sql.catalyst.util.ArrayData) =>
-        ChunkCodec.encodeArrayData(slice, samplesPerChunk),
-      familyMask = 1 << ChunkCodec.EncXor.toInt)
+      bloomFilterLabels, xorEncoder(samplesPerChunk), XorFamily)
+
+  private val XorFamily = 1 << ChunkCodec.EncXor.toInt
+  private val HistFamily = 1 << HistChunkCodec.EncHistogram.toInt
+  /** Fields of [[writeHist]]'s sample struct: ts, zero, idx, cnt, sum,
+    * nidx, ncnt. */
+  private val HistSampleFields = 7
+
+  private def xorEncoder(samplesPerChunk: Int): ArrayData => Array[Byte] =
+    slice => ChunkCodec.encodeArrayData(slice, samplesPerChunk)
+
+  private def histEncoder(histSchema: Int, samplesPerChunk: Int,
+      customValues: Seq[Double], gauge: Boolean): ArrayData => Array[Byte] = {
+    val cv = customValues.toArray
+    slice => ChunkencHistCodec.encodeArrayData(
+      slice, histSchema, samplesPerChunk, cv, gauge)
+  }
 
   /** [[write]] for NATIVE-HISTOGRAM series (`zeroCol` long; `idxCol`
     * array<int> ascending; `cntCol` array<long>; optional `sumCol`
@@ -130,7 +150,6 @@ object ParquetShardStore {
       "negIdxCol and negCountsCol must be passed together")
     require(negIdxCol.isEmpty || customValues.isEmpty,
       "custom-bucket (NHCB) histograms cannot carry negative buckets")
-    val cv = customValues.toArray
     writeImpl(df, dir, labelCols, tsCol,
       Seq(col(zeroCol).cast("long").as("zero"),
         col(idxCol).cast("array<int>").as("idx"),
@@ -141,12 +160,10 @@ object ParquetShardStore {
           .getOrElse(typedLit(Seq.empty[Int])).as("nidx"),
         negCountsCol.map(c => col(c).cast("array<bigint>"))
           .getOrElse(typedLit(Seq.empty[Long])).as("ncnt")),
-      sampleFields = 7, colDurationMs, shards, rowGroupSize,
+      HistSampleFields, colDurationMs, shards, rowGroupSize,
       bloomFilterLabels,
-      (slice: org.apache.spark.sql.catalyst.util.ArrayData) =>
-        graft.tsdb.ChunkencHistCodec.encodeArrayData(
-          slice, histSchema, samplesPerChunk, cv, gauge),
-      familyMask = 1 << graft.tsdb.HistChunkCodec.EncHistogram.toInt)
+      histEncoder(histSchema, samplesPerChunk, customValues, gauge),
+      HistFamily)
   }
 
   /** [[writeHist]] for FLOAT histograms (`zeroCol` double; `cntCol`
@@ -177,18 +194,20 @@ object ParquetShardStore {
           .getOrElse(typedLit(Seq.empty[Int])).as("nidx"),
         negCountsCol.map(c => col(c).cast("array<double>"))
           .getOrElse(typedLit(Seq.empty[Double])).as("ncnt")),
-      sampleFields = 7, colDurationMs, shards, rowGroupSize,
+      HistSampleFields, colDurationMs, shards, rowGroupSize,
       bloomFilterLabels,
-      (slice: org.apache.spark.sql.catalyst.util.ArrayData) =>
-        graft.tsdb.ChunkencHistCodec.encodeFloatArrayData(
+      (slice: ArrayData) =>
+        ChunkencHistCodec.encodeFloatArrayData(
           slice, histSchema, samplesPerChunk, cv, gauge),
-      familyMask = 1 << graft.tsdb.HistChunkCodec.EncFloatHistogram.toInt)
+      1 << HistChunkCodec.EncFloatHistogram.toInt)
   }
 
-  /** Shared write scaffolding: one series-grain shuffle, then each
-    * shard task splits the sorted sample structs (field 0 is always
-    * the ms timestamp) into per-window slices, encodes each with the
-    * family's codec, and streams the two row-aligned files.
+  /** The sample-grain front half of every write: one series-grain
+    * shuffle (groupBy labels → each series' samples as ONE sorted
+    * array of sample structs, field 0 the ms timestamp), arranged into
+    * shards ([[byShard]], then sorted by the labels within each), with
+    * the footer bounds as a sample-grain min/max over `df` — then
+    * [[writeSeries]].
     *
     * SCOPE: a shard conversion is per-BLOCK, like the reference's
     * `ConvertTSDBBlock` — the input df covers one bounded time range
@@ -206,19 +225,52 @@ object ParquetShardStore {
       tsCol: String, sampleCols: Seq[org.apache.spark.sql.Column],
       sampleFields: Int, colDurationMs: Long, shards: Int,
       rowGroupSize: Long, bloomFilterLabels: Seq[String],
-      encodeSlice: org.apache.spark.sql.catalyst.util.ArrayData => Array[Byte],
-      familyMask: Int): Unit = {
-    require(bloomFilterLabels.forall(labelCols.contains),
-      s"bloomFilterLabels must be a subset of labelCols")
+      encodeSlice: ArrayData => Array[Byte], familyMask: Int): Unit = {
+    val tsMs = unix_millis(col(tsCol).cast("timestamp"))
+    val series = df
+      .withColumn("_ts_ms", tsMs)
+      .groupBy(labelCols.map(c => col(c).cast("string").as(c)): _*)
+      .agg(sort_array(collect_list(struct(
+        (col("_ts_ms").as("ts") +: sampleCols): _*))).as("_samples"))
+    writeSeries(
+      byShard(series, labelCols, shards)
+        .sortWithinPartitions(labelCols.map(col): _*),
+      df.agg(min(tsMs), max(tsMs)), dir, labelCols, sampleFields,
+      colDurationMs, rowGroupSize, bloomFilterLabels, encodeSlice, familyMask)
+  }
+
+  /** The converter's shard layout (convert/convert.go:366): range-
+    * partition into `shards` by the sort labels, so partition i is
+    * shard file i. */
+  private def byShard(df: DataFrame, labelCols: Seq[String],
+      shards: Int): DataFrame = {
     require(labelCols.nonEmpty, "need at least one label column")
     require(shards > 0, s"shards must be positive, got $shards")
-    val spark = df.sparkSession
-    val tsMs = unix_millis(col(tsCol).cast("timestamp"))
-    val Array(bounds) = df.agg(
-      min(tsMs).as("mint"), max(tsMs).as("maxt")).collect()
-    require(!bounds.isNullAt(0), "cannot write an empty shard set")
-    val mintMs = bounds.getLong(0)
-    val maxtMs = bounds.getLong(1)
+    df.repartitionByRange(shards, labelCols.map(col): _*)
+  }
+
+  /** The series-grain back half shared by every write and every
+    * merge. `series` holds `labelCols` (strings, null = absent label)
+    * + `_samples`, one row per series, its samples sorted by the ms
+    * timestamp in field 0; it is already arranged: partition i holds
+    * shard i's series ([[byShard]]), sorted by the labels. `bounds` is
+    * a one-row (mint, maxt) frame — a sample-grain min/max for
+    * [[write]], the arrays' first and last timestamps
+    * ([[seriesBounds]]) for a merge. Each shard task splits every
+    * series' samples into per-window slices, encodes each with the
+    * family's codec, and streams the two row-aligned files.
+    */
+  private def writeSeries(series: DataFrame, bounds: DataFrame, dir: String,
+      labelCols: Seq[String], sampleFields: Int, colDurationMs: Long,
+      rowGroupSize: Long, bloomFilterLabels: Seq[String],
+      encodeSlice: ArrayData => Array[Byte], familyMask: Int): Unit = {
+    require(bloomFilterLabels.forall(labelCols.contains),
+      s"bloomFilterLabels must be a subset of labelCols")
+    val spark = series.sparkSession
+    val Array(mm) = bounds.collect()
+    require(!mm.isNullAt(0), "cannot write an empty shard set")
+    val mintMs = mm.getLong(0)
+    val maxtMs = mm.getLong(1)
     require(mintMs >= 0,
       "pre-epoch samples are unrepresentable in the reference's " +
         "uvarint frame headers (schema/encoder.go Encode)")
@@ -230,16 +282,7 @@ object ParquetShardStore {
       MinTMd -> mintMs.toString,
       MaxTMd -> maxtMs.toString,
       FamilyMaskMd -> familyMask.toString)
-
-    // one shuffle: series assembly + the converter's label sort
-    val grouped = df
-      .withColumn("_ts_ms", tsMs)
-      .groupBy(labelCols.map(c => col(c).cast("string").as(c)): _*)
-      .agg(sort_array(collect_list(struct(
-        (col("_ts_ms").as("ts") +: sampleCols): _*))).as("_samples"))
-      .repartitionByRange(shards, labelCols.map(col): _*)
-      .sortWithinPartitions(labelCols.map(col): _*)
-      .select((labelCols.map(col) :+ col("_samples")): _*)
+    val grouped = series.select((labelCols.map(col) :+ col("_samples")): _*)
 
     // Hadoop FS, not java.nio: the dir may be hdfs://-style at scale.
     // Clean the PREVIOUS generation's shard files first — a rewrite
@@ -297,7 +340,7 @@ object ParquetShardStore {
             var end = start + 1
             while (end < n &&
                 dataColumnIdx(tsAt(end), mintMs, colDurationMs) == ci) end += 1
-            val slice = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+            val slice = new GenericArrayData(
               (start until end).map(i =>
                 samples.getStruct(i, sampleFields).copy()).toArray[Any])
             blobs(ci) = encodeSlice(slice)
@@ -553,36 +596,73 @@ object ParquetShardStore {
   /** Compact N shard dirs that may overlap in series/time into ONE
     * shard dir — the reference's vertical compaction applied to its
     * own layout (convert/merge.go's NewMergeChunkSeriesSet feeding a
-    * fresh conversion): decode every input in full (one narrow pass
-    * each), k-way merge with last-writer-wins per (series, ts) —
-    * later dir in `dirs` wins, the newer-block convention every
-    * graft merge uses — then re-encode through [[write]]. One
-    * distributed plan end to end.
+    * fresh conversion), at SERIES grain end to end: the inputs'
+    * series rows (labels + encoded cells, no explode) union into ONE
+    * exchange, range-partitioned by the labels into the output's
+    * shards; each series' rows group there, decode into one sorted
+    * sample array per input row, and [[graft.functions.MergeSampleRuns]]
+    * merges those arrays — then the shared [[writeSeries]] tail
+    * re-encodes, with no exchange of its own. Exactly one output
+    * sample per (series, ts): the LATER dir in `dirs` wins (the
+    * newer-block convention every graft merge uses); an input holding
+    * several samples of a series at one ts (a [[write]] of duplicate
+    * rows keeps them all) contributes its LAST one in stored order.
+    * Both rules depend only on the files, never on partitioning. The
+    * series-sized merge result is checkpointed once, since the tail
+    * reads it twice (bounds, then the encode).
     */
   def mergeShards(spark: SparkSession, dirs: Seq[String], outDir: String,
       colDurationMs: Long = DefaultColDurationMs,
       samplesPerChunk: Int = 120, shards: Int = 1,
       bloomFilterLabels: Seq[String] = Nil): Unit = {
     val inputs = shardInputs(spark, dirs)
-    inputs.foreach(assertSingleFamily(_,
-      1 << graft.tsdb.ChunkCodec.EncXor.toInt, "XOR (float-sample)"))
-    val names = inputs.head.labelNames
-    val scans = inputs.map { f =>
-      val (lo, hi) = fullRange(f)
-      selectImpl(f, lo, hi, Nil, xorDecode(lo, hi),
-        Seq(col("_s.value").as("value")), "ts")
-    }
-    // materialize the merge ONCE: write() consumes its input for the
-    // bounds aggregation, the labels pass and the chunk encode — each
-    // would otherwise re-run the N-dir decode + merge shuffle (the
-    // same cut mergeShardsHist takes with cache() below, and
-    // ChunkStore.mergeBlocks with its checkpoint)
-    val merged = graft.tsdb.TsdbConverter.mergeShards(
-      scans, names, "ts", "value")
-      .localCheckpoint()
-    write(merged, outDir, names, "ts", "value", colDurationMs,
-      samplesPerChunk, shards, bloomFilterLabels = bloomFilterLabels)
+    inputs.foreach(assertSingleFamily(_, XorFamily, "XOR (float-sample)"))
+    val merged = mergeSeries(inputs, shards,
+      xorDecode(Long.MinValue, Long.MaxValue))
+    writeSeries(merged, seriesBounds(merged), outDir, inputs.head.labelNames,
+      sampleFields = 2, colDurationMs, rowGroupSize = 1L << 20,
+      bloomFilterLabels, xorEncoder(samplesPerChunk), XorFamily)
   }
+
+  /** The series-grain LWW merge of `inputs`, arranged into `shards`
+    * and checkpointed: one row per series with a non-empty merged
+    * `_samples` array of `decode`'s sample structs. The one exchange
+    * moves each input series row's ENCODED cells, range-partitioned
+    * by the labels ([[byShard]]): that clusters every series' rows for
+    * the groupBy and is already the output's shard layout, so the
+    * write adds no exchange. Cells decode after it, every frame of
+    * each (the footer range bounds every sample). The priority is
+    * (input position, shard, row), so even a dir holding one label
+    * set on two rows merges deterministically.
+    */
+  private def mergeSeries(inputs: Seq[ShardFooters], shards: Int,
+      decode: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
+      : DataFrame = {
+    val names = inputs.head.labelNames
+    val runs = inputs.zipWithIndex.map { case (f, pri) =>
+      val (lo, hi) = fullRange(f)
+      val (joined, dataCols, _, _) = pruned(f, lo, hi, Nil)
+      joined.select(names.map(col) :+ struct(
+        struct(lit(pri), col("_shard"), col("_row")).as("pri"),
+        array(dataCols.map(col): _*).as("cells")).as("_run"): _*)
+    }
+    val decoded = transform(col("_runs"), r => struct(r("pri"),
+      flatten(transform(r("cells"), decode))))
+    byShard(runs.reduce(_ union _), names, shards)
+      .groupBy(names.map(col): _*)
+      .agg(collect_list(col("_run")).as("_runs"))
+      .select(names.map(col) :+ ColumnBridge.column(MergeSampleRuns(
+        ColumnBridge.expression(decoded))).as("_samples"): _*)
+      .filter(size(col("_samples")) > 0)
+      .sortWithinPartitions(names.map(col): _*)
+      .localCheckpoint()
+  }
+
+  /** (mint, maxt) of a series frame: its arrays' first and last
+    * timestamps. */
+  private def seriesBounds(series: DataFrame): DataFrame =
+    series.agg(min(col("_samples")(0)("ts")),
+      max(element_at(col("_samples"), -1)("ts")))
 
   /** One footer read per input dir of a merge, shared by the label-
     * universe check, the family guard and the scan plans. */
@@ -638,15 +718,17 @@ object ParquetShardStore {
           "frames - merge one chunkenc family at a time")
   }
 
-  /** [[mergeShards]] for HISTOGRAM shard dirs: decode every input in
-    * full, k-way LWW merge per (series, ts) — later dir in `dirs`
-    * wins, the newer-block convention — then re-encode through
-    * [[writeHist]]. The chunk schema and NHCB bound list come from
-    * the decoded rows and must agree across every input (one metric
+  /** [[mergeShards]] for HISTOGRAM shard dirs: the same series-grain
+    * plan and duplicate rule — one exchange of encoded cells, the
+    * [[graft.functions.MergeSampleRuns]] LWW merge (later dir wins;
+    * within one input, its last sample at a ts), one checkpoint —
+    * then the shared [[writeSeries]] tail with [[writeHist]]'s
+    * encoder. The chunk schema and NHCB bound list come from the
+    * decoded samples and must agree across every input (one metric
     * family per merge, the same constraint the chunked layout's
-    * compaction enforces); `gauge` re-marks the headers, since the
-    * sample row model carries no gauge flag. One distributed plan
-    * plus one metadata-sized uniformity check.
+    * compaction enforces); the check reads the series-grain
+    * checkpoint. `gauge` re-marks the headers, since the sample row
+    * model carries no gauge flag.
     */
   def mergeShardsHist(spark: SparkSession, dirs: Seq[String],
       outDir: String, colDurationMs: Long = DefaultColDurationMs,
@@ -654,46 +736,29 @@ object ParquetShardStore {
       bloomFilterLabels: Seq[String] = Nil,
       gauge: Boolean = false): Unit = {
     val inputs = shardInputs(spark, dirs)
-    inputs.foreach(assertSingleFamily(_,
-      1 << graft.tsdb.HistChunkCodec.EncHistogram.toInt,
-      "integer-histogram"))
+    inputs.foreach(assertSingleFamily(_, HistFamily, "integer-histogram"))
+    val merged = mergeSeries(inputs, shards,
+      histDecode(Long.MinValue, Long.MaxValue))
+    val fams = merged
+      .select(explode(array_distinct(transform(col("_samples"),
+        s => struct(s("schema"), s("cv"))))).as("f"))
+      .distinct().collect()
+    require(fams.nonEmpty, "cannot merge empty shard inputs")
+    require(fams.length == 1,
+      s"inputs mix ${fams.length} (schema, bounds) families — merge " +
+        "one metric family at a time")
+    val fam = fams.head.getStruct(0)
     val names = inputs.head.labelNames
-    val scans = inputs.zipWithIndex.map { case (f, pri) =>
-      val (lo, hi) = fullRange(f)
-      selectImpl(f, lo, hi, Nil, histDecode(lo, hi), histOutput, "ts")
-        .withColumn("_pri", lit(pri))
-    }
-    val valueCols = Seq("zero_count", "pos_idx", "pos_counts",
-      "hist_sum", "schema", "custom_values", "neg_idx", "neg_counts")
-    val merged = scans.reduce(_ unionByName _)
-      .groupBy((names.map(col) :+ col("ts")): _*)
-      .agg(max_by(struct(valueCols.map(col): _*), col("_pri")).as("_v"))
-      .select((names.map(col) :+ col("ts")) ++
-        valueCols.map(c => col(s"_v.$c").as(c)): _*)
-      .cache()
-    try {
-      val fams = merged.select("schema", "custom_values").distinct()
-        .collect()
-      require(fams.nonEmpty, "cannot merge empty shard inputs")
-      require(fams.length == 1,
-        s"inputs mix ${fams.length} (schema, bounds) families — merge " +
-          "one metric family at a time")
-      val schema = fams.head.getInt(0)
-      val cv = fams.head.getSeq[Double](1)
-      // NHCB chunks structurally carry no negative side (their neg
-      // columns decode as empty arrays), so don't re-offer the
-      // columns — writeHist's NHCB-xor-neg guard is per-CALL
-      val nhcb = schema ==
-        graft.tsdb.block.ChunkencHistogram.CustomBucketsSchema
-      writeHist(merged, outDir, names, "ts",
-        "zero_count", "pos_idx", "pos_counts", Some("hist_sum"),
-        histSchema = schema, colDurationMs = colDurationMs,
-        samplesPerChunk = samplesPerChunk, shards = shards,
-        bloomFilterLabels = bloomFilterLabels,
-        customValues = cv, gauge = gauge,
-        negIdxCol = if (nhcb) None else Some("neg_idx"),
-        negCountsCol = if (nhcb) None else Some("neg_counts"))
-    } finally merged.unpersist()
+    // NHCB chunks structurally carry no negative side: their nidx/ncnt
+    // decode empty, so the projection needs no per-family case
+    val series = merged.select(names.map(col) :+ transform(col("_samples"),
+      s => struct(Seq("ts", "zero", "idx", "cnt", "sum", "nidx", "ncnt")
+        .map(f => s(f)): _*)).as("_samples"): _*)
+    writeSeries(series, seriesBounds(merged), outDir, names,
+      HistSampleFields, colDurationMs, rowGroupSize = 1L << 20,
+      bloomFilterLabels,
+      histEncoder(fam.getInt(0), samplesPerChunk, fam.getSeq[Double](1), gauge),
+      HistFamily)
   }
 
   /** [[select]] with the reference's strict chunk-byte quota

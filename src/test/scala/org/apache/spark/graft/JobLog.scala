@@ -1,7 +1,13 @@
 package org.apache.spark.graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicLong
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 
 /** Records the Spark jobs a block of code starts, as the SQL
   * execution id each job ran under (None outside any SQL execution,
@@ -11,19 +17,55 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   */
 object JobLog {
   def apply[T](sc: SparkContext)(body: => T): (T, Seq[Option[String]]) = {
-    sc.listenerBus.waitUntilEmpty()
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]
-    val listener = new SparkListener {
+    val jobs = new ConcurrentLinkedQueue[Option[String]]
+    val result = listening(sc, new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         jobs.add(Option(e.properties)
           .flatMap(p => Option(p.getProperty("spark.sql.execution.id"))))
-    }
+    })(body)
+    (result, jobs.asScala.toSeq)
+  }
+
+  /** Runs `body` with `listener` attached; every event `body` caused
+    * is delivered before this returns. */
+  private[graft] def listening[T](sc: SparkContext, listener: SparkListener)(
+      body: => T): T = {
+    sc.listenerBus.waitUntilEmpty()
     sc.addSparkListener(listener)
     try {
       val result = body
       sc.listenerBus.waitUntilEmpty()
-      import scala.jdk.CollectionConverters._
-      (result, jobs.asScala.toSeq)
+      result
     } finally sc.removeSparkListener(listener)
+  }
+}
+
+/** What a block of code executed: the shuffle records its tasks wrote,
+  * and the physical plan of every SQL execution it ran — the plan
+  * posted at the execution's start plus each adaptive re-plan.
+  */
+object ExecLog {
+  final case class Log(shuffleRecordsWritten: Long, plans: Seq[SparkPlanInfo]) {
+    /** Every node of every plan, depth first. */
+    def nodes: Seq[SparkPlanInfo] = {
+      def walk(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(walk)
+      plans.flatMap(walk)
+    }
+  }
+
+  def apply[T](sc: SparkContext)(body: => T): (T, Log) = {
+    val records = new AtomicLong
+    val plans = new ConcurrentLinkedQueue[SparkPlanInfo]
+    val result = JobLog.listening(sc, new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          records.addAndGet(m.shuffleWriteMetrics.recordsWritten))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => plans.add(u.sparkPlanInfo)
+        case _ =>
+      }
+    })(body)
+    (result, Log(records.get, plans.asScala.toSeq))
   }
 }
