@@ -13,15 +13,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * increase — the hot loop of `increase/rate(native_histogram[...])`
   * and of the NH rollup stitch/cascade.
   *
-  * The HOF formulation ([[graft.tsdb.NativeHistogram]]'s `aggregate`
-  * over `map_zip_with`/`map_filter`/`exists` accumulators) is
+  * The HOF formulation they replaced (`aggregate` over
+  * `map_zip_with`/`map_filter`/`exists` accumulators) is
   * semantically right but evaluates every lambda per map entry in
   * interpreted mode — at (series × samples-in-range × buckets) scale
   * that interpreter dispatch dominated the whole fold stage. These
   * expressions run the identical per-step ladder as one tight loop
   * over the collected snapshot array.
   *
-  * Exactness contract (spec-pinned against the HOF form):
+  * Exactness contract (pinned by NativeHistogramSpec and
+  * HistRollupStoreSpec against that HOF form, which lives in the test
+  * sources as `NhReference`):
   *   - double comparisons use Spark SQL semantics (NaN greater than
   *     everything, NaN == NaN, -0.0 == 0.0) — `nanSafeCompareDoubles`,
   *     not Java `<`;

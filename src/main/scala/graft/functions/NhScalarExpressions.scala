@@ -12,15 +12,15 @@ import org.apache.spark.sql.types._
 /** Native Catalyst folds for the PER-ROW native-histogram scalar
   * functions — `histogram_quantile` (exponential, signed, custom-
   * bucket), `histogram_stdvar`, `histogram_fraction` and the count
-  * sums. The HOF formulations in [[graft.tsdb.NativeHistogram]]
-  * (`aggregate` over `zip_with`ped bucket arrays) are semantically
-  * right but evaluate each lambda per bucket in interpreted mode —
-  * per-row interpreter dispatch that scales with data volume (the
-  * same §4 cost family NhIncreaseFold closed for the reset ladder).
-  * Each expression here runs the identical walk as one tight loop.
+  * sums. The HOF formulations they replaced (`aggregate` over
+  * `zip_with`ped bucket arrays) are semantically right but evaluate
+  * each lambda per bucket in interpreted mode — per-row interpreter
+  * dispatch that scales with data volume (the same §4 cost family
+  * NhIncreaseFold closed for the reset ladder). Each expression here
+  * runs the identical walk as one tight loop.
   *
-  * Exactness contract (spec-pinned against the HOF forms, which stay
-  * in-tree as the executable spec behind `native = false`):
+  * Exactness contract (pinned by NhScalarFoldsSpec against those HOF
+  * forms, which live in the test sources as `NhReference`):
   *   - double comparisons/orderings use Spark SQL semantics (NaN
   *     above everything, NaN == NaN, -0.0 == 0.0), including the
   *     `greatest`/`least` null-skipping of the fraction share;

@@ -17,18 +17,13 @@ object TextFunctions {
 
   /** Count-only twin of `size(tokens(text))` — one native scan
     * ([[TextProfile]]; identical count: maximal `[a-z0-9]+` runs of
-    * the lowered text). Kept as the regexp-equivalent contract,
-    * spec-pinned.
+    * the lowered text). [[tokenCount]], [[punctCount]] and
+    * [[stopwordCount]] keep the `regexp_count` contract; their regexp
+    * formulations live in TextFunctionsSpec as the reference the
+    * native scan is pinned against.
     */
   def tokenCount(text: Column): Column =
     TextProfile.profile(text).getField("n_tokens")
-
-  /** The regexp formulations of the [[TextProfile]] counters — the
-    * executable spec the native scan is pinned against
-    * (TextFunctionsSpec); not on any hot path.
-    */
-  private[graft] def tokenCountRegex(text: Column): Column =
-    regexp_count(lower(text), lit("[a-z0-9]+"))
 
   // PII patterns restricted to syntax Java regex and RE2 read
   // identically (char classes, bounded repeats, ASCII \b) so a SQL
@@ -59,20 +54,10 @@ object TextFunctions {
   def punctCount(text: Column): Column =
     TextProfile.profile(text).getField("punct")
 
-  private[graft] def punctCountRegex(text: Column): Column =
-    regexp_count(text, lit("[.,;:!?]"))
-
-  private val stopwords = TextProfile.stopwordTable
-
   def stopwordCount(text: Column, lang: String = "en"): Column = {
     val ord = TextProfile.orderedLangs.indexOf(lang)
     require(ord >= 0, s"no stopword list for language $lang")
     element_at(TextProfile.profile(text).getField("stops"), ord + 1)
-  }
-
-  private[graft] def stopwordCountRegex(text: Column, lang: String): Column = {
-    val pat = stopwords(lang).mkString("\\b(", "|", ")\\b")
-    regexp_count(lower(text), lit(pat))
   }
 
   /** Composite quality score in [0,1]: favors mid-length docs with

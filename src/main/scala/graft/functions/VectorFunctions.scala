@@ -4,10 +4,10 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Vector math over `array<float>` / `array<double>` embedding
-  * columns, built entirely from codegen'd higher-order functions
-  * (`zip_with` + `aggregate`) — no UDFs, stays inside whole-stage
-  * codegen, and the fold is sequential in index order so results are
-  * bit-reproducible across engines.
+  * columns, built from native codegen'd Catalyst expressions
+  * ([[VectorExpressions]]) and built-in functions — no UDFs, stays
+  * inside whole-stage codegen, and every fold is sequential in index
+  * order so results are bit-reproducible across engines.
   */
 object VectorFunctions {
 
@@ -42,34 +42,15 @@ object VectorFunctions {
     when(denom === 0.0, 0.0).otherwise(dotAB / denom)
   }
 
-  /** Signed bit of a deterministic random hyperplane: sign of
-    * sum_i v_i * r_{p,i} with pseudo-random ±1 weights derived from
-    * xxhash64(dim, plane) — no stored plane matrix, reproducible on
-    * any cluster, and cheap enough to fuse into the scan.
-    */
-  def hyperplaneBit(v: Column, plane: Int): Column = {
-    val signed = zip_with(
-      v,
-      transform(sequence(lit(0), size(v) - 1),
-        i => when(pmod(xxhash64(i, lit(plane)), lit(2)) === 0, 1.0).otherwise(-1.0)),
-      (x, s) => x * s)
-    val s = aggregate(signed, lit(0.0), (acc, x) => acc + x)
-    when(s >= 0, 1L).otherwise(0L)
-  }
-
-  /** LSH bucket id from `nPlanes` hyperplane bits packed into a long —
-    * native one-pass expression ([[VectorExpressions.lshBucketNative]]);
-    * bit-identical to [[lshBucketHof]], which it replaced in the hot
-    * path (VectorFunctionsSpec pins the equivalence).
+  /** LSH bucket id from `nPlanes` signed random-hyperplane bits
+    * packed into a long: plane p sets bit p when
+    * sum_i v_i * r_{p,i} >= 0, with pseudo-random ±1 weights derived
+    * from xxhash64(dim, plane) — no stored plane matrix, reproducible
+    * on any cluster. One native pass per row
+    * ([[VectorExpressions.lshBucketNative]]); VectorFunctionsSpec pins
+    * it bit-identical to the `zip_with`/`aggregate` formulation it
+    * replaced, which lives there as the reference.
     */
   def lshBucket(v: Column, nPlanes: Int): Column =
     VectorExpressions.lshBucketNative(v, nPlanes)
-
-  /** Reference HOF formulation of [[lshBucket]], kept as the
-    * executable spec of the bucket function.
-    */
-  def lshBucketHof(v: Column, nPlanes: Int): Column =
-    (0 until nPlanes)
-      .map(p => hyperplaneBit(v, p) * lit(1L << p))
-      .reduce(_ + _)
 }

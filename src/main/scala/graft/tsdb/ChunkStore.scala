@@ -6,7 +6,7 @@ import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.functions.{ChunkDecode, ChunkEncode}
 
-/** The reference's dual-file chunked storage model, Spark-native:
+/** The reference's dual-file chunked storage model, Spark-native —
   * a converted block is a LABELS file (one row per series: label
   * columns + a stable series ref) and a CHUNKS file (one row per
   * series × time bucket: framed XOR chunk blob + mint/maxt/count
@@ -210,7 +210,7 @@ object ChunkStore {
   /** Compact N chunked blocks that may overlap in series/time into
     * ONE chunked block — the reference's vertical compaction over
     * chunk files (convert/merge.go NewMergeChunkSeriesSet driven by
-    * convert.go:348), Spark-native: decode every block's chunks
+    * convert.go:348), Spark-native — decode every block's chunks
     * (one narrow pass each), k-way merge with last-writer-wins per
     * (series, ts) — later directory in `dirs` wins, the newer-block
     * convention [[TsdbConverter.mergeShards]] already implements —

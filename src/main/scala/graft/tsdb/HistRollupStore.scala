@@ -44,17 +44,6 @@ import org.apache.spark.sql.functions._
   */
 object HistRollupStore {
 
-  private def snapStruct(tsSecCol: String, zeroCol: String, posIdxCol: String,
-      posCountsCol: String, negIdxCol: String, negCountsCol: String,
-      hintCol: Option[String]): Column =
-    struct(col(tsSecCol).cast("long").as("t"),
-      col(zeroCol).cast("double").as("z"),
-      col(posIdxCol).cast("array<int>").as("i"),
-      col(posCountsCol).cast("array<double>").as("c"),
-      col(negIdxCol).cast("array<int>").as("ni"),
-      col(negCountsCol).cast("array<double>").as("nc"),
-      hintCol.map(col).getOrElse(lit("unknown")).as("h"))
-
   /** Materialize one NH rollup layer at `resolutionSec` windows. */
   def write(df: DataFrame, path: String, seriesCols: Seq[String],
       tsSecCol: String, zeroCol: String, posIdxCol: String,
@@ -65,8 +54,8 @@ object HistRollupStore {
     val winCol = (floor(col(tsSecCol) / resolutionSec) * resolutionSec)
       .cast("long")
     val base = df.withColumn("window_sec", winCol)
-    val snap = snapStruct(tsSecCol, zeroCol, posIdxCol, posCountsCol,
-      negIdxCol, negCountsCol, hintCol)
+    val snap = NativeHistogram.snapshot(tsSecCol, zeroCol, posIdxCol,
+      posCountsCol, negIdxCol, negCountsCol, hintCol)
     val keyCols = seriesCols :+ "window_sec"
     val bounds = base.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("n"), min(snap).as("_f"), max(snap).as("_l"))
@@ -132,7 +121,7 @@ object HistRollupStore {
     * walk windows in time order (window_sec leads and is unique per
     * (series, window) group).
     */
-  private def winStruct: Column = struct(col("window_sec"), col("n"),
+  private[graft] def winStruct: Column = struct(col("window_sec"), col("n"),
     struct(col("f_t").as("t"), col("f_z").as("z"), col("f_i").as("i"),
       col("f_c").as("c"), col("f_ni").as("ni"), col("f_nc").as("nc"),
       col("f_h").as("h")).as("f"),
@@ -146,55 +135,14 @@ object HistRollupStore {
     * window 1's stored increase maps, then per window add the
     * boundary step (previous window's LAST snapshot → this window's
     * FIRST, the identical detect-or-hint ladder the raw walk runs)
-    * plus the window's stored maps. Returns struct(z, p, n, prev).
-    * Exact for integral bucket counts; float histograms re-associate
-    * double additions across windows (module-doc caveat).
-    */
-  /** The production stitch fold: the identical ladder as ONE native
-    * loop ([[graft.functions.NhStitchFold]] — returns the increase
-    * with bucket keys already ascending). [[foldWindowsHof]] below is
-    * the original HOF formulation, kept as the executable spec the
-    * native fold is pinned against (HistRollupStoreSpec).
+    * plus the window's stored maps — ONE native loop
+    * ([[graft.functions.NhStitchFold]]). Returns struct(z, pos_idx,
+    * pos_inc, neg_idx, neg_inc) with bucket keys ascending. Exact for
+    * integral bucket counts; float histograms re-associate double
+    * additions across windows (module-doc caveat).
     */
   private def foldWindows(warr: Column): Column =
     graft.functions.NhStitchFold.fold(warr)
-
-  private[graft] def foldWindowsHof(warr: Column): Column = {
-    import NativeHistogram.{hfAsMap, hfDecreased, hfMergeSum, hfResetFlag, hfStepDelta}
-    val first = element_at(warr, 1)
-    val init = struct(
-      first.getField("zero_inc").as("z"),
-      hfAsMap(first.getField("pos_idx"), first.getField("pos_inc")).as("p"),
-      hfAsMap(first.getField("neg_idx"), first.getField("neg_inc")).as("n"),
-      first.getField("l").as("prev"))
-    aggregate(
-      slice(warr, lit(2), size(warr) - 1), init,
-      (acc, w) => {
-        val prev = acc.getField("prev")
-        val f = w.getField("f")
-        val curP = hfAsMap(f.getField("i"), f.getField("c"))
-        val curN = hfAsMap(f.getField("ni"), f.getField("nc"))
-        val detected = (f.getField("z") < prev.getField("z")) ||
-          hfDecreased(hfAsMap(prev.getField("i"), prev.getField("c")), curP) ||
-          hfDecreased(hfAsMap(prev.getField("ni"), prev.getField("nc")), curN)
-        val reset = hfResetFlag(f.getField("h"), detected)
-        val dz = when(reset, f.getField("z"))
-          .otherwise(f.getField("z") - prev.getField("z"))
-        struct(
-          (acc.getField("z") + dz + w.getField("zero_inc")).as("z"),
-          hfMergeSum(
-            hfMergeSum(acc.getField("p"),
-              hfStepDelta(f.getField("i"), f.getField("c"),
-                hfAsMap(prev.getField("i"), prev.getField("c")), reset)),
-            hfAsMap(w.getField("pos_idx"), w.getField("pos_inc"))).as("p"),
-          hfMergeSum(
-            hfMergeSum(acc.getField("n"),
-              hfStepDelta(f.getField("ni"), f.getField("nc"),
-                hfAsMap(prev.getField("ni"), prev.getField("nc")), reset)),
-            hfAsMap(w.getField("neg_idx"), w.getField("neg_inc"))).as("n"),
-          w.getField("l").as("prev"))
-      })
-  }
 
   /** Build a COARSER NH rollup layer from a finer one — the layer
     * cascade ([[RollupStore.writeFrom]]'s NH twin; Thanos compact
@@ -244,13 +192,9 @@ object HistRollupStore {
       col("_f.h").as("f_h") :+
       col("_l.t").as("l_t") :+ col("_l.z").as("l_z") :+
       col("_l.i").as("l_i") :+ col("_l.c").as("l_c") :+
-      col("_l.ni").as("l_ni") :+ col("_l.nc").as("l_nc") :+
-      col("_f2.z").as("zero_inc") :+
-      col("_f2.pos_idx").as("pos_idx") :+
-      col("_f2.pos_inc").as("pos_inc") :+
-      col("_f2.neg_idx").as("neg_idx") :+
-      col("_f2.neg_inc").as("neg_inc") :+
-      timestamp_seconds(col("_cw")).as("ts")): _*)
+      col("_l.ni").as("l_ni") :+ col("_l.nc").as("l_nc")) ++
+      NativeHistogram.increaseColumns("_f2") :+
+      timestamp_seconds(col("_cw")).as("ts"): _*)
     TsdbConverter.convert(rolled, path, "ts",
       if (opts.sortBy.nonEmpty) opts else opts.copy(sortBy = seriesCols))
   }
@@ -260,45 +204,16 @@ object HistRollupStore {
     * grid queries through this with the step key appended.
     */
   def stitchedIncreaseOf(rows: DataFrame,
-      seriesCols: Seq[String]): DataFrame =
-    stitchedIncreaseOfImpl(rows, seriesCols, native = true)
-
-  /** `native = false` folds with the original HOF formulation
-    * ([[foldWindowsHof]]) — the executable spec the native stitch is
-    * pinned against (HistRollupStoreSpec). Value-identical output,
-    * interpreter-speed evaluation.
-    */
-  private[graft] def stitchedIncreaseOfImpl(rows: DataFrame,
-      seriesCols: Seq[String], native: Boolean): DataFrame = {
+      seriesCols: Seq[String]): DataFrame = {
     val series = rows.groupBy(seriesCols.map(col): _*)
       .agg(sort_array(collect_list(winStruct)).as("_w"),
         sum(col("n")).as("_n"))
       .filter(col("_n") >= 2)
-    val first = element_at(col("_w"), 1)
-    val withF =
-      if (native) series.withColumn("_f2", foldWindows(col("_w")))
-      else {
-        val f = foldWindowsHof(col("_w"))
-        val posIdx = array_sort(map_keys(f.getField("p")))
-        val negIdx = array_sort(map_keys(f.getField("n")))
-        series.withColumn("_f2", struct(
-          f.getField("z").as("z"),
-          posIdx.as("pos_idx"),
-          transform(posIdx, k => element_at(f.getField("p"), k))
-            .as("pos_inc"),
-          negIdx.as("neg_idx"),
-          transform(negIdx, k => element_at(f.getField("n"), k))
-            .as("neg_inc")))
-      }
+    val withF = series.withColumn("_f2", foldWindows(col("_w")))
     val dt = (element_at(col("_w"), -1).getField("l").getField("t") -
-      first.getField("f").getField("t")).cast("double")
-    withF.select(seriesCols.map(col) ++ Seq(
-      dt.as("dt_sec"),
-      col("_f2.z").as("zero_inc"),
-      col("_f2.pos_idx").as("pos_idx"),
-      col("_f2.pos_inc").as("pos_inc"),
-      col("_f2.neg_idx").as("neg_idx"),
-      col("_f2.neg_inc").as("neg_inc")): _*)
+      element_at(col("_w"), 1).getField("f").getField("t")).cast("double")
+    withF.select(seriesCols.map(col) ++
+      (dt.as("dt_sec") +: NativeHistogram.increaseColumns("_f2")): _*)
   }
 
   /** GAUGE `delta` served from layer rows: the range's first/last

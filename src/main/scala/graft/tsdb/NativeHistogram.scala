@@ -32,72 +32,28 @@ import org.apache.spark.sql.functions._
   * `lower + (upper − lower) · (rank − cumBefore) / bucketCount`.
   * Empty histogram → NaN, like Prometheus.
   *
-  * Everything is a NARROW per-row fold (`aggregate` over the zipped
-  * bucket arrays) — no explode, no shuffle: at 100 TB a range-vector
-  * of native histograms evaluates entirely map-side. schema=0 makes
-  * every boundary `2^i` an exact double, so a SQL oracle replaying
-  * the identical walk is bit-equal (the gate pins that); other
-  * schemas share the same code path via `pow(2, 2^-schema · i)`.
+  * Every scalar function is a NARROW per-row fold — one native loop
+  * over the zipped bucket arrays ([[graft.functions.NhScalarFolds]]),
+  * no explode, no shuffle: at 100 TB a range-vector of native
+  * histograms evaluates entirely map-side. schema=0 makes every
+  * boundary `2^i` an exact double, so a SQL oracle replaying the
+  * identical walk is bit-equal (the gate pins that); other schemas
+  * share the same code path via `pow(2, 2^-schema · i)`.
   */
 object NativeHistogram {
 
   /** Bucket upper bound for index `i` at `schema`: base^i with
     * base = 2^(2^-schema). schema 0 → 2^i (FP-exact). */
-  private def upperBound(i: Column, schema: Int): Column =
+  private[graft] def upperBound(i: Column, schema: Int): Column =
     pow(lit(2.0), i.cast("double") * lit(math.pow(2.0, -schema)))
 
   /** The q-quantile of each row's histogram (see object doc).
     * Returns a double Column; NaN for an empty histogram. */
   def histogramQuantile(q: Double, zeroCount: Column, posIdx: Column,
-      posCounts: Column, schema: Int = 0): Column =
-    histogramQuantileImpl(q, zeroCount, posIdx, posCounts, schema,
-      native = true)
-
-  /** `native = true` (production) runs the walk as ONE native loop
-    * ([[graft.functions.NhQuantile]]); `false` keeps the HOF
-    * formulation as the executable spec the native fold is pinned
-    * against (NhScalarFoldsSpec) — value-identical by contract.
-    */
-  private[graft] def histogramQuantileImpl(q: Double, zeroCount: Column,
-      posIdx: Column, posCounts: Column, schema: Int,
-      native: Boolean): Column = {
+      posCounts: Column, schema: Int = 0): Column = {
     require(q >= 0.0 && q <= 1.0, s"q must be in [0,1], got $q")
-    if (native)
-      return graft.functions.NhScalarFolds.quantile(
-        q, zeroCount, posIdx, posCounts, schema)
-    // double accumulator so the same walk serves integer count
-    // vectors AND rate vectors (histogram_quantile over rateBy);
-    // integer counts stay exact — they're < 2^53
-    val total = zeroCount.cast("double") +
-      coalesce(aggregate(posCounts, lit(0.0),
-        (a, c) => a + c.cast("double")), lit(0.0))
-    val rank = lit(q) * total
-    // fold state: (cum count so far, result or null)
-    val folded = aggregate(
-      zip_with(posIdx, posCounts, (i, c) => struct(i.as("i"), c.as("c"))),
-      struct(zeroCount.cast("double").as("cum"),
-        lit(null).cast("double").as("res")),
-      (acc, b) => {
-        val cumNext = acc.getField("cum") + b.getField("c").cast("double")
-        val lower = upperBound(b.getField("i") - 1, schema)
-        val upper = upperBound(b.getField("i"), schema)
-        val inBucket = lower +
-          (upper - lower) *
-            ((rank - acc.getField("cum")) / b.getField("c").cast("double"))
-        when(acc.getField("res").isNotNull, acc)
-          .when(cumNext >= rank && b.getField("c") > 0,
-            struct(cumNext.as("cum"), inBucket.as("res")))
-          .otherwise(struct(cumNext.as("cum"),
-            lit(null).cast("double").as("res")))
-      },
-      acc => acc.getField("res"))
-    when(total === 0, lit(Double.NaN))
-      .when(zeroCount.cast("double") >= rank, lit(0.0))
-      .otherwise(coalesce(folded,
-        // rank beyond the last bucket (q=1 lands exactly on the last
-        // cum, handled in the fold; this is pure FP-slack guard):
-        // the highest populated bucket's upper bound
-        upperBound(element_at(posIdx, -1), schema)))
+    graft.functions.NhScalarFolds.quantile(
+      q, zeroCount, posIdx, posCounts, schema)
   }
 
   /** [[histogramQuantile]] for histograms that also carry NEGATIVE
@@ -112,74 +68,10 @@ object NativeHistogram {
     * [[histogramQuantile]]. Still one narrow per-row fold. */
   def histogramQuantileSigned(q: Double, zeroCount: Column,
       posIdx: Column, posCounts: Column, negIdx: Column,
-      negCounts: Column, schema: Int = 0): Column =
-    histogramQuantileSignedImpl(q, zeroCount, posIdx, posCounts,
-      negIdx, negCounts, schema, native = true)
-
-  private[graft] def histogramQuantileSignedImpl(q: Double,
-      zeroCount: Column, posIdx: Column, posCounts: Column,
-      negIdx: Column, negCounts: Column, schema: Int,
-      native: Boolean): Column = {
+      negCounts: Column, schema: Int = 0): Column = {
     require(q >= 0.0 && q <= 1.0, s"q must be in [0,1], got $q")
-    if (native)
-      return graft.functions.NhScalarFolds.quantileSigned(
-        q, zeroCount, posIdx, posCounts, negIdx, negCounts, schema)
-    val sumOf = (c: Column) => coalesce(aggregate(c, lit(0.0),
-      (a, x) => a + x.cast("double")), lit(0.0))
-    val negTotal = sumOf(negCounts)
-    val posTotal = sumOf(posCounts)
-    val zeroD = zeroCount.cast("double")
-    val total = negTotal + zeroD + posTotal
-    val rank = lit(q) * total
-    // negative region: iterate REVERSED (highest index = most
-    // negative value first); bucket i covers [-base^i, -base^(i-1))
-    val negFolded = aggregate(
-      reverse(zip_with(negIdx, negCounts,
-        (i, c) => struct(i.as("i"), c.as("c")))),
-      struct(lit(0.0).as("cum"), lit(null).cast("double").as("res")),
-      (acc, b) => {
-        val c = b.getField("c").cast("double")
-        val cumNext = acc.getField("cum") + c
-        val lower = lit(-1.0) * upperBound(b.getField("i"), schema)
-        val upper = lit(-1.0) * upperBound(b.getField("i") - 1, schema)
-        val inBucket = lower + (upper - lower) *
-          ((rank - acc.getField("cum")) / c)
-        when(acc.getField("res").isNotNull, acc)
-          .when(cumNext >= rank && c > 0,
-            struct(cumNext.as("cum"), inBucket.as("res")))
-          .otherwise(struct(cumNext.as("cum"),
-            lit(null).cast("double").as("res")))
-      },
-      acc => acc.getField("res"))
-    // positive region: the ordinary ascending walk, cumulative seeded
-    // past everything below it (neg total + zero bucket)
-    val posFolded = aggregate(
-      zip_with(posIdx, posCounts, (i, c) => struct(i.as("i"), c.as("c"))),
-      struct((negTotal + zeroD).as("cum"),
-        lit(null).cast("double").as("res")),
-      (acc, b) => {
-        val c = b.getField("c").cast("double")
-        val cumNext = acc.getField("cum") + c
-        val lower = upperBound(b.getField("i") - 1, schema)
-        val upper = upperBound(b.getField("i"), schema)
-        val inBucket = lower + (upper - lower) *
-          ((rank - acc.getField("cum")) / c)
-        when(acc.getField("res").isNotNull, acc)
-          .when(cumNext >= rank && c > 0,
-            struct(cumNext.as("cum"), inBucket.as("res")))
-          .otherwise(struct(cumNext.as("cum"),
-            lit(null).cast("double").as("res")))
-      },
-      acc => acc.getField("res"))
-    when(total === 0, lit(Double.NaN))
-      .when(negTotal > 0 && rank <= negTotal,
-        // FP-slack guard mirroring the positive walk: the negative
-        // region's highest value is -lowerBound(min index)
-        coalesce(negFolded,
-          lit(-1.0) * upperBound(element_at(negIdx, 1) - 1, schema)))
-      .when(negTotal + zeroD >= rank, lit(0.0))
-      .otherwise(coalesce(posFolded,
-        upperBound(element_at(posIdx, -1), schema)))
+    graft.functions.NhScalarFolds.quantileSigned(
+      q, zeroCount, posIdx, posCounts, negIdx, negCounts, schema)
   }
 
   /** [[histogramQuantile]] for CUSTOM-BUCKET histograms (NHCB,
@@ -195,46 +87,9 @@ object NativeHistogram {
     * otherwise. NHCB has no zero bucket, so there is no zeroCount
     * argument. Same narrow per-row fold — map-side at any scale. */
   def histogramQuantileCustom(q: Double, posIdx: Column,
-      posCounts: Column, bounds: Column): Column =
-    histogramQuantileCustomImpl(q, posIdx, posCounts, bounds,
-      native = true)
-
-  private[graft] def histogramQuantileCustomImpl(q: Double, posIdx: Column,
-      posCounts: Column, bounds: Column, native: Boolean): Column = {
+      posCounts: Column, bounds: Column): Column = {
     require(q >= 0.0 && q <= 1.0, s"q must be in [0,1], got $q")
-    if (native)
-      return graft.functions.NhScalarFolds.quantileCustom(
-        q, posIdx, posCounts, bounds)
-    val total = coalesce(aggregate(posCounts, lit(0.0),
-      (a, c) => a + c.cast("double")), lit(0.0))
-    val rank = lit(q) * total
-    val nb = size(bounds)
-    val folded = aggregate(
-      zip_with(posIdx, posCounts, (i, c) => struct(i.as("i"), c.as("c"))),
-      struct(lit(0.0).as("cum"), lit(null).cast("double").as("res")),
-      (acc, b) => {
-        val i = b.getField("i")
-        val c = b.getField("c").cast("double")
-        val cumNext = acc.getField("cum") + c
-        val upper = element_at(bounds, i + 1) // 1-based element_at
-        val lower = when(i === 0, lit(0.0))
-          .otherwise(element_at(bounds, i))
-        val inBucket =
-          when(i >= nb, element_at(bounds, -1)) // +Inf → last finite
-          .when(i === 0 && upper <= 0, upper)   // classic rule
-          .otherwise(lower + (upper - lower) *
-            ((rank - acc.getField("cum")) / c))
-        when(acc.getField("res").isNotNull, acc)
-          .when(cumNext >= rank && c > 0,
-            struct(cumNext.as("cum"), inBucket.as("res")))
-          .otherwise(struct(cumNext.as("cum"),
-            lit(null).cast("double").as("res")))
-      },
-      acc => acc.getField("res"))
-    when(total === 0, lit(Double.NaN))
-      // FP-slack guard as in the exponential walk: rank beyond the
-      // last populated bucket resolves to the highest finite bound
-      .otherwise(coalesce(folded, element_at(bounds, -1)))
+    graft.functions.NhScalarFolds.quantileCustom(q, posIdx, posCounts, bounds)
   }
 
   /** PromQL `histogram_count`/`histogram_sum` are plain column
@@ -288,31 +143,8 @@ object NativeHistogram {
     */
   def histogramStdvar(sumCol: Column, zeroCount: Column, posIdx: Column,
       posCounts: Column, schema: Int = 0): Column =
-    histogramStdvarImpl(sumCol, zeroCount, posIdx, posCounts, schema,
-      native = true)
-
-  private[graft] def histogramStdvarImpl(sumCol: Column, zeroCount: Column,
-      posIdx: Column, posCounts: Column, schema: Int,
-      native: Boolean): Column = {
-    if (native)
-      return graft.functions.NhScalarFolds.stdvar(
-        sumCol, zeroCount, posIdx, posCounts, schema)
-    // double fold so the same walk serves rate vectors; integer
-    // counts stay exact below 2^53
-    val n = histogramCountD(zeroCount, posCounts)
-    val mean = sumCol.cast("double") / n.cast("double")
-    val zeroDev = zeroCount.cast("double") * mean * mean
-    val posDev = aggregate(
-      zip_with(posIdx, posCounts, (i, c) => struct(i.as("i"), c.as("c"))),
-      lit(0.0),
-      (acc, b) => {
-        val mid = (upperBound(b.getField("i") - 1, schema) +
-          upperBound(b.getField("i"), schema)) / 2.0
-        acc + b.getField("c").cast("double") * (mid - mean) * (mid - mean)
-      })
-    when(n === 0, lit(Double.NaN))
-      .otherwise((zeroDev + coalesce(posDev, lit(0.0))) / n.cast("double"))
-  }
+    graft.functions.NhScalarFolds.stdvar(
+      sumCol, zeroCount, posIdx, posCounts, schema)
 
   /** [[histogramStdvar]] for SIGNED histograms: negative bucket i's
     * middle is the positive middle reflected about 0. Summation
@@ -322,32 +154,8 @@ object NativeHistogram {
   def histogramStdvarSigned(sumCol: Column, zeroCount: Column,
       posIdx: Column, posCounts: Column, negIdx: Column,
       negCounts: Column, schema: Int = 0): Column =
-    histogramStdvarSignedImpl(sumCol, zeroCount, posIdx, posCounts,
-      negIdx, negCounts, schema, native = true)
-
-  private[graft] def histogramStdvarSignedImpl(sumCol: Column,
-      zeroCount: Column, posIdx: Column, posCounts: Column,
-      negIdx: Column, negCounts: Column, schema: Int,
-      native: Boolean): Column = {
-    if (native)
-      return graft.functions.NhScalarFolds.stdvarSigned(
-        sumCol, zeroCount, posIdx, posCounts, negIdx, negCounts, schema)
-    val n = histogramCountSigned(zeroCount, posCounts, negCounts)
-    val mean = sumCol.cast("double") / n
-    val zeroDev = zeroCount.cast("double") * mean * mean
-    def devFold(idx: Column, counts: Column, sign: Double): Column =
-      aggregate(
-        zip_with(idx, counts, (i, c) => struct(i.as("i"), c.as("c"))),
-        lit(0.0),
-        (acc, b) => {
-          val mid = lit(sign) * (upperBound(b.getField("i") - 1, schema) +
-            upperBound(b.getField("i"), schema)) / 2.0
-          acc + b.getField("c").cast("double") * (mid - mean) * (mid - mean)
-        })
-    when(n === 0, lit(Double.NaN))
-      .otherwise(((zeroDev + coalesce(devFold(posIdx, posCounts, 1.0),
-        lit(0.0))) + coalesce(devFold(negIdx, negCounts, -1.0), lit(0.0))) / n)
-  }
+    graft.functions.NhScalarFolds.stdvarSigned(
+      sumCol, zeroCount, posIdx, posCounts, negIdx, negCounts, schema)
 
   /** PromQL `rate(native_histogram[range])`: the bucket-wise counter
     * rate between each series' FIRST and LAST histogram sample in
@@ -487,6 +295,51 @@ object NativeHistogram {
         .as("neg_delta")): _*)
   }
 
+  // ---- shared snapshot-walk primitives (the resets fold runs the
+  // same per-step ladder as the native increase and stitch folds) ----
+
+  private[graft] def hfAsMap(i: Column, c: Column): Column =
+    map_from_arrays(i, c)
+  /** A component decreased vs prev (missing cur key reads 0). */
+  private[graft] def hfDecreased(prevM: Column, curM: Column): Column =
+    exists(map_keys(prevM), k =>
+      coalesce(element_at(curM, k), lit(0.0)) < element_at(prevM, k))
+  /** The hint ladder: an explicit chunk header beats value
+    * comparison; `unknown` falls back to the detector.
+    */
+  private[graft] def hfResetFlag(hint: Column, detected: Column): Column =
+    when(hint === "counter_reset", lit(true))
+      .when(hint === "not_counter_reset" || hint === "gauge", lit(false))
+      .otherwise(detected)
+
+  /** One whole-sample snapshot struct(t, z, i, c, ni, nc, h): time,
+    * zero count, both bucket sides and the reset hint (`unknown`
+    * without a hint column).
+    */
+  private[tsdb] def snapshot(tsSecCol: String, zeroCountCol: String,
+      posIdxCol: String, posCountsCol: String, negIdxCol: String,
+      negCountsCol: String, hintCol: Option[String]): Column =
+    struct(col(tsSecCol).cast("long").as("t"),
+      col(zeroCountCol).cast("double").as("z"),
+      col(posIdxCol).cast("array<int>").as("i"),
+      col(posCountsCol).cast("array<double>").as("c"),
+      col(negIdxCol).cast("array<int>").as("ni"),
+      col(negCountsCol).cast("array<double>").as("nc"),
+      hintCol.map(col).getOrElse(lit("unknown")).as("h"))
+
+  /** Each series' samples as ONE time-sorted [[snapshot]] array `_ss`
+    * — the input of the increase and resets walks. One series-keyed
+    * aggregation.
+    */
+  private[graft] def snapshotSeries(df: DataFrame, seriesCols: Seq[String],
+      tsSecCol: String, zeroCountCol: String, posIdxCol: String,
+      posCountsCol: String, negIdxCol: String, negCountsCol: String,
+      hintCol: Option[String]): DataFrame =
+    df.groupBy(seriesCols.map(col): _*)
+      .agg(sort_array(collect_list(snapshot(tsSecCol, zeroCountCol,
+        posIdxCol, posCountsCol, negIdxCol, negCountsCol, hintCol)))
+        .as("_ss"))
+
   /** RESET-AWARE `increase(native_histogram[range])` — the
     * Prometheus counter contract the first/last snapshot of
     * [[rateBySigned]] approximates: walk each series' samples in
@@ -504,11 +357,12 @@ object NativeHistogram {
     * Shape at scale: ONE series-keyed aggregation collecting the
     * range's samples (`sort_array(collect_list)` — bounded by
     * range/scrape-interval samples per series, e.g. ~20 for 5m@15s,
-    * NOT corpus-sized), then a NARROW `aggregate` fold over
-    * sparse-map accumulators — no second shuffle, no explode, no
-    * window function. Prefer [[rateBySigned]] when reset-freedom is
-    * known (downsampled rollups): its min/max buffer is O(1) per
-    * series instead of O(samples-in-range).
+    * NOT corpus-sized), then ONE native loop per series over
+    * sparse-map accumulators ([[graft.functions.NhIncreaseFold]]) —
+    * no second shuffle, no explode, no window function. Prefer
+    * [[rateBySigned]] when reset-freedom is known (downsampled
+    * rollups): its min/max buffer is O(1) per series instead of
+    * O(samples-in-range).
     *
     * Returns: series cols, `dt_sec`, `zero_inc`, `pos_idx`/`pos_inc`
     * (ascending union of bucket indexes seen in the range, with
@@ -525,142 +379,28 @@ object NativeHistogram {
     * `gauge` suppress detection; `unknown` (or no hint column) falls
     * back to the component-decrease walk, Prometheus's own ladder.
     */
-  // ---- shared snapshot-walk primitives (the increase/resets folds
-  // and the rollup stitch all run the same per-step ladder) ----
-
-  private[tsdb] def hfAsMap(i: Column, c: Column): Column =
-    map_from_arrays(i, c)
-  private[tsdb] def hfEmptyMap: Column = map_from_arrays(
-    array().cast("array<int>"), array().cast("array<double>"))
-  /** A component decreased vs prev (missing cur key reads 0). */
-  private[tsdb] def hfDecreased(prevM: Column, curM: Column): Column =
-    exists(map_keys(prevM), k =>
-      coalesce(element_at(curM, k), lit(0.0)) < element_at(prevM, k))
-  private[tsdb] def hfMergeSum(a: Column, b: Column): Column =
-    map_zip_with(a, b, (_, x, y) =>
-      coalesce(x, lit(0.0)) + coalesce(y, lit(0.0)))
-  /** One side's per-step contribution: the whole cur histogram on
-    * reset, else cur − prev over the UNION of both key sets. The
-    * union matters only when reset is hint-SUPPRESSED: a value-
-    * detected walk already flags any vanished nonzero bucket as a
-    * decrease (reset), but a `not_counter_reset`/`gauge` header
-    * overrides detection, and then a populated bucket absent from
-    * cur must still contribute −prev_count or the shrinkage is
-    * silently dropped. On reset, prev-only keys carry a null that
-    * map_filter removes, leaving exactly the cur histogram.
-    */
-  private[tsdb] def hfStepDelta(curI: Column, curC: Column, prevM: Column,
-      reset: Column): Column =
-    map_filter(
-      map_zip_with(map_from_arrays(curI, curC), prevM, (_, c, p) =>
-        when(reset, c)
-          .otherwise(coalesce(c, lit(0.0)) - coalesce(p, lit(0.0)))),
-      (_, v) => v.isNotNull)
-  /** The hint ladder: an explicit chunk header beats value
-    * comparison; `unknown` falls back to the detector.
-    */
-  private[tsdb] def hfResetFlag(hint: Column, detected: Column): Column =
-    when(hint === "counter_reset", lit(true))
-      .when(hint === "not_counter_reset" || hint === "gauge", lit(false))
-      .otherwise(detected)
-
   def increaseBySignedResets(df: DataFrame, seriesCols: Seq[String],
       tsSecCol: String, zeroCountCol: String, posIdxCol: String,
       posCountsCol: String, negIdxCol: String,
-      negCountsCol: String, hintCol: Option[String] = None): DataFrame =
-    increaseBySignedResetsImpl(df, seriesCols, tsSecCol, zeroCountCol,
-      posIdxCol, posCountsCol, negIdxCol, negCountsCol, hintCol,
-      native = true)
-
-  /** `native = true` (the production path) runs the per-step ladder
-    * as ONE native loop over the collected snapshot array
-    * ([[graft.functions.NhIncreaseFold]]); `false` keeps the original
-    * HOF `aggregate` formulation as the executable spec the native
-    * fold is pinned against (NativeHistogramSpec) — value-identical
-    * by contract, interpreter-speed by nature.
-    */
-  private[graft] def increaseBySignedResetsImpl(df: DataFrame,
-      seriesCols: Seq[String],
-      tsSecCol: String, zeroCountCol: String, posIdxCol: String,
-      posCountsCol: String, negIdxCol: String,
-      negCountsCol: String, hintCol: Option[String],
-      native: Boolean): DataFrame = {
-    val keys = seriesCols.map(col)
-    val snap = struct(col(tsSecCol).cast("long").as("t"),
-      col(zeroCountCol).cast("double").as("z"),
-      col(posIdxCol).cast("array<int>").as("i"),
-      col(posCountsCol).cast("array<double>").as("c"),
-      col(negIdxCol).cast("array<int>").as("ni"),
-      col(negCountsCol).cast("array<double>").as("nc"),
-      hintCol.map(col).getOrElse(lit("unknown")).as("h"))
-    val series = df.groupBy(keys: _*)
-      .agg(sort_array(collect_list(snap)).as("_ss"))
+      negCountsCol: String, hintCol: Option[String] = None): DataFrame = {
+    val series = snapshotSeries(df, seriesCols, tsSecCol, zeroCountCol,
+      posIdxCol, posCountsCol, negIdxCol, negCountsCol, hintCol)
       .filter(size(col("_ss")) >= 2)
-    if (native) {
-      val withF = series.withColumn("_f",
-        graft.functions.NhIncreaseFold.fold(col("_ss")))
-      val dt = (element_at(col("_ss"), -1).getField("t") -
-        element_at(col("_ss"), 1).getField("t")).cast("double")
-      return withF.select(keys ++ Seq(
-        dt.as("dt_sec"),
-        col("_f.z").as("zero_inc"),
-        col("_f.pos_idx").as("pos_idx"),
-        col("_f.pos_inc").as("pos_inc"),
-        col("_f.neg_idx").as("neg_idx"),
-        col("_f.neg_inc").as("neg_inc")): _*)
-    }
-
-    def asMap(i: Column, c: Column): Column = hfAsMap(i, c)
-    val emptyMap = hfEmptyMap
-    def decreased(prevM: Column, curM: Column): Column =
-      hfDecreased(prevM, curM)
-    def mergeSum(a: Column, b: Column): Column = hfMergeSum(a, b)
-    def stepDelta(curI: Column, curC: Column, prevM: Column,
-        reset: Column): Column = hfStepDelta(curI, curC, prevM, reset)
-
-    val first = element_at(col("_ss"), 1)
-    val init = struct(
-      lit(0.0).as("z"), emptyMap.as("p"), emptyMap.as("n"),
-      struct(first.getField("z").as("z"),
-        asMap(first.getField("i"), first.getField("c")).as("p"),
-        asMap(first.getField("ni"), first.getField("nc")).as("n"))
-        .as("prev"))
-    val folded = aggregate(
-      slice(col("_ss"), lit(2), size(col("_ss")) - 1), init,
-      (acc, cur) => {
-        val prev = acc.getField("prev")
-        val curP = asMap(cur.getField("i"), cur.getField("c"))
-        val curN = asMap(cur.getField("ni"), cur.getField("nc"))
-        val detected = (cur.getField("z") < prev.getField("z")) ||
-          decreased(prev.getField("p"), curP) ||
-          decreased(prev.getField("n"), curN)
-        val reset = hfResetFlag(cur.getField("h"), detected)
-        val dz = when(reset, cur.getField("z"))
-          .otherwise(cur.getField("z") - prev.getField("z"))
-        struct(
-          (acc.getField("z") + dz).as("z"),
-          mergeSum(acc.getField("p"),
-            stepDelta(cur.getField("i"), cur.getField("c"),
-              prev.getField("p"), reset)).as("p"),
-          mergeSum(acc.getField("n"),
-            stepDelta(cur.getField("ni"), cur.getField("nc"),
-              prev.getField("n"), reset)).as("n"),
-          struct(cur.getField("z").as("z"), curP.as("p"), curN.as("n"))
-            .as("prev"))
-      })
-    val withF = series.withColumn("_f", folded)
+    val withF = series.withColumn("_f",
+      graft.functions.NhIncreaseFold.fold(col("_ss")))
     val dt = (element_at(col("_ss"), -1).getField("t") -
       element_at(col("_ss"), 1).getField("t")).cast("double")
-    val posIdx = array_sort(map_keys(col("_f.p")))
-    val negIdx = array_sort(map_keys(col("_f.n")))
-    withF.select(keys ++ Seq(
-      dt.as("dt_sec"),
-      col("_f.z").as("zero_inc"),
-      posIdx.as("pos_idx"),
-      transform(posIdx, k => element_at(col("_f.p"), k)).as("pos_inc"),
-      negIdx.as("neg_idx"),
-      transform(negIdx, k => element_at(col("_f.n"), k)).as("neg_inc")): _*)
+    withF.select(seriesCols.map(col) ++
+      (dt.as("dt_sec") +: increaseColumns("_f")): _*)
   }
+
+  /** The increase columns (`zero_inc`, `pos_idx`/`pos_inc`,
+    * `neg_idx`/`neg_inc`) of the increase or stitch fold's result
+    * struct column `f`. */
+  private[tsdb] def increaseColumns(f: String): Seq[Column] =
+    Seq(col(s"$f.z").as("zero_inc"), col(s"$f.pos_idx").as("pos_idx"),
+      col(s"$f.pos_inc").as("pos_inc"), col(s"$f.neg_idx").as("neg_idx"),
+      col(s"$f.neg_inc").as("neg_inc"))
 
   /** PromQL `resets(native_histogram[range])`: count of counter
     * resets between consecutive samples, detected exactly as
@@ -673,35 +413,23 @@ object NativeHistogram {
       tsSecCol: String, zeroCountCol: String, posIdxCol: String,
       posCountsCol: String, negIdxCol: String,
       negCountsCol: String, hintCol: Option[String] = None): DataFrame = {
-    val keys = seriesCols.map(col)
-    val snap = struct(col(tsSecCol).cast("long").as("t"),
-      col(zeroCountCol).cast("double").as("z"),
-      col(posIdxCol).cast("array<int>").as("i"),
-      col(posCountsCol).cast("array<double>").as("c"),
-      col(negIdxCol).cast("array<int>").as("ni"),
-      col(negCountsCol).cast("array<double>").as("nc"),
-      hintCol.map(col).getOrElse(lit("unknown")).as("h"))
-    val series = df.groupBy(keys: _*)
-      .agg(sort_array(collect_list(snap)).as("_ss"))
-    def asMap(i: Column, c: Column): Column = map_from_arrays(i, c)
-    def decreased(prevM: Column, curM: Column): Column =
-      exists(map_keys(prevM), k =>
-        coalesce(element_at(curM, k), lit(0.0)) < element_at(prevM, k))
+    val series = snapshotSeries(df, seriesCols, tsSecCol, zeroCountCol,
+      posIdxCol, posCountsCol, negIdxCol, negCountsCol, hintCol)
     val first = element_at(col("_ss"), 1)
     val init = struct(lit(0L).as("n"),
       struct(first.getField("z").as("z"),
-        asMap(first.getField("i"), first.getField("c")).as("p"),
-        asMap(first.getField("ni"), first.getField("nc")).as("n"))
+        hfAsMap(first.getField("i"), first.getField("c")).as("p"),
+        hfAsMap(first.getField("ni"), first.getField("nc")).as("n"))
         .as("prev"))
     val folded = aggregate(
       slice(col("_ss"), lit(2), size(col("_ss")) - 1), init,
       (acc, cur) => {
         val prev = acc.getField("prev")
-        val curP = asMap(cur.getField("i"), cur.getField("c"))
-        val curN = asMap(cur.getField("ni"), cur.getField("nc"))
+        val curP = hfAsMap(cur.getField("i"), cur.getField("c"))
+        val curN = hfAsMap(cur.getField("ni"), cur.getField("nc"))
         val detected = (cur.getField("z") < prev.getField("z")) ||
-          decreased(prev.getField("p"), curP) ||
-          decreased(prev.getField("n"), curN)
+          hfDecreased(prev.getField("p"), curP) ||
+          hfDecreased(prev.getField("n"), curN)
         val reset = hfResetFlag(cur.getField("h"), detected)
         struct(
           (acc.getField("n") + when(reset, lit(1L)).otherwise(lit(0L)))
@@ -709,7 +437,7 @@ object NativeHistogram {
           struct(cur.getField("z").as("z"), curP.as("p"), curN.as("n"))
             .as("prev"))
       })
-    series.select(keys :+
+    series.select(seriesCols.map(col) :+
       folded.getField("n").cast("double").as("resets"): _*)
   }
 
@@ -725,36 +453,10 @@ object NativeHistogram {
     * uses; interpolated shares are spec-pinned.
     */
   def histogramFraction(lower: Double, upper: Double, zeroCount: Column,
-      posIdx: Column, posCounts: Column, schema: Int = 0): Column =
-    histogramFractionImpl(lower, upper, zeroCount, posIdx, posCounts,
-      schema, native = true)
-
-  private[graft] def histogramFractionImpl(lower: Double, upper: Double,
-      zeroCount: Column, posIdx: Column, posCounts: Column, schema: Int,
-      native: Boolean): Column = {
+      posIdx: Column, posCounts: Column, schema: Int = 0): Column = {
     require(lower <= upper, s"lower ($lower) must be ≤ upper ($upper)")
-    if (native)
-      return graft.functions.NhScalarFolds.fraction(
-        lower, upper, zeroCount, posIdx, posCounts, schema)
-    // double fold (histogramCountD) so rate vectors work too;
-    // integer totals stay exact below 2^53
-    val total = histogramCountD(zeroCount, posCounts)
-    val zeroContrib =
-      if (lower <= 0.0 && 0.0 <= upper) zeroCount.cast("double") else lit(0.0)
-    val inBuckets = aggregate(
-      zip_with(posIdx, posCounts, (i, c) => struct(i.as("i"), c.as("c"))),
-      lit(0.0),
-      (acc, b) => {
-        val bl = upperBound(b.getField("i") - 1, schema)
-        val bu = upperBound(b.getField("i"), schema)
-        val share = greatest(
-          least(lit(upper), bu) - greatest(lit(lower), bl), lit(0.0)) /
-          (bu - bl)
-        acc + b.getField("c").cast("double") * share
-      })
-    when(total === 0, lit(Double.NaN))
-      .otherwise((zeroContrib + coalesce(inBuckets, lit(0.0))) /
-        total.cast("double"))
+    graft.functions.NhScalarFolds.fraction(
+      lower, upper, zeroCount, posIdx, posCounts, schema)
   }
 
   /** [[histogramFraction]] for SIGNED histograms: negative bucket
@@ -763,40 +465,10 @@ object NativeHistogram {
     * order ((zero + posFold) + negFold), folds ascending index. */
   def histogramFractionSigned(lower: Double, upper: Double,
       zeroCount: Column, posIdx: Column, posCounts: Column,
-      negIdx: Column, negCounts: Column, schema: Int = 0): Column =
-    histogramFractionSignedImpl(lower, upper, zeroCount, posIdx,
-      posCounts, negIdx, negCounts, schema, native = true)
-
-  private[graft] def histogramFractionSignedImpl(lower: Double,
-      upper: Double, zeroCount: Column, posIdx: Column, posCounts: Column,
-      negIdx: Column, negCounts: Column, schema: Int,
-      native: Boolean): Column = {
+      negIdx: Column, negCounts: Column, schema: Int = 0): Column = {
     require(lower <= upper, s"lower ($lower) must be ≤ upper ($upper)")
-    if (native)
-      return graft.functions.NhScalarFolds.fractionSigned(
-        lower, upper, zeroCount, posIdx, posCounts, negIdx, negCounts,
-        schema)
-    val total = histogramCountSigned(zeroCount, posCounts, negCounts)
-    val zeroContrib =
-      if (lower <= 0.0 && 0.0 <= upper) zeroCount.cast("double") else lit(0.0)
-    def shareFold(idx: Column, counts: Column, neg: Boolean): Column =
-      aggregate(
-        zip_with(idx, counts, (i, c) => struct(i.as("i"), c.as("c"))),
-        lit(0.0),
-        (acc, b) => {
-          val u1 = upperBound(b.getField("i") - 1, schema)
-          val u2 = upperBound(b.getField("i"), schema)
-          val bl = if (neg) lit(-1.0) * u2 else u1
-          val bu = if (neg) lit(-1.0) * u1 else u2
-          val share = greatest(
-            least(lit(upper), bu) - greatest(lit(lower), bl), lit(0.0)) /
-            (bu - bl)
-          acc + b.getField("c").cast("double") * share
-        })
-    when(total === 0, lit(Double.NaN))
-      .otherwise(((zeroContrib +
-        coalesce(shareFold(posIdx, posCounts, neg = false), lit(0.0))) +
-        coalesce(shareFold(negIdx, negCounts, neg = true), lit(0.0))) / total)
+    graft.functions.NhScalarFolds.fractionSigned(
+      lower, upper, zeroCount, posIdx, posCounts, negIdx, negCounts, schema)
   }
 
   /** Bucket-wise aggregation of native histograms across series

@@ -226,7 +226,8 @@ class HistRollupStoreSpec extends SparkSpec {
       hintCol = Some("hint"))
     val sel = HistRollupStore.select(spark, path, 0L, 1000L)
     def run(native: Boolean) =
-      HistRollupStore.stitchedIncreaseOfImpl(sel, Seq("series"), native)
+      (if (native) HistRollupStore.stitchedIncreaseOf(sel, Seq("series"))
+      else NhReference.stitchedIncreaseOf(sel, Seq("series")))
         .collect().map(_.toSeq).toSet
     assert(run(true) == run(false))
   }

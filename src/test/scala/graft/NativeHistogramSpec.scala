@@ -557,8 +557,8 @@ class NativeHistogramSpec extends SparkSpec {
   test("native increase fold ≡ the HOF aggregate formulation " +
       "(randomized: resets, hints, vanishing and negative buckets)") {
     // the production path runs graft.functions.NhIncreaseFold; the
-    // HOF `aggregate` form stays as the executable spec — this pin
-    // compares the two over a seeded random walk that exercises
+    // HOF `aggregate` form (NhReference) is the executable spec —
+    // this pin compares the two over a seeded random walk that exercises
     // every ladder branch (value-detected resets, hint-forced and
     // hint-suppressed resets, buckets appearing/vanishing mid-range,
     // negative-bucket sides, empty sides)
@@ -579,17 +579,14 @@ class NativeHistogramSpec extends SparkSpec {
         hints(rnd.nextInt(hints.length)))
     }
     val df = rows.toDF("lbl", "t", "z", "i", "c", "ni", "nc", "h")
-    def run(native: Boolean) =
-      NativeHistogram.increaseBySignedResetsImpl(df, Seq("lbl"), "t",
-          "z", "i", "c", "ni", "nc", hintCol = Some("h"), native = native)
-        .collect().map(_.toSeq).toSet
-    assert(run(true) == run(false))
+    def run(native: Boolean, hintCol: Option[String]) =
+      (if (native) NativeHistogram.increaseBySignedResets(df, Seq("lbl"),
+        "t", "z", "i", "c", "ni", "nc", hintCol)
+      else NhReference.increaseBySignedResets(df, Seq("lbl"), "t", "z",
+        "i", "c", "ni", "nc", hintCol)).collect().map(_.toSeq).toSet
+    assert(run(true, Some("h")) == run(false, Some("h")))
     // and without a hint column (the detector-only ladder)
-    def runNoHint(native: Boolean) =
-      NativeHistogram.increaseBySignedResetsImpl(df, Seq("lbl"), "t",
-          "z", "i", "c", "ni", "nc", hintCol = None, native = native)
-        .collect().map(_.toSeq).toSet
-    assert(runNoHint(true) == runNoHint(false))
+    assert(run(true, None) == run(false, None))
   }
 
   test("native folds return NULL (not a crash) on an empty array") {

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.tsdb.NativeHistogram
 
 /** Pins the native scalar folds ([[graft.functions.NhScalarFolds]])
-  * bit-identical to the HOF formulations they replace (the
-  * `native = false` impl paths, kept in-tree as the executable spec).
+  * bit-identical to the HOF formulations they replace ([[NhReference]],
+  * the test-side executable spec), and pins that the public functions
+  * plan the native expressions, not the HOF forms.
   * Randomized histograms cover: empty sides, zero totals, sparse and
   * negative bucket indexes, float (fractional) counts, rank landing
   * in the zero bucket / first bucket / overflow, custom-bucket NHCB
@@ -58,10 +59,10 @@ class NhScalarFoldsSpec extends SparkSpec {
         q <- Seq(0.0, 0.25, 0.5, 0.9, 1.0); schema <- Seq(0, 2)) {
       val df = histFrame(seed, 40, float)
       assertSame(df,
-        NativeHistogram.histogramQuantileImpl(q, col("z"), col("i"),
-          col("c"), schema, native = true),
-        NativeHistogram.histogramQuantileImpl(q, col("z"), col("i"),
-          col("c"), schema, native = false),
+        NativeHistogram.histogramQuantile(q, col("z"), col("i"),
+          col("c"), schema),
+        NhReference.histogramQuantile(q, col("z"), col("i"),
+          col("c"), schema),
         s"quantile q=$q schema=$schema float=$float")
     }
   }
@@ -70,10 +71,10 @@ class NhScalarFoldsSpec extends SparkSpec {
     for (q <- Seq(0.0, 0.1, 0.5, 0.9, 1.0); schema <- Seq(0, 2)) {
       val df = histFrame(13 + schema, 40, float = true)
       assertSame(df,
-        NativeHistogram.histogramQuantileSignedImpl(q, col("z"), col("i"),
-          col("c"), col("ni"), col("nc"), schema, native = true),
-        NativeHistogram.histogramQuantileSignedImpl(q, col("z"), col("i"),
-          col("c"), col("ni"), col("nc"), schema, native = false),
+        NativeHistogram.histogramQuantileSigned(q, col("z"), col("i"),
+          col("c"), col("ni"), col("nc"), schema),
+        NhReference.histogramQuantileSigned(q, col("z"), col("i"),
+          col("c"), col("ni"), col("nc"), schema),
         s"quantileSigned q=$q schema=$schema")
     }
   }
@@ -91,10 +92,10 @@ class NhScalarFoldsSpec extends SparkSpec {
     val df = rows.toDF("id", "i", "c", "b")
     for (q <- Seq(0.0, 0.3, 0.5, 0.95, 1.0))
       assertSame(df,
-        NativeHistogram.histogramQuantileCustomImpl(q, col("i"), col("c"),
-          col("b"), native = true),
-        NativeHistogram.histogramQuantileCustomImpl(q, col("i"), col("c"),
-          col("b"), native = false),
+        NativeHistogram.histogramQuantileCustom(q, col("i"), col("c"),
+          col("b")),
+        NhReference.histogramQuantileCustom(q, col("i"), col("c"),
+          col("b")),
         s"quantileCustom q=$q")
   }
 
@@ -102,16 +103,16 @@ class NhScalarFoldsSpec extends SparkSpec {
     for (schema <- Seq(0, 2)) {
       val df = histFrame(31 + schema, 40, float = true)
       assertSame(df,
-        NativeHistogram.histogramStdvarImpl(col("hsum"), col("z"), col("i"),
-          col("c"), schema, native = true),
-        NativeHistogram.histogramStdvarImpl(col("hsum"), col("z"), col("i"),
-          col("c"), schema, native = false),
+        NativeHistogram.histogramStdvar(col("hsum"), col("z"), col("i"),
+          col("c"), schema),
+        NhReference.histogramStdvar(col("hsum"), col("z"), col("i"),
+          col("c"), schema),
         s"stdvar schema=$schema")
       assertSame(df,
-        NativeHistogram.histogramStdvarSignedImpl(col("hsum"), col("z"),
-          col("i"), col("c"), col("ni"), col("nc"), schema, native = true),
-        NativeHistogram.histogramStdvarSignedImpl(col("hsum"), col("z"),
-          col("i"), col("c"), col("ni"), col("nc"), schema, native = false),
+        NativeHistogram.histogramStdvarSigned(col("hsum"), col("z"),
+          col("i"), col("c"), col("ni"), col("nc"), schema),
+        NhReference.histogramStdvarSigned(col("hsum"), col("z"),
+          col("i"), col("c"), col("ni"), col("nc"), schema),
         s"stdvarSigned schema=$schema")
     }
   }
@@ -122,18 +123,56 @@ class NhScalarFoldsSpec extends SparkSpec {
     for ((lo, hi) <- Seq((1.0, 8.0), (-2.0, 2.0), (0.3, 5.7),
         (-10.0, -0.25), (0.0, 0.0))) {
       assertSame(df,
-        NativeHistogram.histogramFractionImpl(lo, hi, col("z"), col("i"),
-          col("c"), 0, native = true),
-        NativeHistogram.histogramFractionImpl(lo, hi, col("z"), col("i"),
-          col("c"), 0, native = false),
+        NativeHistogram.histogramFraction(lo, hi, col("z"), col("i"),
+          col("c"), 0),
+        NhReference.histogramFraction(lo, hi, col("z"), col("i"),
+          col("c"), 0),
         s"fraction [$lo,$hi]")
       assertSame(df,
-        NativeHistogram.histogramFractionSignedImpl(lo, hi, col("z"),
-          col("i"), col("c"), col("ni"), col("nc"), 0, native = true),
-        NativeHistogram.histogramFractionSignedImpl(lo, hi, col("z"),
-          col("i"), col("c"), col("ni"), col("nc"), 0, native = false),
+        NativeHistogram.histogramFractionSigned(lo, hi, col("z"),
+          col("i"), col("c"), col("ni"), col("nc"), 0),
+        NhReference.histogramFractionSigned(lo, hi, col("z"),
+          col("i"), col("c"), col("ni"), col("nc"), 0),
         s"fractionSigned [$lo,$hi]")
     }
+  }
+
+  test("public NH folds, the rollup stitch and lshBucket plan native " +
+      "expressions and no HOF node") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, MapZipWith, ZipWith}
+    import graft.functions._
+    import graft.tsdb.HistRollupStore
+    def assertNative(d: DataFrame, native: Class[_]): Unit = {
+      val plan = d.queryExecution.analyzed
+      val exprs = plan.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+      assert(exprs.exists(native.isInstance) && !exprs.exists(e =>
+        e.isInstanceOf[ArrayAggregate] || e.isInstanceOf[ZipWith] ||
+          e.isInstanceOf[MapZipWith]),
+        s"want ${native.getSimpleName} and no HOF node in\n$plan")
+    }
+    val df = histFrame(5, 8, float = true)
+    val (z, i, c, ni, nc, s, nh) = (col("z"), col("i"), col("c"), col("ni"),
+      col("nc"), col("hsum"), NativeHistogram)
+    Seq(
+      nh.histogramQuantile(0.5, z, i, c) -> classOf[NhQuantile],
+      nh.histogramQuantileSigned(0.5, z, i, c, ni, nc) -> classOf[NhQuantileSigned],
+      nh.histogramQuantileCustom(0.5, i, c, array(lit(0.5), lit(2.0))) ->
+        classOf[NhQuantileCustom],
+      nh.histogramStdvar(s, z, i, c) -> classOf[NhStdvar],
+      nh.histogramStdvarSigned(s, z, i, c, ni, nc) -> classOf[NhStdvar],
+      nh.histogramFraction(1.0, 4.0, z, i, c) -> classOf[NhFraction],
+      nh.histogramFractionSigned(-1.0, 4.0, z, i, c, ni, nc) -> classOf[NhFraction]
+    ).foreach { case (e, cls) => assertNative(df.select(e), cls) }
+    assertNative(nh.increaseBySignedResets(df, Seq("hsum"), "id", "z", "i", "c",
+      "ni", "nc"), classOf[NhIncreaseFold])
+    val path = "/tmp/graft_nh_scalar_spec_plan_rollup"
+    HistRollupStore.write(df, path, Seq("hsum"), "id", "z", "i", "c", "ni",
+      "nc", 10L)
+    assertNative(HistRollupStore.stitchedIncreaseOf(
+      HistRollupStore.select(spark, path, 0L, 100L), Seq("hsum")),
+      classOf[NhStitchFold])
+    assertNative(Seq(Seq(1.0, -2.0)).toDF("v")
+      .select(VectorFunctions.lshBucket(col("v"), 8)), classOf[HyperplaneBucket])
   }
 
   test("native sums ≡ aggregate folds (null array, null element, empty)") {
@@ -173,10 +212,10 @@ class NhScalarFoldsSpec extends SparkSpec {
         array(lit(0), lit(1), lit(2)).as("i"),
         array(lit(3.0), lit(4.0)).as("c")) // shorter counts → padded null
     assertSame(df,
-      NativeHistogram.histogramQuantileImpl(0.9, col("z"), col("i"),
-        col("c"), 0, native = true),
-      NativeHistogram.histogramQuantileImpl(0.9, col("z"), col("i"),
-        col("c"), 0, native = false),
+      NativeHistogram.histogramQuantile(0.9, col("z"), col("i"),
+        col("c"), 0),
+      NhReference.histogramQuantile(0.9, col("z"), col("i"),
+        col("c"), 0),
       "padded quantile")
   }
 }

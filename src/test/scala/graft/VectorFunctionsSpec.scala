@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
 
@@ -45,6 +46,24 @@ class VectorFunctionsSpec extends SparkSpec {
       .select(cosine(col("a"), col("b"))).head.getDouble(0)
     assert(out == 0.0)
   }
+
+  // The HOF formulation lshBucket replaced, kept as its reference: bit
+  // p is the sign of sum_i v_i * r_{p,i}, with ±1 weights r derived
+  // from xxhash64(dim, plane).
+  private def hyperplaneBit(v: Column, plane: Int): Column = {
+    val signed = zip_with(
+      v,
+      transform(sequence(lit(0), size(v) - 1),
+        i => when(pmod(xxhash64(i, lit(plane)), lit(2)) === 0, 1.0).otherwise(-1.0)),
+      (x, s) => x * s)
+    val s = aggregate(signed, lit(0.0), (acc, x) => acc + x)
+    when(s >= 0, 1L).otherwise(0L)
+  }
+
+  private def lshBucketHof(v: Column, nPlanes: Int): Column =
+    (0 until nPlanes)
+      .map(p => hyperplaneBit(v, p) * lit(1L << p))
+      .reduce(_ + _)
 
   test("native lshBucket is bit-identical to the HOF formulation") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
