@@ -8,8 +8,11 @@ import org.apache.spark.sql.SparkSession
   * work the query function performs eagerly — training collects,
   * localCheckpoint materializations, block/layer fixture builds) from
   * EXECUTION time (the `.count()` action the bench times), counts the
-  * Spark jobs/stages/tasks each phase submits, and dumps
-  * `explain("formatted")` to `<outDir>/<name>.txt`.
+  * Spark jobs/stages/tasks each phase submits and the generated
+  * classes it compiles (`compiles`: misses of Spark's compiled-class
+  * cache, whole-stage and expression classes alike, read as the
+  * delta of `CodegenMetrics.METRIC_COMPILATION_TIME`'s count), and
+  * dumps `explain("formatted")` to `<outDir>/<name>.txt`.
   *
   * Usage: runMain graft.tools.QueryProfile <outDir> <q1,q2,...|all>
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
@@ -43,6 +46,11 @@ object QueryProfile {
         tasks.incrementAndGet()
     })
 
+    // generated-class compiles so far in this JVM (driver and the
+    // local executors share the counter)
+    def compiles(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
     val all = graft.SparkEntry.queries
     val names =
       if (namesArg == "all") all.keys.toSeq.sorted
@@ -57,17 +65,20 @@ object QueryProfile {
       val rows = (1 to passes).map { _ =>
         System.gc()
         val j0 = jobs.get(); val s0 = stages.get(); val t0c = tasks.get()
+        val c0 = compiles()
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
         val t1 = System.nanoTime()
         val jC = jobs.get() - j0; val sC = stages.get() - s0
         val tC = tasks.get() - t0c
         val j1 = jobs.get(); val s1 = stages.get(); val t1c = tasks.get()
+        val c1 = compiles()
         df.count()
         val t2 = System.nanoTime()
         val jE = jobs.get() - j1; val sE = stages.get() - s1
         val tE = tasks.get() - t1c
-        (((t1 - t0) / 1e9, jC, sC, tC), ((t2 - t1) / 1e9, jE, sE, tE))
+        (((t1 - t0) / 1e9, jC, sC, tC, c1 - c0),
+          ((t2 - t1) / 1e9, jE, sE, tE, compiles() - c1))
       }
       def med(xs: Seq[Double]): Double = xs.sorted.apply((xs.size - 1) / 2)
       val cT = med(rows.map(_._1._1)); val eT = med(rows.map(_._2._1))
@@ -78,8 +89,8 @@ object QueryProfile {
       // are approximate phase attribution, not an exact ledger.
       val last = rows.last
       System.err.println(
-        f"[profile] $name%-34s construct ${cT}%6.2f s (last-pass jobs ${last._1._2}%2d stages ${last._1._3}%3d tasks ${last._1._4}%5d)  " +
-        f"exec ${eT}%6.2f s (last-pass jobs ${last._2._2}%2d stages ${last._2._3}%3d tasks ${last._2._4}%5d)  total ${cT + eT}%6.2f s")
+        f"[profile] $name%-34s construct ${cT}%6.2f s (last-pass jobs ${last._1._2}%2d stages ${last._1._3}%3d tasks ${last._1._4}%5d compiles ${last._1._5}%3d)  " +
+        f"exec ${eT}%6.2f s (last-pass jobs ${last._2._2}%2d stages ${last._2._3}%3d tasks ${last._2._4}%5d compiles ${last._2._5}%3d)  total ${cT + eT}%6.2f s")
       try {
         val df = fn(spark, sfDir)
         val plan = df.queryExecution.explainString(

@@ -1,10 +1,12 @@
 package graft.tsdb
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.TimestampType
 
-import graft.functions.{ChunkDecode, ChunkEncode}
+import graft.functions.{ChunkDecode, ChunkEncode, QueryConst}
 
 /** The reference's dual-file chunked storage model, Spark-native —
   * a converted block is a LABELS file (one row per series: label
@@ -151,10 +153,23 @@ object ChunkStore {
       .join(broadcast(matched), refCols)
   }
 
+  /** Epoch µs of the timestamp string `ts` under the session time
+    * zone — what `unix_micros(lit(ts).cast("timestamp"))` folds to —
+    * as a bound constant ([[QueryConst]]) for the decoded-sample
+    * side of a select. The chunk metadata and bucket filters keep
+    * their literals: those reach the scan. */
+  private[tsdb] def decodedBoundMicros(spark: SparkSession, ts: String): Column =
+    Option(Cast(Literal(ts), TimestampType,
+        Some(spark.sessionState.conf.sessionLocalTimeZone)).eval()) match {
+      case Some(us: Long) => QueryConst.long(us)
+      case _ => throw new IllegalArgumentException(s"not a timestamp: '$ts'")
+    }
+
   private def decodeSamples(chunks: DataFrame, mint: String, maxt: String,
       seriesCols: Seq[String], tsCol: String, valueCol: String): DataFrame = {
-    val qmint = unix_micros(lit(mint).cast("timestamp"))
-    val qmaxt = unix_micros(lit(maxt).cast("timestamp"))
+    val spark = chunks.sparkSession
+    val qmint = decodedBoundMicros(spark, mint)
+    val qmaxt = decodedBoundMicros(spark, maxt)
     val decoded = ColumnBridge.column(ChunkDecode(
       ColumnBridge.expression(col("data")),
       ColumnBridge.expression(qmint),
@@ -165,7 +180,7 @@ object ChunkStore {
       .select((seriesCols.map(col) :+ explode(decoded).as("_s")): _*)
       .filter(col("_s.ts") >= qmint && col("_s.ts") < qmaxt)
       .select((seriesCols.map(col) :+
-        timestamp_micros(col("_s.ts")).as(tsCol) :+
+        QueryConst.decodedTs(timestamp_micros(col("_s.ts")), tsCol) :+
         col("_s.value").as(valueCol)): _*)
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
-import graft.functions.{FloatHistChunkDecode, FloatHistChunkEncode, HistChunkDecode, HistChunkEncode}
+import graft.functions.{FloatHistChunkDecode, FloatHistChunkEncode, HistChunkDecode, HistChunkEncode, QueryConst}
 
 /** [[ChunkStore]]'s dual-file layout for NATIVE-histogram series —
   * the reference's chunked storage applied to its third encoding
@@ -216,15 +216,19 @@ object HistChunkStore {
       .filter(col("maxt") >= qmint && col("mint") < qmaxt)
       .join(broadcast(matched), refCols)
 
+    // the decoded-sample side binds its bounds; the filters above
+    // reach the scan and keep their literals
+    val (dmint, dmaxt) = (ChunkStore.decodedBoundMicros(spark, mint),
+      ChunkStore.decodedBoundMicros(spark, maxt))
     val decoded = ColumnBridge.column(
       if (float) FloatHistChunkDecode(
         ColumnBridge.expression(col("data")),
-        ColumnBridge.expression(qmint),
-        ColumnBridge.expression(qmaxt))
+        ColumnBridge.expression(dmint),
+        ColumnBridge.expression(dmaxt))
       else HistChunkDecode(
         ColumnBridge.expression(col("data")),
-        ColumnBridge.expression(qmint),
-        ColumnBridge.expression(qmaxt)))
+        ColumnBridge.expression(dmint),
+        ColumnBridge.expression(dmaxt)))
     // signed blocks split the even/odd-interleaved stream back into
     // the two sides (narrow per-row transforms; the unsigned branch
     // passes the arrays through untouched)
@@ -236,9 +240,9 @@ object HistChunkStore {
     chunks
       .select((seriesCols.map(col) :+ col("custom_values") :+
         col("signed") :+ explode(decoded).as("_s")): _*)
-      .filter(col("_s.ts") >= qmint && col("_s.ts") < qmaxt)
+      .filter(col("_s.ts") >= dmint && col("_s.ts") < dmaxt)
       .select((seriesCols.map(col) :+
-        timestamp_micros(col("_s.ts")).as(tsCol) :+
+        QueryConst.decodedTs(timestamp_micros(col("_s.ts")), tsCol) :+
         col("_s.zero").as("zero_count") :+
         when(col("signed"), transform(posPairs,
             b => (b.getField("k") / 2).cast("int")))

@@ -100,16 +100,14 @@ object PromOps {
     val w = Window.partitionBy(seriesCols.map(col): _*)
       .orderBy((col(tsCol) +: tieBreak.map(col)): _*)
     val tsMs = unix_millis(col(tsCol).cast("timestamp"))
+    val delta = when(col("_prev").isNull, lit(0.0))
+      .when(col(valueCol) >= col("_prev"), col(valueCol) - col("_prev"))
+      .otherwise(col(valueCol)) // counter reset
     val perSeries = df
-      .withColumn("_ts_ms", tsMs)
-      .withColumn("_prev", lag(col(valueCol), 1).over(w))
-      .withColumn("_delta",
-        when(col("_prev").isNull, lit(0.0))
-          .when(col(valueCol) >= col("_prev"), col(valueCol) - col("_prev"))
-          .otherwise(col(valueCol))) // counter reset
+      .withColumns(Map("_ts_ms" -> tsMs, "_prev" -> lag(col(valueCol), 1).over(w)))
       .groupBy(seriesCols.map(col): _*)
       .agg(
-        sum(col("_delta").cast("decimal(30,8)")).cast("double").as("_inc"),
+        sum(delta.cast("decimal(30,8)")).cast("double").as("_inc"),
         min(col("_ts_ms")).as("_first_ms"),
         max(col("_ts_ms")).as("_last_ms"),
         // order the first-sample pick on the FULL-RESOLUTION ts (the

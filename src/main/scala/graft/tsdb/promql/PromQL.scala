@@ -2,8 +2,11 @@ package graft.tsdb.promql
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.IntegralDivide
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
+import graft.functions.QueryConst
 import graft.tsdb.PromOps
 
 /** Evaluation context for a PromQL query: which tables back which
@@ -259,6 +262,10 @@ object PromQL {
 
   private def fail(msg: String): Nothing = throw new PromQLCompileException(msg)
 
+  /** Integer division truncating toward zero — SQL's `div`. */
+  private def idiv(a: Column, b: Column): Column = ColumnBridge.column(
+    IntegralDivide(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+
   private final class Compiler(ctx: PromQLContext, grid: Option[StepGrid]) {
 
     // fresh carrier-column names so two scalar() results can join
@@ -398,12 +405,17 @@ object PromQL {
       // a function of the column would not reach PushedFilters, and
       // with integer-ms bounds the two are equivalent
       // (floor(x) >= s ⟺ x >= s and floor(x) < e ⟺ x < e for
-      // integer s, e) — PlanAudit asserts the pushdown
+      // integer s, e) — PlanAudit asserts the pushdown. A ts decoded
+      // from chunk blobs (its store marks it) can never push, so its
+      // bounds are QueryConsts and the generated code survives a
+      // moved window; any other ts keeps literal bounds
       val tsCol = col(ctx.tsCol).cast("timestamp")
+      val bound: Long => Column =
+        if (QueryConst.isDecodedTs(table, ctx.tsCol)) QueryConst.timestampMillis
+        else ms => timestamp_millis(lit(ms))
       val filtered0 = graft.tsdb.Matcher.compile(sel.matchers)
         .map(table.filter).getOrElse(table)
-        .filter(tsCol >= timestamp_millis(lit(spanStartMs)) &&
-          tsCol < timestamp_millis(lit(spanEndMs)))
+        .filter(tsCol >= bound(spanStartMs) && tsCol < bound(spanEndMs))
       // converted-layout partition pruning: a LITERAL bucket range
       // derived from the time range prunes directories at plan time
       ctx.bucketCol match {
@@ -422,7 +434,9 @@ object PromQL {
       * s with tsm < s <= tsm + range, tsm = ts + offset. The step
       * index bounds are exact integer math (a bounded `sequence`
       * explode of at most range/step + 1 entries per row — never a
-      * per-step rescan, never a range join).
+      * per-step rescan, never a range join). One select: the grid's
+      * start and last index are bound constants, so a moved window
+      * keeps the generated code.
       */
     private def stepExplode(rows: DataFrame, g: StepGrid, offsetMs: Long,
         rangeMs: Long): DataFrame = {
@@ -431,20 +445,21 @@ object PromQL {
       // needs, and they agree on non-negatives): tsm >= gridStart -
       // range - |offset shift| by the scan span, so S covers it
       val s = ((rangeMs + math.max(0L, -offsetMs)) / g.stepMs + 2L) * g.stepMs
-      val shiftedStart = g.startMs - s
-      rows
-        .withColumn("_tsm", col(TS) + lit(offsetMs))
-        .withColumn("_k0", greatest(lit(0L),
-          expr(s"(_tsm - ${shiftedStart}L) div ${g.stepMs}L") -
-            lit(s / g.stepMs) + lit(1L)))
-        .withColumn("_k1", least(lit(g.lastIdx),
-          expr(s"(_tsm + ${rangeMs}L - ${shiftedStart}L) div ${g.stepMs}L") -
-            lit(s / g.stepMs)))
-        .filter(col("_k0") <= col("_k1"))
-        .select(col("*"), explode(sequence(col("_k0"), col("_k1"))).as("_k"))
-        .withColumn(STEP, lit(g.startMs) + col("_k") * g.stepMs)
-        .drop("_tsm", "_k0", "_k1", "_k")
+      val shiftedStart = QueryConst.long(g.startMs - s)
+      val step = lit(g.stepMs)
+      val tsm = col(TS) + lit(offsetMs)
+      val k0 = greatest(lit(0L),
+        idiv(tsm - shiftedStart, step) - lit(s / g.stepMs) + lit(1L))
+      val k1 = least(QueryConst.long(g.lastIdx),
+        idiv(tsm + lit(rangeMs) - shiftedStart, step) - lit(s / g.stepMs))
+      // an empty index range explodes a null, i.e. to no rows
+      rows.select(col("*"), explode(when(k0 <= k1,
+        sequence(stepAt(g, k0), stepAt(g, k1), step))).as(STEP))
     }
+
+    /** Epoch ms of step index `k`; the grid start is a bound constant. */
+    private def stepAt(g: StepGrid, k: Column): Column =
+      QueryConst.long(g.startMs) + k * g.stepMs
 
     /** Resolve an `@` modifier to a fixed epoch-ms instant: `start()`
       * / `end()` are the grid bounds in range mode, the evaluation
@@ -503,8 +518,7 @@ object PromQL {
     /** The step grid as a (tiny) DataFrame — one row per step. */
     private def gridDf: DataFrame = {
       val g = grid.getOrElse(fail("internal: gridDf outside range mode"))
-      sparkOf.range(0, g.lastIdx + 1)
-        .select((lit(g.startMs) + col("id") * g.stepMs).as(STEP))
+      sparkOf.range(0, g.lastIdx + 1).select(stepAt(g, col("id")).as(STEP))
     }
 
     /** Computed vectors carry the evaluation timestamp — the step's
@@ -1431,8 +1445,8 @@ object PromQL {
       val k = keys(rv.labels)
       val out = PromOps.extrapolatedRateAt(rv.rows, k, ctx.tsCol,
           ctx.valueCol, startCol, endCol, ctx.tieBreak)
-        .withColumn("value", col(if (c.fn == "rate") "rate" else "increase"))
-      stamped(out.select(k.map(col) :+ col("value"): _*), rv.labels)
+      stamped(out.select(k.map(col) :+
+        col(if (c.fn == "rate") "rate" else "increase").as("value"): _*), rv.labels)
     }
 
     /** The simple `*_over_time` family: one partial-aggregating

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.StructType
 
-import graft.functions.{ChunkDecode, MergeSampleRuns}
+import graft.functions.{ChunkDecode, MergeSampleRuns, QueryConst}
 import graft.tsdb.{ChunkCodec, ChunkencHistCodec, HistChunkCodec, Matcher}
 import ParquetShardSchema._
 
@@ -65,7 +65,11 @@ import ParquetShardSchema._
   *      window overlaps the query range (`ReadSchema` pruning — the
   *      columnar analog of the reference reading only in-range data
   *      columns, schema.go DataColumIdx), and [[ChunkDecode]] skips
-  *      non-overlapping frames inside each cell by header.
+  *      non-overlapping frames inside each cell by header. The
+  *      decode bounds and the per-sample range filter are
+  *      [[graft.functions.QueryConst]]s, and the output ts carries
+  *      the decoded-sample mark, so a moved window reuses the
+  *      compiled code of the last one.
   */
 object ParquetShardStore {
 
@@ -524,10 +528,10 @@ object ParquetShardStore {
       : org.apache.spark.sql.Column => org.apache.spark.sql.Column =
     c => ColumnBridge.column(ChunkDecode(
       ColumnBridge.expression(c),
-      ColumnBridge.expression(lit(mintMs)),
+      ColumnBridge.expression(QueryConst.long(mintMs)),
       // frame-header filter is inclusive (reference semantics);
       // the exact [mint, maxt) bound re-applies per sample after
-      ColumnBridge.expression(lit(maxtMs - 1))))
+      ColumnBridge.expression(QueryConst.long(maxtMs - 1))))
 
   /** [[select]] over a [[writeHist]] shard: output is the
     * NativeHistogram row model (`zero_count`/`pos_idx`/`pos_counts`
@@ -549,8 +553,8 @@ object ParquetShardStore {
       : org.apache.spark.sql.Column => org.apache.spark.sql.Column =
     c => ColumnBridge.column(graft.functions.ChunkencHistDecode(
       ColumnBridge.expression(c),
-      ColumnBridge.expression(lit(mintMs)),
-      ColumnBridge.expression(lit(maxtMs - 1))))
+      ColumnBridge.expression(QueryConst.long(mintMs)),
+      ColumnBridge.expression(QueryConst.long(maxtMs - 1))))
 
   /** [[selectHist]] over a [[writeFloatHist]] shard (enc=3 cells);
     * zero/counts come back as doubles. */
@@ -564,8 +568,8 @@ object ParquetShardStore {
       : org.apache.spark.sql.Column => org.apache.spark.sql.Column =
     c => ColumnBridge.column(graft.functions.ChunkencFloatHistDecode(
       ColumnBridge.expression(c),
-      ColumnBridge.expression(lit(mintMs)),
-      ColumnBridge.expression(lit(maxtMs - 1))))
+      ColumnBridge.expression(QueryConst.long(mintMs)),
+      ColumnBridge.expression(QueryConst.long(maxtMs - 1))))
 
   private def histOutput: Seq[org.apache.spark.sql.Column] = Seq(
     col("_s.zero").as("zero_count"),
@@ -879,8 +883,9 @@ object ParquetShardStore {
     val allSamples = if (decoded.size == 1) decoded.head else concat(decoded: _*)
     joined
       .select((names.map(col) :+ explode(allSamples).as("_s")): _*)
-      .filter(col("_s.ts") >= mintMs && col("_s.ts") < maxtMs)
-      .select((names.map(col) :+
-        timestamp_millis(col("_s.ts")).as(tsCol)) ++ sampleOutput: _*)
+      .filter(col("_s.ts") >= QueryConst.long(mintMs) &&
+        col("_s.ts") < QueryConst.long(maxtMs))
+      .select((names.map(col) :+ QueryConst.decodedTs(
+        timestamp_millis(col("_s.ts")), tsCol)) ++ sampleOutput: _*)
   }
 }
