@@ -345,10 +345,11 @@ object ChunkFamilies {
 
 /** `merge_sample_runs(runs)`: k-way last-writer-wins merge of the
   * decoded sample arrays ("runs") of ONE series — the series-grain
-  * kernel of shard compaction (the reference's chunk-series merge,
-  * convert/merge.go). `runs` is `array<struct<pri, samples>>`:
-  * `pri` any orderable priority, `samples` an array of sample structs
-  * whose field 0 is the ms timestamp (long), sorted by it. The
+  * kernel of shard and chunk-store compaction (convert/merge.go).
+  * `runs` is `array<struct<pri, samples>>`: `pri` any orderable
+  * priority, `samples` an array of sample structs whose field 0 is
+  * the timestamp, a long (ms in shards, µs in chunk stores), sorted
+  * by it. The
   * sample struct is otherwise opaque, so XOR and histogram samples
   * share the kernel. Output: the merged samples, sorted by ts, exactly
   * one per distinct ts:

@@ -675,7 +675,8 @@ object EventsStream {
     * Structured Streaming: live ingest appends small head blocks,
     * compaction produces the queryable long-term block; LWW on
     * (series, ts) across batches is inherited from mergeBlocks'
-    * later-dir-wins order (sorted by batch id). Per-micro-batch
+    * later-dir-wins order (sorted by batch id), and the merge moves
+    * encoded chunk rows, never samples. Per-micro-batch
     * work is the same bounded groupBy-encode the batch writer runs;
     * no state store is needed because blocks are immutable once
     * written.

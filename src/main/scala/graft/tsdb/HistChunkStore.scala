@@ -1,6 +1,7 @@
 package graft.tsdb
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
@@ -22,15 +23,12 @@ import graft.functions.{FloatHistChunkDecode, FloatHistChunkEncode, HistChunkDec
   * [[NativeHistogram]] column model (`zero_count`, `pos_idx`,
   * `pos_counts`, optional sum), so `histogramQuantile`/`rateBy`/
   * `sumBy` run directly on the select's output — chunked storage to
-  * PromQL answer without ever leaving one declarative plan.
+  * PromQL answer without ever leaving one declarative plan. The read
+  * front half, write tail and compaction core are [[ChunkStore]]'s;
+  * this object adds the histogram codecs, the signed even/odd
+  * interleave and the `custom_values`/`signed` label columns.
   */
 object HistChunkStore {
-
-  private val refCols = Seq("series_ref", "series_ref2")
-
-  private def withSeriesRef(df: DataFrame, seriesCols: Seq[String]): DataFrame =
-    df.withColumn("series_ref", xxhash64(seriesCols.map(col): _*))
-      .withColumn("series_ref2", xxhash64(lit(1) +: seriesCols.map(col): _*))
 
   /** Write a native-histogram table (`tsCol` timestamp; `zeroCol`
     * long; `idxCol` array<int> ascending; `cntCol` array<long>;
@@ -83,12 +81,7 @@ object HistChunkStore {
       customValues: Seq[Double] = Nil,
       negIdxCol: Option[String] = None,
       negCountsCol: Option[String] = None): Unit = {
-    require(seriesCols.nonEmpty, "need at least one series label column")
-    require((histSchema ==
-        graft.tsdb.block.ChunkencHistogram.CustomBucketsSchema) ==
-      customValues.nonEmpty,
-      "customValues required iff histSchema is the custom-bucket " +
-        "schema (-53)")
+    requireBounds(histSchema, customValues)
     require(negIdxCol.isDefined == negCountsCol.isDefined,
       "negIdxCol and negCountsCol must be passed together")
     require(negIdxCol.isEmpty || customValues.isEmpty,
@@ -113,55 +106,52 @@ object HistChunkStore {
           .withColumn("_eff_cnt", transform(col("_m"), b => b.getField("c")))
           .drop("_m")
       }
-    val withKey = withSeriesRef(dfEff, seriesCols)
-      .withColumn("bucket", TsdbConverter.bucketCol(tsCol, colDuration))
-      .withColumn("_ts_us", unix_micros(col(tsCol)))
-
-    // ONE sample-scale pass ([[ChunkStore.write]]'s structure): the
-    // chunk aggregation carries the label columns through (first()
-    // per group — constant within a 128-bit ref group) and both files
-    // derive from its materialized output, so the labels distinct and
-    // its range-partitioner sampling run over series×bucket rows
-    // instead of re-deriving the raw input (a compaction's N-block
-    // decode + LWW merge) once per pass.
-    val sample = struct(
-      col("_ts_us").as("ts"),
+    val sample = (ts: Column) => struct(
+      ts.as("ts"),
       col(zeroCol).cast(if (float) "double" else "long").as("zero"),
       col("_eff_idx").as("idx"),
       col("_eff_cnt").as("cnt"),
       sumCol.map(c => col(c).cast("double"))
         .getOrElse(lit(null).cast("double")).as("sum"))
-    val sorted = ColumnBridge.expression(sort_array(collect_list(sample)))
-    val enc = ColumnBridge.column(
-      if (float) FloatHistChunkEncode(sorted, histSchema, samplesPerChunk)
-      else HistChunkEncode(sorted, histSchema, samplesPerChunk))
-    val aggCols = seriesCols.map(c => first(col(c)).as(c)) ++ Seq(
-      min(col("_ts_us")).as("mint"),
-      max(col("_ts_us")).as("maxt"),
-      count(lit(1)).as("n_samples"),
-      enc.as("data"))
-    val aggregated = withKey.groupBy(refCols.map(col) :+ col("bucket"): _*)
-      .agg(aggCols.head, aggCols.tail: _*)
-      .localCheckpoint()
-
-    aggregated.select((seriesCols ++ refCols).map(col): _*)
-      .distinct()
-      .withColumn("custom_values",
-        array(customValues.map(lit): _*).cast("array<double>"))
-      .withColumn("signed", lit(signed))
-      .repartitionByRange(seriesCols.map(col): _*)
-      .sortWithinPartitions(seriesCols.map(col): _*)
-      .write.mode(SaveMode.Overwrite).option("compression", compression)
-      .parquet(s"$path/labels")
-
-    aggregated
-      .select(col("series_ref"), col("series_ref2"), col("bucket"),
-        col("mint"), col("maxt"), col("n_samples"), col("data"))
-      .sortWithinPartitions(col("bucket"), col("series_ref"))
-      .write.mode(SaveMode.Overwrite).option("compression", compression)
-      .partitionBy("bucket")
-      .parquet(s"$path/chunks")
+    ChunkStore.writeSamples(dfEff, path, seriesCols, tsCol, colDuration,
+      sample, encoder(float, histSchema, samplesPerChunk),
+      labelColumns(customValues, lit(signed)), compression, compression)
   }
+
+  private def requireBounds(histSchema: Int, customValues: Seq[Double]): Unit =
+    require((histSchema == block.ChunkencHistogram.CustomBucketsSchema) ==
+      customValues.nonEmpty,
+      "customValues required iff histSchema is the custom-bucket schema (-53)")
+
+  private def encoder(float: Boolean, histSchema: Int,
+      samplesPerChunk: Int)(samples: Column): Column = {
+    val s = ColumnBridge.expression(samples)
+    ColumnBridge.column(
+      if (float) FloatHistChunkEncode(s, histSchema, samplesPerChunk)
+      else HistChunkEncode(s, histSchema, samplesPerChunk))
+  }
+
+  /** The histogram-specific labels-file columns: the block's NHCB
+    * bound list and the series' signed flag. */
+  private def labelColumns(customValues: Seq[Double], signed: Column): Seq[Column] =
+    Seq(array(customValues.map(lit): _*).cast("array<double>").as("custom_values"),
+      signed.as("signed"))
+
+  private def decoder(float: Boolean, data: Column, qmint: Column,
+      qmaxt: Column): Column = {
+    val Seq(b, lo, hi) = Seq(data, qmint, qmaxt).map(ColumnBridge.expression)
+    ColumnBridge.column(
+      if (float) FloatHistChunkDecode(b, lo, hi) else HistChunkDecode(b, lo, hi))
+  }
+
+  /** A block's labels file; blocks written before the NHCB / signed
+    * columns existed read as empty bound lists / unsigned — schema
+    * evolution without a rewrite. */
+  private def labelsOf(spark: SparkSession, path: String): DataFrame =
+    Seq("custom_values" -> array().cast("array<double>"), "signed" -> lit(false))
+      .foldLeft(spark.read.parquet(s"$path/labels")) { case (l, (c, default)) =>
+        if (l.columns.contains(c)) l else l.withColumn(c, default)
+      }
 
   /** Select histogram samples of series matching `matchers` within
     * [mint, maxt) from a block written by [[write]]. Output: label
@@ -190,45 +180,14 @@ object HistChunkStore {
   private def selectImpl(spark: SparkSession, path: String, mint: String,
       maxt: String, matchers: Seq[Matcher], seriesCols: Seq[String],
       tsCol: String, colDuration: String, float: Boolean): DataFrame = {
-    val labels0 = spark.read.parquet(s"$path/labels")
-    // blocks written before the NHCB / signed columns existed read
-    // as empty bound lists / unsigned — schema evolution without a
-    // rewrite
-    val labels1 = if (labels0.columns.contains("custom_values")) labels0
-      else labels0.withColumn("custom_values", array().cast("array<double>"))
-    val labels = if (labels1.columns.contains("signed")) labels1
-      else labels1.withColumn("signed", lit(false))
-    val matched = Matcher.compile(matchers).map(labels.filter).getOrElse(labels)
-
-    val qmint = unix_micros(lit(mint).cast("timestamp"))
-    val qmaxt = unix_micros(lit(maxt).cast("timestamp"))
-    val secs = Seq("second" -> 1L, "minute" -> 60L, "hour" -> 3600L,
-      "day" -> 86400L).toMap
-    val width = colDuration.trim.split("\\s+") match {
-      case Array(n, u) => n.toLong * secs(u.toLowerCase.stripSuffix("s"))
-      case _ => throw new IllegalArgumentException(s"bad duration $colDuration")
-    }
-    val loBucket = floor(unix_timestamp(lit(mint).cast("timestamp")) / width)
-    val hiBucket = floor((unix_timestamp(lit(maxt).cast("timestamp")) - 1) / width)
-
-    val chunks = spark.read.parquet(s"$path/chunks")
-      .filter(col("bucket") >= loBucket && col("bucket") <= hiBucket)
-      .filter(col("maxt") >= qmint && col("mint") < qmaxt)
-      .join(broadcast(matched), refCols)
+    val chunks = ChunkStore.chunkRows(spark, path, labelsOf(spark, path),
+      matchers, Some((mint, maxt)), colDuration)
 
     // the decoded-sample side binds its bounds; the filters above
     // reach the scan and keep their literals
     val (dmint, dmaxt) = (ChunkStore.decodedBoundMicros(spark, mint),
       ChunkStore.decodedBoundMicros(spark, maxt))
-    val decoded = ColumnBridge.column(
-      if (float) FloatHistChunkDecode(
-        ColumnBridge.expression(col("data")),
-        ColumnBridge.expression(dmint),
-        ColumnBridge.expression(dmaxt))
-      else HistChunkDecode(
-        ColumnBridge.expression(col("data")),
-        ColumnBridge.expression(dmint),
-        ColumnBridge.expression(dmaxt)))
+    val decoded = decoder(float, col("data"), dmint, dmaxt)
     // signed blocks split the even/odd-interleaved stream back into
     // the two sides (narrow per-row transforms; the unsigned branch
     // passes the arrays through untouched)
@@ -258,17 +217,17 @@ object HistChunkStore {
           .otherwise(array().cast(cntType)).as("neg_counts")): _*)
   }
 
-  /** Compact N overlapping hist-chunk blocks into one: decode every
-    * block (narrow passes), last-writer-wins per (series, ts) on the
-    * WHOLE histogram sample — later directory in `dirs` wins, the
-    * [[ChunkStore.mergeBlocks]] convention — then re-encode through
-    * [[write]]. One plan, no driver iteration.
+  /** Compact N overlapping hist-chunk blocks into one:
+    * [[ChunkStore.mergeBlocks]]'s plan and duplicate rule on WHOLE
+    * histogram samples. A series signed in any input comes out
+    * signed, decided from its runs (no probe job): its unsigned runs'
+    * indexes map i → 2i, the interleave's positive side.
     */
   def mergeBlocks(spark: SparkSession, dirs: Seq[String], outPath: String,
       seriesCols: Seq[String], tsCol: String, histSchema: Int = 0,
       colDuration: String = "1 day", samplesPerChunk: Int = 120,
       customValues: Seq[Double] = Nil): Unit =
-    mergeImpl(spark, dirs, outPath, seriesCols, tsCol, histSchema,
+    mergeImpl(spark, dirs, outPath, seriesCols, histSchema,
       colDuration, samplesPerChunk, float = false, customValues)
 
   /** [[mergeBlocks]] over [[writeFloat]] blocks. */
@@ -276,46 +235,26 @@ object HistChunkStore {
       outPath: String, seriesCols: Seq[String], tsCol: String,
       histSchema: Int = 0, colDuration: String = "1 day",
       samplesPerChunk: Int = 120, customValues: Seq[Double] = Nil): Unit =
-    mergeImpl(spark, dirs, outPath, seriesCols, tsCol, histSchema,
+    mergeImpl(spark, dirs, outPath, seriesCols, histSchema,
       colDuration, samplesPerChunk, float = true, customValues)
 
   private def mergeImpl(spark: SparkSession, dirs: Seq[String],
-      outPath: String, seriesCols: Seq[String], tsCol: String,
-      histSchema: Int, colDuration: String, samplesPerChunk: Int,
-      float: Boolean, customValues: Seq[Double] = Nil): Unit = {
-    require(dirs.nonEmpty, "need at least one block directory")
-    // driver-sized metadata probe: any signed input dir makes the
-    // merged block signed (unsigned rows carry empty neg arrays and
-    // interleave losslessly)
-    val anySigned = dirs.exists { d =>
-      val l = spark.read.parquet(s"$d/labels")
-      l.columns.contains("signed") &&
-        l.filter(col("signed")).limit(1).count() > 0
+      outPath: String, seriesCols: Seq[String], histSchema: Int,
+      colDuration: String, samplesPerChunk: Int, float: Boolean,
+      customValues: Seq[Double]): Unit = {
+    requireBounds(histSchema, customValues)
+    val runs = ChunkStore.chunkRuns(spark, dirs, labelsOf(spark, _),
+        seriesCols, colDuration, carry = Seq("signed"))
+      .withColumn("_signed", max(exists(col("_runs"), _("signed")))
+        .over(Window.partitionBy(seriesCols.map(col): _*)))
+    def samples(run: Column): Column = {
+      val s = decoder(float, run("data"), lit(Long.MinValue), lit(Long.MaxValue))
+      when(col("_signed") && !run("signed"), transform(s,
+        x => x.withField("idx", transform(x("idx"), _ * 2)))).otherwise(s)
     }
-    val full = ("1970-01-01 00:00:00", "2200-01-01 00:00:00")
-    val tagged = dirs.zipWithIndex.map { case (d, i) =>
-      selectImpl(spark, d, full._1, full._2, Nil, seriesCols, tsCol,
-          colDuration, float)
-        .withColumn("_block", lit(i))
-    }
-    // the whole sample — both bucket sides — travels in one LWW
-    // struct, so pos and neg can never mix across colliding samples
-    val merged = tagged.reduce(_ unionByName _)
-      .groupBy((seriesCols.map(col) :+ col(tsCol)): _*)
-      .agg(max(struct(col("_block"), col("zero_count"), col("pos_idx"),
-        col("pos_counts"), col("hist_sum"), col("neg_idx"),
-        col("neg_counts"))).as("_top"))
-      .select((seriesCols.map(col) :+ col(tsCol) :+
-        col("_top.zero_count").as("zero_count") :+
-        col("_top.pos_idx").as("pos_idx") :+
-        col("_top.pos_counts").as("pos_counts") :+
-        col("_top.hist_sum").as("hist_sum") :+
-        col("_top.neg_idx").as("neg_idx") :+
-        col("_top.neg_counts").as("neg_counts")): _*)
-    writeImpl(merged, outPath, seriesCols, tsCol, "zero_count", "pos_idx",
-      "pos_counts", Some("hist_sum"), histSchema, colDuration,
-      samplesPerChunk, "zstd", float, customValues,
-      negIdxCol = if (anySigned) Some("neg_idx") else None,
-      negCountsCol = if (anySigned) Some("neg_counts") else None)
+    ChunkStore.writeChunkRows(
+      ChunkStore.mergedRows(runs, seriesCols, samples, keep = Seq(col("_signed"))),
+      outPath, seriesCols, encoder(float, histSchema, samplesPerChunk),
+      labelColumns(customValues, col("_signed")), "zstd", "zstd")
   }
 }
