@@ -601,7 +601,10 @@ object Dedup {
     // aggregation is duplicate-insensitive and whose own trailing
     // distinct collapses any duplicated join output — the composed
     // round's edge SET is identical, one exchange fewer per round.
-    sym.join(m, "src")
+    // the merge hint pins that shuffle join: left to AQE, a small m
+    // turned into a broadcast at runtime, and when it did depended on
+    // stage timing, so a round ran 7 or 8 jobs
+    sym.join(m.hint("shuffle_merge"), "src")
       .filter(col("dst") > col("src"))
       .select(col("dst").as("src"), col("_m").as("dst"))
       .filter(col("src") =!= col("dst"))
@@ -619,7 +622,7 @@ object Dedup {
     // the trailing distinct) instead of once per incident edge
     // (2|E| rows).
     val m = edges.groupBy("src").agg(min(col("dst")).as("_m"))
-    edges.join(m, "src")
+    edges.join(m.hint("shuffle_merge"), "src") // pinned as in largeStar
       .select(col("dst").as("src"), col("_m").as("dst"))
       .union(m.select(col("src"), col("_m").as("dst")))
       .filter(col("src") =!= col("dst"))

@@ -274,49 +274,10 @@ object PlanAudit {
         "no shuffle of the chunks side" -> "Exchange hashpartitioning",
         "no nested-loop join" -> "BroadcastNestedLoopJoin"))
 
-    // Reference-layout shard select (ParquetShardStore): the matcher
-    // must push into the labels-file scan (l_* column predicate), the
-    // matched labels side must broadcast onto the chunks scan (the
-    // 100 TB side — joined on _metadata.row_index, never shuffled),
-    // and the chunks ReadSchema must hold ONLY the s_data_<i> columns
-    // whose 8h window overlaps [Jan 5, Jan 20) — column 0 (the
-    // block's first window) must NOT be read.
-    audit("ts_shard_interop",
-      SparkEntry.queries("ts_shard_interop")(spark, dir),
-      Map(
-        "labels side broadcasts" -> "BroadcastHashJoin",
-        "matcher pushed to labels scan" -> "EqualTo(l_event_type,view)"),
-      forbid = Map(
-        "no shuffle of the chunks side" -> "Exchange hashpartitioning",
-        "out-of-range s_data columns not read" -> "s_data_0:",
-        "no nested-loop join" -> "BroadcastNestedLoopJoin"))
-
-    // skipChunks series() over the shard layout: the plan must read
-    // ONLY the labels file — the chunks file (and any join) is
-    // forbidden outright, the reference's Query(skipChunks=true) IO
-    // shape (queryable/parquet_queryable.go:414).
-    audit("ts_shard_series",
-      SparkEntry.queries("ts_shard_series")(spark, dir),
-      Map(
-        "labels file scanned" -> "labels.parquet"),
-      forbid = Map(
-        "chunks file never read" -> "chunks.parquet",
-        "no join at all" -> "Join",
-        "no shuffle beyond the output sort" -> "Exchange hashpartitioning"))
-
-    // The HISTOGRAM-family shard select (chunkenc enc=2 bodies,
-    // signed fixture) rides the same pruned front half — the decode
-    // expression must not break the broadcast/pushdown/column-pruning
-    // contract.
-    audit("ts_shard_neg_interop",
-      SparkEntry.queries("ts_shard_neg_interop")(spark, dir),
-      Map(
-        "labels side broadcasts" -> "BroadcastHashJoin",
-        "matcher pushed to labels scan" -> "EqualTo(l_event_type,view)"),
-      forbid = Map(
-        "no shuffle of the chunks side" -> "Exchange hashpartitioning",
-        "out-of-range s_data columns not read" -> "s_data_0:",
-        "no nested-loop join" -> "BroadcastNestedLoopJoin"))
+    // The reference-layout shard selects (ts_shard_interop,
+    // ts_shard_series, ts_shard_neg_interop) resolve their matchers on
+    // the driver and scan the chunks with no join; ShardSelectPlanSpec
+    // asserts that shape in the test suite.
 
     // Chunked NATIVE-HISTOGRAM select (HistChunkStore): same plan
     // contract as ts_chunk_select — labels side broadcasts, matcher

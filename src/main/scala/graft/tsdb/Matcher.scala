@@ -209,15 +209,21 @@ object Matcher {
   private def matchesEmpty(pattern: String): Boolean =
     try ("\\A(?:" + pattern + ")\\z").r.matches("") catch { case _: Exception => false }
 
+  /** The values a regex that is a literal alternation matches
+    * exactly ("a|b|c" → a, b, c); None for any other pattern. Limit
+    * -1 keeps trailing empty alternatives: "api|" means "api" OR "",
+    * and the "" must survive the split. */
+  private[tsdb] def literalSet(pattern: String): Option[Seq[String]] =
+    if (literalAlternation.matches(pattern)) Some(pattern.split("\\|", -1).toSeq)
+    else None
+  private object LiteralSet { def unapply(p: String): Option[Seq[String]] = literalSet(p) }
+
   private[tsdb] def regexPredicate(label: String, pattern: String,
       nullSafe: Boolean = false): Option[Column] =
     pattern match {
       case ".*" => None
       case ".+" => Some(nn(label) =!= "")
-      case p if literalAlternation.matches(p) =>
-        // limit -1 keeps trailing empty alternatives: "api|" means
-        // "api" OR "" and the "" must survive the split
-        val set = p.split("\\|", -1).toSeq
+      case LiteralSet(set) =>
         // plain IN pushes down; coalesce only when "" can match or a
         // negation needs nulls to evaluate (not just be dropped)
         val c = if (nullSafe || set.contains("")) nn(label) else col(label)

@@ -1,5 +1,7 @@
 package graft.tsdb.shard
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.format.converter.ParquetMetadataConverter
@@ -9,12 +11,12 @@ import org.apache.parquet.hadoop.metadata.{CompressionCodecName, FileMetaData}
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.io.api.{Binary, RecordConsumer}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type, Types}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
 
 import graft.functions.{ChunkDecode, MergeSampleRuns, QueryConst}
 import graft.tsdb.{ChunkCodec, ChunkencHistCodec, HistChunkCodec, Matcher}
@@ -44,23 +46,30 @@ import ParquetShardSchema._
   * row-alignment contract and footer key-value metadata are file-
   * format mechanics no Catalyst operator expresses.
   *
-  * READ is Spark-declarative end to end and keeps the reference's IO
-  * shape at 100 TB:
+  * READ keeps the reference's two-phase IO shape
+  * (search/constraint.go → rowrange.go → materialize.go):
   *   0. planning is footer reads, not Spark jobs: shard 0's labels footer
-  *      gives the [[ShardMeta]] and the labels schema, its chunks
-  *      footer the chunks schema, and the glob reads take those
-  *      schemas instead of inferring them — building any read frame
-  *      (`meta`, `labelNames`, `series`, every `select*`) starts zero
-  *      Spark jobs. File listing starts no job either, up to Spark's
-  *      parallel-listing threshold
+  *      gives the [[ShardMeta]] and the labels schema, and building
+  *      any read frame (`meta`, `labelNames`, `series`, every
+  *      `select*`) starts zero Spark jobs. File listing starts no job
+  *      either, up to Spark's parallel-listing threshold
   *      (`spark.sql.sources.parallelPartitionDiscovery.threshold`,
   *      32 paths by default);
-  *   1. matchers filter the SMALL labels file — predicates push into
-  *      its parquet scan (`PushedFilters` on `l_*` columns);
-  *   2. survivors broadcast-join the chunks scan on (shard,
-  *      row_index) — Spark's `_metadata.row_index` IS the row
-  *      alignment the reference gets from its RowRange machinery, so
-  *      the big side never shuffles;
+  *   1. on the driver, the matchers become each shard's matched rows
+  *      ([[ShardRowMatch]]): parquet-java reads only the label columns
+  *      the matchers name, skipping the row groups and pages the
+  *      `=`/set matchers rule out, re-checks every surviving row with
+  *      the exact `Matcher.compile` predicate, then reads the output
+  *      label columns of the matched rows only. The labels and chunks
+  *      footers of each matched shard must agree on the row count;
+  *   2. the chunks files of the shards with a match are scanned with
+  *      no join: one [[MatchedRowLookup]] on (shard file,
+  *      `_metadata.row_index`) — Spark's row index IS the row
+  *      alignment the reference gets from its RowRange machinery —
+  *      drops the unmatched rows and attaches the labels from a
+  *      broadcast the driver made (no job), and throws if a chunks
+  *      file changed since phase 1 listed it. `series` is phase 1
+  *      alone, a local relation;
   *   3. the chunks scan reads ONLY the `s_data_<i>` columns whose
   *      window overlaps the query range (`ReadSchema` pruning — the
   *      columnar analog of the reference reading only in-range data
@@ -70,6 +79,8 @@ import ParquetShardSchema._
   *      [[graft.functions.QueryConst]]s, and the output ts carries
   *      the decoded-sample mark, so a moved window reuses the
   *      compiled code of the last one.
+  * The merges read every row and keep a chunks scan joined to the
+  * broadcast labels scan ([[allRows]]).
   */
 object ParquetShardStore {
 
@@ -521,7 +532,7 @@ object ParquetShardStore {
   def select(spark: SparkSession, dir: String, mintMs: Long, maxtMs: Long,
       matchers: Seq[Matcher] = Nil, tsCol: String = "ts",
       valueCol: String = "value"): DataFrame =
-    selectImpl(new ShardFooters(spark, dir), mintMs, maxtMs, matchers,
+    selectImpl(spark, dir, mintMs, maxtMs, matchers, chunkBytesQuota = 0L,
       xorDecode(mintMs, maxtMs), Seq(col("_s.value").as(valueCol)), tsCol)
 
   private def xorDecode(mintMs: Long, maxtMs: Long)
@@ -546,7 +557,7 @@ object ParquetShardStore {
   def selectHist(spark: SparkSession, dir: String, mintMs: Long,
       maxtMs: Long, matchers: Seq[Matcher] = Nil,
       tsCol: String = "ts"): DataFrame =
-    selectImpl(new ShardFooters(spark, dir), mintMs, maxtMs, matchers,
+    selectImpl(spark, dir, mintMs, maxtMs, matchers, chunkBytesQuota = 0L,
       histDecode(mintMs, maxtMs), histOutput, tsCol)
 
   private def histDecode(mintMs: Long, maxtMs: Long)
@@ -561,7 +572,7 @@ object ParquetShardStore {
   def selectFloatHist(spark: SparkSession, dir: String, mintMs: Long,
       maxtMs: Long, matchers: Seq[Matcher] = Nil,
       tsCol: String = "ts"): DataFrame =
-    selectImpl(new ShardFooters(spark, dir), mintMs, maxtMs, matchers,
+    selectImpl(spark, dir, mintMs, maxtMs, matchers, chunkBytesQuota = 0L,
       floatHistDecode(mintMs, maxtMs), histOutput, tsCol)
 
   private def floatHistDecode(mintMs: Long, maxtMs: Long)
@@ -584,17 +595,19 @@ object ParquetShardStore {
   /** Label sets of the series matching `matchers` — the reference's
     * skipChunks select (queryable/parquet_queryable.go:414 `Query`
     * with `skipChunks=true`, serving Prometheus's `series()` API):
-    * the plan reads ONLY the tiny labels file, the chunks file never
-    * appears, no join, no decode — metadata-sized IO at any scale.
-    * One row per matching series, one column per label (nulls where
-    * the series lacks it).
+    * the select's phase 1 alone, which reads only the labels files on
+    * the driver — the chunks files are never opened, no join, no
+    * decode, no Spark job. The answer is a local relation: one row
+    * per matching series, one column per label (nulls where the
+    * series lacks it).
     */
   def series(spark: SparkSession, dir: String,
       matchers: Seq[Matcher] = Nil): DataFrame = {
-    val f = new ShardFooters(spark, dir)
-    val labels = f.labels
-      .select(f.labelNames.map(n => col(labelToColumn(n)).as(n)): _*)
-    Matcher.compile(matchers).map(labels.filter).getOrElse(labels)
+    val names = new ShardFooters(spark, dir).labelNames
+    val matched = ShardRowMatch.resolve(spark, dir, names, matchers,
+      ShardRowMatch.compile(spark, names, matchers))
+    spark.createDataFrame(matched.labelRows.asJava,
+      StructType(names.map(StructField(_, StringType))))
   }
 
   /** Compact N shard dirs that may overlap in series/time into ONE
@@ -644,8 +657,7 @@ object ParquetShardStore {
       : DataFrame = {
     val names = inputs.head.labelNames
     val runs = inputs.zipWithIndex.map { case (f, pri) =>
-      val (lo, hi) = fullRange(f)
-      val (joined, dataCols, _, _) = pruned(f, lo, hi, Nil)
+      val (joined, dataCols) = allRows(f)
       joined.select(names.map(col) :+ struct(
         struct(lit(pri), col("_shard"), col("_row")).as("pri"),
         array(dataCols.map(col): _*).as("cells")).as("_run"): _*)
@@ -681,10 +693,6 @@ object ParquetShardStore {
     inputs
   }
 
-  /** A dir's whole footer range as a half-open select window. */
-  private def fullRange(f: ShardFooters): (Long, Long) =
-    (f.meta.mintMs, f.meta.maxtMs + 1)
-
   /** Loud-refusal guard for the family-specific compactors: a
     * reference-written cell may MIX chunkenc families (a series that
     * changed sample type — one appender per family per column,
@@ -703,9 +711,7 @@ object ParquetShardStore {
     // or pre-mask graft shards), whose cells may genuinely mix
     // families.
     val got = f.meta.familyMask.getOrElse {
-      val (lo, hi) = fullRange(f)
-      val (joined, dataCols, _, _) = pruned(f, lo, hi, Nil)
-      if (dataCols.isEmpty) return
+      val (joined, dataCols) = allRows(f)
       import graft.functions.ChunkFamilies.families
       val maskCol = dataCols
         .map(c => coalesce(families(col(c)), lit(0)))
@@ -771,23 +777,16 @@ object ParquetShardStore {
     * cells of the matched series — real encoded bytes, no decode —
     * and throws before any sample materializes. Same contract as
     * [[graft.tsdb.ChunkStore.selectStrict]], on the reference's own
-    * layout.
+    * layout. The aggregation reads the select's own matched rows, so
+    * phase 1 runs once; it is the only Spark work before the caller's
+    * action.
     */
   @throws[graft.tsdb.QuotaExceededException]
   def selectStrict(spark: SparkSession, dir: String, mintMs: Long,
       maxtMs: Long, matchers: Seq[Matcher], chunkBytesQuota: Long,
-      tsCol: String = "ts", valueCol: String = "value"): DataFrame = {
-    // ONE pruned frame serves the quota aggregation AND the select:
-    // pruned() costs two footer reads and the matcher
-    // compile - paying it twice doubled the metadata IO of every
-    // strict select (ChunkStore.selectStrict, the declared
-    // same-contract sibling, already shared it). The quota
-    // aggregation is the only Spark work before the caller's action.
-    val pr = pruned(new ShardFooters(spark, dir), mintMs, maxtMs, matchers)
-    enforceChunkBytesQuotaOn(pr, chunkBytesQuota)
-    selectImplFrom(pr, mintMs, maxtMs,
+      tsCol: String = "ts", valueCol: String = "value"): DataFrame =
+    selectImpl(spark, dir, mintMs, maxtMs, matchers, chunkBytesQuota,
       xorDecode(mintMs, maxtMs), Seq(col("_s.value").as(valueCol)), tsCol)
-  }
 
   /** [[selectHist]] under the same strict chunk-byte quota — the
     * quota aggregation counts encoded `s_data` bytes and never
@@ -795,54 +794,53 @@ object ParquetShardStore {
   @throws[graft.tsdb.QuotaExceededException]
   def selectHistStrict(spark: SparkSession, dir: String, mintMs: Long,
       maxtMs: Long, matchers: Seq[Matcher], chunkBytesQuota: Long,
-      tsCol: String = "ts"): DataFrame = {
-    val pr = pruned(new ShardFooters(spark, dir), mintMs, maxtMs, matchers)
-    enforceChunkBytesQuotaOn(pr, chunkBytesQuota)
-    selectImplFrom(pr, mintMs, maxtMs,
+      tsCol: String = "ts"): DataFrame =
+    selectImpl(spark, dir, mintMs, maxtMs, matchers, chunkBytesQuota,
       histDecode(mintMs, maxtMs), histOutput, tsCol)
-  }
 
   /** [[selectFloatHist]] under the strict chunk-byte quota. */
   @throws[graft.tsdb.QuotaExceededException]
   def selectFloatHistStrict(spark: SparkSession, dir: String, mintMs: Long,
       maxtMs: Long, matchers: Seq[Matcher], chunkBytesQuota: Long,
-      tsCol: String = "ts"): DataFrame = {
-    val pr = pruned(new ShardFooters(spark, dir), mintMs, maxtMs, matchers)
-    enforceChunkBytesQuotaOn(pr, chunkBytesQuota)
-    selectImplFrom(pr, mintMs, maxtMs,
+      tsCol: String = "ts"): DataFrame =
+    selectImpl(spark, dir, mintMs, maxtMs, matchers, chunkBytesQuota,
       floatHistDecode(mintMs, maxtMs), histOutput, tsCol)
-  }
 
-  private def enforceChunkBytesQuotaOn(
-      pr: (DataFrame, Seq[String], Seq[String], Boolean),
-      chunkBytesQuota: Long): Unit =
-    if (chunkBytesQuota > 0L) {
-      val (joined, dataCols, _, overlaps) = pr
-      val bytes = if (!overlaps) 0L
-        else joined.agg(coalesce(sum(dataCols
-            .map(c => length(col(c)).cast("long")).reduce(_ + _)), lit(0L)))
-          .head().getLong(0)
-      if (bytes > chunkBytesQuota)
-        throw new graft.tsdb.QuotaExceededException(
-          s"select would fetch $bytes encoded chunk bytes " +
-            s"(quota $chunkBytesQuota)")
-    }
-
-  /** The shared front half: matcher pushdown on the labels file,
-    * window → data-column pruning, and the row-index broadcast join.
-    * Nothing is decoded yet.
+  /** Every row of a dir, for the merges: the chunks scan (every data
+    * column) joined to the broadcast labels on (`_shard`, `_row`).
+    * Label columns + `s_data_<i>`; nothing is decoded.
     */
-  private def pruned(f: ShardFooters, mintMs: Long,
-      maxtMs: Long, matchers: Seq[Matcher])
-      : (DataFrame, Seq[String], Seq[String], Boolean) = {
-    require(maxtMs > mintMs, s"empty range [$mintMs, $maxtMs)")
-    val m = f.meta
+  private def allRows(f: ShardFooters): (DataFrame, Seq[String]) = {
     val names = f.labelNames
-
     val labels = f.labels.select(
       (names.map(n => col(labelToColumn(n)).as(n)) ++ shardRow("labels")): _*)
-    val matched = Matcher.compile(matchers)
-      .map(labels.filter).getOrElse(labels)
+    val dataCols = (0 until f.meta.numCols).map(dataColumn)
+    val chunks = f.chunks.select((dataCols.map(col) ++ shardRow("chunks")): _*)
+    (chunks.join(broadcast(labels), Seq("_shard", "_row")), dataCols)
+  }
+
+  /** The select front half, in two phases (the reference's
+    * constraint → row ranges → materialize):
+    *   1. on the driver, [[ShardRowMatch.resolve]] turns the matchers
+    *      into each shard's matched rows and their label values;
+    *   2. the chunks files of the shards with a match are scanned for
+    *      the in-range `s_data_<i>` columns only, and one
+    *      [[MatchedRowLookup]] on (shard file, row index) drops the
+    *      unmatched rows and attaches the labels — no join. The
+    *      matched rows reach it as a broadcast the driver made, which
+    *      starts no job.
+    * Output: the labels as one struct column `_l`, the label names,
+    * and the data columns, nothing decoded.
+    * A window that misses the footer range or matches nothing gives
+    * an empty local relation, and nothing is scanned.
+    */
+  private def matchedRows(spark: SparkSession, dir: String, mintMs: Long,
+      maxtMs: Long, matchers: Seq[Matcher]): (DataFrame, Seq[String], Seq[String]) = {
+    require(maxtMs > mintMs, s"empty range [$mintMs, $maxtMs)")
+    val f = new ShardFooters(spark, dir)
+    val m = f.meta
+    val names = f.labelNames
+    val predicate = ShardRowMatch.compile(spark, names, matchers)
 
     // data columns overlapping the query range (ReadSchema pruning).
     // Clamp in LONG before narrowing: an open-ended bound like
@@ -856,33 +854,74 @@ object ParquetShardStore {
     val hi = colIdxClamped(maxtMs - 1)
     val overlaps = mintMs <= m.maxtMs && maxtMs > m.mintMs && lo <= hi
     val dataCols = if (overlaps) (lo to hi).map(dataColumn) else Seq(dataColumn(0))
+    val labelsType = StructType(names.map(StructField(_, StringType)))
 
-    val chunks = f.chunks
-      .select((dataCols.map(col) ++ shardRow("chunks")): _*)
-
-    (chunks.join(broadcast(matched), Seq("_shard", "_row"))
-      .filter(lit(overlaps)), dataCols, names, overlaps)
+    val matched = if (!overlaps) None
+      else Some(ShardRowMatch.resolve(spark, dir, names, matchers, predicate))
+        .filterNot(_.isEmpty)
+    val rows = matched match {
+      case None => spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        StructType(StructField("_l", labelsType) +: dataCols.map(StructField(_, BinaryType))))
+      case Some(series) =>
+        val chunks = alignedChunks(spark, dir, series)
+        val lookup = ColumnBridge.column(MatchedRowLookup(
+          Seq("file_name", "row_index", "file_modification_time", "file_size")
+            .map(c => ColumnBridge.expression(col(s"_metadata.$c"))),
+          spark.sparkContext.broadcast(series), labelsType))
+        spark.read.schema(sparkSchema(spark, chunks))
+          .parquet(series.shards.map(_.chunks).toIndexedSeq: _*)
+          .select(lookup.as("_l") +: dataCols.map(col): _*)
+          .filter(col("_l").isNotNull)
+    }
+    (rows, names, dataCols)
   }
 
-  private def selectImpl(f: ShardFooters, mintMs: Long,
-      maxtMs: Long, matchers: Seq[Matcher],
-      decode: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
-      sampleOutput: Seq[org.apache.spark.sql.Column],
-      tsCol: String): DataFrame =
-    selectImplFrom(pruned(f, mintMs, maxtMs, matchers),
-      mintMs, maxtMs, decode, sampleOutput, tsCol)
+  /** Phase 1's row-alignment check, from the footers: each matched
+    * shard has a chunks file with as many rows as its labels file.
+    * Returns the first chunks footer, which gives the scan's schema. */
+  private def alignedChunks(spark: SparkSession, dir: String,
+      series: MatchedSeries): FileMetaData =
+    series.shards.map { s =>
+      if (s.chunks == null)
+        throw new IllegalStateException(s"$dir: shard ${s.shard} has a " +
+          "labels file and no chunks file")
+      val conf = spark.sparkContext.hadoopConfiguration
+      // options from the session's conf: without them parquet-java
+      // builds a fresh Hadoop Configuration per open, which cost more
+      // than the rest of the select's planning
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(
+        s.chunksStatus, conf), HadoopReadOptions.builder(conf).build())
+      try {
+        val n = reader.getRecordCount
+        if (n != s.rowCount)
+          throw new IllegalStateException(s"$dir: shard ${s.shard}'s labels " +
+            s"file has ${s.rowCount} rows and its chunks file $n - the two " +
+            "files are not row-aligned")
+        reader.getFooter.getFileMetaData
+      } finally reader.close()
+    }.head
 
-  private def selectImplFrom(
-      pr: (DataFrame, Seq[String], Seq[String], Boolean),
-      mintMs: Long, maxtMs: Long,
+  private def selectImpl(spark: SparkSession, dir: String, mintMs: Long,
+      maxtMs: Long, matchers: Seq[Matcher], chunkBytesQuota: Long,
       decode: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
       sampleOutput: Seq[org.apache.spark.sql.Column],
       tsCol: String): DataFrame = {
-    val (joined, dataCols, names, _) = pr
+    val (rows, names, dataCols) = matchedRows(spark, dir, mintMs, maxtMs, matchers)
+    if (chunkBytesQuota > 0L) {
+      // an empty match is a local relation: no chunk bytes to count
+      val bytes = if (rows.isLocal) 0L
+        else rows.agg(coalesce(sum(dataCols
+            .map(c => length(col(c)).cast("long")).reduce(_ + _)), lit(0L)))
+          .head().getLong(0)
+      if (bytes > chunkBytesQuota)
+        throw new graft.tsdb.QuotaExceededException(
+          s"select would fetch $bytes encoded chunk bytes " +
+            s"(quota $chunkBytesQuota)")
+    }
     val decoded = dataCols.map(c => decode(col(c)))
     val allSamples = if (decoded.size == 1) decoded.head else concat(decoded: _*)
-    joined
-      .select((names.map(col) :+ explode(allSamples).as("_s")): _*)
+    rows
+      .select((names.map(n => col("_l")(n).as(n)) :+ explode(allSamples).as("_s")): _*)
       .filter(col("_s.ts") >= QueryConst.long(mintMs) &&
         col("_s.ts") < QueryConst.long(maxtMs))
       .select((names.map(col) :+ QueryConst.decodedTs(

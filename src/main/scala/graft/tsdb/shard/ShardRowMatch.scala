@@ -1,0 +1,362 @@
+package graft.tsdb.shard
+
+import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.column.impl.ColumnReadStoreImpl
+import org.apache.parquet.column.page.PageReadStore
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate, Operators}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.internal.column.columnindex.OffsetIndex
+import org.apache.parquet.internal.filter2.columnindex.ColumnIndexStore.MissingOffsetIndexException
+import org.apache.parquet.internal.filter2.columnindex.RowRanges
+import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter}
+import org.apache.parquet.schema.MessageType
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BasePredicate, BindReferences, Expression, GenericInternalRow, Predicate}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.plans.logical.Filter
+import org.apache.spark.sql.graft.TaskHadoopConf
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.tsdb.Matcher
+import ParquetShardSchema.labelToColumn
+
+/** Phase 1 of a shard select, on the driver with no Spark job: the
+  * matchers become the matched rows of each shard's labels file, with
+  * their label values (search/constraint.go → rowrange.go).
+  *
+  * Each labels file is opened with parquet-java and read twice, each
+  * time only the columns needed:
+  *   1. the columns the matchers name, of the row groups and pages
+  *      that survive the `=`/set matchers as a parquet
+  *      `FilterPredicate` (statistics, dictionaries, bloom filters,
+  *      column index). Every surviving row is re-checked with the
+  *      exact predicate `Matcher.compile` builds, resolved against the
+  *      label columns and evaluated as an interpreted Catalyst
+  *      predicate, so the semantics are the ones every other select
+  *      path applies;
+  *   2. the output label columns, of the matched rows only.
+  */
+private[shard] object ShardRowMatch {
+
+  /** The matchers' exact predicate, bound to the file columns it
+    * reads (`cols`, in that order). */
+  final case class Compiled(cols: Seq[String], predicate: BasePredicate)
+
+  /** Resolves `Matcher.compile(matchers)` against the label columns
+    * `names`; None when every row matches. Throws as a select always
+    * has on a bad regex or an unknown label. */
+  def compile(spark: SparkSession, names: Seq[String],
+      matchers: Seq[Matcher]): Option[Compiled] =
+    Matcher.compile(matchers).map { c =>
+      val labels = spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        StructType(names.map(StructField(_, StringType))))
+      val cond = labels.filter(c).queryExecution.analyzed
+        .collectFirst { case Filter(e, _) => e }.get
+      val refs = cond.references.toSeq.sortBy(_.name)
+      val p = Predicate.createInterpreted(
+        BindReferences.bindReference(cond, AttributeSeq(refs)))
+      p.initialize(0)
+      Compiled(refs.map(a => labelToColumn(a.name)), p)
+    }
+
+  private val ShardFile = "^(\\d+)\\.(labels|chunks)\\.parquet$".r
+
+  /** The rows of the shard dir `dir` that `predicate` matches, with
+    * the values of the label columns `names`. `matchers` only prune:
+    * the `=`/set ones become the parquet filter. */
+  def resolve(spark: SparkSession, dir: String, names: Seq[String],
+      matchers: Seq[Matcher], predicate: Option[Compiled]): MatchedSeries = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(dir)
+    val files = root.getFileSystem(conf).listStatus(root).toSeq.flatMap { st =>
+      st.getPath.getName match {
+        case ShardFile(n, kind) => Some((n.toInt, kind) -> st)
+        case _ => None
+      }
+    }.toMap
+    val filter = predicate.flatMap(_ => pushable(matchers, names.toSet))
+    val dicts = names.map(_ => new java.util.HashMap[String, Integer]())
+    val shards = files.keys.collect { case (s, "labels") => s }.toSeq.sorted
+      .flatMap { s =>
+        val labels = files((s, "labels"))
+        val (rows, values, nRows) = readLabels(conf, labels, filter, predicate,
+          names.map(labelToColumn))
+        if (rows.isEmpty) None
+        else Some(new MatchedShard(s, nRows, files.get((s, "chunks")).orNull, rows,
+          values.zip(dicts).map { case (vs, d) =>
+            vs.map(v => if (v == null) -1 else d.computeIfAbsent(v, _ => d.size)) }))
+      }
+    new MatchedSeries(
+      dicts.map { d =>
+        val a = new Array[String](d.size)
+        d.forEach((v, i) => a(i) = v)
+        a
+      }.toArray,
+      shards.toArray)
+  }
+
+  /** Row-group and page pruning from the `=` and set matchers on label
+    * columns the files hold; the exact predicate re-checks every row
+    * that survives it. An absent label reads as "", so "" also admits
+    * nulls. */
+  private def pushable(matchers: Seq[Matcher],
+      names: Set[String]): Option[FilterPredicate] = {
+    def oneOf(label: String, values: Seq[String]): FilterPredicate = {
+      val c = FilterApi.binaryColumn(labelToColumn(label))
+      def eq(v: Binary): FilterPredicate =
+        FilterApi.eq[Binary, Operators.BinaryColumn](c, v)
+      values.distinct.map(v =>
+        if (v.isEmpty) FilterApi.or(eq(null), eq(Binary.fromString("")))
+        else eq(Binary.fromString(v))).reduce(FilterApi.or)
+    }
+    matchers.collect {
+      case Matcher.Eq(l, v) if names(l) => Some(oneOf(l, Seq(v)))
+      case Matcher.Re(l, p) if names(l) => Matcher.literalSet(p).map(oneOf(l, _))
+    }.flatten.reduceOption(FilterApi.and)
+  }
+
+  /** One labels file: its matched rows (ascending), the values of
+    * `outCols` on those rows (null = absent) and its row count. */
+  private def readLabels(conf: Configuration, labels: FileStatus,
+      filter: Option[FilterPredicate], predicate: Option[Compiled],
+      outCols: Seq[String]): (Array[Long], Seq[Array[String]], Long) = {
+    val file = HadoopInputFile.fromStatus(labels, conf)
+    // pass 1: (first row of the row group, its matching rows) per row
+    // group the filter's statistics, dictionaries and bloom filters kept
+    val (footer, hits) = {
+      val reader = ParquetFileReader.open(file, HadoopReadOptions.builder(conf)
+        .withRecordFilter(filter.fold(FilterCompat.NOOP)(FilterCompat.get)).build())
+      try {
+        val md = reader.getFooter.getFileMetaData
+        (reader.getFooter, reader.getRowGroups.asScala.toSeq.zipWithIndex.map {
+          case (block, b) =>
+            def every = Array.range(0, block.getRowCount.toInt).map(_.toLong)
+            block.getRowIndexOffset -> (predicate match {
+              case None => every
+              case Some(Compiled(Seq(), p)) =>
+                if (p.eval(InternalRow.empty)) every else Array.emptyLongArray
+              case Some(Compiled(cols, p)) =>
+                reader.setRequestedSchema(project(md.getSchema, cols))
+                Option(reader.readFilteredRowGroup(b)).fold(Array.emptyLongArray) { pages =>
+                  val (idx, vals) = readColumns(pages, project(md.getSchema, cols),
+                    md.getCreatedBy, v => UTF8String.fromBytes(v.getBytes))
+                  val row = new GenericInternalRow(cols.length)
+                  idx.indices.filter { i =>
+                    cols.indices.foreach(j => row.update(j, vals(j)(i)))
+                    p.eval(row)
+                  }.map(idx).toArray
+                }
+            })
+        }.filter(_._2.nonEmpty))
+      } finally reader.close()
+    }
+    val md = footer.getFileMetaData
+    val present = outCols.filter(md.getSchema.containsField)
+    val values = present.map(_ => Array.newBuilder[String])
+    // pass 2: the output columns of the matched rows. A reader of its
+    // own, unfiltered: parquet-java caches a row group's page index for
+    // the columns of its first filtered read.
+    if (hits.nonEmpty && present.nonEmpty) {
+      val reader = ParquetFileReader.open(file, footer,
+        HadoopReadOptions.builder(conf).build(), file.newStream())
+      try {
+        val schema = project(md.getSchema, present)
+        reader.setRequestedSchema(schema)
+        val blockAt = reader.getRowGroups.asScala.zipWithIndex
+          .map { case (block, b) => block.getRowIndexOffset -> (block, b) }.toMap
+        hits.foreach { case (first, rows) =>
+          val (block, b) = blockAt(first)
+          val pages =
+            if (rows.length == block.getRowCount) reader.readRowGroup(b)
+            else try reader.readFilteredRowGroup(b, exactly(rows, block.getRowCount))
+            catch { case _: MissingOffsetIndexException => reader.readRowGroup(b) }
+          val (idx, vals) = readColumns(pages, schema, md.getCreatedBy,
+            _.toStringUsingUTF8)
+          // a whole-row-group read (no offset index) holds every row
+          val keep = if (idx.length == rows.length) idx.indices
+            else { val at = idx.zipWithIndex.toMap; rows.toSeq.map(at) }
+          vals.zip(values).foreach { case (v, out) => keep.foreach(i => out += v(i)) }
+        }
+      } finally reader.close()
+    }
+    val matched = hits.flatMap { case (first, rows) => rows.map(_ + first) }.toArray
+    val byCol = present.zip(values.map(_.result())).toMap
+    (matched, outCols.map(c => byCol.getOrElse(c, new Array[String](matched.length))),
+      footer.getBlocks.asScala.map(_.getRowCount).sum)
+  }
+
+  private def project(schema: MessageType, cols: Seq[String]): MessageType =
+    new MessageType(schema.getName, cols.map(c => schema.getFields.get(schema.getFieldIndex(c))): _*)
+
+  /** Row ranges holding exactly `rows` (ascending, within a row group
+    * of `rowCount` rows). Parquet builds row ranges from page row
+    * spans, so each run of consecutive rows is posed as one span. */
+  private def exactly(rows: Array[Long], rowCount: Long): RowRanges = {
+    val runs = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
+    rows.foreach { r =>
+      if (runs.nonEmpty && runs.last._2 + 1 == r) runs(runs.size - 1) = (runs.last._1, r)
+      else runs += ((r, r))
+    }
+    val spans = new OffsetIndex {
+      def getPageCount: Int = runs.size
+      def getOffset(i: Int): Long = 0L
+      def getCompressedPageSize(i: Int): Int = 0
+      def getFirstRowIndex(i: Int): Long = runs(i)._1
+      override def getLastRowIndex(i: Int, n: Long): Long = runs(i)._2
+    }
+    RowRanges.create(rowCount, java.util.stream.IntStream.range(0, runs.size).iterator(), spans)
+  }
+
+  /** The columns of `schema` (flat, binary) in one row group's pages:
+    * the row indexes within the row group the pages hold, and one
+    * array of values per column (null where undefined). */
+  private def readColumns[T: ClassTag](pages: PageReadStore, schema: MessageType,
+      createdBy: String, value: Binary => T): (Array[Long], Seq[Array[T]]) = {
+    val store = new ColumnReadStoreImpl(pages, NoConversion, schema, createdBy)
+    val n = pages.getRowCount.toInt
+    val vals = schema.getColumns.asScala.toSeq.map { d =>
+      val r = store.getColumnReader(d)
+      val out = new Array[T](n)
+      var i = 0
+      while (i < n) {
+        if (r.getCurrentDefinitionLevel == d.getMaxDefinitionLevel) out(i) = value(r.getBinary)
+        r.consume()
+        i += 1
+      }
+      out
+    }
+    val idx = pages.getRowIndexes.map[Array[Long]](it => Array.fill(n)(it.nextLong()))
+      .orElseGet(() => Array.range(0, n).map(_.toLong))
+    (idx, vals)
+  }
+
+  /** The column readers deliver values through `getBinary`; the
+    * converters they are built with see none. */
+  private object NoConversion extends GroupConverter {
+    private val none = new PrimitiveConverter {}
+    def getConverter(i: Int): Converter = none
+    def start(): Unit = ()
+    def end(): Unit = ()
+  }
+}
+
+/** Phase 1's answer for one shard: its labels file's row count, its
+  * chunks file as listed, and its matched rows with their label
+  * values as codes into [[MatchedSeries.dicts]]. */
+private[shard] final class MatchedShard(val shard: Int, val rowCount: Long,
+    @transient val chunksStatus: FileStatus,
+    val rows: Array[Long], val codes: Seq[Array[Int]]) extends Serializable {
+  /** The chunks file as phase 1 listed it; null when it is missing. */
+  val chunks: String = Option(chunksStatus).map(_.getPath.toString).orNull
+  val chunksMtimeMs: Long = Option(chunksStatus).fold(-1L)(_.getModificationTime)
+  val chunksSize: Long = Option(chunksStatus).fold(-1L)(_.getLen)
+}
+
+/** Phase 1's answer: the matched rows of every shard with at least
+  * one, and the label values, dictionary-coded per label. It reaches
+  * the tasks as a broadcast value, so a task carries only its
+  * handle. */
+private[shard] final class MatchedSeries(val dicts: Array[Array[String]],
+    val shards: Array[MatchedShard]) extends Serializable {
+  def isEmpty: Boolean = shards.isEmpty
+
+  /** One row per matched series, one string per label. */
+  def labelRows: Seq[Row] = shards.toSeq.flatMap { s =>
+    s.rows.indices.map(i => Row.fromSeq(dicts.indices.map { j =>
+      val c = s.codes(j)(i)
+      if (c < 0) null else dicts(j)(c)
+    }))
+  }
+}
+
+/** Phase 2's lookup: the labels of the chunks row at (`file_name`,
+  * `row_index`) of `_metadata`, as a struct of the label values; null
+  * when phase 1 did not match the row. A filter on it drops the
+  * unmatched rows and a projection attaches the labels, with no join.
+  *
+  * The matched rows travel as `matched`, a broadcast the driver made
+  * without a job; the generated code binds only this expression as a
+  * reference, so the source does not change with the matched rows.
+  *
+  * Row alignment: the first row of each file in a task compares the
+  * file's `_metadata.file_modification_time`/`file_size` and its
+  * status now with what phase 1 listed, and throws if any differs —
+  * one generation's labels are never attached to another
+  * generation's chunks. Both are needed: `_metadata` is Spark's
+  * listing, taken when the select was built, and a dir rewritten
+  * after that leaves it unchanged while the scan reads the new files.
+  */
+private[shard] case class MatchedRowLookup(children: Seq[Expression],
+    matched: Broadcast[MatchedSeries], dataType: StructType) extends Expression {
+  require(children.length == 4, "file_name, row_index, file_modification_time, file_size")
+
+  override def nullable: Boolean = true
+
+  override def eval(input: InternalRow): Any = {
+    val Seq(f, r, t, s) = children.map(_.eval(input))
+    lookup(f.asInstanceOf[UTF8String], r.asInstanceOf[Long],
+      t.asInstanceOf[Long], s.asInstanceOf[Long])
+  }
+
+  @transient private var file: UTF8String = _
+  @transient private var shard: MatchedShard = _
+  @transient private var values: Array[Array[UTF8String]] = _
+  @transient private var lastRow = -1L
+  @transient private var last: InternalRow = _
+
+  /** The labels of `row` in chunks file `name`, or null. */
+  def lookup(name: UTF8String, row: Long, mtimeMicros: Long, size: Long): InternalRow = {
+    if (shard == null || !name.equals(file)) open(name.clone(), mtimeMicros, size)
+    else if (row == lastRow) return last
+    val i = java.util.Arrays.binarySearch(shard.rows, row)
+    lastRow = row
+    last = if (i < 0) null else new GenericInternalRow(Array.tabulate[Any](values.length) { j =>
+      val c = shard.codes(j)(i)
+      if (c < 0) null else values(j)(c)
+    })
+    last
+  }
+
+  private def open(name: UTF8String, mtimeMicros: Long, size: Long): Unit = {
+    val m = matched.value
+    if (values == null) values = m.dicts.map(_.map(UTF8String.fromString))
+    val s = m.shards.find(s => new Path(s.chunks).getName == name.toString).getOrElse(
+      throw new IllegalStateException(s"chunks file $name is not one this select listed"))
+    val path = new Path(s.chunks)
+    val now = path.getFileSystem(TaskHadoopConf.conf).getFileStatus(path)
+    if (mtimeMicros != s.chunksMtimeMs * 1000L || size != s.chunksSize ||
+        now.getModificationTime != s.chunksMtimeMs || now.getLen != s.chunksSize)
+      throw new IllegalStateException(s"${s.chunks} changed after the select " +
+        s"resolved its matchers (listed: mtime ${s.chunksMtimeMs} ms, " +
+        s"${s.chunksSize} B; now: mtime ${now.getModificationTime} ms, " +
+        s"${now.getLen} B): its rows may no longer align with the labels " +
+        "read - run the select again")
+    file = name
+    shard = s
+    lastRow = -1L
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("matchedRows", this)
+    val args = children.map(_.genCode(ctx))
+    ev.copy(code = code"""
+      |${args.map(_.code).reduce(_ + _)}
+      |${CodeGenerator.javaType(dataType)} ${ev.value} = $self.lookup(
+      |  ${args(0).value}, ${args(1).value}, ${args(2).value}, ${args(3).value});
+      |boolean ${ev.isNull} = ${ev.value} == null;""".stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Expression = copy(children = newChildren)
+}

@@ -204,10 +204,11 @@ class ParquetShardSpec extends SparkSpec {
       Seq(Matcher.Eq("env", ""))).select("event_type", "env").collect()
     assert(absent.nonEmpty && absent.forall(r =>
       r.getString(0) == "view" && r.isNullAt(1)))
-    // the chunks file is not in the plan — labels-file IO only
+    // the labels files are read on the driver: the plan is a local
+    // relation, the chunks file never appears
     val plan = df.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)
-    assert(plan.contains("labels.parquet") && !plan.contains("chunks.parquet"))
+    assert(plan.contains("LocalTableScan") && !plan.contains("chunks.parquet"))
     assert(!plan.contains("Join"))
   }
 
@@ -649,18 +650,17 @@ class ParquetShardSpec extends SparkSpec {
       .collect().map(_.getString(0)).toSeq == Seq("dev", "prod"))
   }
 
-  test("plan shape: matchers push into the labels scan, only " +
-      "overlapping s_data columns are read, chunks side broadcast-joins") {
+  test("plan shape: matchers resolve before the scan, only " +
+      "overlapping s_data columns are read, no join") {
     written
     val df = ParquetShardStore.select(spark, dir,
       base + 4 * hour, base + 6 * hour, Seq(Matcher.Eq("event_type", "req")))
     val plan = df.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)
-    assert(plan.contains("BroadcastHashJoin"), "labels side must broadcast")
-    // matcher reaches the labels file's parquet scan
-    assert(plan.contains("l_event_type"), plan)
-    assert("PushedFilters: \\[[^\\]]*l_event_type".r
-      .findFirstIn(plan).isDefined, "matcher not pushed to labels scan")
+    assert(!plan.contains("Join") && !plan.contains("BroadcastExchange"), plan)
+    // the labels files were read on the driver: the plan scans chunks only
+    assert(plan.contains("chunks.parquet") && !plan.contains("labels.parquet"), plan)
+    assert(!plan.contains("l_event_type"), plan)
     // the chunks ReadSchema holds the 4h-6h window's columns only
     // ([4h,6h) at 2h colDuration = column 2 alone)
     val readSchemas = "ReadSchema: [^\\n]*".r.findAllIn(plan).toList

@@ -1,0 +1,128 @@
+package graft
+
+import java.sql.Timestamp
+import org.apache.spark.graft.{ExecLog, JobLog}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FormattedMode
+import graft.tsdb.Matcher
+import graft.tsdb.promql.{PromQL, PromQLContext}
+import graft.tsdb.shard.ParquetShardStore
+
+/** The shape of a reference-layout shard select: the matchers resolve
+  * to matched rows on the driver (phase 1), so the executed plan is a
+  * scan of the matched shards' chunks files with no join and no
+  * broadcast exchange, its `ReadSchema` holds only the in-range
+  * `s_data_<i>` columns, and a raw select's collect runs one job —
+  * `series` none.
+  */
+class ShardSelectPlanSpec extends SparkSpec {
+  import spark.implicits._
+
+  private val base = 1704067200000L // 2024-01-01T00:00Z
+  private val hour = 3600000L
+
+  // nine services over three range-partitioned shards: svc_0..svc_2
+  // land in shard 0; `env` is absent on a third of the series
+  private def series(i: Int) = (s"svc_${i % 9}",
+    if (i % 3 == 0) null else s"env_${i % 2}", new Timestamp(base + i * 60000L))
+
+  private lazy val xorDir = {
+    val d = "/tmp/graft_pshard_selplan_xor"
+    ParquetShardStore.write((0 until 270).map { i =>
+        val (svc, env, ts) = series(i); (svc, env, ts, i * 0.5)
+      }.toDF("svc", "env", "ts", "value"),
+      d, Seq("svc", "env"), "ts", "value", colDurationMs = hour, shards = 3)
+    d
+  }
+
+  private def histDir(float: Boolean) = {
+    val d = s"/tmp/graft_pshard_selplan_${if (float) "fhist" else "hist"}"
+    val cols = Seq("svc", "env", "ts", "zero", "idx", "cnt", "hsum")
+    if (float) ParquetShardStore.writeFloatHist((0 until 270).map { i =>
+        val (svc, env, ts) = series(i)
+        (svc, env, ts, 0.0, Seq(1, 3), Seq(i * 0.25, i * 1.25), i * 1.5)
+      }.toDF(cols: _*), d, Seq("svc", "env"), "ts", "zero", "idx", "cnt",
+      Some("hsum"), colDurationMs = hour, shards = 3)
+    else ParquetShardStore.writeHist((0 until 270).map { i =>
+        val (svc, env, ts) = series(i)
+        (svc, env, ts, 0L, Seq(1, 3), Seq(i + 1L, i + 2L), i * 1.5)
+      }.toDF(cols: _*), d, Seq("svc", "env"), "ts", "zero", "idx", "cnt",
+      Some("hsum"), colDurationMs = hour, shards = 3)
+    d
+  }
+  private lazy val hDir = histDir(float = false)
+  private lazy val fhDir = histDir(float = true)
+
+  // [1h, 3h) at 1h columns: s_data_1 and s_data_2
+  private val (lo, hi) = (base + hour, base + 3 * hour)
+  private val inRange = Set("s_data_1", "s_data_2")
+  private val ms = Seq(Matcher.Re("svc", "svc_[0-5]"), Matcher.Neq("env", "env_1"))
+
+  /** Every shard-select flavour over the same window and matchers. */
+  private def frames: Seq[(String, DataFrame)] = {
+    val q = Long.MaxValue
+    val sel = ParquetShardStore.select(spark, xorDir, lo, hi, ms)
+    Seq(
+      "select" -> sel,
+      "selectStrict" -> ParquetShardStore.selectStrict(spark, xorDir, lo, hi, ms, q),
+      "selectHist" -> ParquetShardStore.selectHist(spark, hDir, lo, hi, ms),
+      "selectHistStrict" -> ParquetShardStore.selectHistStrict(spark, hDir, lo, hi, ms, q),
+      "selectFloatHist" -> ParquetShardStore.selectFloatHist(spark, fhDir, lo, hi, ms),
+      "selectFloatHistStrict" ->
+        ParquetShardStore.selectFloatHistStrict(spark, fhDir, lo, hi, ms, q),
+      "promql" -> PromQL.compileRange("sum by (env) (max_over_time(x[30m]))",
+        PromQLContext(Map("x" -> sel), Seq("svc", "env"), evalMs = hi),
+        lo + 10 * 60000L, hi, 60000L))
+  }
+
+  test("no Join or BroadcastExchange in any executed plan of raw, hist, " +
+      "strict or PromQL-over-shard frames") {
+    for ((what, df) <- frames) {
+      val (rows, log) = ExecLog(spark.sparkContext)(df.collect())
+      assert(rows.nonEmpty, what)
+      val names = log.nodes.map(_.nodeName)
+      assert(names.exists(_.startsWith("Scan parquet")), s"$what: $names")
+      assert(!names.exists(n => n.contains("Join") || n.contains("BroadcastExchange")),
+        s"$what: $names")
+    }
+  }
+
+  test("the chunks ReadSchema holds only the in-range s_data columns") {
+    for ((what, df) <- frames) {
+      val plan = df.queryExecution.explainString(FormattedMode)
+      val schemas = "ReadSchema: [^\\n]*".r.findAllIn(plan).toList
+      assert(schemas.size == 1, s"$what: one scan, the chunks files\n$plan")
+      assert("s_data_\\d+".r.findAllIn(schemas.head).toSet == inRange,
+        s"$what: ${schemas.head}")
+    }
+  }
+
+  test("the scan lists only the chunks files of shards with a match") {
+    def files(m: Seq[Matcher]) =
+      ParquetShardStore.select(spark, xorDir, lo, hi, m).inputFiles.toSeq
+    val one = files(Seq(Matcher.Eq("svc", "svc_1")))
+    assert(one.size == 1 && one.head.endsWith(".chunks.parquet"), one)
+    assert(files(Nil).size == 3)
+    // no match: an empty local relation, nothing listed or run
+    val none = ParquetShardStore.select(spark, xorDir, lo, hi,
+      Seq(Matcher.Eq("svc", "nope")))
+    assert(none.inputFiles.isEmpty)
+    val (rows, jobs) = JobLog(spark.sparkContext)(none.collect())
+    assert(rows.isEmpty && jobs.isEmpty, s"jobs: $jobs")
+  }
+
+  test("a raw select's collect runs exactly one job; series().collect() runs none") {
+    xorDir
+    val sc = spark.sparkContext
+    val (rows, jobs) = JobLog(sc) {
+      ParquetShardStore.select(spark, xorDir, lo, hi, ms).collect()
+    }
+    assert(rows.nonEmpty)
+    assert(jobs.size == 1, s"jobs: $jobs")
+    val (labels, seriesJobs) = JobLog(sc) {
+      ParquetShardStore.series(spark, xorDir, ms).collect()
+    }
+    assert(labels.nonEmpty)
+    assert(seriesJobs.isEmpty, s"jobs: $seriesJobs")
+  }
+}
