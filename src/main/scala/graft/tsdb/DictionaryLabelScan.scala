@@ -2,6 +2,8 @@ package graft.tsdb
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.{DelegatingSeekableInputStream, InputFile, SeekableInputStream}
@@ -60,7 +62,7 @@ object DictionaryLabelScan {
         .parallelize(goodFiles, tasksFor(spark, goodFiles.size))
         .mapPartitions(_.flatMap(p => fileDictionaryValues(
           HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p),
-            conf.value), column).getOrElse(
+            conf.value), column, conf.value).getOrElse(
           // the planning pass vouched for this file; a concurrent
           // rewrite between passes must fail loudly, not lose values
           throw new IllegalStateException(
@@ -101,8 +103,8 @@ object DictionaryLabelScan {
       .parallelize(files, tasksFor(spark, files.size))
       .mapPartitions { paths =>
         paths.flatMap { p =>
-          val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(p), conf.value))
+          val r = open(HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(p), conf.value), conf.value)
           try {
             val footer = r.getFooter
             footer.getFileMetaData.getSchema.getFields.asScala.toList
@@ -162,10 +164,10 @@ object DictionaryLabelScan {
       val hif = HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(p), conf)
       val counting = new CountingInputFile(hif)
-      fileDictionaryValues(counting, column)
+      fileDictionaryValues(counting, column, conf)
       read += counting.bytesRead
       fileBytes += hif.getLength
-      val r = ParquetFileReader.open(hif)
+      val r = open(hif, conf)
       try {
         r.getFooter.getBlocks.asScala.foreach { b =>
           b.getColumns.asScala
@@ -190,14 +192,20 @@ object DictionaryLabelScan {
     val classified = spark.sparkContext
       .parallelize(files, tasksFor(spark, files.size))
       .map { p =>
-        val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(p), conf.value))
+        val r = open(HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(p), conf.value), conf.value)
         try (p, dictionaryComplete(r, column)) finally r.close()
       }.collect()
     // files without the column contribute nothing: drop them entirely
     (classified.collect { case (p, Some(true)) => p }.toSeq,
       classified.collect { case (p, Some(false)) => p }.toSeq)
   }
+
+  /** Opens `input` with read options from `conf`: without them
+    * parquet-java builds a fresh Hadoop `Configuration` per open,
+    * which costs far more than reading a footer. */
+  private def open(input: InputFile, conf: Configuration): ParquetFileReader =
+    ParquetFileReader.open(input, HadoopReadOptions.builder(conf).build())
 
   private def tasksFor(spark: SparkSession, n: Int): Int =
     math.max(1, math.min(n, spark.sparkContext.defaultParallelism))
@@ -277,8 +285,8 @@ object DictionaryLabelScan {
     * only-null chunks) contributes no values.
     */
   private[tsdb] def fileDictionaryValues(input: InputFile,
-      column: String): Option[Seq[String]] = {
-    val reader = ParquetFileReader.open(input)
+      column: String, conf: Configuration): Option[Seq[String]] = {
+    val reader = open(input, conf)
     try {
       val footer = reader.getFooter
       val schema = footer.getFileMetaData.getSchema

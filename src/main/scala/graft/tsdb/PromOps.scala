@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.QueryConst
+
 /** PromQL-flavoured operators over the long-format series model.
   *
   * The reference is the storage layer beneath a PromQL engine
@@ -117,7 +119,6 @@ object PromOps {
         min(struct(col(tsCol) +: tieBreak.map(col) :+
           col(valueCol).as("_v"): _*)).getField("_v").as("_first_v"),
         count(lit(1)).as("_n"))
-      .filter(col("_n") >= 2 && col("_last_ms") > col("_first_ms"))
     extrapolationLadder(perSeries, seriesCols, startCol, endCol)
   }
 
@@ -130,6 +131,8 @@ object PromOps {
     * so ROLLUP-served range vectors ([[RollupStore]]) reuse the
     * identical ladder: every input column is exactly reconstructible
     * from rollup layers, so the routed rate is bitwise the raw rate.
+    * An element with fewer than two samples, or with all of them at
+    * one instant, has no rate and gives no row.
     */
   def extrapolationLadder(perSeries: DataFrame, seriesCols: Seq[String],
       startCol: Column, endCol: Column): DataFrame = {
@@ -146,11 +149,12 @@ object PromOps {
       when(toStart < threshold, toStart).otherwise(avgSpacing / 2) +
       when(toEnd < threshold, toEnd).otherwise(avgSpacing / 2)
     val factor = extended / sampled
-    perSeries.select(seriesCols.map(col) :+
-      (col("_inc") * factor).as("increase") :+
-      (col("_inc") * factor /
-        ((endCol - startCol).cast("double") / lit(1000.0))).as("rate") :+
-      col("_n").as("samples"): _*)
+    perSeries.filter(col("_n") >= 2 && col("_last_ms") > col("_first_ms"))
+      .select(seriesCols.map(col) :+
+        (col("_inc") * factor).as("increase") :+
+        (col("_inc") * factor /
+          ((endCol - startCol).cast("double") / lit(1000.0))).as("rate") :+
+        col("_n").as("samples"): _*)
   }
 
   /** PromQL range-query materialization: evaluate the instant vector
@@ -547,11 +551,12 @@ object PromOps {
     * `originMs` must be within ~31 years of every sample (x is
     * DECIMAL(12,0) ms) — pass the selected range's start; an origin
     * outside the window fails loudly under ANSI rather than losing
-    * precision silently.
+    * precision silently. It is a bound constant ([[QueryConst]]): it
+    * moves with the window, and no scan pushes it.
     */
   private def regression(df: DataFrame, seriesCols: Seq[String],
       tsCol: String, valueCol: String, originMs: Long): DataFrame = {
-    val x = (unix_millis(col(tsCol).cast("timestamp")) - lit(originMs))
+    val x = (unix_millis(col(tsCol).cast("timestamp")) - QueryConst.long(originMs))
       .cast("decimal(12,0)")
     val y = col(valueCol).cast("decimal(18,8)")
     val sums = df
@@ -612,7 +617,7 @@ object PromOps {
     regression(df, seriesCols, tsCol, valueCol, originMs)
       .select(seriesCols.map(col) :+
         (col("_intercept") + col("_slope_ms") *
-          (evalCol + lit(horizonMs) - lit(originMs)).cast("double"))
+          (evalCol + lit(horizonMs) - QueryConst.long(originMs)).cast("double"))
           .as("predicted"): _*)
 
   /** PromQL `stdvar_over_time` / `stddev_over_time`: per-series

@@ -6,8 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.IntegralDivide
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
-import graft.functions.QueryConst
+import graft.functions.{QueryConst, RangeWindows}
 import graft.tsdb.PromOps
+import graft.tsdb.shard.ParquetShardStore
 
 /** Evaluation context for a PromQL query: which tables back which
   * metric names, the series label columns, and the instant-query
@@ -154,15 +155,30 @@ final class PromQLCompileException(msg: String) extends RuntimeException(msg)
   *   - '''range''' ([[PromQL.compileRange]]): the `query_range` form —
   *     the expression evaluated at EVERY step of a [[StepGrid]], as
   *     ONE distributed plan. Each vector carries a hidden step
-  *     column; every sample row is mapped to the (at most
-  *     range/step) steps whose window covers it by a bounded
-  *     `sequence` explode, then every aggregation/join keys on
-  *     (labels..., step). The metric table is scanned ONCE for the
-  *     whole grid — never once per step — and the scan's time filter
-  *     is the literal span `[gridStart - range, gridEnd)`, so
-  *     predicate pushdown and bucket pruning still apply. At 100 TB
-  *     a 1000-step dashboard query costs one pruned scan + one
-  *     shuffle at (series × steps-covered) grain, not 1000 scans.
+  *     column, and every aggregation/join keys on (labels..., step).
+  *     The metric table is scanned ONCE for the whole grid — never
+  *     once per step. A range function's windows are built at one of
+  *     two grains:
+  *       - '''series grain''': when the metric table is a
+  *         [[graft.tsdb.shard.ParquetShardStore.select]] frame, which
+  *         carries a handle to its series-grain twin (one row per
+  *         series, its samples as one array), `rate`, `increase` and
+  *         `sum/avg/min/max/count/last/first_over_time` of a plain
+  *         range selector run one [[graft.functions.RangeWindows]]
+  *         pass per series that emits every step's result: no
+  *         explode of samples into steps, no (series, step) exchange.
+  *         The instant form is the one-step grid;
+  *       - '''sample grain''': everywhere else (a raw table, a frame
+  *         derived from a select, an `@`, a rollup route, tie-break
+  *         columns, the other functions), every sample row is mapped
+  *         to the (at most range/step) steps whose window covers it
+  *         by a bounded `sequence` explode, then aggregated per
+  *         (series, step). The scan's time filter is the literal span
+  *         `[gridStart - range, gridEnd)`, so predicate pushdown and
+  *         bucket pruning still apply: at 100 TB a 1000-step
+  *         dashboard query costs one pruned scan + one shuffle at
+  *         (series × steps-covered) grain, not 1000 scans.
+  *     Both grains give the same answer, bit for bit.
   *
   * Subqueries `expr[range:step]` evaluate the inner expression over
   * its own (absolutely-aligned) step grid spanning exactly the outer
@@ -526,7 +542,7 @@ object PromQL {
       */
     private def stamped(df: DataFrame, labels: Seq[String]): Vec = grid match {
       case Some(_) => Vec(df.withColumn(TS, col(STEP)), labels)
-      case None => Vec(df.withColumn(TS, lit(ctx.evalMs)), labels)
+      case None => Vec(df.withColumn(TS, QueryConst.long(ctx.evalMs)), labels)
     }
 
     private def mapValue(v: Vec, f: Column => Column): Vec =
@@ -1316,26 +1332,24 @@ object PromQL {
         .select(k.map(col) :+ col("_inc") :+
           col("_f._ms").as("_first_ms") :+ col("_f._v").as("_first_v") :+
           col("_l._ms").as("_last_ms") :+ col("_n"): _*)
-        .filter(col("_n") >= 2 && col("_last_ms") > col("_first_ms"))
-      val (startCol, endCol) = windowBounds(
-        RangeVec(rv.rows, rv.labels, rv.rangeMs, rv.offsetMs, rv.anchorMs))
+      val (startCol, endCol) = windowBounds(rv.rangeMs, rv.offsetMs, rv.anchorMs)
       val out = PromOps.extrapolationLadder(perElem, k, startCol, endCol)
         .withColumn("value", col(if (c.fn == "rate") "rate" else "increase"))
       stamped(out.select(k.map(col) :+ col("value"): _*), rv.labels)
     }
 
-    /** Per-element window bounds in epoch ms: literal for an instant
-      * query or an `@`-pinned argument, the step's own trailing
-      * window otherwise.
+    /** Per-element window bounds in epoch ms: bound constants for an
+      * instant query or an `@`-pinned argument, the step's own
+      * trailing window otherwise.
       */
-    private def windowBounds(rv: RangeVec): (Column, Column) =
-      (grid, rv.anchorMs) match {
+    private def windowBounds(rangeMs: Long, offsetMs: Long,
+        anchorMs: Option[Long]): (Column, Column) =
+      (grid, anchorMs) match {
         case (Some(_), None) =>
-          (col(STEP) - lit(rv.offsetMs + rv.rangeMs),
-            col(STEP) - lit(rv.offsetMs))
+          (col(STEP) - lit(offsetMs + rangeMs), col(STEP) - lit(offsetMs))
         case (_, at) =>
           val eff = at.getOrElse(ctx.evalMs)
-          (lit(eff - rv.offsetMs - rv.rangeMs), lit(eff - rv.offsetMs))
+          (QueryConst.long(eff - offsetMs - rangeMs), QueryConst.long(eff - offsetMs))
       }
 
     /** Evaluate a subquery `expr[range:step]`: the inner expression
@@ -1426,7 +1440,7 @@ object PromQL {
     private def evalInstant(rv: RangeVec): Column =
       (grid, rv.anchorMs) match {
         case (Some(_), None) => col(STEP)
-        case (_, at) => lit(at.getOrElse(ctx.evalMs))
+        case (_, at) => QueryConst.long(at.getOrElse(ctx.evalMs))
       }
 
     /** `rate`/`increase` with Prometheus's production boundary
@@ -1436,12 +1450,12 @@ object PromQL {
     private def extrapolated(c: Expr.Call): Vec =
       rollupRangeVec(one(c, c.fn)) match {
         case Some(rrv) => rollupExtrapolated(c, rrv)
-        case None => extrapolatedRaw(c)
+        case None => seriesGrain(c).getOrElse(extrapolatedRaw(c))
       }
 
     private def extrapolatedRaw(c: Expr.Call): Vec = {
       val rv = rangeVec(one(c, c.fn), c.fn)
-      val (startCol, endCol) = windowBounds(rv)
+      val (startCol, endCol) = windowBounds(rv.rangeMs, rv.offsetMs, rv.anchorMs)
       val k = keys(rv.labels)
       val out = PromOps.extrapolatedRateAt(rv.rows, k, ctx.tsCol,
           ctx.valueCol, startCol, endCol, ctx.tieBreak)
@@ -1456,8 +1470,54 @@ object PromQL {
     private def overTime(c: Expr.Call, fn: String): Vec =
       rollupRangeVec(one(c, c.fn)) match {
         case Some(rv) if rollupServable(fn) => rollupOverTime(rv, fn)
-        case _ => overTimeRaw(c, fn)
+        case _ => seriesGrain(c).getOrElse(overTimeRaw(c, fn))
       }
+
+    /** A range function over a shard select, evaluated at series grain:
+      * `rate`, `increase` or a [[RangeWindows]] `*_over_time` whose
+      * argument is a plain range selector (no `@`, no rollup route,
+      * no tie-break columns) over a table that carries a series-grain
+      * twin ([[ParquetShardStore.seriesGrain]]) whose series are
+      * unique on the label columns. The selector's matchers filter the
+      * twin's rows, one [[RangeWindows]] pass per series emits the
+      * per-step results, and `rate`/`increase` finish on the same
+      * [[PromOps.extrapolationLadder]] as the sample grain — no step
+      * explode, no (series, step) exchange. None when `c` does not
+      * qualify; the caller then plans the sample grain, with the same
+      * answer.
+      */
+    private def seriesGrain(c: Expr.Call): Option[Vec] = c.args match {
+      case Seq(r: Expr.Range) if RangeWindows.functions(c.fn) &&
+          r.sel.at.isEmpty && ctx.tieBreak.isEmpty =>
+        ctx.metrics.get(r.sel.metric).flatMap(ParquetShardStore.seriesGrain)
+          .filter(h => h.tsCol == ctx.tsCol && h.valueCol == ctx.valueCol &&
+            h.uniqueOn(ctx.labelCols))
+          .map { h =>
+            // an instant query is the one-step grid at the eval time
+            val (start, lastIdx, stepMs) = grid
+              .fold((ctx.evalMs, 0L, 1L))(g => (g.startMs, g.lastIdx, g.stepMs))
+            val series = graft.tsdb.Matcher.compile(r.sel.matchers)
+              .map(h.series.filter).getOrElse(h.series)
+            val wins = ColumnBridge.column(RangeWindows(
+              ColumnBridge.expression(col("_samples")),
+              ColumnBridge.expression(QueryConst.long(start)),
+              ColumnBridge.expression(QueryConst.long(lastIdx)),
+              c.fn, stepMs, r.rangeMs, r.sel.offsetMs))
+            val fields = RangeWindows.outputType(c.fn).fieldNames.toSeq.tail
+            val rows = series
+              .select(ctx.labelCols.map(col) :+ explode(wins).as("_w"): _*)
+              .select(ctx.labelCols.map(col) ++ grid.map(_ => col("_w.step").as(STEP)) ++
+                fields.map(f => col(s"_w.$f").as(f)): _*)
+            val k = keys(ctx.labelCols)
+            val out = if (c.fn != "rate" && c.fn != "increase") rows else {
+              val (startCol, endCol) = windowBounds(r.rangeMs, r.sel.offsetMs, None)
+              PromOps.extrapolationLadder(rows, k, startCol, endCol)
+                .withColumn("value", col(if (c.fn == "rate") "rate" else "increase"))
+            }
+            stamped(out.select(k.map(col) :+ col("value"): _*), ctx.labelCols)
+          }
+      case _ => None
+    }
 
     private def overTimeRaw(c: Expr.Call, fn: String): Vec =
       overRange(c, (rows, ls, _) => {

@@ -12,6 +12,7 @@ import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.io.api.{Binary, RecordConsumer}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type, Types}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
@@ -79,8 +80,20 @@ import ParquetShardSchema._
   *      [[graft.functions.QueryConst]]s, and the output ts carries
   *      the decoded-sample mark, so a moved window reuses the
   *      compiled code of the last one.
+  * A [[select]] (or [[selectStrict]]) frame also carries, as a tag on
+  * its own logical plan, a handle to its SERIES-GRAIN TWIN
+  * ([[seriesGrain]]): one row per matched series, the label columns
+  * plus `_samples`, the series' decoded in-range samples as one array
+  * in stored order — the reference's materialized series (labels +
+  * chunks, search/materialize.go) — built from the same phase-1 rows
+  * and chunks scan. PromQL evaluates its range functions on it per
+  * series. Frames derived from the select (a filter, a projection, a
+  * union) carry no handle, and neither does a select whose phase 1
+  * sees one label set on two rows, since a consumer of the twin would
+  * take them for two series.
   * The merges read every row and keep a chunks scan joined to the
-  * broadcast labels scan ([[allRows]]).
+  * broadcast labels scan ([[allRows]]), after the same footer check
+  * of each shard's row alignment that phase 1 makes.
   */
 object ParquetShardStore {
 
@@ -469,7 +482,7 @@ object ParquetShardStore {
     * Shard 0 is the file Spark's own inference would open: the first
     * of the sorted glob.
     */
-  private[graft] final class ShardFooters(spark: SparkSession, val dir: String) {
+  private[graft] final class ShardFooters(val spark: SparkSession, val dir: String) {
     private val labelsFooter = footer(spark, s"$dir/0.labels.parquet")
     lazy val meta: ShardMeta = {
       val kv = labelsFooter.getKeyValueMetaData
@@ -533,7 +546,38 @@ object ParquetShardStore {
       matchers: Seq[Matcher] = Nil, tsCol: String = "ts",
       valueCol: String = "value"): DataFrame =
     selectImpl(spark, dir, mintMs, maxtMs, matchers, chunkBytesQuota = 0L,
-      xorDecode(mintMs, maxtMs), Seq(col("_s.value").as(valueCol)), tsCol)
+      xorDecode(mintMs, maxtMs), Seq(col("_s.value").as(valueCol)), tsCol,
+      twinValueCol = Some(valueCol))
+
+  /** The series-grain twin of a [[select]]: one row per matched
+    * series, its label columns plus `_samples`, the series' samples
+    * in `[mintMs, maxtMs)` as array<struct<ts: long ms, value:
+    * double>> — the concat of its decoded in-range `s_data` cells, in
+    * stored order. It is built from the select's own phase-1 rows and
+    * chunks scan, so the row-count and "changed after the select"
+    * checks hold for it too. A consumer that evaluates per series
+    * (PromQL's range functions) reads it instead of exploding and
+    * regrouping the select's samples.
+    */
+  final class SeriesGrain private[shard] (twin: => DataFrame,
+      val labelNames: Seq[String], val tsCol: String, val valueCol: String,
+      matched: Option[MatchedSeries]) {
+    lazy val series: DataFrame = twin
+    /** Whether no two matched series share their values of `cols`. */
+    def uniqueOn(cols: Seq[String]): Boolean =
+      cols.forall(labelNames.contains) &&
+        matched.forall(_.uniqueOn(cols.map(labelNames.indexOf)))
+  }
+
+  private val SeriesGrainTag = TreeNodeTag[SeriesGrain]("graft.shard.series_grain")
+
+  /** The series-grain twin of `df` when `df` is a [[select]] or
+    * [[selectStrict]] frame itself — not a frame derived from one (a
+    * filter, a projection, a union) — and no two of its matched rows
+    * carry one label set. */
+  def seriesGrain(df: DataFrame): Option[SeriesGrain] =
+    df.queryExecution.logical.getTagValue(SeriesGrainTag)
+      .filter(h => h.uniqueOn(h.labelNames))
 
   private def xorDecode(mintMs: Long, maxtMs: Long)
       : org.apache.spark.sql.Column => org.apache.spark.sql.Column =
@@ -786,7 +830,8 @@ object ParquetShardStore {
       maxtMs: Long, matchers: Seq[Matcher], chunkBytesQuota: Long,
       tsCol: String = "ts", valueCol: String = "value"): DataFrame =
     selectImpl(spark, dir, mintMs, maxtMs, matchers, chunkBytesQuota,
-      xorDecode(mintMs, maxtMs), Seq(col("_s.value").as(valueCol)), tsCol)
+      xorDecode(mintMs, maxtMs), Seq(col("_s.value").as(valueCol)), tsCol,
+      twinValueCol = Some(valueCol))
 
   /** [[selectHist]] under the same strict chunk-byte quota — the
     * quota aggregation counts encoded `s_data` bytes and never
@@ -808,9 +853,20 @@ object ParquetShardStore {
 
   /** Every row of a dir, for the merges: the chunks scan (every data
     * column) joined to the broadcast labels on (`_shard`, `_row`).
-    * Label columns + `s_data_<i>`; nothing is decoded.
+    * Label columns + `s_data_<i>`; nothing is decoded. The footers
+    * first show that each shard's two files agree on the row count,
+    * the check a select makes in phase 1.
     */
   private def allRows(f: ShardFooters): (DataFrame, Seq[String]) = {
+    val conf = f.spark.sparkContext.hadoopConfiguration
+    val files = ShardRowMatch.listShards(conf, f.dir)
+    files.keys.map(_._1).toSeq.sorted.foreach { s =>
+      val labels = files.getOrElse((s, "labels"), throw new IllegalStateException(
+        s"${f.dir}: shard $s has a chunks file and no labels file"))
+      val reader = openFile(conf, labels)
+      val rows = try reader.getRecordCount finally reader.close()
+      alignedChunks(conf, f.dir, s, rows, files.get((s, "chunks")).orNull)
+    }
     val names = f.labelNames
     val labels = f.labels.select(
       (names.map(n => col(labelToColumn(n)).as(n)) ++ shardRow("labels")): _*)
@@ -830,12 +886,13 @@ object ParquetShardStore {
     *      matched rows reach it as a broadcast the driver made, which
     *      starts no job.
     * Output: the labels as one struct column `_l`, the label names,
-    * and the data columns, nothing decoded.
+    * the data columns, nothing decoded, and phase 1's answer.
     * A window that misses the footer range or matches nothing gives
     * an empty local relation, and nothing is scanned.
     */
   private def matchedRows(spark: SparkSession, dir: String, mintMs: Long,
-      maxtMs: Long, matchers: Seq[Matcher]): (DataFrame, Seq[String], Seq[String]) = {
+      maxtMs: Long, matchers: Seq[Matcher])
+      : (DataFrame, Seq[String], Seq[String], Option[MatchedSeries]) = {
     require(maxtMs > mintMs, s"empty range [$mintMs, $maxtMs)")
     val f = new ShardFooters(spark, dir)
     val m = f.meta
@@ -863,7 +920,9 @@ object ParquetShardStore {
       case None => spark.createDataFrame(java.util.Collections.emptyList[Row](),
         StructType(StructField("_l", labelsType) +: dataCols.map(StructField(_, BinaryType))))
       case Some(series) =>
-        val chunks = alignedChunks(spark, dir, series)
+        val conf = spark.sparkContext.hadoopConfiguration
+        val chunks = series.shards.map(s =>
+          alignedChunks(conf, dir, s.shard, s.rowCount, s.chunksStatus)).head
         val lookup = ColumnBridge.column(MatchedRowLookup(
           Seq("file_name", "row_index", "file_modification_time", "file_size")
             .map(c => ColumnBridge.expression(col(s"_metadata.$c"))),
@@ -873,40 +932,44 @@ object ParquetShardStore {
           .select(lookup.as("_l") +: dataCols.map(col): _*)
           .filter(col("_l").isNotNull)
     }
-    (rows, names, dataCols)
+    (rows, names, dataCols, matched)
   }
 
-  /** Phase 1's row-alignment check, from the footers: each matched
-    * shard has a chunks file with as many rows as its labels file.
-    * Returns the first chunks footer, which gives the scan's schema. */
-  private def alignedChunks(spark: SparkSession, dir: String,
-      series: MatchedSeries): FileMetaData =
-    series.shards.map { s =>
-      if (s.chunks == null)
-        throw new IllegalStateException(s"$dir: shard ${s.shard} has a " +
-          "labels file and no chunks file")
-      val conf = spark.sparkContext.hadoopConfiguration
-      // options from the session's conf: without them parquet-java
-      // builds a fresh Hadoop Configuration per open, which cost more
-      // than the rest of the select's planning
-      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(
-        s.chunksStatus, conf), HadoopReadOptions.builder(conf).build())
-      try {
-        val n = reader.getRecordCount
-        if (n != s.rowCount)
-          throw new IllegalStateException(s"$dir: shard ${s.shard}'s labels " +
-            s"file has ${s.rowCount} rows and its chunks file $n - the two " +
-            "files are not row-aligned")
-        reader.getFooter.getFileMetaData
-      } finally reader.close()
-    }.head
+  /** The row-alignment check, from the footers: shard `shard` of
+    * `dir` has a chunks file (`chunks`, as listed) with as many rows
+    * as its labels file (`labelsRows`). Returns the chunks footer,
+    * which gives a scan its schema. */
+  private def alignedChunks(conf: Configuration, dir: String, shard: Int,
+      labelsRows: Long, chunks: org.apache.hadoop.fs.FileStatus): FileMetaData = {
+    if (chunks == null)
+      throw new IllegalStateException(s"$dir: shard $shard has a " +
+        "labels file and no chunks file")
+    val reader = openFile(conf, chunks)
+    try {
+      val n = reader.getRecordCount
+      if (n != labelsRows)
+        throw new IllegalStateException(s"$dir: shard $shard's labels " +
+          s"file has $labelsRows rows and its chunks file $n - the two " +
+          "files are not row-aligned")
+      reader.getFooter.getFileMetaData
+    } finally reader.close()
+  }
+
+  /** A parquet-java reader with options from the session's conf:
+    * without them parquet-java builds a fresh Hadoop Configuration per
+    * open, which cost more than the rest of a select's planning. */
+  private def openFile(conf: Configuration,
+      status: org.apache.hadoop.fs.FileStatus): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf),
+      HadoopReadOptions.builder(conf).build())
 
   private def selectImpl(spark: SparkSession, dir: String, mintMs: Long,
       maxtMs: Long, matchers: Seq[Matcher], chunkBytesQuota: Long,
       decode: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
       sampleOutput: Seq[org.apache.spark.sql.Column],
-      tsCol: String): DataFrame = {
-    val (rows, names, dataCols) = matchedRows(spark, dir, mintMs, maxtMs, matchers)
+      tsCol: String, twinValueCol: Option[String] = None): DataFrame = {
+    val (rows, names, dataCols, matched) =
+      matchedRows(spark, dir, mintMs, maxtMs, matchers)
     if (chunkBytesQuota > 0L) {
       // an empty match is a local relation: no chunk bytes to count
       val bytes = if (rows.isLocal) 0L
@@ -920,11 +983,20 @@ object ParquetShardStore {
     }
     val decoded = dataCols.map(c => decode(col(c)))
     val allSamples = if (decoded.size == 1) decoded.head else concat(decoded: _*)
-    rows
-      .select((names.map(n => col("_l")(n).as(n)) :+ explode(allSamples).as("_s")): _*)
+    val labels = names.map(n => col("_l")(n).as(n))
+    val out = rows
+      .select(labels :+ explode(allSamples).as("_s"): _*)
       .filter(col("_s.ts") >= QueryConst.long(mintMs) &&
         col("_s.ts") < QueryConst.long(maxtMs))
       .select((names.map(col) :+ QueryConst.decodedTs(
         timestamp_millis(col("_s.ts")), tsCol)) ++ sampleOutput: _*)
+    twinValueCol.foreach { valueCol =>
+      def twin = rows.select(labels :+ filter(allSamples, s =>
+        s("ts") >= QueryConst.long(mintMs) && s("ts") < QueryConst.long(maxtMs))
+        .as("_samples"): _*)
+      out.queryExecution.logical.setTagValue(SeriesGrainTag,
+        new SeriesGrain(twin, names, tsCol, valueCol, matched))
+    }
+    out
   }
 }

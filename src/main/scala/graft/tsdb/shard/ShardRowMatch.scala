@@ -72,19 +72,24 @@ private[shard] object ShardRowMatch {
 
   private val ShardFile = "^(\\d+)\\.(labels|chunks)\\.parquet$".r
 
+  /** The shard files of `dir`, keyed by (shard, "labels" | "chunks"). */
+  def listShards(conf: Configuration, dir: String): Map[(Int, String), FileStatus] = {
+    val root = new Path(dir)
+    root.getFileSystem(conf).listStatus(root).toSeq.flatMap { st =>
+      st.getPath.getName match {
+        case ShardFile(n, kind) => Some((n.toInt, kind) -> st)
+        case _ => None
+      }
+    }.toMap
+  }
+
   /** The rows of the shard dir `dir` that `predicate` matches, with
     * the values of the label columns `names`. `matchers` only prune:
     * the `=`/set ones become the parquet filter. */
   def resolve(spark: SparkSession, dir: String, names: Seq[String],
       matchers: Seq[Matcher], predicate: Option[Compiled]): MatchedSeries = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(dir)
-    val files = root.getFileSystem(conf).listStatus(root).toSeq.flatMap { st =>
-      st.getPath.getName match {
-        case ShardFile(n, kind) => Some((n.toInt, kind) -> st)
-        case _ => None
-      }
-    }.toMap
+    val files = listShards(conf, dir)
     val filter = predicate.flatMap(_ => pushable(matchers, names.toSet))
     val dicts = names.map(_ => new java.util.HashMap[String, Integer]())
     val shards = files.keys.collect { case (s, "labels") => s }.toSeq.sorted
@@ -270,6 +275,13 @@ private[shard] final class MatchedShard(val shard: Int, val rowCount: Long,
 private[shard] final class MatchedSeries(val dicts: Array[Array[String]],
     val shards: Array[MatchedShard]) extends Serializable {
   def isEmpty: Boolean = shards.isEmpty
+
+  /** Whether no two matched rows share their values of the labels at
+    * positions `labels`. */
+  def uniqueOn(labels: Seq[Int]): Boolean = {
+    val seen = scala.collection.mutable.HashSet.empty[Seq[Int]]
+    shards.forall(s => s.rows.indices.forall(i => seen.add(labels.map(s.codes(_)(i)))))
+  }
 
   /** One row per matched series, one string per label. */
   def labelRows: Seq[Row] = shards.toSeq.flatMap { s =>

@@ -89,4 +89,18 @@ class CodegenReuseSpec extends SparkSpec {
   test("max_over_time(g[5m]): generated code is identical across two windows") {
     assertStable("max panel", panel("max_over_time(g[5m])", "g"))
   }
+
+  test("deriv(g[5m]): generated code is identical across two windows") {
+    assertStable("deriv panel", panel("deriv(g[5m])", "g"))
+  }
+
+  test("an instant query: generated code is identical at two eval times") {
+    assertStable("instant rate", evalMs => {
+      val sel = ParquetShardStore.select(spark, dir, evalMs - 10 * minute, evalMs,
+        Seq(Matcher.Eq("__name__", "x")))
+      PromQL.compile("sum by (h) (rate(x[5m]))", PromQLContext(Map("x" -> sel),
+        ParquetShardStore.labelNames(spark, dir).filterNot(_ == "__name__"),
+        evalMs = evalMs))
+    })
+  }
 }

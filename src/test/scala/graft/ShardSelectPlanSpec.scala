@@ -3,7 +3,9 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.graft.{ExecLog, JobLog}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import graft.tsdb.Matcher
 import graft.tsdb.promql.{PromQL, PromQLContext}
 import graft.tsdb.shard.ParquetShardStore
@@ -124,5 +126,50 @@ class ShardSelectPlanSpec extends SparkSpec {
     }
     assert(labels.nonEmpty)
     assert(seriesJobs.isEmpty, s"jobs: $seriesJobs")
+  }
+
+  // PromQL range functions over the select evaluate per series on its
+  // series-grain twin: no step explode, no window, no (series, step)
+  // exchange
+
+  private def promql(query: String, table: DataFrame): DataFrame =
+    PromQL.compileRange(query, PromQLContext(Map("x" -> table), Seq("svc", "env"),
+      evalMs = hi), lo + 10 * 60000L, hi, 60000L)
+
+  private object Stages extends AdaptiveSparkPlanHelper {
+    /** The shuffle exchanges of an executed plan's final stages. */
+    def exchanges(p: SparkPlan): Int = collect(p) { case e: ShuffleExchangeExec => e }.size
+  }
+
+  test("max_over_time over a shard select runs one job with no Exchange, " +
+      "Window or sequence explode") {
+    val df = promql("max_over_time(x[5m])", ParquetShardStore.select(spark, xorDir, lo, hi, ms))
+    val ((rows, log), jobs) = JobLog(spark.sparkContext)(ExecLog(spark.sparkContext)(df.collect()))
+    assert(rows.nonEmpty)
+    assert(jobs.size == 1, s"jobs: $jobs")
+    val nodes = log.nodes
+    assert(!nodes.exists(n => n.nodeName.contains("Exchange") || n.nodeName == "Window" ||
+      n.simpleString.contains("sequence")), nodes.map(_.simpleString))
+  }
+
+  test("sum by (env) (rate(x[30m])) over a shard select runs two jobs with one Exchange") {
+    val df = promql("sum by (env) (rate(x[30m]))",
+      ParquetShardStore.select(spark, xorDir, lo, hi, ms))
+    val (rows, jobs) = JobLog(spark.sparkContext)(df.collect())
+    assert(rows.nonEmpty)
+    assert(jobs.size == 2, s"jobs: $jobs")
+    assert(Stages.exchanges(df.queryExecution.executedPlan) == 1,
+      df.queryExecution.executedPlan)
+  }
+
+  test("an @-pinned selector and a frame derived from the select plan the sample grain") {
+    val sel = ParquetShardStore.select(spark, xorDir, lo, hi, ms)
+    for ((what, df) <- Seq(
+        "@" -> promql(s"max_over_time(x[5m] @ ${(hi - 60000L) / 1000})", sel),
+        "derived" -> promql("max_over_time(x[5m])", sel.filter("value >= 0")))) {
+      assert(!df.queryExecution.optimizedPlan.toString.contains("range_windows"), what)
+      assert(df.collect().nonEmpty, what)
+      assert(Stages.exchanges(df.queryExecution.executedPlan) >= 1, what)
+    }
   }
 }
