@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.{BlockMetaData, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.{DelegatingSeekableInputStream, InputFile, SeekableInputStream}
 import org.apache.parquet.schema.LogicalTypeAnnotation
@@ -22,12 +23,11 @@ import org.apache.spark.sql.functions._
   * bucket pruning); this is the zero-upkeep complement for data
   * nobody indexed.
   *
-  * Two distributed passes, both metadata-sized: a FOOTER-ONLY
-  * planning pass classifies every file (dictionary-complete vs
-  * needs-data-scan) from its EncodingStats — the bounded file lists
-  * come back to the driver, the same bounded-listing convention as
-  * the block stores — then the answer frame lazily reads dictionary
-  * pages of the good files and data-scans the rest. Per good file
+  * Two metadata-sized passes: a FOOTER-ONLY planning pass on the
+  * driver classifies every file (dictionary-complete vs
+  * needs-data-scan) from its EncodingStats, as shard reads plan from
+  * footers, then the answer frame lazily reads dictionary pages of the
+  * good files in Spark tasks and data-scans the rest. Per good file
   * the IO is footer + one dictionary page per row group, asserted
   * ≪ column size by [[dictionaryScanBytes]] and its spec.
   *
@@ -179,26 +179,20 @@ object DictionaryLabelScan {
     (read, columnBytes, fileBytes)
   }
 
-  /** The footer-only planning pass: (dictionary-complete files,
-    * data-scan files). Distributed; only the bounded path lists come
-    * back to the driver.
+  /** The footer-only planning pass, on the driver as shard reads plan:
+    * (dictionary-complete files, data-scan files). Files without the
+    * column, or with only nulls in it, contribute nothing and are
+    * dropped.
     */
   private def planScan(spark: SparkSession, dir: String,
       column: String): (Seq[String], Seq[String]) = {
-    val files = listParquetFiles(spark, dir)
-    if (files.isEmpty) return (Nil, Nil)
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val classified = spark.sparkContext
-      .parallelize(files, tasksFor(spark, files.size))
-      .map { p =>
-        val r = open(HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(p), conf.value), conf.value)
-        try (p, dictionaryComplete(r, column)) finally r.close()
-      }.collect()
-    // files without the column contribute nothing: drop them entirely
-    (classified.collect { case (p, Some(true)) => p }.toSeq,
-      classified.collect { case (p, Some(false)) => p }.toSeq)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val classified = listParquetFiles(spark, dir).map { p =>
+      val r = open(HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p), conf), conf)
+      try (p, dictionaryBlocks(r.getFooter, column)) finally r.close()
+    }
+    (classified.collect { case (p, Some(bs)) if bs.nonEmpty => p },
+      classified.collect { case (p, None) => p })
   }
 
   /** Opens `input` with read options from `conf`: without them
@@ -210,33 +204,30 @@ object DictionaryLabelScan {
   private def tasksFor(spark: SparkSession, n: Int): Int =
     math.max(1, math.min(n, spark.sparkContext.defaultParallelism))
 
-  /** Some(true) = the dictionary IS the complete value set;
-    * Some(false) = needs a data scan; None = no such column / no
-    * values here.
+  /** The row groups whose `column` chunk holds values, when the
+    * dictionary pages ARE the complete value set of `column` in the
+    * file `footer` describes; None when a data scan is needed: a type
+    * with no faithful dictionary decode, a row group without the
+    * column, or a chunk with non-dictionary (plain fallback) pages or
+    * no encoding stats. A file without the column gives Some(Nil).
     */
-  private def dictionaryComplete(reader: ParquetFileReader,
-      column: String): Option[Boolean] = {
-    val footer = reader.getFooter
+  private def dictionaryBlocks(footer: ParquetMetadata,
+      column: String): Option[Seq[BlockMetaData]] = {
     val schema = footer.getFileMetaData.getSchema
-    if (!schema.getFields.asScala.exists(_.getName == column)) return None
-    val desc = schema.getColumnDescription(Array(column))
-    if (!decodableLogicalType(desc.getPrimitiveType)) return Some(false)
-    var any = false
-    footer.getBlocks.asScala.foreach { block =>
-      val ccmd = block.getColumns.asScala
-        .find(_.getPath.toDotString == column)
-        .getOrElse(return Some(false))
-      val allNull = ccmd.getStatistics != null &&
-        ccmd.getStatistics.isNumNullsSet &&
-        ccmd.getStatistics.getNumNulls == ccmd.getValueCount
-      if (!allNull) {
-        any = true
-        val st = ccmd.getEncodingStats
-        if (st == null || st.hasNonDictionaryEncodedPages)
-          return Some(false) // plain fallback: dictionary incomplete
-      }
+    if (!schema.getFields.asScala.exists(_.getName == column)) return Some(Nil)
+    if (!decodableLogicalType(schema.getColumnDescription(Array(column)).getPrimitiveType))
+      return None
+    val blocks = footer.getBlocks.asScala.toSeq
+    val chunks = blocks.map(_.getColumns.asScala.find(_.getPath.toDotString == column))
+    if (chunks.exists(_.isEmpty)) return None
+    val withValues = blocks.zip(chunks.flatten).filterNot { case (_, cc) =>
+      cc.getStatistics != null && cc.getStatistics.isNumNullsSet &&
+        cc.getStatistics.getNumNulls == cc.getValueCount
     }
-    if (any) Some(true) else None
+    if (withValues.exists { case (_, cc) =>
+        cc.getEncodingStats == null || cc.getEncodingStats.hasNonDictionaryEncodedPages })
+      None
+    else Some(withValues.map(_._1))
   }
 
   /** Only types whose dictionary decode prints the SAME string the
@@ -280,52 +271,37 @@ object DictionaryLabelScan {
   }
 
   /** Dictionary entries of `column` in one file, decoded to strings —
-    * None when the planning predicate ([[dictionaryComplete]]) does
-    * not hold for this file. A file without the column (or with
-    * only-null chunks) contributes no values.
+    * None when the planning predicate ([[dictionaryBlocks]]) does not
+    * hold for this file. A file without the column (or with only-null
+    * chunks) contributes no values.
     */
   private[tsdb] def fileDictionaryValues(input: InputFile,
       column: String, conf: Configuration): Option[Seq[String]] = {
     val reader = open(input, conf)
-    try {
-      val footer = reader.getFooter
-      val schema = footer.getFileMetaData.getSchema
-      if (!schema.getFields.asScala.exists(_.getName == column))
-        return Some(Nil)
-      val desc = schema.getColumnDescription(Array(column))
-      if (!decodableLogicalType(desc.getPrimitiveType)) return None
+    try dictionaryBlocks(reader.getFooter, column).flatMap { blocks =>
+      lazy val desc = reader.getFooter.getFileMetaData.getSchema
+        .getColumnDescription(Array(column))
       val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      footer.getBlocks.asScala.foreach { block =>
-        val ccmd = block.getColumns.asScala
-          .find(_.getPath.toDotString == column)
-          .getOrElse(return None)
-        val allNull = ccmd.getStatistics != null &&
-          ccmd.getStatistics.isNumNullsSet &&
-          ccmd.getStatistics.getNumNulls == ccmd.getValueCount
-        if (!allNull) {
-          val st = ccmd.getEncodingStats
-          if (st == null || st.hasNonDictionaryEncodedPages)
-            return None // plain fallback: dictionary is incomplete
-          // widen to the public interface: parquet-java's concrete
-          // DictionaryPageReader class is package-private
-          val store: org.apache.parquet.column.page.DictionaryPageReadStore =
-            reader.getDictionaryReader(block)
-          val page = store.readDictionaryPage(desc)
-          if (page == null) return None
-          val dict = page.getEncoding.initDictionary(desc, page)
-          import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-          var i = 0
-          while (i <= dict.getMaxId) {
-            out += (desc.getPrimitiveType.getPrimitiveTypeName match {
-              case BINARY => dict.decodeToBinary(i).toStringUsingUTF8
-              case INT64 => dict.decodeToLong(i).toString
-              case INT32 => dict.decodeToInt(i).toString
-              case DOUBLE => dict.decodeToDouble(i).toString
-              case FLOAT => dict.decodeToFloat(i).toString
-              case _ => return None
-            })
-            i += 1
-          }
+      blocks.foreach { block =>
+        // widen to the public interface: parquet-java's concrete
+        // DictionaryPageReader class is package-private
+        val store: org.apache.parquet.column.page.DictionaryPageReadStore =
+          reader.getDictionaryReader(block)
+        val page = store.readDictionaryPage(desc)
+        if (page == null) return None
+        val dict = page.getEncoding.initDictionary(desc, page)
+        import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+        var i = 0
+        while (i <= dict.getMaxId) {
+          out += (desc.getPrimitiveType.getPrimitiveTypeName match {
+            case BINARY => dict.decodeToBinary(i).toStringUsingUTF8
+            case INT64 => dict.decodeToLong(i).toString
+            case INT32 => dict.decodeToInt(i).toString
+            case DOUBLE => dict.decodeToDouble(i).toString
+            case FLOAT => dict.decodeToFloat(i).toString
+            case _ => return None
+          })
+          i += 1
         }
       }
       Some(out.toSeq)

@@ -17,7 +17,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.functions.{ChunkDecode, MergeSampleRuns, QueryConst}
 import graft.tsdb.{ChunkCodec, ChunkencHistCodec, HistChunkCodec, Matcher}
@@ -91,9 +91,10 @@ import ParquetShardSchema._
   * union) carry no handle, and neither does a select whose phase 1
   * sees one label set on two rows, since a consumer of the twin would
   * take them for two series.
-  * The merges read every row and keep a chunks scan joined to the
-  * broadcast labels scan ([[allRows]]), after the same footer check
-  * of each shard's row alignment that phase 1 makes.
+  * The merges read their inputs through the same two phases, with no
+  * matchers and the open range: phase 1 lists every row, phase 2 scans
+  * every `s_data_<i>` column, so a merge makes the same row-count and
+  * "changed after the select" checks as a select, and plans no join.
   */
 object ParquetShardStore {
 
@@ -478,7 +479,7 @@ object ParquetShardStore {
   /** Shard 0's footers, read without a Spark job (FromLabelsFile,
     * schema_builder.go:58-76): the labels footer gives the
     * [[ShardMeta]] and the labels schema, the chunks footer — opened
-    * only when a plan reads the chunks files — the chunks schema.
+    * only when asked for — the chunks schema.
     * Shard 0 is the file Spark's own inference would open: the first
     * of the sorted glob.
     */
@@ -496,11 +497,6 @@ object ParquetShardStore {
       labelsSchema.fieldNames.toSeq.flatMap(extractLabelFromColumn).sorted
     lazy val chunksSchema: StructType =
       sparkSchema(spark, footer(spark, s"$dir/0.chunks.parquet"))
-
-    def labels: DataFrame = scan("labels", labelsSchema)
-    def chunks: DataFrame = scan("chunks", chunksSchema)
-    private def scan(kind: String, schema: StructType): DataFrame =
-      spark.read.schema(schema).parquet(s"$dir/*.$kind.parquet")
   }
 
   /** One file's footer, row-group metadata skipped. */
@@ -529,13 +525,6 @@ object ParquetShardStore {
     * schema — how FromLabelsFile rebuilds the label universe. */
   def labelNames(spark: SparkSession, dir: String): Seq[String] =
     new ShardFooters(spark, dir).labelNames
-
-  /** `_shard` (the number in the file name) and `_row` (the row
-    * index in that file): the key that aligns the dual files. */
-  private def shardRow(kind: String): Seq[org.apache.spark.sql.Column] = Seq(
-    regexp_extract(col("_metadata.file_name"),
-      s"^(\\d+)\\.$kind\\.parquet$$", 1).cast("int").as("_shard"),
-    col("_metadata.row_index").as("_row"))
 
   /** Samples of series matching `matchers` in `[mintMs, maxtMs)` —
     * output: one column per label (nulls where the series lacks it) +
@@ -657,7 +646,9 @@ object ParquetShardStore {
   /** Compact N shard dirs that may overlap in series/time into ONE
     * shard dir — the reference's vertical compaction applied to its
     * own layout (convert/merge.go's NewMergeChunkSeriesSet feeding a
-    * fresh conversion), at SERIES grain end to end: the inputs'
+    * fresh conversion), at SERIES grain end to end: each input is
+    * read through the select's two phases (every row, every data
+    * column, no join), and the inputs'
     * series rows (labels + encoded cells, no explode) union into ONE
     * exchange, range-partitioned by the labels into the output's
     * shards; each series' rows group there, decode into one sorted
@@ -676,36 +667,26 @@ object ParquetShardStore {
       colDurationMs: Long = DefaultColDurationMs,
       samplesPerChunk: Int = 120, shards: Int = 1,
       bloomFilterLabels: Seq[String] = Nil): Unit = {
-    val inputs = shardInputs(spark, dirs)
-    inputs.foreach(assertSingleFamily(_, XorFamily, "XOR (float-sample)"))
-    val merged = mergeSeries(inputs, shards,
+    val (names, runs) = shardInputs(spark, dirs, XorFamily, "XOR (float-sample)")
+    val merged = mergeSeries(names, runs, shards,
       xorDecode(Long.MinValue, Long.MaxValue))
-    writeSeries(merged, seriesBounds(merged), outDir, inputs.head.labelNames,
+    writeSeries(merged, seriesBounds(merged), outDir, names,
       sampleFields = 2, colDurationMs, rowGroupSize = 1L << 20,
       bloomFilterLabels, xorEncoder(samplesPerChunk), XorFamily)
   }
 
-  /** The series-grain LWW merge of `inputs`, arranged into `shards`
-    * and checkpointed: one row per series with a non-empty merged
-    * `_samples` array of `decode`'s sample structs. The one exchange
-    * moves each input series row's ENCODED cells, range-partitioned
-    * by the labels ([[byShard]]): that clusters every series' rows for
-    * the groupBy and is already the output's shard layout, so the
-    * write adds no exchange. Cells decode after it, every frame of
-    * each (the footer range bounds every sample). The priority is
-    * (input position, shard, row), so even a dir holding one label
-    * set on two rows merges deterministically.
+  /** The series-grain LWW merge of `runs` (the inputs' series rows,
+    * from [[shardInputs]]), arranged into `shards` and checkpointed:
+    * one row per series with a non-empty merged `_samples` array of
+    * `decode`'s sample structs. The one exchange moves each input
+    * series row's ENCODED cells, range-partitioned by the labels
+    * ([[byShard]]): that clusters every series' rows for the groupBy
+    * and is already the output's shard layout, so the write adds no
+    * exchange. Cells decode after it, every frame of each (the footer
+    * range bounds every sample).
     */
-  private def mergeSeries(inputs: Seq[ShardFooters], shards: Int,
-      decode: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
-      : DataFrame = {
-    val names = inputs.head.labelNames
-    val runs = inputs.zipWithIndex.map { case (f, pri) =>
-      val (joined, dataCols) = allRows(f)
-      joined.select(names.map(col) :+ struct(
-        struct(lit(pri), col("_shard"), col("_row")).as("pri"),
-        array(dataCols.map(col): _*).as("cells")).as("_run"): _*)
-    }
+  private def mergeSeries(names: Seq[String], runs: Seq[DataFrame], shards: Int,
+      decode: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame = {
     val decoded = transform(col("_runs"), r => struct(r("pri"),
       flatten(transform(r("cells"), decode))))
     byShard(runs.reduce(_ union _), names, shards)
@@ -724,17 +705,32 @@ object ParquetShardStore {
     series.agg(min(col("_samples")(0)("ts")),
       max(element_at(col("_samples"), -1)("ts")))
 
-  /** One footer read per input dir of a merge, shared by the label-
-    * universe check, the family guard and the scan plans. */
-  private def shardInputs(spark: SparkSession, dirs: Seq[String])
-      : Seq[ShardFooters] = {
+  /** The inputs of a merge: their shared label names, and each dir's
+    * series rows — the labels plus `_run`, the row's priority `pri`
+    * and its encoded `cells` — read through the select's front half
+    * ([[matchedRows]] with no matchers and the open range), so a merge
+    * makes the select's row-alignment and "changed after the select"
+    * checks. The priority is (input position, shard, row), so even a
+    * dir holding one label set on two rows merges deterministically.
+    * The dirs must share one label universe and hold no chunk family
+    * beyond `allowedMask`.
+    */
+  private def shardInputs(spark: SparkSession, dirs: Seq[String],
+      allowedMask: Int, what: String): (Seq[String], Seq[DataFrame]) = {
     require(dirs.nonEmpty, "need at least one shard directory")
-    val inputs = dirs.map(new ShardFooters(spark, _))
-    val names = inputs.head.labelNames
-    require(inputs.forall(_.labelNames == names),
+    val footers = dirs.map(new ShardFooters(spark, _))
+    val names = footers.head.labelNames
+    require(footers.forall(_.labelNames == names),
       "all inputs must share one label universe (the reference merges " +
         "blocks of one tenant/schema)")
-    inputs
+    (names, footers.zipWithIndex.map { case (f, pri) =>
+      val (rows, dataCols, _) =
+        matchedRows(f, Long.MinValue, Long.MaxValue, Nil, rowKey = true)
+      assertSingleFamily(f, rows, dataCols, allowedMask, what)
+      rows.select(names.map(n => col("_l")(n).as(n)) :+ struct(
+        struct(lit(pri), col("_shard"), col("_row")).as("pri"),
+        array(dataCols.map(col): _*).as("cells")).as("_run"): _*)
+    })
   }
 
   /** Loud-refusal guard for the family-specific compactors: a
@@ -744,23 +740,22 @@ object ParquetShardStore {
     * frames by header, which is right for a select but silent DATA
     * LOSS for a compaction that rewrites the shard: refuse instead,
     * telling the operator to merge one family at a time. One
-    * header-walk aggregation over the in-range cells (bodies never
-    * parsed).
+    * header-walk aggregation over the data columns of `rows`, dir
+    * `f`'s every row (bodies never parsed).
     */
-  private def assertSingleFamily(f: ShardFooters,
-      allowedMask: Int, what: String): Unit = {
+  private def assertSingleFamily(f: ShardFooters, rows: DataFrame,
+      dataCols: Seq[String], allowedMask: Int, what: String): Unit = {
     // graft-written shards record the writer's family bitmask in the
     // footer — the guard is then one metadata read. The data walk
     // below only runs for shards WITHOUT the key (reference-written,
     // or pre-mask graft shards), whose cells may genuinely mix
     // families.
     val got = f.meta.familyMask.getOrElse {
-      val (joined, dataCols) = allRows(f)
       import graft.functions.ChunkFamilies.families
       val maskCol = dataCols
         .map(c => coalesce(families(col(c)), lit(0)))
         .reduce(_.bitwiseOR(_))
-      joined.select(maskCol.as("_m"))
+      rows.select(maskCol.as("_m"))
         .agg(coalesce(expr("bit_or(_m)"), lit(0)))
         .head().getInt(0)
     }
@@ -773,7 +768,8 @@ object ParquetShardStore {
   }
 
   /** [[mergeShards]] for HISTOGRAM shard dirs: the same series-grain
-    * plan and duplicate rule — one exchange of encoded cells, the
+    * plan and duplicate rule — the inputs read through the select's
+    * two phases with no join, one exchange of encoded cells, the
     * [[graft.functions.MergeSampleRuns]] LWW merge (later dir wins;
     * within one input, its last sample at a ts), one checkpoint —
     * then the shared [[writeSeries]] tail with [[writeHist]]'s
@@ -789,9 +785,8 @@ object ParquetShardStore {
       samplesPerChunk: Int = 120, shards: Int = 1,
       bloomFilterLabels: Seq[String] = Nil,
       gauge: Boolean = false): Unit = {
-    val inputs = shardInputs(spark, dirs)
-    inputs.foreach(assertSingleFamily(_, HistFamily, "integer-histogram"))
-    val merged = mergeSeries(inputs, shards,
+    val (names, runs) = shardInputs(spark, dirs, HistFamily, "integer-histogram")
+    val merged = mergeSeries(names, runs, shards,
       histDecode(Long.MinValue, Long.MaxValue))
     val fams = merged
       .select(explode(array_distinct(transform(col("_samples"),
@@ -802,7 +797,6 @@ object ParquetShardStore {
       s"inputs mix ${fams.length} (schema, bounds) families — merge " +
         "one metric family at a time")
     val fam = fams.head.getStruct(0)
-    val names = inputs.head.labelNames
     // NHCB chunks structurally carry no negative side: their nidx/ncnt
     // decode empty, so the projection needs no per-family case
     val series = merged.select(names.map(col) :+ transform(col("_samples"),
@@ -851,32 +845,8 @@ object ParquetShardStore {
     selectImpl(spark, dir, mintMs, maxtMs, matchers, chunkBytesQuota,
       floatHistDecode(mintMs, maxtMs), histOutput, tsCol)
 
-  /** Every row of a dir, for the merges: the chunks scan (every data
-    * column) joined to the broadcast labels on (`_shard`, `_row`).
-    * Label columns + `s_data_<i>`; nothing is decoded. The footers
-    * first show that each shard's two files agree on the row count,
-    * the check a select makes in phase 1.
-    */
-  private def allRows(f: ShardFooters): (DataFrame, Seq[String]) = {
-    val conf = f.spark.sparkContext.hadoopConfiguration
-    val files = ShardRowMatch.listShards(conf, f.dir)
-    files.keys.map(_._1).toSeq.sorted.foreach { s =>
-      val labels = files.getOrElse((s, "labels"), throw new IllegalStateException(
-        s"${f.dir}: shard $s has a chunks file and no labels file"))
-      val reader = openFile(conf, labels)
-      val rows = try reader.getRecordCount finally reader.close()
-      alignedChunks(conf, f.dir, s, rows, files.get((s, "chunks")).orNull)
-    }
-    val names = f.labelNames
-    val labels = f.labels.select(
-      (names.map(n => col(labelToColumn(n)).as(n)) ++ shardRow("labels")): _*)
-    val dataCols = (0 until f.meta.numCols).map(dataColumn)
-    val chunks = f.chunks.select((dataCols.map(col) ++ shardRow("chunks")): _*)
-    (chunks.join(broadcast(labels), Seq("_shard", "_row")), dataCols)
-  }
-
-  /** The select front half, in two phases (the reference's
-    * constraint → row ranges → materialize):
+  /** The shard front half of every read, in two phases (the
+    * reference's constraint → row ranges → materialize):
     *   1. on the driver, [[ShardRowMatch.resolve]] turns the matchers
     *      into each shard's matched rows and their label values;
     *   2. the chunks files of the shards with a match are scanned for
@@ -885,16 +855,19 @@ object ParquetShardStore {
     *      unmatched rows and attaches the labels — no join. The
     *      matched rows reach it as a broadcast the driver made, which
     *      starts no job.
-    * Output: the labels as one struct column `_l`, the label names,
-    * the data columns, nothing decoded, and phase 1's answer.
-    * A window that misses the footer range or matches nothing gives
-    * an empty local relation, and nothing is scanned.
+    * Output: the labels as one struct column `_l`, the data columns,
+    * nothing decoded, then — with `rowKey`, for the merges — the shard
+    * number `_shard` and the row index `_row` of each row; and the
+    * data column names and phase 1's answer. A window that misses the
+    * footer range or matches nothing gives an empty local relation,
+    * and nothing is scanned. The merges and their family guard read
+    * every row: no matchers and the open range.
     */
-  private def matchedRows(spark: SparkSession, dir: String, mintMs: Long,
-      maxtMs: Long, matchers: Seq[Matcher])
-      : (DataFrame, Seq[String], Seq[String], Option[MatchedSeries]) = {
+  private def matchedRows(f: ShardFooters, mintMs: Long, maxtMs: Long,
+      matchers: Seq[Matcher], rowKey: Boolean = false)
+      : (DataFrame, Seq[String], Option[MatchedSeries]) = {
     require(maxtMs > mintMs, s"empty range [$mintMs, $maxtMs)")
-    val f = new ShardFooters(spark, dir)
+    val (spark, dir) = (f.spark, f.dir)
     val m = f.meta
     val names = f.labelNames
     val predicate = ShardRowMatch.compile(spark, names, matchers)
@@ -918,7 +891,9 @@ object ParquetShardStore {
         .filterNot(_.isEmpty)
     val rows = matched match {
       case None => spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(StructField("_l", labelsType) +: dataCols.map(StructField(_, BinaryType))))
+        StructType((StructField("_l", labelsType) +: dataCols.map(StructField(_, BinaryType))) ++
+          (if (rowKey) Seq(StructField("_shard", IntegerType), StructField("_row", LongType))
+           else Nil)))
       case Some(series) =>
         val conf = spark.sparkContext.hadoopConfiguration
         val chunks = series.shards.map(s =>
@@ -927,12 +902,15 @@ object ParquetShardStore {
           Seq("file_name", "row_index", "file_modification_time", "file_size")
             .map(c => ColumnBridge.expression(col(s"_metadata.$c"))),
           spark.sparkContext.broadcast(series), labelsType))
+        val key = if (!rowKey) Nil else Seq(
+          regexp_extract(col("_metadata.file_name"), "^(\\d+)\\.", 1).cast("int").as("_shard"),
+          col("_metadata.row_index").as("_row"))
         spark.read.schema(sparkSchema(spark, chunks))
           .parquet(series.shards.map(_.chunks).toIndexedSeq: _*)
-          .select(lookup.as("_l") +: dataCols.map(col): _*)
+          .select((lookup.as("_l") +: dataCols.map(col)) ++ key: _*)
           .filter(col("_l").isNotNull)
     }
-    (rows, names, dataCols, matched)
+    (rows, dataCols, matched)
   }
 
   /** The row-alignment check, from the footers: shard `shard` of
@@ -944,7 +922,11 @@ object ParquetShardStore {
     if (chunks == null)
       throw new IllegalStateException(s"$dir: shard $shard has a " +
         "labels file and no chunks file")
-    val reader = openFile(conf, chunks)
+    // read options from the session's conf: without them parquet-java
+    // builds a fresh Hadoop Configuration per open, which cost more
+    // than the rest of a select's planning
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(chunks, conf),
+      HadoopReadOptions.builder(conf).build())
     try {
       val n = reader.getRecordCount
       if (n != labelsRows)
@@ -955,21 +937,14 @@ object ParquetShardStore {
     } finally reader.close()
   }
 
-  /** A parquet-java reader with options from the session's conf:
-    * without them parquet-java builds a fresh Hadoop Configuration per
-    * open, which cost more than the rest of a select's planning. */
-  private def openFile(conf: Configuration,
-      status: org.apache.hadoop.fs.FileStatus): ParquetFileReader =
-    ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf),
-      HadoopReadOptions.builder(conf).build())
-
   private def selectImpl(spark: SparkSession, dir: String, mintMs: Long,
       maxtMs: Long, matchers: Seq[Matcher], chunkBytesQuota: Long,
       decode: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
       sampleOutput: Seq[org.apache.spark.sql.Column],
       tsCol: String, twinValueCol: Option[String] = None): DataFrame = {
-    val (rows, names, dataCols, matched) =
-      matchedRows(spark, dir, mintMs, maxtMs, matchers)
+    val f = new ShardFooters(spark, dir)
+    val names = f.labelNames
+    val (rows, dataCols, matched) = matchedRows(f, mintMs, maxtMs, matchers)
     if (chunkBytesQuota > 0L) {
       // an empty match is a local relation: no chunk bytes to count
       val bytes = if (rows.isLocal) 0L

@@ -73,7 +73,7 @@ private[shard] object ShardRowMatch {
   private val ShardFile = "^(\\d+)\\.(labels|chunks)\\.parquet$".r
 
   /** The shard files of `dir`, keyed by (shard, "labels" | "chunks"). */
-  def listShards(conf: Configuration, dir: String): Map[(Int, String), FileStatus] = {
+  private def listShards(conf: Configuration, dir: String): Map[(Int, String), FileStatus] = {
     val root = new Path(dir)
     root.getFileSystem(conf).listStatus(root).toSeq.flatMap { st =>
       st.getPath.getName match {
@@ -85,11 +85,15 @@ private[shard] object ShardRowMatch {
 
   /** The rows of the shard dir `dir` that `predicate` matches, with
     * the values of the label columns `names`. `matchers` only prune:
-    * the `=`/set ones become the parquet filter. */
+    * the `=`/set ones become the parquet filter. A chunks file with no
+    * labels file beside it fails every read of the dir. */
   def resolve(spark: SparkSession, dir: String, names: Seq[String],
       matchers: Seq[Matcher], predicate: Option[Compiled]): MatchedSeries = {
     val conf = spark.sparkContext.hadoopConfiguration
     val files = listShards(conf, dir)
+    files.keys.collect { case (s, "chunks") if !files.contains((s, "labels")) => s }
+      .minOption.foreach(s => throw new IllegalStateException(
+        s"$dir: shard $s has a chunks file and no labels file"))
     val filter = predicate.flatMap(_ => pushable(matchers, names.toSet))
     val dicts = names.map(_ => new java.util.HashMap[String, Integer]())
     val shards = files.keys.collect { case (s, "labels") => s }.toSeq.sorted
@@ -368,6 +372,12 @@ private[shard] case class MatchedRowLookup(children: Seq[Expression],
       |  ${args(0).value}, ${args(1).value}, ${args(2).value}, ${args(3).value});
       |boolean ${ev.isNull} = ${ev.value} == null;""".stripMargin)
   }
+
+  /** The four `_metadata` children and the label count: the labels
+    * type and the broadcast would repeat at every occurrence in a plan
+    * string. */
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(children, s"${dataType.length} labels")
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression = copy(children = newChildren)

@@ -4,10 +4,11 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.sql.Timestamp
 import graft.tsdb.shard.ParquetShardStore
 
-/** The shard merges read every row of their inputs by joining the
-  * labels scan to the chunks scan on (shard, row index); a chunks file
-  * whose row count differs from its labels file's must fail the merge
-  * before that join, as it fails a select.
+/** The shard merges read every row of their inputs through the
+  * select's two phases, so a chunks file whose row count differs from
+  * its labels file's fails the merge as it fails a select, and a
+  * chunks file with no labels file beside it fails every read of the
+  * dir.
   */
 class ShardMergeAlignmentSpec extends SparkSpec {
   import spark.implicits._
@@ -51,5 +52,22 @@ class ShardMergeAlignmentSpec extends SparkSpec {
   test("mergeShardsHist fails on a chunks file that is not row-aligned with its labels file") {
     val e = misalignedMerge("hist", hist = true)
     assert(e.getMessage.contains("not row-aligned"), e.getMessage)
+  }
+
+  test("a chunks file with no labels file fails select, series and mergeShards") {
+    val d = "/tmp/graft_pshard_merge_align_orphan"
+    ParquetShardStore.write(rows(400).toDF("svc", "ts", "value"), d, Seq("svc"),
+      "ts", "value", colDurationMs = hour, shards = 3)
+    Files.copy(Paths.get(s"$d/0.chunks.parquet"), Paths.get(s"$d/3.chunks.parquet"),
+      StandardCopyOption.REPLACE_EXISTING)
+    for ((what, read) <- Seq[(String, () => Any)](
+        "select" -> (() => ParquetShardStore.select(spark, d, base, base + hour).collect()),
+        "series" -> (() => ParquetShardStore.series(spark, d).collect()),
+        "mergeShards" -> (() => ParquetShardStore.mergeShards(spark, Seq(d),
+          "/tmp/graft_pshard_merge_align_orphan_out")))) {
+      val e = intercept[IllegalStateException](read())
+      assert(e.getMessage.contains("shard 3 has a chunks file and no labels file"),
+        s"$what: ${e.getMessage}")
+    }
   }
 }

@@ -89,6 +89,30 @@ class ShardSelectPlanSpec extends SparkSpec {
     }
   }
 
+  test("the merges read through the select's phases: no Join or BroadcastExchange " +
+      "in any executed plan of mergeShards or mergeShardsHist") {
+    for ((what, merge) <- Seq[(String, () => Unit)](
+        "mergeShards" -> (() => ParquetShardStore.mergeShards(spark, Seq(xorDir),
+          "/tmp/graft_pshard_selplan_merge_xor", colDurationMs = hour, shards = 3)),
+        "mergeShardsHist" -> (() => ParquetShardStore.mergeShardsHist(spark, Seq(hDir),
+          "/tmp/graft_pshard_selplan_merge_hist", colDurationMs = hour, shards = 3)))) {
+      val (_, log) = ExecLog(spark.sparkContext)(merge())
+      val names = log.nodes.map(_.nodeName)
+      assert(names.exists(_.startsWith("Scan parquet")), s"$what: $names")
+      assert(!names.exists(n => n.contains("Join") || n.contains("BroadcastExchange")),
+        s"$what: $names")
+    }
+  }
+
+  test("plan strings print the row lookup's four _metadata children and its label " +
+      "count, not its labels schema") {
+    val df = ParquetShardStore.select(spark, xorDir, lo, hi, ms)
+    assert(df.collect().nonEmpty)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("matchedrowlookup(") && plan.contains("2 labels"), plan)
+    assert(!plan.contains("StructField("), plan)
+  }
+
   test("the chunks ReadSchema holds only the in-range s_data columns") {
     for ((what, df) <- frames) {
       val plan = df.queryExecution.explainString(FormattedMode)
