@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{ChunkDecode, ChunkEncode, DotProduct, FloatHistChunkDecode, FloatHistChunkEncode, HistChunkDecode, HistChunkEncode, MinHashSignature, NgramShingles, SimHashFingerprint}
+import graft.functions.{ChunkDecode, ChunkEncode, ChunkencFloatHistDecode, ChunkencHistDecode, ChunkencHistEncode, DotProduct, MinHashSignature, NgramShingles, SimHashFingerprint}
 
 /** Session extension registering graft's native expressions as SQL
   * functions, so `spark.sql("SELECT graft_dot(a, b) ...")`,
@@ -130,54 +130,38 @@ object GraftFunctions {
       ChunkDecode(children.head, children(1), children(2))
     })
 
-  private[graft] val histChunkEncode: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_hist_chunk_encode"),
-    new ExpressionInfo(classOf[HistChunkEncode].getName, "graft_hist_chunk_encode"),
+  /** `graft_hist_chunk_encode` and `graft_float_hist_chunk_encode`:
+    * one [[ChunkencHistEncode]], the family from the samples' type. */
+  private def histChunkEncode(name: String): (FunctionIdentifier,
+      ExpressionInfo, Seq[Expression] => Expression) = (
+    FunctionIdentifier(name),
+    new ExpressionInfo(classOf[ChunkencHistEncode].getName, name),
     (children: Seq[Expression]) => {
       require(children.length == 3,
-        "graft_hist_chunk_encode(samples, schema, samplesPerChunk) takes exactly 3 arguments")
-      HistChunkEncode(children.head, intLit(children(1), "schema"),
+        s"$name(samples, schema, samplesPerChunk) takes exactly 3 arguments")
+      ChunkencHistEncode(children.head, intLit(children(1), "schema"),
         intLit(children(2), "samplesPerChunk"))
     })
 
-  private[graft] val histChunkDecode: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_hist_chunk_decode"),
-    new ExpressionInfo(classOf[HistChunkDecode].getName, "graft_hist_chunk_decode"),
+  private def histChunkDecode(name: String, cls: Class[_],
+      decode: (Expression, Expression, Expression) => Expression)
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+    FunctionIdentifier(name),
+    new ExpressionInfo(cls.getName, name),
     (children: Seq[Expression]) => {
       require(children.length == 3,
-        "graft_hist_chunk_decode(blob, mint, maxt) takes exactly 3 arguments")
-      HistChunkDecode(children.head, children(1), children(2))
-    })
-
-  private[graft] val floatHistChunkEncode: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_float_hist_chunk_encode"),
-    new ExpressionInfo(classOf[FloatHistChunkEncode].getName,
-      "graft_float_hist_chunk_encode"),
-    (children: Seq[Expression]) => {
-      require(children.length == 3,
-        "graft_float_hist_chunk_encode(samples, schema, samplesPerChunk) takes exactly 3 arguments")
-      FloatHistChunkEncode(children.head, intLit(children(1), "schema"),
-        intLit(children(2), "samplesPerChunk"))
-    })
-
-  private[graft] val floatHistChunkDecode: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_float_hist_chunk_decode"),
-    new ExpressionInfo(classOf[FloatHistChunkDecode].getName,
-      "graft_float_hist_chunk_decode"),
-    (children: Seq[Expression]) => {
-      require(children.length == 3,
-        "graft_float_hist_chunk_decode(blob, mint, maxt) takes exactly 3 arguments")
-      FloatHistChunkDecode(children.head, children(1), children(2))
+        s"$name(blob, mint, maxt) takes exactly 3 arguments")
+      decode(children.head, children(1), children(2))
     })
 
   private[graft] val all =
     Seq(dotProduct, shingles, minhashSignature, simhash, chunkEncode,
-      chunkDecode, histChunkEncode, histChunkDecode,
-      floatHistChunkEncode, floatHistChunkDecode)
+      chunkDecode, histChunkEncode("graft_hist_chunk_encode"),
+      histChunkDecode("graft_hist_chunk_decode", classOf[ChunkencHistDecode],
+        ChunkencHistDecode),
+      histChunkEncode("graft_float_hist_chunk_encode"),
+      histChunkDecode("graft_float_hist_chunk_decode",
+        classOf[ChunkencFloatHistDecode], ChunkencFloatHistDecode))
 
   /** Register on an already-built session. */
   def register(spark: SparkSession): Unit = {

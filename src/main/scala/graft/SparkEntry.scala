@@ -2547,84 +2547,60 @@ object SparkEntry {
       .select(col("event_type"), col("user_id"), col("value").as("total"))
       .orderBy("event_type", "user_id")
 
-  /** NATIVE-histogram chunk roundtrip ([[tsdb.HistChunkCodec]] +
-    * [[functions.HistChunkEncode]]/[[functions.HistChunkDecode]]) —
+  /** NATIVE-histogram chunk roundtrip ([[tsdb.ChunkencHistCodec]]
+    * through the `graft_hist_chunk_encode`/`_decode` expressions) —
     * the reference's THIRD chunk encoding family
     * (EncHistogram/EncFloatHistogram, schema/encoder.go:118-196),
     * closing the physical layer for histogram series the way
     * ts_chunk_roundtrip closed it for floats: the counter fixture
-    * (cumulative bucket counts, bucket 5 APPEARING mid-series → a
-    * layout-change record inside the chunk; exact-quarter tracked
-    * sums through the XOR window) is packed per series into framed
-    * blobs — delta-of-delta timestamps, layout reuse, per-bucket
-    * count deltas — then decoded back in full and flattened to
-    * bucket grain. The hash match against the re-derived fixture
-    * proves encode→frame→decode is bit-lossless: every timestamp,
-    * zero count, bucket count, and sum double.
+    * (cumulative bucket counts, one zero bucket in five, bucket 5
+    * APPEARING mid-series → a layout cut inside the 10-sample run;
+    * exact-quarter tracked sums through the XOR window) is packed per
+    * series into framed cells of chunkenc chunks, then decoded back
+    * in full and flattened to bucket grain. The hash match against
+    * the re-derived fixture proves encode→frame→decode is
+    * bit-lossless and keeps each sample's own bucket layout: every
+    * timestamp, zero count, bucket (zero ones included), count, and
+    * sum double.
     */
-  private def tsHistChunkRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    val h = nativeHistCounterTable(s, dir)
-      .withColumn("hsum",
-        (col("d") * ((col("sseed") % 7) + 1)).cast("double") * 0.25)
-      .withColumn("ts_us", col("d") * 86400000000L)
-    val sample = struct(col("ts_us").as("ts"),
-      col("zero_count").cast("long").as("zero"),
-      col("pos_idx").as("idx"), col("pos_counts").as("cnt"),
-      col("hsum").as("sum"))
-    val enc = ColumnBridge.column(functions.HistChunkEncode(
-      ColumnBridge.expression(sort_array(collect_list(sample))),
-      histSchema = 0, samplesPerChunk = 10))
-    val dec = ColumnBridge.column(functions.HistChunkDecode(
-      ColumnBridge.expression(col("blob")),
-      ColumnBridge.expression(lit(0L)),
-      ColumnBridge.expression(lit(Long.MaxValue))))
-    h.groupBy(col("event_type"), col("user_id")).agg(enc.as("blob"))
-      .select(col("event_type"), col("user_id"), explode(dec).as("s"))
-      .select(col("event_type"), col("user_id"),
-        col("s.ts").as("ts_us"), col("s.zero").as("zero_count"),
-        col("s.sum").as("hsum"),
-        explode(zip_with(col("s.idx"), col("s.cnt"),
-          (i, c) => struct(i.as("i"), c.as("c")))).as("b"))
-      .select(col("event_type"), col("user_id"), col("ts_us"),
-        col("zero_count"), col("hsum"),
-        col("b.i").as("idx"), col("b.c").as("cnt"))
-      .orderBy("event_type", "user_id", "ts_us", "idx")
-  }
+  private def tsHistChunkRoundtrip(s: SparkSession, dir: String): DataFrame =
+    histChunkRoundtrip(nativeHistCounterTable(s, dir), "zero_count",
+      "pos_counts", float = false)
 
-  /** FLOAT-histogram chunk roundtrip
-    * ([[tsdb.HistChunkCodec.encodeFloatBlob]] /
-    * [[functions.FloatHistChunkEncode]]): the reference's
-    * EncFloatHistogram side of the third encoding family
-    * (schema/encoder.go:118-196) — bucket counts and the zero count
-    * are DOUBLES (what recording rules emit), XOR-window encoded
-    * under the same layout-reuse/delta-of-delta scheme; bucket 5
-    * still appears mid-series so the layout-change record runs on
-    * the gate. Counts are exact dyadic quarters/halves of the
-    * counter fixture, so the re-derived oracle is bit-equal — the
-    * hash match proves encode→frame→decode loses no double (NaN and
-    * non-dyadic deltas are spec-pinned in HistChunkCodecSpec).
+  /** FLOAT-histogram chunk roundtrip (`graft_float_hist_chunk_encode`
+    * / `_decode`): the reference's EncFloatHistogram side of the third
+    * encoding family (schema/encoder.go:118-196) — bucket counts and
+    * the zero count are DOUBLES (what recording rules emit), each
+    * field XOR-window encoded; bucket 5 still appears mid-series so
+    * the layout cut runs on the gate. Counts are exact dyadic
+    * quarters/halves of the counter fixture, so the re-derived oracle
+    * is bit-equal — the hash match proves encode→frame→decode loses
+    * no double (NaN and non-dyadic deltas are pinned by the float
+    * chunk roundtrip spec).
     */
-  private def tsFloatHistRoundtrip(s: SparkSession, dir: String): DataFrame = {
+  private def tsFloatHistRoundtrip(s: SparkSession, dir: String): DataFrame =
+    histChunkRoundtrip(nativeHistCounterTable(s, dir)
+        .withColumn("zero_f",
+          (col("d") * (col("sseed") % 3)).cast("double") * 0.5)
+        .withColumn("cnt_f",
+          transform(col("pos_counts"), c => c.cast("double") * 0.25)),
+      "zero_f", "cnt_f", float = true)
+
+  private def histChunkRoundtrip(h: DataFrame, zeroCol: String,
+      cntCol: String, float: Boolean): DataFrame = {
     import org.apache.spark.sql.graft.ColumnBridge
-    val h = nativeHistCounterTable(s, dir)
-      .withColumn("zero_f",
-        (col("d") * (col("sseed") % 3)).cast("double") * 0.5)
-      .withColumn("cnt_f",
-        transform(col("pos_counts"), c => c.cast("double") * 0.25))
-      .withColumn("hsum",
-        (col("d") * ((col("sseed") % 7) + 1)).cast("double") * 0.25)
-      .withColumn("ts_us", col("d") * 86400000000L)
-    val sample = struct(col("ts_us").as("ts"), col("zero_f").as("zero"),
-      col("pos_idx").as("idx"), col("cnt_f").as("cnt"),
-      col("hsum").as("sum"))
-    val enc = ColumnBridge.column(functions.FloatHistChunkEncode(
+    val sample = functions.HistChunkExpressions.sample(float,
+      col("d") * 86400000000L, zeroCol, "pos_idx", cntCol,
+      (col("d") * ((col("sseed") % 7) + 1)).cast("double") * 0.25,
+      Nil, None, None)
+    val enc = ColumnBridge.column(functions.ChunkencHistEncode(
       ColumnBridge.expression(sort_array(collect_list(sample))),
       histSchema = 0, samplesPerChunk = 10))
-    val dec = ColumnBridge.column(functions.FloatHistChunkDecode(
-      ColumnBridge.expression(col("blob")),
-      ColumnBridge.expression(lit(0L)),
-      ColumnBridge.expression(lit(Long.MaxValue))))
+    val Seq(b, lo, hi) = Seq(col("blob"), lit(0L), lit(Long.MaxValue))
+      .map(ColumnBridge.expression)
+    val dec = ColumnBridge.column(
+      if (float) functions.ChunkencFloatHistDecode(b, lo, hi)
+      else functions.ChunkencHistDecode(b, lo, hi))
     h.groupBy(col("event_type"), col("user_id")).agg(enc.as("blob"))
       .select(col("event_type"), col("user_id"), explode(dec).as("s"))
       .select(col("event_type"), col("user_id"),
@@ -3349,7 +3325,8 @@ object SparkEntry {
   /** The NHCB migration path in one plan — block bytes (schema -53
     * chunks) → [[tsdb.block.TsdbBlockStore.readHistLabels]] →
     * [[tsdb.HistChunkStore]] converted layout (the bound list rides
-    * the LABELS file: per-series metadata, zero per-chunk bytes) →
+    * the LABELS file as per-series metadata and each chunk's
+    * layout, as chunkenc requires) →
     * matcher + day-range select. Each returned bucket re-resolves
     * its upper bound through the custom_values that crossed BOTH
     * storage seams, so the oracle hash pins chunkenc decode, the
@@ -3637,14 +3614,11 @@ object SparkEntry {
 
   /** The SIGNED migration path — block bytes (negative spans
     * included) → [[tsdb.block.TsdbBlockStore.readHistLabels]] →
-    * [[tsdb.HistChunkStore]] converted layout (both sides as ONE
-    * even/odd-interleaved index stream: pos i → 2i, neg i → 2i+1 —
-    * delta compression and layout reuse intact, zero codec changes,
-    * a `signed` flag in the labels file drives the parity split on
-    * select) → matcher + day-range select. Both sides explode with
-    * a side marker, so the oracle hash pins the chunkenc decode,
-    * the interleave, the converted write and the split select
-    * together. */
+    * [[tsdb.HistChunkStore]] converted layout (the negative side in
+    * each chunk's own negative spans) → matcher + day-range select.
+    * Both sides explode with a side marker, so the oracle hash pins
+    * the block decode, the converted write and the select of both
+    * sides together. */
   private def tsTsdbBlockNegConvert(s: SparkSession, dir: String): DataFrame = {
     negBlockFixture(s, dir)
     val path = "/tmp/graft_negconv_" + dir.replaceAll("[^0-9a-zA-Z]", "_")

@@ -1,12 +1,14 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, RowOrdering, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, TypeUtils}
+import org.apache.spark.sql.functions.{array, col, struct}
 import org.apache.spark.sql.types._
 
-import graft.tsdb.{ChunkCodec, HistChunkCodec}
+import graft.tsdb.{ChunkCodec, ChunkencHistCodec}
 
 /** Catalyst expressions over the [[graft.tsdb.ChunkCodec]] XOR chunk
   * codec. Both stay inside whole-stage codegen: the generated code
@@ -81,145 +83,123 @@ case class ChunkDecode(blob: Expression, qmint: Expression, qmaxt: Expression)
     copy(blob = newFirst, qmint = newSecond, qmaxt = newThird)
 }
 
-/** `float_hist_chunk_encode(samples, schema, samplesPerChunk)`:
-  * sorted FLOAT-histogram samples → framed EncFloatHistogram blob
-  * ([[graft.tsdb.HistChunkCodec.encodeFloatBlob]] — layout reuse +
-  * XOR-windowed double counts).
-  */
-case class FloatHistChunkEncode(child: Expression, histSchema: Int,
-    samplesPerChunk: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  require(samplesPerChunk > 0, "samplesPerChunk must be positive")
-
-  override def inputTypes = Seq(ArrayType(HistChunkExpressions.floatSampleType))
-
-  override def dataType: DataType = BinaryType
-
-  override def nullSafeEval(v: Any): Any =
-    HistChunkCodec.encodeFloatArrayData(v.asInstanceOf[ArrayData],
-      histSchema, samplesPerChunk)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.tsdb.HistChunkCodec.encodeFloatArrayData($c, $histSchema, $samplesPerChunk);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `float_hist_chunk_decode(blob, qmint, qmaxt)`: framed
-  * EncFloatHistogram blob → float-histogram samples of the chunks
-  * whose frame header overlaps [qmint, qmaxt]; skipped bodies never
-  * parsed.
-  */
-case class FloatHistChunkDecode(blob: Expression, qmint: Expression,
-    qmaxt: Expression)
-    extends TernaryExpression with ExpectsInputTypes {
-
-  override def first: Expression = blob
-  override def second: Expression = qmint
-  override def third: Expression = qmaxt
-
-  override def inputTypes = Seq(BinaryType, LongType, LongType)
-
-  override def dataType: DataType =
-    ArrayType(HistChunkExpressions.floatSampleType, containsNull = false)
-
-  override def nullSafeEval(b: Any, mi: Any, ma: Any): Any =
-    HistChunkCodec.decodeFloatToArrayData(b.asInstanceOf[Array[Byte]],
-      mi.asInstanceOf[Long], ma.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, mi, ma) =>
-      s"${ev.value} = graft.tsdb.HistChunkCodec.decodeFloatToArrayData($b, $mi, $ma);")
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): Expression =
-    copy(blob = newFirst, qmint = newSecond, qmaxt = newThird)
-}
-
-/** The NATIVE-histogram sample struct both hist chunk expressions
-  * share: one exponential-bucket histogram per element, sum nullable
-  * (a sum-less counter series carries null in every row).
+/** The chunkenc histogram sample structs
+  * ([[graft.tsdb.ChunkencHistCodec]]). The encode input is one
+  * histogram per element: ts, zero count, positive bucket indexes and
+  * counts, a nullable sum (null is stored as NaN) and the SIGNED
+  * side's negative buckets (empty for positive-only series); counts
+  * are longs for integer histograms, doubles for float ones.
   */
 object HistChunkExpressions {
-  val sampleType: StructType = StructType(Seq(
-    StructField("ts", LongType, nullable = false),
-    StructField("zero", LongType, nullable = false),
-    StructField("idx", ArrayType(IntegerType, containsNull = false),
-      nullable = false),
-    StructField("cnt", ArrayType(LongType, containsNull = false),
-      nullable = false),
-    StructField("sum", DoubleType, nullable = true)))
-
-  /** FLOAT-histogram sample struct (EncFloatHistogram family): zero
-    * count and bucket counts are doubles. */
-  val floatSampleType: StructType = StructType(Seq(
-    StructField("ts", LongType, nullable = false),
-    StructField("zero", DoubleType, nullable = false),
-    StructField("idx", ArrayType(IntegerType, containsNull = false),
-      nullable = false),
-    StructField("cnt", ArrayType(DoubleType, containsNull = false),
-      nullable = false),
-    StructField("sum", DoubleType, nullable = true)))
-
-  /** Chunkenc-bodied decode structs ([[graft.tsdb.ChunkencHistCodec]])
-    * extend the sample model with the chunk's exponential/NHCB schema
-    * ordinal, the NHCB bound list (empty for exponential schemas) —
-    * the block reader's `schema`/`custom_values` columns at the shard
-    * seam — and the SIGNED side's negative buckets (empty for
-    * positive-only series). */
-  val chunkencSampleType: StructType = StructType(
-    sampleType.fields.toSeq ++ Seq(
-      StructField("schema", IntegerType, nullable = false),
-      StructField("cv", ArrayType(DoubleType, containsNull = false),
+  def sampleType(float: Boolean): StructType = {
+    val count = if (float) DoubleType else LongType
+    StructType(Seq(
+      StructField("ts", LongType, nullable = false),
+      StructField("zero", count, nullable = false),
+      StructField("idx", ArrayType(IntegerType, containsNull = false),
         nullable = false),
+      StructField("cnt", ArrayType(count, containsNull = false),
+        nullable = false),
+      StructField("sum", DoubleType, nullable = true),
       StructField("nidx", ArrayType(IntegerType, containsNull = false),
         nullable = false),
-      StructField("ncnt", ArrayType(LongType, containsNull = false),
+      StructField("ncnt", ArrayType(count, containsNull = false),
         nullable = false)))
+  }
 
-  val chunkencFloatSampleType: StructType = StructType(
-    floatSampleType.fields.toSeq ++ Seq(
+  /** The decode output: the encode fields plus, after the sum, the
+    * chunk's exponential/NHCB schema ordinal and the NHCB bound list
+    * (empty for exponential schemas) — the block reader's
+    * `schema`/`custom_values` columns at the cell seam. */
+  private def decodedType(float: Boolean): StructType = {
+    val in = sampleType(float).fields.toSeq
+    StructType(in.take(5) ++ Seq(
       StructField("schema", IntegerType, nullable = false),
       StructField("cv", ArrayType(DoubleType, containsNull = false),
-        nullable = false),
-      StructField("nidx", ArrayType(IntegerType, containsNull = false),
-        nullable = false),
-      StructField("ncnt", ArrayType(DoubleType, containsNull = false),
-        nullable = false)))
+        nullable = false)) ++ in.drop(5))
+  }
+
+  val chunkencSampleType: StructType = decodedType(float = false)
+  val chunkencFloatSampleType: StructType = decodedType(float = true)
+
+  /** The encode input struct from a histogram table's columns (`ts`
+    * the caller's timestamp column): zero and counts cast to the
+    * family's type, `sum` as given, and the negative side from
+    * `negIdxCol`/`negCountsCol` (both or neither; empty when absent,
+    * never for custom-bucket histograms). */
+  def sample(float: Boolean, ts: Column, zeroCol: String, idxCol: String,
+      cntCol: String, sum: Column, customValues: Seq[Double],
+      negIdxCol: Option[String], negCountsCol: Option[String]): Column = {
+    require(negIdxCol.isDefined == negCountsCol.isDefined,
+      "negIdxCol and negCountsCol must be passed together")
+    require(negIdxCol.isEmpty || customValues.isEmpty,
+      "custom-bucket (NHCB) histograms cannot carry negative buckets")
+    val count = if (float) "double" else "bigint"
+    def neg(c: Option[String], t: String): Column =
+      c.map(col).getOrElse(array()).cast(t)
+    struct(ts.cast("long").as("ts"), col(zeroCol).cast(count).as("zero"),
+      col(idxCol).cast("array<int>").as("idx"),
+      col(cntCol).cast(s"array<$count>").as("cnt"),
+      sum.cast("double").as("sum"), neg(negIdxCol, "array<int>").as("nidx"),
+      neg(negCountsCol, s"array<$count>").as("ncnt"))
+  }
 }
 
-/** `hist_chunk_encode(samples, schema, samplesPerChunk)`: sorted
-  * native-histogram samples → framed EncHistogram blob
-  * ([[graft.tsdb.HistChunkCodec]] — layout reuse + count deltas).
-  * schema and samplesPerChunk are literal knobs.
+/** `graft_hist_chunk_encode` / `graft_float_hist_chunk_encode(samples,
+  * schema, samplesPerChunk)`: ts-sorted [[HistChunkExpressions]]
+  * samples → framed cell of chunkenc histogram chunks, integer (enc 2)
+  * or float (enc 3) by the samples' count type. `customValues` is the
+  * NHCB bound list (schema -53 only). Cuts keep each sample's exact
+  * bucket layout (`exactLayout`, see [[graft.tsdb.ChunkencHistCodec]]),
+  * so [[ChunkencHistDecode]] returns every sample as written.
   */
-case class HistChunkEncode(child: Expression, histSchema: Int,
-    samplesPerChunk: Int)
-    extends UnaryExpression with ExpectsInputTypes {
+case class ChunkencHistEncode(child: Expression, histSchema: Int,
+    samplesPerChunk: Int, customValues: Seq[Double] = Nil)
+    extends UnaryExpression {
 
   require(samplesPerChunk > 0, "samplesPerChunk must be positive")
 
-  override def inputTypes = Seq(ArrayType(HistChunkExpressions.sampleType))
+  private def float: Boolean = child.dataType match {
+    case ArrayType(st: StructType, _) => st(1).dataType == DoubleType
+    case _ => false
+  }
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(st: StructType, _) if Seq(false, true).exists(f =>
+        DataType.equalsIgnoreNullability(st, HistChunkExpressions.sampleType(f))) =>
+      TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"expects array<${HistChunkExpressions.sampleType(false).catalogString}> " +
+        s"or its double-count form, got ${t.catalogString}")
+  }
 
   override def dataType: DataType = BinaryType
 
-  override def nullSafeEval(v: Any): Any =
-    HistChunkCodec.encodeArrayData(v.asInstanceOf[ArrayData],
-      histSchema, samplesPerChunk)
+  private def method: String =
+    if (float) "encodeFloatArrayData" else "encodeArrayData"
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  @transient private lazy val cv = customValues.toArray
+
+  override def nullSafeEval(v: Any): Any = {
+    val s = v.asInstanceOf[ArrayData]
+    if (float) ChunkencHistCodec.encodeFloatArrayData(s, histSchema,
+      samplesPerChunk, cv, gauge = false, exactLayout = true)
+    else ChunkencHistCodec.encodeArrayData(s, histSchema, samplesPerChunk,
+      cv, gauge = false, exactLayout = true)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cvRef = ctx.addReferenceObj("customValues", cv, "double[]")
     nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.tsdb.HistChunkCodec.encodeArrayData($c, $histSchema, $samplesPerChunk);")
+      s"${ev.value} = graft.tsdb.ChunkencHistCodec.$method($c, $histSchema, " +
+        s"$samplesPerChunk, $cvRef, false, true);")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-/** `chunkenc_hist_decode(blob, qmint, qmaxt)`: shard-cell blob whose
+/** `graft_hist_chunk_decode(blob, qmint, qmaxt)`: a cell whose
   * frame bodies are REAL chunkenc EncHistogram chunks
   * ([[graft.tsdb.ChunkencHistCodec]]) → native-histogram samples of
   * the overlapping chunks, on each chunk's union bucket layout.
@@ -254,7 +234,8 @@ case class ChunkencHistDecode(blob: Expression, qmint: Expression,
     copy(blob = newFirst, qmint = newSecond, qmaxt = newThird)
 }
 
-/** [[ChunkencHistDecode]] for enc=3 FLOAT-histogram frame bodies. */
+/** `graft_float_hist_chunk_decode`: [[ChunkencHistDecode]] for enc=3
+  * FLOAT-histogram frame bodies. */
 case class ChunkencFloatHistDecode(blob: Expression, qmint: Expression,
     qmaxt: Expression)
     extends TernaryExpression with ExpectsInputTypes {
@@ -276,37 +257,6 @@ case class ChunkencFloatHistDecode(blob: Expression, qmint: Expression,
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (b, mi, ma) =>
       s"${ev.value} = graft.tsdb.ChunkencHistCodec.decodeFloatToArrayData($b, $mi, $ma);")
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): Expression =
-    copy(blob = newFirst, qmint = newSecond, qmaxt = newThird)
-}
-
-/** `hist_chunk_decode(blob, qmint, qmaxt)`: framed EncHistogram blob
-  * → native-histogram samples of the chunks whose frame header
-  * overlaps [qmint, qmaxt]; skipped bodies never parsed.
-  */
-case class HistChunkDecode(blob: Expression, qmint: Expression,
-    qmaxt: Expression)
-    extends TernaryExpression with ExpectsInputTypes {
-
-  override def first: Expression = blob
-  override def second: Expression = qmint
-  override def third: Expression = qmaxt
-
-  override def inputTypes = Seq(BinaryType, LongType, LongType)
-
-  override def dataType: DataType =
-    ArrayType(HistChunkExpressions.sampleType, containsNull = false)
-
-  override def nullSafeEval(b: Any, mi: Any, ma: Any): Any =
-    HistChunkCodec.decodeToArrayData(b.asInstanceOf[Array[Byte]],
-      mi.asInstanceOf[Long], ma.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, mi, ma) =>
-      s"${ev.value} = graft.tsdb.HistChunkCodec.decodeToArrayData($b, $mi, $ma);")
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression,
@@ -337,7 +287,6 @@ case class ChunkFamilies(child: Expression)
 }
 
 object ChunkFamilies {
-  import org.apache.spark.sql.Column
   import org.apache.spark.sql.graft.ColumnBridge
   def families(blob: Column): Column =
     ColumnBridge.column(ChunkFamilies(ColumnBridge.expression(blob)))

@@ -496,10 +496,9 @@ object PlanAudit {
         "no shuffle of the chunks side" -> "Exchange hashpartitioning",
         "no nested-loop join" -> "BroadcastNestedLoopJoin"))
 
-    // SIGNED migration path: the even/odd interleave + parity split
-    // are narrow per-row transforms, so the converted select must
-    // keep the identical plan contract — the signed flag must not
-    // introduce a shuffle or degrade the broadcast.
+    // SIGNED migration path: the negative side decodes with the
+    // chunk, so the converted select must keep the identical plan
+    // contract — no shuffle, no degraded broadcast.
     audit("ts_tsdb_block_neg_convert",
       SparkEntry.queries("ts_tsdb_block_neg_convert")(spark, dir),
       Map(

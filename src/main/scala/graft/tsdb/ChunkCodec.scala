@@ -48,6 +48,14 @@ object ChunkCodec {
   /** Prometheus chunkenc.EncXOR ordinal, kept for frame compat. */
   final val EncXor = 1L
 
+  /** Prometheus chunkenc.EncHistogram ordinal: frames whose bodies
+    * are integer native-histogram chunks ([[ChunkencHistCodec]]). */
+  final val EncHistogram = 2L
+
+  /** Prometheus chunkenc.EncFloatHistogram ordinal (recording rules
+    * emit float histograms). */
+  final val EncFloatHistogram = 3L
+
   // ---------------------------------------------------------------
   // bit stream
   // ---------------------------------------------------------------
@@ -297,6 +305,17 @@ object ChunkCodec {
     out.write((x & 0x7f).toInt)
   }
 
+  /** Append one frame: uvarint(enc) uvarint(mint) uvarint(maxt)
+    * uvarint(len) body. */
+  private[tsdb] def putFrame(out: java.io.ByteArrayOutputStream, enc: Long,
+      mint: Long, maxt: Long, body: Array[Byte]): Unit = {
+    putUvarint(out, enc)
+    putUvarint(out, mint)
+    putUvarint(out, maxt)
+    putUvarint(out, body.length.toLong)
+    out.write(body, 0, body.length)
+  }
+
   /** Encode sorted samples into a framed blob, cutting a new chunk
     * every `samplesPerChunk` samples (the reference's
     * `samplesPerChunk` knob, schema/encoder.go:35; Prometheus
@@ -311,12 +330,7 @@ object ChunkCodec {
       val take = math.min(samplesPerChunk, ts.length - off)
       val ct = java.util.Arrays.copyOfRange(ts, off, off + take)
       val cv = java.util.Arrays.copyOfRange(vs, off, off + take)
-      val bytes = encodeChunk(ct, cv)
-      putUvarint(out, EncXor)
-      putUvarint(out, ct(0)) // mint
-      putUvarint(out, ct(take - 1)) // maxt
-      putUvarint(out, bytes.length.toLong)
-      out.write(bytes, 0, bytes.length)
+      putFrame(out, EncXor, ct(0), ct(take - 1), encodeChunk(ct, cv))
       off += take
     }
     out.toByteArray
@@ -336,6 +350,30 @@ object ChunkCodec {
     x | ((b & 0x7fL) << shift)
   }
 
+  /** A frame ordinal outside the chunkenc triple is corruption: throw
+    * naming the offset of the frame that carries it. */
+  private[tsdb] def requireKnown(enc: Long, frameStart: Int): Unit =
+    if (enc != EncXor && enc != EncHistogram && enc != EncFloatHistogram)
+      throw new GraftFormatException("chunk blob",
+        s"unknown chunk encoding $enc in the frame at byte $frameStart")
+
+  /** Frame headers `(enc, mint, maxt, bodyStart, size)` of a blob —
+    * introspection for tests and storage tooling (the walk every
+    * decode performs, headers only). */
+  def frames(blob: Array[Byte]): Seq[(Long, Long, Long, Int, Int)] = {
+    val out = Seq.newBuilder[(Long, Long, Long, Int, Int)]
+    val pos = Array(0)
+    while (pos(0) < blob.length) {
+      val enc = readUvarint(blob, pos)
+      val mint = readUvarint(blob, pos)
+      val maxt = readUvarint(blob, pos)
+      val size = readUvarint(blob, pos).toInt
+      out += ((enc, mint, maxt, pos(0), size))
+      pos(0) += size
+    }
+    out.result()
+  }
+
   /** Decode every chunk of a blob whose [mint, maxt] frame header
     * overlaps [qmint, qmaxt] — inclusive bounds, exactly the
     * reference decoder's filter (encoder.go:310-318). Skipped
@@ -350,14 +388,13 @@ object ChunkCodec {
     var n = 0
     val pos = Array(0)
     while (pos(0) < blob.length) {
+      val frameStart = pos(0)
       val enc = readUvarint(blob, pos)
       // a reference-written cell may MIX encodings (one appender per
       // chunkenc family per column, schema/encoder.go:75): the float
       // reader skips histogram frames by header — theirs, not ours —
       // and only an ordinal outside the chunkenc triple is corruption
-      require(enc == EncXor || enc == HistChunkCodec.EncHistogram ||
-        enc == HistChunkCodec.EncFloatHistogram,
-        s"unknown chunk encoding $enc")
+      requireKnown(enc, frameStart)
       val mint = readUvarint(blob, pos)
       val maxt = readUvarint(blob, pos)
       val size = readUvarint(blob, pos).toInt
@@ -409,10 +446,9 @@ object ChunkCodec {
     var mask = 0
     val pos = Array(0)
     while (pos(0) < blob.length) {
+      val frameStart = pos(0)
       val enc = readUvarint(blob, pos)
-      require(enc == EncXor || enc == HistChunkCodec.EncHistogram ||
-        enc == HistChunkCodec.EncFloatHistogram,
-        s"unknown chunk encoding $enc")
+      requireKnown(enc, frameStart)
       readUvarint(blob, pos) // mint
       readUvarint(blob, pos) // maxt
       val size = readUvarint(blob, pos).toInt

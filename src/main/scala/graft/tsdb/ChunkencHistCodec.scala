@@ -4,7 +4,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 
 import graft.tsdb.block.{ChunkencHistogram, TsdbBlockStore}
-import ChunkencHistogram.{FloatHistChunk, HistChunk}
 
 /** Shard-cell codec whose frame BODIES are REAL Prometheus chunkenc
   * histogram chunks ([[graft.tsdb.block.ChunkencHistogram]] — the
@@ -15,12 +14,14 @@ import ChunkencHistogram.{FloatHistChunk, HistChunk}
   * This is the byte contract a parquet-common reader actually
   * depends on: its decoder hands every frame body to
   * `chunkenc.FromData(enc, bytes)` (schema/encoder.go Decode +
-  * search/materialize.go), so a shard is only interoperable if the
-  * bodies parse as chunkenc — [[HistChunkCodec]]'s graft-native body
-  * layout frames identically but would NOT. [[ChunkCodec]] (XOR,
-  * enc 1) is already bit-exact chunkenc; this codec closes the
-  * histogram families (enc 2/3) the same way, NHCB custom-bucket
-  * chunks (schema -53, bound list in-chunk) included.
+  * search/materialize.go), so a cell is only interoperable if the
+  * bodies parse as chunkenc. [[ChunkCodec]] (XOR, enc 1) is
+  * bit-exact chunkenc; this codec closes the histogram families
+  * (enc 2/3) the same way, NHCB custom-bucket chunks (schema -53,
+  * bound list in-chunk) included. It is graft's one histogram cell
+  * body: the reference-layout shards
+  * ([[graft.tsdb.shard.ParquetShardStore]]) and the chunked store
+  * ([[HistChunkStore]]) both write and read it.
   *
   * Encode mirrors the Prometheus appender's chunk-cut ladder the
   * block writer uses (TsdbBlockStore.writeRows): a counter RESET
@@ -30,7 +31,13 @@ import ChunkencHistogram.{FloatHistChunk, HistChunk}
   * NotCounterReset; gauge series carry GaugeType on every chunk and
   * never reset-cut. Within one chunk the samples are re-laid onto
   * the UNION bucket layout with absolute-0 fills — what chunkenc's
-  * own recode produces when buckets appear mid-chunk.
+  * own recode produces when buckets appear mid-chunk. With
+  * `exactLayout` the encoder also cuts (NotCounterReset) wherever a
+  * sample's positive or negative index set differs from the previous
+  * sample's, so every chunk holds one layout and each sample decodes
+  * with exactly the buckets it was written with, explicit zero
+  * buckets included ([[HistChunkStore]] and the SQL functions; the
+  * shard writers keep the appender's cuts).
   *
   * The chunkenc wire format always carries a tracked sum; a NULL
   * input sum is persisted as NaN (what Prometheus stores when the
@@ -41,16 +48,20 @@ import ChunkencHistogram.{FloatHistChunk, HistChunk}
   * XOR and histogram chunks when one series changed sample type —
   * schema/encoder.go keeps per-encoding appenders per column; each
   * family's reader keeps its own, the block readers' convention),
-  * and throws loudly on an unknown encoding ordinal. SIGNED
-  * histograms (negative buckets) ride the same sample struct
-  * (`nidx`/`ncnt`, empty for positive-only series), so everything a
-  * reference shard's histogram cells can hold — exponential, signed,
-  * NHCB, gauge — decodes here.
+  * and throws a [[GraftFormatException]] on an unknown encoding
+  * ordinal. SIGNED histograms (negative buckets) ride the same
+  * sample struct (`nidx`/`ncnt`, empty for positive-only series), so
+  * everything a reference shard's histogram cells can hold —
+  * exponential, signed, NHCB, gauge — decodes here.
   */
 object ChunkencHistCodec {
 
-  private val NoNegL: Array[Long] = Array.empty
-  private val NoNegD: Array[Double] = Array.empty
+  /** `exactLayout`'s cut: a sample's positive or negative index set
+    * differs from the previous sample's (none before the first). */
+  private def layoutChanged(lastIdx: Array[Int], idx: Array[Int],
+      lastNIdx: Array[Int], nidx: Array[Int]): Boolean =
+    lastIdx != null && !(java.util.Arrays.equals(lastIdx, idx) &&
+      java.util.Arrays.equals(lastNIdx, nidx))
 
   // ---------------------------------------------------------------
   // integer family (EncHistogram, ordinal 2)
@@ -60,10 +71,11 @@ object ChunkencHistCodec {
     * cnt:array<long>, sum:double?, nidx:array<int>, ncnt:array<long>>>
     * → framed blob of enc=2 chunkenc chunks. `customValues` non-empty
     * iff schema == -53 (NHCB — no negative side allowed). Positive-
-    * only series pass empty neg arrays. */
+    * only series pass empty neg arrays. A null sum is stored as NaN.
+    * `exactLayout`: see the object doc. */
   def encodeArrayData(samples: ArrayData, schema: Int,
       samplesPerChunk: Int, customValues: Array[Double],
-      gauge: Boolean): Array[Byte] = {
+      gauge: Boolean, exactLayout: Boolean): Array[Byte] = {
     require(samplesPerChunk > 0, "samplesPerChunk must be positive")
     val n = samples.numElements()
     val out = new java.io.ByteArrayOutputStream()
@@ -79,35 +91,9 @@ object ChunkencHistCodec {
       else ChunkencHistogram.UnknownCounterReset
 
     def flush(): Unit = if (m > 0) {
-      val union = TsdbBlockStore.unionIndexes(idxB, m)
-      val nUnion = TsdbBlockStore.unionIndexes(nIdxB, m)
-      val pos = new Array[Array[Long]](m)
-      val neg = new Array[Array[Long]](m)
-      val count = new Array[Long](m)
-      var i = 0
-      while (i < m) {
-        val abs = TsdbBlockStore.fillUnion(idxB(i), cntB(i), union)
-        val nAbs = if (nUnion.isEmpty) NoNegL
-          else TsdbBlockStore.fillUnion(nIdxB(i), nCntB(i), nUnion)
-        var total = zeroB(i)
-        abs.foreach(total += _)
-        nAbs.foreach(total += _)
-        pos(i) = abs
-        neg(i) = nAbs
-        count(i) = total
-        i += 1
-      }
-      val body = ChunkencHistogram.encodeHistChunk(HistChunk(
-        flags, schema, 0.0, ChunkencHistogram.spansFromIndexes(union),
-        ChunkencHistogram.spansFromIndexes(nUnion),
-        java.util.Arrays.copyOf(tsB, m), count,
-        java.util.Arrays.copyOf(zeroB, m),
-        java.util.Arrays.copyOf(sumB, m), pos, neg, customValues))
-      ChunkCodec.putUvarint(out, HistChunkCodec.EncHistogram)
-      ChunkCodec.putUvarint(out, tsB(0))
-      ChunkCodec.putUvarint(out, tsB(m - 1))
-      ChunkCodec.putUvarint(out, body.length.toLong)
-      out.write(body, 0, body.length)
+      ChunkCodec.putFrame(out, ChunkCodec.EncHistogram, tsB(0), tsB(m - 1),
+        ChunkencHistogram.encodeUnionHistChunk(flags, schema, 0.0,
+          customValues, m, tsB, zeroB, sumB, idxB, cntB, nIdxB, nCntB))
       m = 0
     }
 
@@ -139,7 +125,8 @@ object ChunkencHistCodec {
             TsdbBlockStore.sparseDecreased(lastNIdx, lastNCnt, nidx, ncnt))) {
         flush()
         flags = ChunkencHistogram.CounterReset
-      } else if (m == samplesPerChunk) {
+      } else if (m == samplesPerChunk ||
+          (exactLayout && layoutChanged(lastIdx, idx, lastNIdx, nidx))) {
         flush()
         if (!gauge) flags = ChunkencHistogram.NotCounterReset
       }
@@ -168,13 +155,14 @@ object ChunkencHistCodec {
     val rows = Vector.newBuilder[Any]
     val pos = Array(0)
     while (pos(0) < blob.length) {
+      val frameStart = pos(0)
       val enc = ChunkCodec.readUvarint(blob, pos)
       val mint = ChunkCodec.readUvarint(blob, pos)
       val maxt = ChunkCodec.readUvarint(blob, pos)
       val size = ChunkCodec.readUvarint(blob, pos).toInt
       val bodyStart = pos(0)
       pos(0) = bodyStart + size
-      if (enc == HistChunkCodec.EncHistogram) {
+      if (enc == ChunkCodec.EncHistogram) {
         if (mint <= qmaxt && maxt >= qmint) {
           val c = ChunkencHistogram.decodeHistChunk(blob, bodyStart, size)
           val union = ChunkencHistogram.bucketIndexes(c.posSpans)
@@ -191,11 +179,10 @@ object ChunkencHistCodec {
             i += 1
           }
         }
-      } else if (enc == ChunkCodec.EncXor ||
-          enc == HistChunkCodec.EncFloatHistogram) {
-        // foreign family in a mixed cell: theirs, not ours — skip
-      } else throw new IllegalArgumentException(
-        s"unknown chunk encoding $enc")
+      } else {
+        // a foreign family in a mixed cell is theirs, not ours: skip it
+        ChunkCodec.requireKnown(enc, frameStart)
+      }
     }
     new GenericArrayData(rows.result().toArray)
   }
@@ -210,7 +197,7 @@ object ChunkencHistCodec {
     * ncnt:array<double>>), bodies enc=3 chunkenc float chunks. */
   def encodeFloatArrayData(samples: ArrayData, schema: Int,
       samplesPerChunk: Int, customValues: Array[Double],
-      gauge: Boolean): Array[Byte] = {
+      gauge: Boolean, exactLayout: Boolean): Array[Byte] = {
     require(samplesPerChunk > 0, "samplesPerChunk must be positive")
     val n = samples.numElements()
     val out = new java.io.ByteArrayOutputStream()
@@ -226,35 +213,10 @@ object ChunkencHistCodec {
       else ChunkencHistogram.UnknownCounterReset
 
     def flush(): Unit = if (m > 0) {
-      val union = TsdbBlockStore.unionIndexes(idxB, m)
-      val nUnion = TsdbBlockStore.unionIndexes(nIdxB, m)
-      val pos = new Array[Array[Double]](m)
-      val neg = new Array[Array[Double]](m)
-      val count = new Array[Double](m)
-      var i = 0
-      while (i < m) {
-        val abs = TsdbBlockStore.fillUnionD(idxB(i), cntB(i), union)
-        val nAbs = if (nUnion.isEmpty) NoNegD
-          else TsdbBlockStore.fillUnionD(nIdxB(i), nCntB(i), nUnion)
-        var total = zeroB(i)
-        abs.foreach(total += _)
-        nAbs.foreach(total += _)
-        pos(i) = abs
-        neg(i) = nAbs
-        count(i) = total
-        i += 1
-      }
-      val body = ChunkencHistogram.encodeFloatHistChunk(FloatHistChunk(
-        flags, schema, 0.0, ChunkencHistogram.spansFromIndexes(union),
-        ChunkencHistogram.spansFromIndexes(nUnion),
-        java.util.Arrays.copyOf(tsB, m), count,
-        java.util.Arrays.copyOf(zeroB, m),
-        java.util.Arrays.copyOf(sumB, m), pos, neg, customValues))
-      ChunkCodec.putUvarint(out, HistChunkCodec.EncFloatHistogram)
-      ChunkCodec.putUvarint(out, tsB(0))
-      ChunkCodec.putUvarint(out, tsB(m - 1))
-      ChunkCodec.putUvarint(out, body.length.toLong)
-      out.write(body, 0, body.length)
+      ChunkCodec.putFrame(out, ChunkCodec.EncFloatHistogram, tsB(0),
+        tsB(m - 1), ChunkencHistogram.encodeUnionFloatHistChunk(flags,
+          schema, 0.0, customValues, m, tsB, zeroB, sumB, idxB, cntB,
+          nIdxB, nCntB))
       m = 0
     }
 
@@ -284,7 +246,8 @@ object ChunkencHistCodec {
             TsdbBlockStore.sparseDecreasedD(lastNIdx, lastNCnt, nidx, ncnt))) {
         flush()
         flags = ChunkencHistogram.CounterReset
-      } else if (m == samplesPerChunk) {
+      } else if (m == samplesPerChunk ||
+          (exactLayout && layoutChanged(lastIdx, idx, lastNIdx, nidx))) {
         flush()
         if (!gauge) flags = ChunkencHistogram.NotCounterReset
       }
@@ -305,13 +268,14 @@ object ChunkencHistCodec {
     val rows = Vector.newBuilder[Any]
     val pos = Array(0)
     while (pos(0) < blob.length) {
+      val frameStart = pos(0)
       val enc = ChunkCodec.readUvarint(blob, pos)
       val mint = ChunkCodec.readUvarint(blob, pos)
       val maxt = ChunkCodec.readUvarint(blob, pos)
       val size = ChunkCodec.readUvarint(blob, pos).toInt
       val bodyStart = pos(0)
       pos(0) = bodyStart + size
-      if (enc == HistChunkCodec.EncFloatHistogram) {
+      if (enc == ChunkCodec.EncFloatHistogram) {
         if (mint <= qmaxt && maxt >= qmint) {
           val c = ChunkencHistogram.decodeFloatHistChunk(blob, bodyStart, size)
           val union = ChunkencHistogram.bucketIndexes(c.posSpans)
@@ -328,11 +292,10 @@ object ChunkencHistCodec {
             i += 1
           }
         }
-      } else if (enc == ChunkCodec.EncXor ||
-          enc == HistChunkCodec.EncHistogram) {
-        // foreign family in a mixed cell — skip
-      } else throw new IllegalArgumentException(
-        s"unknown chunk encoding $enc")
+      } else {
+        // a foreign family in a mixed cell is theirs, not ours: skip it
+        ChunkCodec.requireKnown(enc, frameStart)
+      }
     }
     new GenericArrayData(rows.result().toArray)
   }

@@ -23,6 +23,13 @@ import org.apache.spark.sql.functions._
 /** Thrown when a strict quota is exceeded (limits.go:52 analog). */
 final class QuotaExceededException(msg: String) extends RuntimeException(msg)
 
+/** Thrown when stored bytes or a store's layout cannot be read as
+  * what the caller asked for: `source` names the file, dir or blob
+  * (with an offset where one is known). An IllegalArgumentException,
+  * so callers that catch bad input keep catching it. */
+final class GraftFormatException(val source: String, detail: String)
+    extends IllegalArgumentException(s"$source: $detail")
+
 final class TsdbQueryable(
     df: DataFrame,
     labelCols: Seq[String],

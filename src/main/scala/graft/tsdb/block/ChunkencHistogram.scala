@@ -1,7 +1,6 @@
 package graft.tsdb.block
 
 import graft.tsdb.ChunkCodec.{BitReader, BitWriter}
-import graft.tsdb.HistChunkCodec.{XorReader, XorWriter}
 
 /** Prometheus chunkenc HISTOGRAM chunk layout — encodings 2
   * (`EncHistogram`, integer native histograms) and 3
@@ -133,6 +132,57 @@ object ChunkencHistogram {
       posBuckets: Array[Array[Double]],
       negBuckets: Array[Array[Double]],
       customValues: Array[Double] = Array.empty)
+
+  // ---------------------------------------------------------------
+  // Gorilla XOR window (the xor.go value scheme) over a shared bit
+  // stream: the integer chunk runs its sums through one, the float
+  // chunk one per field. Bit-exact incl. NaN payloads.
+  // ---------------------------------------------------------------
+
+  private final class XorWriter(w: BitWriter) {
+    private var winLeading = -1
+    private var winTrailing = 0
+    def write(bits: Long, prevBits: Long): Unit = {
+      val xor = bits ^ prevBits
+      if (xor == 0L) w.writeBit(false)
+      else {
+        w.writeBit(true)
+        val leading = math.min(java.lang.Long.numberOfLeadingZeros(xor), 31)
+        val trailing = java.lang.Long.numberOfTrailingZeros(xor)
+        if (winLeading != -1 && leading >= winLeading &&
+            trailing >= winTrailing) {
+          w.writeBit(false)
+          w.writeBits(xor >>> winTrailing, 64 - winLeading - winTrailing)
+        } else {
+          winLeading = leading
+          winTrailing = trailing
+          val sigbits = 64 - leading - trailing
+          w.writeBit(true)
+          w.writeBits(leading.toLong, 5)
+          w.writeBits(sigbits.toLong & 0x3f, 6) // 64 stored as 0
+          w.writeBits(xor >>> trailing, sigbits)
+        }
+      }
+    }
+  }
+
+  private final class XorReader(r: BitReader) {
+    private var winLeading = 0
+    private var winTrailing = 0
+    def read(prevBits: Long): Long = {
+      if (!r.readBit()) prevBits
+      else if (!r.readBit()) {
+        val sigbits = 64 - winLeading - winTrailing
+        prevBits ^ (r.readBits(sigbits) << winTrailing)
+      } else {
+        winLeading = r.readBits(5).toInt
+        var sigbits = r.readBits(6).toInt
+        if (sigbits == 0) sigbits = 64
+        winTrailing = 64 - winLeading - sigbits
+        prevBits ^ (r.readBits(sigbits) << winTrailing)
+      }
+    }
+  }
 
   // ---------------------------------------------------------------
   // varbit
@@ -358,6 +408,99 @@ object ChunkencHistogram {
         s"custom bucket index out of range [0, ${customValues.length}]")
     } else require(customValues.isEmpty,
       "only the custom-bucket schema (-53) carries custom values")
+  }
+
+  // ---------------------------------------------------------------
+  // union-layout chunks from sparse samples
+  // ---------------------------------------------------------------
+
+  /** Sorted union of the first `n` (each already ascending) index
+    * arrays — the chunk's shared bucket layout. */
+  private def unionIndexes(idx: Array[Array[Int]], n: Int): Array[Int] = {
+    val set = new java.util.TreeSet[Integer]()
+    var i = 0
+    while (i < n) {
+      idx(i).foreach(v => set.add(v))
+      i += 1
+    }
+    val out = new Array[Int](set.size())
+    val it = set.iterator()
+    var k = 0
+    while (it.hasNext) { out(k) = it.next(); k += 1 }
+    out
+  }
+
+  /** Position of each of `idx`'s buckets in `union` (a superset). */
+  private def unionSlots(idx: Array[Int], union: Array[Int]): Array[Int] = {
+    val slots = new Array[Int](idx.length)
+    var k = 0
+    var j = 0
+    while (j < idx.length) {
+      while (union(k) != idx(j)) k += 1
+      slots(j) = k
+      j += 1
+    }
+    slots
+  }
+
+  /** Encode the first `n` buffered SPARSE samples (per-sample
+    * ascending `idx`/`cnt`, optional negative side `nIdx`/`nCnt` —
+    * null for none) as one integer chunk: every sample is re-laid onto
+    * the union bucket layout, absent buckets as absolute 0 (chunkenc's
+    * recode when buckets appear mid-chunk), and its count is the zero
+    * count plus every bucket. */
+  def encodeUnionHistChunk(flags: Int, schema: Int, zeroThreshold: Double,
+      customValues: Array[Double], n: Int, ts: Array[Long],
+      zero: Array[Long], sum: Array[Double], idx: Array[Array[Int]],
+      cnt: Array[Array[Long]], nIdx: Array[Array[Int]],
+      nCnt: Array[Array[Long]]): Array[Byte] = {
+    val union = unionIndexes(idx, n)
+    val nUnion = if (nIdx == null) Array.empty[Int] else unionIndexes(nIdx, n)
+    def fill(i: Array[Int], c: Array[Long], u: Array[Int]): Array[Long] = {
+      val abs = new Array[Long](u.length)
+      val slots = unionSlots(i, u)
+      var j = 0
+      while (j < slots.length) { abs(slots(j)) = c(j); j += 1 }
+      abs
+    }
+    val pos = Array.tabulate(n)(i => fill(idx(i), cnt(i), union))
+    val neg = Array.tabulate(n)(i =>
+      if (nUnion.isEmpty) Array.empty[Long] else fill(nIdx(i), nCnt(i), nUnion))
+    val count = Array.tabulate(n)(i => zero(i) + pos(i).sum + neg(i).sum)
+    encodeHistChunk(HistChunk(flags, schema, zeroThreshold,
+      spansFromIndexes(union), spansFromIndexes(nUnion),
+      java.util.Arrays.copyOf(ts, n), count, java.util.Arrays.copyOf(zero, n),
+      java.util.Arrays.copyOf(sum, n), pos, neg, customValues))
+  }
+
+  /** [[encodeUnionHistChunk]] for float histograms. */
+  def encodeUnionFloatHistChunk(flags: Int, schema: Int,
+      zeroThreshold: Double, customValues: Array[Double], n: Int,
+      ts: Array[Long], zero: Array[Double], sum: Array[Double],
+      idx: Array[Array[Int]], cnt: Array[Array[Double]],
+      nIdx: Array[Array[Int]], nCnt: Array[Array[Double]]): Array[Byte] = {
+    val union = unionIndexes(idx, n)
+    val nUnion = if (nIdx == null) Array.empty[Int] else unionIndexes(nIdx, n)
+    def fill(i: Array[Int], c: Array[Double], u: Array[Int]): Array[Double] = {
+      val abs = new Array[Double](u.length)
+      val slots = unionSlots(i, u)
+      var j = 0
+      while (j < slots.length) { abs(slots(j)) = c(j); j += 1 }
+      abs
+    }
+    val pos = Array.tabulate(n)(i => fill(idx(i), cnt(i), union))
+    val neg = Array.tabulate(n)(i =>
+      if (nUnion.isEmpty) Array.empty[Double] else fill(nIdx(i), nCnt(i), nUnion))
+    val count = Array.tabulate(n) { i =>
+      var total = zero(i)
+      pos(i).foreach(total += _)
+      neg(i).foreach(total += _)
+      total
+    }
+    encodeFloatHistChunk(FloatHistChunk(flags, schema, zeroThreshold,
+      spansFromIndexes(union), spansFromIndexes(nUnion),
+      java.util.Arrays.copyOf(ts, n), count, java.util.Arrays.copyOf(zero, n),
+      java.util.Arrays.copyOf(sum, n), pos, neg, customValues))
   }
 
   // ---------------------------------------------------------------

@@ -4,8 +4,6 @@ import java.io.{ByteArrayOutputStream, DataOutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.zip.CRC32C
 
-import graft.tsdb.ChunkCodec.{BitReader, BitWriter}
-import graft.tsdb.HistChunkCodec
 
 /** Byte-level Prometheus TSDB BLOCK format — the layout the
   * reference ingests through `tsdb.IndexReader`/`tsdb.ChunkReader`
@@ -52,13 +50,9 @@ import graft.tsdb.HistChunkCodec
   * (1b, XOR=1) | data | crc32c(encoding + data). A chunk ref packs
   * (segment file index << 32) | segment byte offset of the len.
   *
-  * XOR chunk data (chunkenc "Gorilla" layout): 2b sample count BE,
-  * then an MSB-first bitstream — sample 0: varint ts, 64 raw value
-  * bits; sample 1: uvarint ts delta, XOR-coded value; sample i≥2:
-  * delta-of-delta in the '0' / '10'+14 / '110'+17 / '1110'+20 /
-  * '1111'+64 buckets, XOR-coded value (leading/trailing window,
-  * '0' = repeat, '10' = inside window, '11' = 5b leading + 6b
-  * significant-bit count with 64 stored as 0).
+  * XOR chunk data is the chunkenc "Gorilla" layout that
+  * [[graft.tsdb.ChunkCodec.encodeChunk]] writes (the parquet cells
+  * frame the same bodies).
   *
   * The byte-exactness claim is scoped honestly: every constant,
   * section order, alignment and CRC here follows the published
@@ -91,58 +85,6 @@ object TsdbBlockFormat {
       chunks: Seq[ChunkMeta])
   /** One postings list: (label name, label value) → sorted series ids. */
   final case class Postings(name: String, value: String, ids: Seq[Int])
-
-  // ---------------------------------------------------------------
-  // XOR chunk (chunkenc layout)
-  // ---------------------------------------------------------------
-
-  /** Encode one XOR chunk; `ts` sorted ascending, ≤ 0xffff samples.
-    * The timestamp DoD buckets and the Gorilla value window are the
-    * ONE shared implementation ([[HistChunkCodec.TsWriter]] /
-    * [[HistChunkCodec.XorWriter]]) — this file adds only the 2-byte
-    * count header and the sample-0 raw value word the chunkenc
-    * layout specifies. */
-  def encodeXorChunk(ts: Array[Long], vs: Array[Double]): Array[Byte] = {
-    val n = ts.length
-    require(vs.length == n, "ts/vs length mismatch")
-    require(n <= 0xffff, s"chunk too large: $n")
-    val w = new BitWriter()
-    w.writeBits(n.toLong, 16)
-    val tw = new HistChunkCodec.TsWriter(w)
-    val xw = new HistChunkCodec.XorWriter(w)
-    var prevBits = 0L
-    var i = 0
-    while (i < n) {
-      tw.write(ts(i))
-      val bits = java.lang.Double.doubleToRawLongBits(vs(i))
-      if (i == 0) w.writeBits(bits, 64)
-      else xw.write(bits, prevBits)
-      prevBits = bits
-      i += 1
-    }
-    w.toBytes
-  }
-
-  /** Decode one XOR chunk from `bytes[start, start+len)`. */
-  def decodeXorChunk(bytes: Array[Byte], start: Int,
-      len: Int): (Array[Long], Array[Double]) = {
-    val r = new BitReader(bytes, start, start + len)
-    val n = r.readBits(16).toInt
-    val ts = new Array[Long](n)
-    val vs = new Array[Double](n)
-    val tr = new HistChunkCodec.TsReader(r)
-    val xr = new HistChunkCodec.XorReader(r)
-    var prevBits = 0L
-    var i = 0
-    while (i < n) {
-      ts(i) = tr.read()
-      if (i == 0) prevBits = r.readBits(64)
-      else prevBits = xr.read(prevBits)
-      vs(i) = java.lang.Double.longBitsToDouble(prevBits)
-      i += 1
-    }
-    (ts, vs)
-  }
 
   // ---------------------------------------------------------------
   // byte-level helpers

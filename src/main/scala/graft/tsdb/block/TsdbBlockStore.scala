@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.tsdb.Matcher
+import graft.tsdb.{ChunkCodec, Matcher}
 import TsdbBlockFormat._
 
 /** One decoded block sample: full label set, timestamp (ms), value. */
@@ -19,7 +19,7 @@ final case class TsdbSample(labels: Map[String, String], ts: Long,
   * reference points [[read]] / [[readHistLabels]] at a Prometheus
   * data directory and gets the same DataFrame shapes every graft
   * converter accepts. All three chunkenc families decode: XOR
-  * floats (encoding 1, [[TsdbBlockFormat.decodeXorChunk]]) and
+  * floats (encoding 1, [[graft.tsdb.ChunkCodec.decodeChunk]]) and
   * integer/float native histograms (encodings 2/3,
   * [[ChunkencHistogram]]) — the same triple the reference's
   * converter iterates (schema/encoder.go:75-196).
@@ -107,7 +107,7 @@ object TsdbBlockStore {
     }
     def size: Int = n
     def flush(): (Array[Byte], Long, Long) = {
-      val data = encodeXorChunk(java.util.Arrays.copyOf(tsBuf, n),
+      val data = ChunkCodec.encodeChunk(java.util.Arrays.copyOf(tsBuf, n),
         java.util.Arrays.copyOf(vBuf, n))
       val res = (data, tsBuf(0), tsBuf(n - 1))
       n = 0
@@ -213,61 +213,12 @@ object TsdbBlockStore {
     }
     def size: Int = n
     def flush(): (Array[Byte], Long, Long) = {
-      val union = unionIndexes(idxB, n)
-      val nUnion = if (hasNeg) unionIndexes(nIdxB, n) else Array.empty[Int]
-      val pos = new Array[Array[Long]](n)
-      val neg = new Array[Array[Long]](n)
-      val count = new Array[Long](n)
-      var i = 0
-      while (i < n) {
-        val abs = fillUnion(idxB(i), cntB(i), union)
-        val nAbs = if (hasNeg) fillUnion(nIdxB(i), nCntB(i), nUnion)
-          else Array.empty[Long]
-        var total = zeroB(i)
-        abs.foreach(total += _)
-        nAbs.foreach(total += _)
-        pos(i) = abs
-        neg(i) = nAbs
-        count(i) = total
-        i += 1
-      }
-      val c = ChunkencHistogram.HistChunk(curFlags, schema, zeroThreshold,
-        ChunkencHistogram.spansFromIndexes(union),
-        ChunkencHistogram.spansFromIndexes(nUnion),
-        java.util.Arrays.copyOf(tsB, n), count,
-        java.util.Arrays.copyOf(zeroB, n),
-        java.util.Arrays.copyOf(sumB, n), pos, neg, customVals)
-      val res = (ChunkencHistogram.encodeHistChunk(c), tsB(0), tsB(n - 1))
+      val res = (ChunkencHistogram.encodeUnionHistChunk(curFlags, schema,
+        zeroThreshold, customVals, n, tsB, zeroB, sumB, idxB, cntB, nIdxB,
+        nCntB), tsB(0), tsB(n - 1))
       n = 0
       res
     }
-  }
-
-  /** Re-lay one sample's sparse (idx, count) pair onto the chunk's
-    * union layout — absent positions fill with absolute 0, chunkenc's
-    * recode behavior. */
-  private[tsdb] def fillUnion(idx: Array[Int], cnt: Array[Long],
-      union: Array[Int]): Array[Long] = {
-    val abs = new Array[Long](union.length)
-    var j = 0
-    var k = 0
-    while (k < union.length) {
-      if (j < idx.length && idx(j) == union(k)) { abs(k) = cnt(j); j += 1 }
-      k += 1
-    }
-    abs
-  }
-
-  private[tsdb] def fillUnionD(idx: Array[Int], cnt: Array[Double],
-      union: Array[Int]): Array[Double] = {
-    val abs = new Array[Double](union.length)
-    var j = 0
-    var k = 0
-    while (k < union.length) {
-      if (j < idx.length && idx(j) == union(k)) { abs(k) = cnt(j); j += 1 }
-      k += 1
-    }
-    abs
   }
 
   /** Float native-histogram chunks (chunkenc encoding 3) — the
@@ -358,32 +309,9 @@ object TsdbBlockStore {
     }
     def size: Int = n
     def flush(): (Array[Byte], Long, Long) = {
-      val union = unionIndexes(idxB, n)
-      val nUnion = if (hasNeg) unionIndexes(nIdxB, n) else Array.empty[Int]
-      val pos = new Array[Array[Double]](n)
-      val neg = new Array[Array[Double]](n)
-      val count = new Array[Double](n)
-      var i = 0
-      while (i < n) {
-        val abs = fillUnionD(idxB(i), cntB(i), union)
-        val nAbs = if (hasNeg) fillUnionD(nIdxB(i), nCntB(i), nUnion)
-          else Array.empty[Double]
-        var total = zeroB(i)
-        abs.foreach(total += _)
-        nAbs.foreach(total += _)
-        pos(i) = abs
-        neg(i) = nAbs
-        count(i) = total
-        i += 1
-      }
-      val c = ChunkencHistogram.FloatHistChunk(curFlags, schema,
-        zeroThreshold, ChunkencHistogram.spansFromIndexes(union),
-        ChunkencHistogram.spansFromIndexes(nUnion),
-        java.util.Arrays.copyOf(tsB, n), count,
-        java.util.Arrays.copyOf(zeroB, n),
-        java.util.Arrays.copyOf(sumB, n), pos, neg, customVals)
-      val res =
-        (ChunkencHistogram.encodeFloatHistChunk(c), tsB(0), tsB(n - 1))
+      val res = (ChunkencHistogram.encodeUnionFloatHistChunk(curFlags,
+        schema, zeroThreshold, customVals, n, tsB, zeroB, sumB, idxB, cntB,
+        nIdxB, nCntB), tsB(0), tsB(n - 1))
       n = 0
       res
     }
@@ -433,22 +361,6 @@ object TsdbBlockStore {
         "bucket index arrays must be strictly ascending")
       j += 1
     }
-  }
-
-  /** Sorted union of the first `n` (each already ascending) index
-    * arrays — the chunk's shared bucket layout. */
-  private[tsdb] def unionIndexes(idxB: Array[Array[Int]], n: Int): Array[Int] = {
-    val set = new java.util.TreeSet[Integer]()
-    var i = 0
-    while (i < n) {
-      idxB(i).foreach(v => set.add(v))
-      i += 1
-    }
-    val out = new Array[Int](set.size())
-    val it = set.iterator()
-    var k = 0
-    while (it.hasNext) { out(k) = it.next(); k += 1 }
-    out
   }
 
   /** Write `df` (label columns + a millisecond timestamp column + a
@@ -1210,7 +1122,7 @@ object TsdbBlockStore {
   private def xorDecoder(mint: Long,
       maxt: Long): ChunkDecoder[(Long, Double)] = {
     case (EncXOR, data, deleted) =>
-      val (ts, vs) = decodeXorChunk(data, 0, data.length)
+      val (ts, vs) = ChunkCodec.decodeChunk(data, 0, data.length)
       ts.indices.iterator
         .filter(i => keepTs(ts(i), mint, maxt, deleted))
         .map(i => (ts(i), vs(i)))

@@ -11,7 +11,7 @@ import org.apache.parquet.hadoop.metadata.{CompressionCodecName, FileMetaData}
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.io.api.{Binary, RecordConsumer}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type, Types}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType, StructField, StructType}
 
-import graft.functions.{ChunkDecode, MergeSampleRuns, QueryConst}
-import graft.tsdb.{ChunkCodec, ChunkencHistCodec, HistChunkCodec, Matcher}
+import graft.functions.{ChunkDecode, HistChunkExpressions, MergeSampleRuns, QueryConst}
+import graft.tsdb.{ChunkCodec, ChunkencHistCodec, Matcher}
 import ParquetShardSchema._
 
 /** Write and query shards in the reference's EXACT physical layout
@@ -126,12 +126,12 @@ object ParquetShardStore {
       rowGroupSize: Long = 1L << 20,
       bloomFilterLabels: Seq[String] = Nil): Unit =
     writeImpl(df, dir, labelCols, tsCol,
-      Seq(col(valueCol).cast("double").as("value")),
+      ts => struct(ts.as("ts"), col(valueCol).cast("double").as("value")),
       sampleFields = 2, colDurationMs, shards, rowGroupSize,
       bloomFilterLabels, xorEncoder(samplesPerChunk), XorFamily)
 
   private val XorFamily = 1 << ChunkCodec.EncXor.toInt
-  private val HistFamily = 1 << HistChunkCodec.EncHistogram.toInt
+  private val HistFamily = 1 << ChunkCodec.EncHistogram.toInt
   /** Fields of [[writeHist]]'s sample struct: ts, zero, idx, cnt, sum,
     * nidx, ncnt. */
   private val HistSampleFields = 7
@@ -139,11 +139,14 @@ object ParquetShardStore {
   private def xorEncoder(samplesPerChunk: Int): ArrayData => Array[Byte] =
     slice => ChunkCodec.encodeArrayData(slice, samplesPerChunk)
 
-  private def histEncoder(histSchema: Int, samplesPerChunk: Int,
-      customValues: Seq[Double], gauge: Boolean): ArrayData => Array[Byte] = {
+  private def histEncoder(float: Boolean, histSchema: Int,
+      samplesPerChunk: Int, customValues: Seq[Double],
+      gauge: Boolean): ArrayData => Array[Byte] = {
     val cv = customValues.toArray
-    slice => ChunkencHistCodec.encodeArrayData(
-      slice, histSchema, samplesPerChunk, cv, gauge)
+    if (float) slice => ChunkencHistCodec.encodeFloatArrayData(
+      slice, histSchema, samplesPerChunk, cv, gauge, exactLayout = false)
+    else slice => ChunkencHistCodec.encodeArrayData(
+      slice, histSchema, samplesPerChunk, cv, gauge, exactLayout = false)
   }
 
   /** [[write]] for NATIVE-HISTOGRAM series (`zeroCol` long; `idxCol`
@@ -174,26 +177,13 @@ object ParquetShardStore {
       bloomFilterLabels: Seq[String] = Nil,
       customValues: Seq[Double] = Nil, gauge: Boolean = false,
       negIdxCol: Option[String] = None,
-      negCountsCol: Option[String] = None): Unit = {
-    require(negIdxCol.isDefined == negCountsCol.isDefined,
-      "negIdxCol and negCountsCol must be passed together")
-    require(negIdxCol.isEmpty || customValues.isEmpty,
-      "custom-bucket (NHCB) histograms cannot carry negative buckets")
-    writeImpl(df, dir, labelCols, tsCol,
-      Seq(col(zeroCol).cast("long").as("zero"),
-        col(idxCol).cast("array<int>").as("idx"),
-        col(cntCol).cast("array<bigint>").as("cnt"),
-        sumCol.map(c => col(c).cast("double"))
-          .getOrElse(lit(null).cast("double")).as("sum"),
-        negIdxCol.map(c => col(c).cast("array<int>"))
-          .getOrElse(typedLit(Seq.empty[Int])).as("nidx"),
-        negCountsCol.map(c => col(c).cast("array<bigint>"))
-          .getOrElse(typedLit(Seq.empty[Long])).as("ncnt")),
+      negCountsCol: Option[String] = None): Unit =
+    writeImpl(df, dir, labelCols, tsCol, histSample(float = false, zeroCol,
+        idxCol, cntCol, sumCol, customValues, negIdxCol, negCountsCol),
       HistSampleFields, colDurationMs, shards, rowGroupSize,
       bloomFilterLabels,
-      histEncoder(histSchema, samplesPerChunk, customValues, gauge),
-      HistFamily)
-  }
+      histEncoder(float = false, histSchema, samplesPerChunk, customValues,
+        gauge), HistFamily)
 
   /** [[writeHist]] for FLOAT histograms (`zeroCol` double; `cntCol`
     * array<double>) — the EncFloatHistogram (enc=3) family, bodies
@@ -207,29 +197,21 @@ object ParquetShardStore {
       bloomFilterLabels: Seq[String] = Nil,
       customValues: Seq[Double] = Nil, gauge: Boolean = false,
       negIdxCol: Option[String] = None,
-      negCountsCol: Option[String] = None): Unit = {
-    require(negIdxCol.isDefined == negCountsCol.isDefined,
-      "negIdxCol and negCountsCol must be passed together")
-    require(negIdxCol.isEmpty || customValues.isEmpty,
-      "custom-bucket (NHCB) histograms cannot carry negative buckets")
-    val cv = customValues.toArray
-    writeImpl(df, dir, labelCols, tsCol,
-      Seq(col(zeroCol).cast("double").as("zero"),
-        col(idxCol).cast("array<int>").as("idx"),
-        col(cntCol).cast("array<double>").as("cnt"),
-        sumCol.map(c => col(c).cast("double"))
-          .getOrElse(lit(null).cast("double")).as("sum"),
-        negIdxCol.map(c => col(c).cast("array<int>"))
-          .getOrElse(typedLit(Seq.empty[Int])).as("nidx"),
-        negCountsCol.map(c => col(c).cast("array<double>"))
-          .getOrElse(typedLit(Seq.empty[Double])).as("ncnt")),
+      negCountsCol: Option[String] = None): Unit =
+    writeImpl(df, dir, labelCols, tsCol, histSample(float = true, zeroCol,
+        idxCol, cntCol, sumCol, customValues, negIdxCol, negCountsCol),
       HistSampleFields, colDurationMs, shards, rowGroupSize,
       bloomFilterLabels,
-      (slice: ArrayData) =>
-        ChunkencHistCodec.encodeFloatArrayData(
-          slice, histSchema, samplesPerChunk, cv, gauge),
-      1 << HistChunkCodec.EncFloatHistogram.toInt)
-  }
+      histEncoder(float = true, histSchema, samplesPerChunk, customValues, gauge),
+      1 << ChunkCodec.EncFloatHistogram.toInt)
+
+  /** [[writeHist]]'s sample struct over the ms timestamp; a null sum
+    * persists as NaN. */
+  private def histSample(float: Boolean, zeroCol: String, idxCol: String,
+      cntCol: String, sumCol: Option[String], customValues: Seq[Double],
+      negIdxCol: Option[String], negCountsCol: Option[String]): Column => Column =
+    HistChunkExpressions.sample(float, _, zeroCol, idxCol, cntCol,
+      sumCol.fold(lit(null))(col), customValues, negIdxCol, negCountsCol)
 
   /** The sample-grain front half of every write: one series-grain
     * shuffle (groupBy labels → each series' samples as ONE sorted
@@ -251,16 +233,15 @@ object ParquetShardStore {
     * (`customValues`), gauge — all as real chunkenc frame bodies.
     */
   private def writeImpl(df: DataFrame, dir: String, labelCols: Seq[String],
-      tsCol: String, sampleCols: Seq[org.apache.spark.sql.Column],
-      sampleFields: Int, colDurationMs: Long, shards: Int,
-      rowGroupSize: Long, bloomFilterLabels: Seq[String],
-      encodeSlice: ArrayData => Array[Byte], familyMask: Int): Unit = {
+      tsCol: String, sample: Column => Column, sampleFields: Int,
+      colDurationMs: Long, shards: Int, rowGroupSize: Long,
+      bloomFilterLabels: Seq[String], encodeSlice: ArrayData => Array[Byte],
+      familyMask: Int): Unit = {
     val tsMs = unix_millis(col(tsCol).cast("timestamp"))
     val series = df
       .withColumn("_ts_ms", tsMs)
       .groupBy(labelCols.map(c => col(c).cast("string").as(c)): _*)
-      .agg(sort_array(collect_list(struct(
-        (col("_ts_ms").as("ts") +: sampleCols): _*))).as("_samples"))
+      .agg(sort_array(collect_list(sample(col("_ts_ms")))).as("_samples"))
     writeSeries(
       byShard(series, labelCols, shards)
         .sortWithinPartitions(labelCols.map(col): _*),
@@ -800,12 +781,13 @@ object ParquetShardStore {
     // NHCB chunks structurally carry no negative side: their nidx/ncnt
     // decode empty, so the projection needs no per-family case
     val series = merged.select(names.map(col) :+ transform(col("_samples"),
-      s => struct(Seq("ts", "zero", "idx", "cnt", "sum", "nidx", "ncnt")
-        .map(f => s(f)): _*)).as("_samples"): _*)
+      s => struct(HistChunkExpressions.sampleType(float = false).fieldNames
+        .map(f => s(f)).toSeq: _*)).as("_samples"): _*)
     writeSeries(series, seriesBounds(merged), outDir, names,
       HistSampleFields, colDurationMs, rowGroupSize = 1L << 20,
       bloomFilterLabels,
-      histEncoder(fam.getInt(0), samplesPerChunk, fam.getSeq[Double](1), gauge),
+      histEncoder(float = false, fam.getInt(0), samplesPerChunk,
+        fam.getSeq[Double](1), gauge),
       HistFamily)
   }
 

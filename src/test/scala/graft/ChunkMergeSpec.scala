@@ -160,9 +160,9 @@ class ChunkMergeSpec extends SparkSpec {
 
       val got = rows(selectHist(out, float))
       assert(got.size > 5 * 96 && got == rows(selectHist(oracle, float)), k)
-      // the signed flag is per series: only those with a signed run
-      val signedHosts = spark.read.parquet(s"$out/labels")
-        .filter(col("signed")).collect().map(_.getAs[String]("host")).toSet
+      // only the series with a signed run carry a negative side
+      val signedHosts = selectHist(out, float).filter(size(col("neg_idx")) > 0)
+        .collect().map(_.getAs[String]("host")).toSet
       assert(signedHosts == Set("h1", "h2", "h6"), k)
     }
   }

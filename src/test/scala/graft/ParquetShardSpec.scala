@@ -231,7 +231,7 @@ class ParquetShardSpec extends SparkSpec {
     // bytes the reference's chunkenc.FromData(enc=2, body) decodes
     val cell = spark.read.parquet(s"$hDir/0.chunks.parquet")
       .select("s_data_0").head().getAs[Array[Byte]](0)
-    val hFrames = graft.tsdb.HistChunkCodec.frames(cell)
+    val hFrames = graft.tsdb.ChunkCodec.frames(cell)
     assert(hFrames.forall(_._1 == 2L))
     for ((_, fmint, fmaxt, off, len) <- hFrames) {
       val c = graft.tsdb.block.ChunkencHistogram.decodeHistChunk(cell, off, len)
@@ -265,7 +265,7 @@ class ParquetShardSpec extends SparkSpec {
       "zero", "idx", "cnt", Some("hsum"), colDurationMs = hour)
     val fCell = spark.read.parquet(s"$fDir/0.chunks.parquet")
       .select("s_data_0").head().getAs[Array[Byte]](0)
-    val fFrames = graft.tsdb.HistChunkCodec.frames(fCell)
+    val fFrames = graft.tsdb.ChunkCodec.frames(fCell)
     assert(fFrames.forall(_._1 == 3L))
     for ((_, _, _, off, len) <- fFrames)
       assert(graft.tsdb.block.ChunkencHistogram
@@ -291,7 +291,7 @@ class ParquetShardSpec extends SparkSpec {
       samplesPerChunk = 120)
     val cell = spark.read.parquet(s"$p/0.chunks.parquet")
       .select("s_data_0").head().getAs[Array[Byte]](0)
-    val frames = graft.tsdb.HistChunkCodec.frames(cell)
+    val frames = graft.tsdb.ChunkCodec.frames(cell)
     assert(frames.length == 2, "the reset must cut a second chunk")
     val flags = frames.map { case (_, _, _, off, len) =>
       ChunkencHistogram.decodeHistChunk(cell, off, len).flags }
@@ -310,7 +310,7 @@ class ParquetShardSpec extends SparkSpec {
       samplesPerChunk = 120, gauge = true)
     val gCell = spark.read.parquet(s"$g/0.chunks.parquet")
       .select("s_data_0").head().getAs[Array[Byte]](0)
-    val gFrames = graft.tsdb.HistChunkCodec.frames(gCell)
+    val gFrames = graft.tsdb.ChunkCodec.frames(gCell)
     assert(gFrames.length == 1)
     assert(ChunkencHistogram.decodeHistChunk(gCell,
       gFrames.head._4, gFrames.head._5).flags == ChunkencHistogram.GaugeType)
@@ -331,7 +331,7 @@ class ParquetShardSpec extends SparkSpec {
       customValues = bounds, colDurationMs = hour)
     val cell = spark.read.parquet(s"$p/0.chunks.parquet")
       .select("s_data_0").head().getAs[Array[Byte]](0)
-    for ((_, _, _, off, len) <- graft.tsdb.HistChunkCodec.frames(cell)) {
+    for ((_, _, _, off, len) <- graft.tsdb.ChunkCodec.frames(cell)) {
       val c = ChunkencHistogram.decodeHistChunk(cell, off, len)
       assert(c.schema == ChunkencHistogram.CustomBucketsSchema)
       assert(c.customValues.toSeq == bounds)
@@ -418,7 +418,7 @@ class ParquetShardSpec extends SparkSpec {
     // the frame body carries REAL negative spans
     val cell = spark.read.parquet(s"$p/0.chunks.parquet")
       .select("s_data_0").head().getAs[Array[Byte]](0)
-    val (_, _, _, off, len) = graft.tsdb.HistChunkCodec.frames(cell).head
+    val (_, _, _, off, len) = graft.tsdb.ChunkCodec.frames(cell).head
     val c = ChunkencHistogram.decodeHistChunk(cell, off, len)
     assert(ChunkencHistogram.bucketIndexes(c.negSpans).toSeq == Seq(-2, 0))
     // count folds BOTH sides + zero
@@ -461,7 +461,7 @@ class ParquetShardSpec extends SparkSpec {
       negIdxCol = Some("nidx"), negCountsCol = Some("ncnt"))
     val cell3 = spark.read.parquet(s"$p3/0.chunks.parquet")
       .select("s_data_0").head().getAs[Array[Byte]](0)
-    val frames3 = graft.tsdb.HistChunkCodec.frames(cell3)
+    val frames3 = graft.tsdb.ChunkCodec.frames(cell3)
     assert(frames3.length == 2)
     assert(ChunkencHistogram.decodeHistChunk(cell3,
       frames3(1)._4, frames3(1)._5).flags == ChunkencHistogram.CounterReset)

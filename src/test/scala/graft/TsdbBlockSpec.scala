@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.tsdb.Matcher
+import graft.tsdb.{ChunkCodec, Matcher}
 import graft.tsdb.block.{TsdbBlockFormat => F, TsdbBlockStore}
 
 /** Pins the byte-level Prometheus TSDB block layout
@@ -35,8 +35,8 @@ class TsdbBlockSpec extends AnyFunSuite {
     val cases = (0 until 80).flatMap(i => sampleGen.apply(params, Seed(911L + i)))
     assert(cases.size >= 70)
     cases.foreach { case (ts, vs) =>
-      val enc = F.encodeXorChunk(ts, vs)
-      val (ts2, vs2) = F.decodeXorChunk(enc, 0, enc.length)
+      val enc = ChunkCodec.encodeChunk(ts, vs)
+      val (ts2, vs2) = ChunkCodec.decodeChunk(enc, 0, enc.length)
       assert(ts2.toSeq == ts.toSeq)
       assert(vs2.map(java.lang.Double.doubleToRawLongBits(_)).toSeq ==
         vs.map(java.lang.Double.doubleToRawLongBits(_)).toSeq)
@@ -44,7 +44,7 @@ class TsdbBlockSpec extends AnyFunSuite {
   }
 
   test("XOR chunk leads with a 2-byte big-endian sample count") {
-    val enc = F.encodeXorChunk(Array(1000L, 2000L, 3000L), Array(1.0, 2.0, 3.0))
+    val enc = ChunkCodec.encodeChunk(Array(1000L, 2000L, 3000L), Array(1.0, 2.0, 3.0))
     assert(((enc(0) & 0xff) << 8 | (enc(1) & 0xff)) == 3)
   }
 
@@ -54,8 +54,8 @@ class TsdbBlockSpec extends AnyFunSuite {
       val base = 2000000000L // large enough that base + dod stays ≥ 0
       val ts = Array(0L, base, base + base + dod)
       val vs = Array(1.0, 1.0, 1.0)
-      val enc = F.encodeXorChunk(ts, vs)
-      val (ts2, _) = F.decodeXorChunk(enc, 0, enc.length)
+      val enc = ChunkCodec.encodeChunk(ts, vs)
+      val (ts2, _) = ChunkCodec.decodeChunk(enc, 0, enc.length)
       assert(ts2.toSeq == ts.toSeq, s"dod=$dod")
     }
   }
@@ -195,7 +195,7 @@ class TsdbBlockSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_seg").toFile
     try {
       val w = new F.ChunkSegmentWriter(dir, segmentBytes = 64)
-      val data = F.encodeXorChunk(Array(0L, 1000L), Array(1.0, 2.0))
+      val data = ChunkCodec.encodeChunk(Array(0L, 1000L), Array(1.0, 2.0))
       val refs = (1 to 5).map(_ => w.append(data))
       w.close()
       // first chunk of each segment starts at offset 8 (post-header)
@@ -219,7 +219,7 @@ class TsdbBlockSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_segc").toFile
     try {
       val w = new F.ChunkSegmentWriter(dir)
-      val ref = w.append(F.encodeXorChunk(Array(0L, 1000L), Array(1.0, 2.0)))
+      val ref = w.append(ChunkCodec.encodeChunk(Array(0L, 1000L), Array(1.0, 2.0)))
       w.close()
       val f = new java.io.File(dir, "000001")
       val bytes = java.nio.file.Files.readAllBytes(f.toPath)

@@ -3,7 +3,7 @@ package graft.golden
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
-import graft.tsdb.{ChunkCodec, HistChunkCodec}
+import graft.tsdb.ChunkCodec
 import graft.tsdb.block.{ChunkencHistogram => CH, TsdbBlockFormat => F, TsdbBlockStore}
 
 /** Regression anchor against IMMUTABLE committed bytes
@@ -37,7 +37,6 @@ class GoldenBytesSpec extends AnyFunSuite {
     assert(GoldenData.advFloatHistChunkBytes.toSeq ==
       committed("adv_float_hist_chunk.bin").toSeq)
     assert(GoldenData.chunkBlobBytes.toSeq == committed("chunk_blob.bin").toSeq)
-    assert(GoldenData.histBlobBytes.toSeq == committed("hist_blob.bin").toSeq)
   }
 
   private def assertHistEqual(c: CH.HistChunk, e: CH.HistChunk): Unit = {
@@ -79,7 +78,7 @@ class GoldenBytesSpec extends AnyFunSuite {
 
   test("XOR chunk decodes from committed bytes") {
     val b = committed("xor_chunk.bin")
-    val (ts, vs) = F.decodeXorChunk(b, 0, b.length)
+    val (ts, vs) = ChunkCodec.decodeChunk(b, 0, b.length)
     assert(ts.toSeq == GoldenData.xorTs.toSeq)
     assert(raw(vs) == raw(GoldenData.xorVs))
   }
@@ -118,15 +117,6 @@ class GoldenBytesSpec extends AnyFunSuite {
       Long.MinValue, Long.MaxValue)
     assert(ts.toSeq == GoldenData.xorTs.toSeq)
     assert(raw(vs) == raw(GoldenData.xorVs))
-    val (s, schema) = HistChunkCodec.decodeBlob(committed("hist_blob.bin"),
-      Long.MinValue, Long.MaxValue)
-    val e = GoldenData.histSamples
-    assert(schema == 0)
-    assert(s.ts.toSeq == e.ts.toSeq)
-    assert(s.zero.toSeq == e.zero.toSeq)
-    assert(s.idx.map(_.toSeq).toSeq == e.idx.map(_.toSeq).toSeq)
-    assert(s.cnt.map(_.toSeq).toSeq == e.cnt.map(_.toSeq).toSeq)
-    assert(raw(s.sums) == raw(e.sums))
   }
 
   test("committed block dir resolves through the index reader") {

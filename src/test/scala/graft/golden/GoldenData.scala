@@ -1,6 +1,6 @@
 package graft.golden
 
-import graft.tsdb.{ChunkCodec, HistChunkCodec}
+import graft.tsdb.ChunkCodec
 import graft.tsdb.block.{ChunkencHistogram => CH, TsdbBlockFormat => F}
 
 /** The ONE definition of every golden fixture's content AND its
@@ -12,7 +12,9 @@ import graft.tsdb.block.{ChunkencHistogram => CH, TsdbBlockFormat => F}
   * reader(committed bytes) == values (reader drift) — so the codec
   * pair can never drift in lockstep unnoticed. Regenerate
   * deliberately with `Test/runMain graft.golden.GoldenGen` ONLY on
-  * an intentional, documented format change.
+  * an intentional, documented format change. `hist_blob.bin` is not
+  * regenerated: it is a cell in graft's retired histogram body
+  * layout, the old-layout sample `HistChunkCodecSpec` must reject.
   */
 object GoldenData {
 
@@ -25,7 +27,7 @@ object GoldenData {
   val xorVs: Array[Double] = Array(1.5, 1.5, 2.25, -0.0, Double.NaN,
     1e300, Double.MinPositiveValue, 42.0, 42.0, -17.125)
 
-  def xorChunkBytes: Array[Byte] = F.encodeXorChunk(xorTs, xorVs)
+  def xorChunkBytes: Array[Byte] = ChunkCodec.encodeChunk(xorTs, xorVs)
 
   // ---- chunkenc integer histogram chunk (encoding 2) ----
   val histChunk: CH.HistChunk = {
@@ -64,17 +66,6 @@ object GoldenData {
   // ---- graft parquet-cell blobs (the converted-layout cell format) ----
   def chunkBlobBytes: Array[Byte] =
     ChunkCodec.encodeBlob(xorTs, xorVs, samplesPerChunk = 4)
-
-  val histSamples: HistChunkCodec.Samples = HistChunkCodec.Samples(
-    ts = Array(1000L, 2000L, 3000L, 4500L),
-    zero = Array(0L, 2L, 2L, 5L),
-    idx = Array(Array(-1, 2), Array(-1, 2), Array(-1, 2, 5), Array(-1, 2, 5)),
-    cnt = Array(Array(3L, 4L), Array(4L, 6L), Array(4L, 7L, 1L),
-      Array(9L, 7L, 3L)),
-    sums = Array(0.25, 0.5, Double.NaN, 8.0))
-
-  def histBlobBytes: Array[Byte] =
-    HistChunkCodec.encodeBlob(histSamples, schema = 0, samplesPerChunk = 2)
 
   // ---- NHCB custom-bucket chunk (schema -53) ----
 
@@ -160,8 +151,8 @@ object GoldenData {
   def writeGoldenBlock(dir: java.io.File): Unit = {
     dir.mkdirs()
     val segs = new F.ChunkSegmentWriter(new java.io.File(dir, "chunks"))
-    val r1a = segs.append(F.encodeXorChunk(xorTs.take(5), xorVs.take(5)))
-    val r1b = segs.append(F.encodeXorChunk(xorTs.drop(5), xorVs.drop(5)))
+    val r1a = segs.append(ChunkCodec.encodeChunk(xorTs.take(5), xorVs.take(5)))
+    val r1b = segs.append(ChunkCodec.encodeChunk(xorTs.drop(5), xorVs.drop(5)))
     val r2 = segs.append(histChunkBytes, F.EncHistogram)
     segs.close()
     val series = Seq(
@@ -199,7 +190,7 @@ object GoldenData {
       val dir = new java.io.File(root, name)
       dir.mkdirs()
       val segs = new F.ChunkSegmentWriter(new java.io.File(dir, "chunks"))
-      val ref = segs.append(F.encodeXorChunk(ts, vs))
+      val ref = segs.append(ChunkCodec.encodeChunk(ts, vs))
       segs.close()
       val idxBytes = F.encodeIndex(Seq(F.SeriesEntry(
         Seq("__name__" -> "golden_tomb", "job" -> "api"),
@@ -335,7 +326,6 @@ object GoldenGen {
     put("adv_hist_chunk.bin", GoldenData.advHistChunkBytes)
     put("adv_float_hist_chunk.bin", GoldenData.advFloatHistChunkBytes)
     put("chunk_blob.bin", GoldenData.chunkBlobBytes)
-    put("hist_blob.bin", GoldenData.histBlobBytes)
     val block = new java.io.File(root, "block")
     if (block.exists()) graft.tools.Fs.deleteRecursively(block)
     GoldenData.writeGoldenBlock(block)
