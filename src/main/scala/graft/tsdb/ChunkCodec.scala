@@ -112,11 +112,20 @@ object ChunkCodec {
     def toBytes: Array[Byte] = java.util.Arrays.copyOf(buf, byteLen)
   }
 
+  /** Reads the bit stream of `bytes[start, end)`; a read past `end`
+    * (or past the array) throws a [[GraftFormatException]], so a chunk
+    * never decodes its neighbour's bytes. */
   private[tsdb] final class BitReader(bytes: Array[Byte], start: Int, end: Int) {
     private var pos = start
     private var bitPos = 0
+    private val limit = math.min(end, bytes.length)
+
+    private def overrun(bits: Int): Nothing =
+      throw new GraftFormatException("chunk", s"the chunk body at byte $start " +
+        s"reads $bits bits past its ${end - start}-byte bound")
 
     def readBit(): Boolean = {
+      if (pos >= limit) overrun(1)
       val b = ((bytes(pos) >> (7 - bitPos)) & 1) != 0
       bitPos += 1
       if (bitPos == 8) { bitPos = 0; pos += 1 }
@@ -124,6 +133,8 @@ object ChunkCodec {
     }
 
     def readBits(n: Int): Long = {
+      if (pos + ((bitPos + n + 7) >> 3) > limit)
+        overrun(bitPos + n - (limit - pos) * 8)
       var v = 0L
       var remaining = n
       while (remaining > 0) {
@@ -350,6 +361,22 @@ object ChunkCodec {
     x | ((b & 0x7fL) << shift)
   }
 
+  /** Decodes the body of the frame at `frameStart` of `blob`, the
+    * `size` bytes from `bodyStart`: a body that runs past the blob, or
+    * a chunk that reads past its body, throws naming the frame. */
+  private[tsdb] def frameBody[T](blob: Array[Byte], frameStart: Int,
+      bodyStart: Int, size: Int)(decode: => T): T = {
+    if (size < 0 || bodyStart.toLong + size > blob.length)
+      throw new GraftFormatException("chunk blob", s"the frame at byte " +
+        s"$frameStart declares a $size-byte body past the blob's " +
+        s"${blob.length} bytes")
+    try decode catch {
+      case e: GraftFormatException if e.source == "chunk" =>
+        throw new GraftFormatException("chunk blob",
+          s"the frame at byte $frameStart: ${e.getMessage}")
+    }
+  }
+
   /** A frame ordinal outside the chunkenc triple is corruption: throw
     * naming the offset of the frame that carries it. */
   private[tsdb] def requireKnown(enc: Long, frameStart: Int): Unit =
@@ -401,7 +428,8 @@ object ChunkCodec {
       val bodyStart = pos(0)
       pos(0) = bodyStart + size
       if (enc == EncXor && mint <= qmaxt && maxt >= qmint) {
-        val (ct, cv) = decodeChunk(blob, bodyStart, size)
+        val (ct, cv) = frameBody(blob, frameStart, bodyStart, size)(
+          decodeChunk(blob, bodyStart, size))
         if (n + ct.length > outT.length) {
           val cap = math.max(outT.length * 2, n + ct.length)
           outT = java.util.Arrays.copyOf(outT, cap)

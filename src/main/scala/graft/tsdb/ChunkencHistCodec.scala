@@ -164,7 +164,8 @@ object ChunkencHistCodec {
       pos(0) = bodyStart + size
       if (enc == ChunkCodec.EncHistogram) {
         if (mint <= qmaxt && maxt >= qmint) {
-          val c = ChunkencHistogram.decodeHistChunk(blob, bodyStart, size)
+          val c = ChunkCodec.frameBody(blob, frameStart, bodyStart, size)(
+            ChunkencHistogram.decodeHistChunk(blob, bodyStart, size))
           val union = ChunkencHistogram.bucketIndexes(c.posSpans)
           val nUnion = ChunkencHistogram.bucketIndexes(c.negSpans)
           val cv = new GenericArrayData(c.customValues)
@@ -277,7 +278,8 @@ object ChunkencHistCodec {
       pos(0) = bodyStart + size
       if (enc == ChunkCodec.EncFloatHistogram) {
         if (mint <= qmaxt && maxt >= qmint) {
-          val c = ChunkencHistogram.decodeFloatHistChunk(blob, bodyStart, size)
+          val c = ChunkCodec.frameBody(blob, frameStart, bodyStart, size)(
+            ChunkencHistogram.decodeFloatHistChunk(blob, bodyStart, size))
           val union = ChunkencHistogram.bucketIndexes(c.posSpans)
           val nUnion = ChunkencHistogram.bucketIndexes(c.negSpans)
           val cv = new GenericArrayData(c.customValues)

@@ -2,8 +2,12 @@ package graft.tsdb.block
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.SqlBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.tsdb.{ChunkCodec, Matcher}
 import TsdbBlockFormat._
@@ -784,24 +788,18 @@ object TsdbBlockStore {
   def readLabels(spark: SparkSession, root: String,
       labelCols: Seq[String], mint: Long = Long.MinValue,
       maxt: Long = Long.MaxValue, matchers: Seq[Matcher] = Nil,
-      shardsPerBlock: Int = 1): DataFrame = {
-    val cols = labelCols.toIndexedSeq
-    val rdd = taskRdd(spark, root, mint, maxt, shardsPerBlock,
-      matchers) { case (dir, shard, nShards, ms) =>
-      readBlockSeriesWith(dir, mint, maxt, ms, shard, nShards,
-        xorDecoder(mint, maxt))
-        .flatMap { case (labelMap, samples) =>
-          val proj = projectLabels(labelMap, cols)
-          samples.map { case (ts, v) =>
-            org.apache.spark.sql.Row.fromSeq(proj :+ ts :+ v)
-          }
-        }
-    }
-    val schema = StructType(
-      cols.map(c => StructField(c, StringType, nullable = false)) :+
-        StructField("ts", LongType, nullable = false) :+
-        StructField("value", DoubleType, nullable = false))
-    spark.createDataFrame(rdd, schema)
+      shardsPerBlock: Int = 1): DataFrame =
+    sampleFrame(spark, root, labelCols, mint, maxt, matchers,
+      shardsPerBlock, xorFields(mint, maxt), XorTail)
+
+  private val XorTail = Seq(
+    StructField("ts", LongType, nullable = false),
+    StructField("value", DoubleType, nullable = false))
+
+  private def xorFields(mint: Long, maxt: Long): ChunkDecoder[Array[Any]] = {
+    val decode = xorDecoder(mint, maxt)
+    (enc, data, deleted) =>
+      decode(enc, data, deleted).map { case (ts, v) => Array[Any](ts, v) }
   }
 
   /** Read every INTEGER native-histogram sample matching `matchers`
@@ -820,69 +818,70 @@ object TsdbBlockStore {
   def readHistLabels(spark: SparkSession, root: String,
       labelCols: Seq[String], mint: Long = Long.MinValue,
       maxt: Long = Long.MaxValue, matchers: Seq[Matcher] = Nil,
-      shardsPerBlock: Int = 1, withResetHint: Boolean = false): DataFrame = {
-    val cols = labelCols.toIndexedSeq
-    val rdd = taskRdd(spark, root, mint, maxt, shardsPerBlock,
-      matchers) { case (dir, shard, nShards, ms) =>
-      readBlockSeriesWith(dir, mint, maxt, ms, shard, nShards,
-        histDecoder(mint, maxt, withResetHint))
-        .flatMap { case (labelMap, samples) =>
-          val proj = projectLabels(labelMap, cols)
-          samples.map(tail => org.apache.spark.sql.Row.fromSeq(proj ++ tail))
-        }
-    }
-    val schema = StructType(
-      cols.map(c => StructField(c, StringType, nullable = false)) ++ Seq(
-        StructField("ts", LongType, nullable = false),
-        StructField("schema", IntegerType, nullable = false),
-        StructField("zero_count", LongType, nullable = false),
-        StructField("pos_idx", ArrayType(IntegerType, false), nullable = false),
-        StructField("pos_counts", ArrayType(LongType, false), nullable = false),
-        StructField("hist_sum", DoubleType, nullable = false),
-        StructField("custom_values", ArrayType(DoubleType, false),
-          nullable = false),
-        StructField("neg_idx", ArrayType(IntegerType, false), nullable = false),
-        StructField("neg_counts", ArrayType(LongType, false),
-          nullable = false)) ++
-      (if (withResetHint)
-        Seq(StructField("reset_hint", StringType, nullable = false))
-      else Nil))
-    spark.createDataFrame(rdd, schema)
-  }
+      shardsPerBlock: Int = 1, withResetHint: Boolean = false): DataFrame =
+    sampleFrame(spark, root, labelCols, mint, maxt, matchers,
+      shardsPerBlock, histDecoder(mint, maxt, withResetHint),
+      histTail(LongType, withResetHint))
+
+  /** The sample fields of [[readHistLabels]] (`count` = LongType) and
+    * [[readFloatHistLabels]] (DoubleType), in [[histDecoder]]'s order. */
+  private def histTail(count: DataType, withResetHint: Boolean): Seq[StructField] =
+    Seq(
+      StructField("ts", LongType, nullable = false),
+      StructField("schema", IntegerType, nullable = false),
+      StructField("zero_count", count, nullable = false),
+      StructField("pos_idx", ArrayType(IntegerType, false), nullable = false),
+      StructField("pos_counts", ArrayType(count, false), nullable = false),
+      StructField("hist_sum", DoubleType, nullable = false),
+      StructField("custom_values", ArrayType(DoubleType, false),
+        nullable = false),
+      StructField("neg_idx", ArrayType(IntegerType, false), nullable = false),
+      StructField("neg_counts", ArrayType(count, false), nullable = false)) ++
+    (if (withResetHint)
+      Seq(StructField("reset_hint", StringType, nullable = false))
+    else Nil)
 
   /** [[readHistLabels]] for FLOAT histogram chunks (encoding 3):
     * `zero_count` and `pos_counts`/`neg_counts` are doubles. */
   def readFloatHistLabels(spark: SparkSession, root: String,
       labelCols: Seq[String], mint: Long = Long.MinValue,
       maxt: Long = Long.MaxValue, matchers: Seq[Matcher] = Nil,
-      shardsPerBlock: Int = 1, withResetHint: Boolean = false): DataFrame = {
+      shardsPerBlock: Int = 1, withResetHint: Boolean = false): DataFrame =
+    sampleFrame(spark, root, labelCols, mint, maxt, matchers,
+      shardsPerBlock, floatHistDecoder(mint, maxt, withResetHint),
+      histTail(DoubleType, withResetHint))
+
+  /** The one row builder of the block readers: one Catalyst row per
+    * decoded sample — `blockCol`, when given, the block's dir name;
+    * then one string per label in `labelCols` (absent label → ""),
+    * converted once per series; then `decode`'s fields for the sample,
+    * already Catalyst values, typed by `tail`. Same narrow plan as
+    * [[taskRdd]]. The rows skip `createDataFrame`'s `Row` encoder and
+    * its per-sample conversion. */
+  private def sampleFrame(spark: SparkSession, root: String,
+      labelCols: Seq[String], mint: Long, maxt: Long, matchers: Seq[Matcher],
+      shardsPerBlock: Int, decode: ChunkDecoder[Array[Any]],
+      tail: Seq[StructField], blockCol: Option[String] = None): DataFrame = {
     val cols = labelCols.toIndexedSeq
+    val lead = blockCol.size
     val rdd = taskRdd(spark, root, mint, maxt, shardsPerBlock,
       matchers) { case (dir, shard, nShards, ms) =>
-      readBlockSeriesWith(dir, mint, maxt, ms, shard, nShards,
-        floatHistDecoder(mint, maxt, withResetHint))
+      val block: Any = UTF8String.fromString(dir.getName)
+      readBlockSeriesWith(dir, mint, maxt, ms, shard, nShards, decode)
         .flatMap { case (labelMap, samples) =>
-          val proj = projectLabels(labelMap, cols)
-          samples.map(tail => org.apache.spark.sql.Row.fromSeq(proj ++ tail))
+          val labels = cols.map(c =>
+            UTF8String.fromString(labelMap.getOrElse(c, ""))).toArray[Any]
+          samples.map { fields =>
+            val v = new Array[Any](lead + labels.length + fields.length)
+            if (lead > 0) v(0) = block
+            System.arraycopy(labels, 0, v, lead, labels.length)
+            System.arraycopy(fields, 0, v, lead + labels.length, fields.length)
+            new GenericInternalRow(v): InternalRow
+          }
         }
     }
-    val schema = StructType(
-      cols.map(c => StructField(c, StringType, nullable = false)) ++ Seq(
-        StructField("ts", LongType, nullable = false),
-        StructField("schema", IntegerType, nullable = false),
-        StructField("zero_count", DoubleType, nullable = false),
-        StructField("pos_idx", ArrayType(IntegerType, false), nullable = false),
-        StructField("pos_counts", ArrayType(DoubleType, false), nullable = false),
-        StructField("hist_sum", DoubleType, nullable = false),
-        StructField("custom_values", ArrayType(DoubleType, false),
-          nullable = false),
-        StructField("neg_idx", ArrayType(IntegerType, false), nullable = false),
-        StructField("neg_counts", ArrayType(DoubleType, false),
-          nullable = false)) ++
-      (if (withResetHint)
-        Seq(StructField("reset_hint", StringType, nullable = false))
-      else Nil))
-    spark.createDataFrame(rdd, schema)
+    SqlBridge.dataFrame(spark, rdd, StructType(
+      (blockCol.toSeq ++ cols).map(StructField(_, StringType, nullable = false)) ++ tail))
   }
 
   /** One narrow task per (block, shard): resolve the overlapping
@@ -908,10 +907,6 @@ object TsdbBlockStore {
       }
   }
 
-  private def projectLabels(labelMap: Map[String, String],
-      cols: IndexedSeq[String]): Vector[Any] =
-    cols.iterator.map(c => labelMap.getOrElse(c, "")).toVector
-
   /** Vertical compaction (the Prometheus compactor's overlapping-
     * block merge) for FLOAT samples: read every block under `root`,
     * deduplicate exact (series, ts) collisions — the sample from
@@ -925,23 +920,10 @@ object TsdbBlockStore {
   def compact(spark: SparkSession, root: String, outRoot: String,
       labelCols: Seq[String], blockDurationMs: Long = 2 * 3600 * 1000L,
       shardsPerBlock: Int = 1): Seq[String] = {
-    import spark.implicits._
     val cols = labelCols.toIndexedSeq
-    val rdd = taskRdd(spark, root, Long.MinValue, Long.MaxValue,
-      shardsPerBlock, Nil) { case (dir, shard, nShards, ms) =>
-      val block = dir.getName
-      readBlockSeriesWith(dir, Long.MinValue, Long.MaxValue, ms,
-        shard, nShards, xorDecoder(Long.MinValue, Long.MaxValue))
-        .flatMap { case (labelMap, samples) =>
-          samples.map { case (ts, v) =>
-            (block, cols.map(c => labelMap.getOrElse(c, "")), ts, v)
-          }
-        }
-    }
-    val flat = rdd.toDF("_ulid", "_ls", "ts", "value")
-      .select((cols.zipWithIndex.map { case (c, i) =>
-        col("_ls")(i).as(c) } :+ col("_ulid") :+ col("ts") :+
-        col("value")): _*)
+    val flat = sampleFrame(spark, root, cols, Long.MinValue, Long.MaxValue,
+      Nil, shardsPerBlock, xorFields(Long.MinValue, Long.MaxValue), XorTail,
+      blockCol = Some("_ulid"))
     // (_ulid, value) as the max_by key: duplicate (series, ts)
     // samples WITHIN one block tie on _ulid alone and max_by would
     // pick arbitrarily — the value tiebreak keeps compaction
@@ -966,37 +948,14 @@ object TsdbBlockStore {
   def compactHist(spark: SparkSession, root: String, outRoot: String,
       labelCols: Seq[String], blockDurationMs: Long = 2 * 3600 * 1000L,
       shardsPerBlock: Int = 1, gauge: Boolean = false): Seq[String] = {
-    import spark.implicits._
     val cols = labelCols.toIndexedSeq
-    val rdd = taskRdd(spark, root, Long.MinValue, Long.MaxValue,
-      shardsPerBlock, Nil) { case (dir, shard, nShards, ms) =>
-      val block = dir.getName
-      readBlockSeriesWith(dir, Long.MinValue, Long.MaxValue, ms,
-        shard, nShards,
-        histDecoder(Long.MinValue, Long.MaxValue, withHint = true))
-        .flatMap { case (labelMap, samples) =>
-          samples.map { tail =>
-            (block, cols.map(c => labelMap.getOrElse(c, "")),
-              tail(0).asInstanceOf[Long], tail(1).asInstanceOf[Int],
-              tail(2).asInstanceOf[Long],
-              tail(3).asInstanceOf[Vector[Int]],
-              tail(4).asInstanceOf[Vector[Long]],
-              tail(5).asInstanceOf[Double],
-              tail(6).asInstanceOf[Vector[Double]],
-              tail(7).asInstanceOf[Vector[Int]],
-              tail(8).asInstanceOf[Vector[Long]],
-              tail(9).asInstanceOf[String])
-          }
-        }
-    }
-    val flat = rdd
-      .toDF("_ulid", "_ls", "ts", "schema", "zero", "idx", "cnt",
-        "hsum", "_cv", "nidx", "ncnt", "hint")
-      .select((cols.zipWithIndex.map { case (c, i) =>
-        col("_ls")(i).as(c) } :+ col("_ulid") :+ col("ts") :+
-        col("schema") :+ col("zero") :+ col("idx") :+ col("cnt") :+
-        col("hsum") :+ col("_cv") :+ col("nidx") :+ col("ncnt") :+
-        col("hint")): _*)
+    val flat = sampleFrame(spark, root, cols, Long.MinValue, Long.MaxValue,
+      Nil, shardsPerBlock,
+      histDecoder(Long.MinValue, Long.MaxValue, withHint = true),
+      histTail(LongType, withResetHint = true), blockCol = Some("_ulid"))
+      .withColumnsRenamed(Map("zero_count" -> "zero", "pos_idx" -> "idx",
+        "pos_counts" -> "cnt", "hist_sum" -> "hsum", "custom_values" -> "_cv",
+        "neg_idx" -> "nidx", "neg_counts" -> "ncnt", "reset_hint" -> "hint"))
     val schemas = flat.select(col("schema")).distinct().limit(2)
       .collect().map(_.getInt(0))
     if (schemas.isEmpty) return Nil
@@ -1154,36 +1113,38 @@ object TsdbBlockStore {
     * [reset_hint when `withHint`] — appended LAST so positional
     * consumers stay stable). */
   private def histDecoder(mint: Long, maxt: Long,
-      withHint: Boolean = false): ChunkDecoder[Vector[Any]] = {
+      withHint: Boolean = false): ChunkDecoder[Array[Any]] = {
     case (EncHistogram, data, deleted) =>
       val c = ChunkencHistogram.decodeHistChunk(data, 0, data.length)
-      val idx = ChunkencHistogram.bucketIndexes(c.posSpans).toVector
-      val nidx = ChunkencHistogram.bucketIndexes(c.negSpans).toVector
-      val cv = c.customValues.toVector
+      val idx = ArrayData.toArrayData(ChunkencHistogram.bucketIndexes(c.posSpans))
+      val nidx = ArrayData.toArrayData(ChunkencHistogram.bucketIndexes(c.negSpans))
+      val cv = ArrayData.toArrayData(c.customValues)
       c.ts.indices.iterator
         .filter(i => keepTs(c.ts(i), mint, maxt, deleted))
-        .map(i => Vector[Any](c.ts(i), c.schema, c.zeroCount(i),
-          idx, c.posBuckets(i).toVector, c.sum(i), cv,
-          nidx, c.negBuckets(i).toVector) ++
-          (if (withHint) Vector(sampleHint(c.flags, i)) else Vector.empty))
+        .map(i => Array[Any](c.ts(i), c.schema, c.zeroCount(i),
+          idx, ArrayData.toArrayData(c.posBuckets(i)), c.sum(i), cv,
+          nidx, ArrayData.toArrayData(c.negBuckets(i))) ++
+          (if (withHint) Array[Any](UTF8String.fromString(sampleHint(c.flags, i)))
+           else Array.empty[Any]))
     case (EncXOR, _, _) | (EncFloatHistogram, _, _) => Iterator.empty
     case (enc, _, _) =>
       throw new IllegalArgumentException(s"unsupported chunk encoding $enc")
   }
 
   private def floatHistDecoder(mint: Long, maxt: Long,
-      withHint: Boolean = false): ChunkDecoder[Vector[Any]] = {
+      withHint: Boolean = false): ChunkDecoder[Array[Any]] = {
     case (EncFloatHistogram, data, deleted) =>
       val c = ChunkencHistogram.decodeFloatHistChunk(data, 0, data.length)
-      val idx = ChunkencHistogram.bucketIndexes(c.posSpans).toVector
-      val nidx = ChunkencHistogram.bucketIndexes(c.negSpans).toVector
-      val cv = c.customValues.toVector
+      val idx = ArrayData.toArrayData(ChunkencHistogram.bucketIndexes(c.posSpans))
+      val nidx = ArrayData.toArrayData(ChunkencHistogram.bucketIndexes(c.negSpans))
+      val cv = ArrayData.toArrayData(c.customValues)
       c.ts.indices.iterator
         .filter(i => keepTs(c.ts(i), mint, maxt, deleted))
-        .map(i => Vector[Any](c.ts(i), c.schema, c.zeroCount(i),
-          idx, c.posBuckets(i).toVector, c.sum(i), cv,
-          nidx, c.negBuckets(i).toVector) ++
-          (if (withHint) Vector(sampleHint(c.flags, i)) else Vector.empty))
+        .map(i => Array[Any](c.ts(i), c.schema, c.zeroCount(i),
+          idx, ArrayData.toArrayData(c.posBuckets(i)), c.sum(i), cv,
+          nidx, ArrayData.toArrayData(c.negBuckets(i))) ++
+          (if (withHint) Array[Any](UTF8String.fromString(sampleHint(c.flags, i)))
+           else Array.empty[Any]))
     case (EncXOR, _, _) | (EncHistogram, _, _) => Iterator.empty
     case (enc, _, _) =>
       throw new IllegalArgumentException(s"unsupported chunk encoding $enc")

@@ -16,8 +16,8 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.graft.{ColumnBridge, SqlBridge}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.functions.{ChunkDecode, HistChunkExpressions, MergeSampleRuns, QueryConst}
 import graft.tsdb.{ChunkCodec, ChunkencHistCodec, Matcher}
@@ -38,12 +38,17 @@ import ParquetShardSchema._
   * range-repartition into `shards` by the sort labels. The front half
   * of [[mergeShards]]/[[mergeShardsHist]] range-repartitions the
   * inputs' series rows instead and merges them per series. The tail
-  * takes the arranged series rows: each task re-encodes its series'
-  * samples into per-window chunk frames ([[graft.tsdb.ChunkCodec]],
-  * the same codec the chunk gates pin bit-exactly, or the chunkenc
-  * histogram codecs) and streams TWO row-aligned parquet files
-  * through parquet-java. Imperative per-partition IO is justified
-  * the same way as the TSDB block writer: the dual-file
+  * takes the arranged series rows and the footer bounds (minT, maxT)
+  * as values, which the front half gets from work it already does: a
+  * write from one action over the arranged series, whose shuffle
+  * outputs the write reuses, so the input is read and decoded once; a
+  * merge of graft-written inputs from their footers. Each task
+  * re-encodes its series' samples into per-window chunk frames
+  * ([[graft.tsdb.ChunkCodec]], the same codec the chunk gates pin
+  * bit-exactly, or the chunkenc histogram codecs) and streams TWO
+  * row-aligned parquet files through parquet-java, all in one SQL
+  * execution of the arranged series. Imperative per-partition IO is
+  * justified the same way as the TSDB block writer: the dual-file
   * row-alignment contract and footer key-value metadata are file-
   * format mechanics no Catalyst operator expresses.
   *
@@ -127,14 +132,11 @@ object ParquetShardStore {
       bloomFilterLabels: Seq[String] = Nil): Unit =
     writeImpl(df, dir, labelCols, tsCol,
       ts => struct(ts.as("ts"), col(valueCol).cast("double").as("value")),
-      sampleFields = 2, colDurationMs, shards, rowGroupSize,
-      bloomFilterLabels, xorEncoder(samplesPerChunk), XorFamily)
+      colDurationMs, shards, rowGroupSize, bloomFilterLabels,
+      xorEncoder(samplesPerChunk), XorFamily)
 
   private val XorFamily = 1 << ChunkCodec.EncXor.toInt
   private val HistFamily = 1 << ChunkCodec.EncHistogram.toInt
-  /** Fields of [[writeHist]]'s sample struct: ts, zero, idx, cnt, sum,
-    * nidx, ncnt. */
-  private val HistSampleFields = 7
 
   private def xorEncoder(samplesPerChunk: Int): ArrayData => Array[Byte] =
     slice => ChunkCodec.encodeArrayData(slice, samplesPerChunk)
@@ -180,8 +182,7 @@ object ParquetShardStore {
       negCountsCol: Option[String] = None): Unit =
     writeImpl(df, dir, labelCols, tsCol, histSample(float = false, zeroCol,
         idxCol, cntCol, sumCol, customValues, negIdxCol, negCountsCol),
-      HistSampleFields, colDurationMs, shards, rowGroupSize,
-      bloomFilterLabels,
+      colDurationMs, shards, rowGroupSize, bloomFilterLabels,
       histEncoder(float = false, histSchema, samplesPerChunk, customValues,
         gauge), HistFamily)
 
@@ -200,8 +201,7 @@ object ParquetShardStore {
       negCountsCol: Option[String] = None): Unit =
     writeImpl(df, dir, labelCols, tsCol, histSample(float = true, zeroCol,
         idxCol, cntCol, sumCol, customValues, negIdxCol, negCountsCol),
-      HistSampleFields, colDurationMs, shards, rowGroupSize,
-      bloomFilterLabels,
+      colDurationMs, shards, rowGroupSize, bloomFilterLabels,
       histEncoder(float = true, histSchema, samplesPerChunk, customValues, gauge),
       1 << ChunkCodec.EncFloatHistogram.toInt)
 
@@ -217,8 +217,9 @@ object ParquetShardStore {
     * shuffle (groupBy labels → each series' samples as ONE sorted
     * array of sample structs, field 0 the ms timestamp), arranged into
     * shards ([[byShard]], then sorted by the labels within each), with
-    * the footer bounds as a sample-grain min/max over `df` — then
-    * [[writeSeries]].
+    * the footer bounds read off the arranged series ([[sampleBounds]])
+    * — then [[writeSeries]], which reuses that action's shuffle
+    * outputs.
     *
     * SCOPE: a shard conversion is per-BLOCK, like the reference's
     * `ConvertTSDBBlock` — the input df covers one bounded time range
@@ -233,21 +234,60 @@ object ParquetShardStore {
     * (`customValues`), gauge — all as real chunkenc frame bodies.
     */
   private def writeImpl(df: DataFrame, dir: String, labelCols: Seq[String],
-      tsCol: String, sample: Column => Column, sampleFields: Int,
-      colDurationMs: Long, shards: Int, rowGroupSize: Long,
-      bloomFilterLabels: Seq[String], encodeSlice: ArrayData => Array[Byte],
-      familyMask: Int): Unit = {
-    val tsMs = unix_millis(col(tsCol).cast("timestamp"))
+      tsCol: String, sample: Column => Column, colDurationMs: Long,
+      shards: Int, rowGroupSize: Long, bloomFilterLabels: Seq[String],
+      encodeSlice: ArrayData => Array[Byte], familyMask: Int): Unit = {
     val series = df
-      .withColumn("_ts_ms", tsMs)
       .groupBy(labelCols.map(c => col(c).cast("string").as(c)): _*)
-      .agg(sort_array(collect_list(sample(col("_ts_ms")))).as("_samples"))
-    writeSeries(
-      byShard(series, labelCols, shards)
-        .sortWithinPartitions(labelCols.map(col): _*),
-      df.agg(min(tsMs), max(tsMs)), dir, labelCols, sampleFields,
-      colDurationMs, rowGroupSize, bloomFilterLabels, encodeSlice, familyMask)
+      .agg(sort_array(collect_list(
+        sample(unix_millis(col(tsCol).cast("timestamp"))))).as("_samples"))
+    val arranged = byShard(series, labelCols, shards)
+      .sortWithinPartitions(labelCols.map(col): _*)
+    writing(arranged) {
+      val (mintMs, maxtMs) = sampleBounds(arranged)
+      writeSeries(arranged, mintMs, maxtMs, dir, labelCols, colDurationMs, rowGroupSize, bloomFilterLabels, encodeSlice, familyMask)
+    }
   }
+
+  /** Runs `write` — the write tail over `series`, and the bounds
+    * action before it, if any — as ONE SQL execution of `series`' plan,
+    * so their jobs group under one query and the plan is posted like
+    * any action's. */
+  private def writing(series: DataFrame)(write: => Unit): Unit =
+    SqlBridge.withExecution(series, "write shards")(write)
+
+  /** (mint, maxt) of an arranged series frame: its arrays' first and
+    * last timestamps (a null timestamp counts for neither, as in a
+    * min/max). One action over `series.queryExecution.toRdd`, the RDD
+    * [[writeSeries]] then writes, so the write reuses this action's
+    * shuffle outputs instead of reading and decoding the input again.
+    * Refuses a frame with no sample. */
+  private def sampleBounds(series: DataFrame): (Long, Long) = {
+    val at = series.schema.length - 1
+    val fields = sampleFields(series)
+    val bounds = series.queryExecution.toRdd.mapPartitions { rows =>
+      var (lo, hi) = (Long.MaxValue, Long.MinValue)
+      rows.foreach { row =>
+        val samples = row.getArray(at)
+        var (i, j) = (0, samples.numElements() - 1)
+        while (i <= j && samples.getStruct(i, fields).isNullAt(0)) i += 1
+        while (j >= i && samples.getStruct(j, fields).isNullAt(0)) j -= 1
+        if (i <= j) {
+          lo = math.min(lo, samples.getStruct(i, fields).getLong(0))
+          hi = math.max(hi, samples.getStruct(j, fields).getLong(0))
+        }
+      }
+      if (lo <= hi) Iterator.single((lo, hi)) else Iterator.empty
+    }.collect().reduceOption((a, b) => (math.min(a._1, b._1), math.max(a._2, b._2)))
+    require(bounds.nonEmpty, "cannot write an empty shard set")
+    bounds.get
+  }
+
+  /** Fields of the sample structs in a series frame's `_samples`, its
+    * last column. */
+  private def sampleFields(series: DataFrame): Int =
+    series.schema.last.dataType.asInstanceOf[ArrayType]
+      .elementType.asInstanceOf[StructType].length
 
   /** The converter's shard layout (convert/convert.go:366): range-
     * partition into `shards` by the sort labels, so partition i is
@@ -260,27 +300,26 @@ object ParquetShardStore {
   }
 
   /** The series-grain back half shared by every write and every
-    * merge. `series` holds `labelCols` (strings, null = absent label)
-    * + `_samples`, one row per series, its samples sorted by the ms
-    * timestamp in field 0; it is already arranged: partition i holds
-    * shard i's series ([[byShard]]), sorted by the labels. `bounds` is
-    * a one-row (mint, maxt) frame — a sample-grain min/max for
-    * [[write]], the arrays' first and last timestamps
-    * ([[seriesBounds]]) for a merge. Each shard task splits every
-    * series' samples into per-window slices, encodes each with the
-    * family's codec, and streams the two row-aligned files.
+    * merge. `series` is exactly `labelCols` (strings, null = absent
+    * label) + `_samples`, one row per series, its samples sorted by
+    * the ms timestamp in field 0; it is already arranged: partition i
+    * holds shard i's series ([[byShard]]), sorted by the labels.
+    * `mintMs`/`maxtMs` are the exact sample bounds, which size the
+    * `s_data_<i>` grid and go into the footers: a write reads them off
+    * `series` itself ([[sampleBounds]]), a merge of graft-written
+    * inputs from their footers. Each shard task splits every series'
+    * samples into per-window slices, encodes each with the family's
+    * codec, and streams the two row-aligned files.
     */
-  private def writeSeries(series: DataFrame, bounds: DataFrame, dir: String,
-      labelCols: Seq[String], sampleFields: Int, colDurationMs: Long,
-      rowGroupSize: Long, bloomFilterLabels: Seq[String],
+  private def writeSeries(series: DataFrame, mintMs: Long, maxtMs: Long,
+      dir: String, labelCols: Seq[String], colDurationMs: Long, rowGroupSize: Long, bloomFilterLabels: Seq[String],
       encodeSlice: ArrayData => Array[Byte], familyMask: Int): Unit = {
     require(bloomFilterLabels.forall(labelCols.contains),
       s"bloomFilterLabels must be a subset of labelCols")
+    require(series.columns.toSeq == labelCols :+ "_samples",
+      s"series columns ${series.columns.mkString(", ")} are not the labels + _samples")
     val spark = series.sparkSession
-    val Array(mm) = bounds.collect()
-    require(!mm.isNullAt(0), "cannot write an empty shard set")
-    val mintMs = mm.getLong(0)
-    val maxtMs = mm.getLong(1)
+    val fields = sampleFields(series)
     require(mintMs >= 0,
       "pre-epoch samples are unrepresentable in the reference's " +
         "uvarint frame headers (schema/encoder.go Encode)")
@@ -292,7 +331,6 @@ object ParquetShardStore {
       MinTMd -> mintMs.toString,
       MaxTMd -> maxtMs.toString,
       FamilyMaskMd -> familyMask.toString)
-    val grouped = series.select((labelCols.map(col) :+ col("_samples")): _*)
 
     // Hadoop FS, not java.nio: the dir may be hdfs://-style at scale.
     // Clean the PREVIOUS generation's shard files first — a rewrite
@@ -310,10 +348,10 @@ object ParquetShardStore {
       else fs.mkdirs(root)
     }
     val nLabels = labelCols.length
-    val labelOrder = labelCols.toIndexedSeq // field positions in `grouped`
+    val labelOrder = labelCols.toIndexedSeq // field positions in `series`
     val serializableConf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
-    grouped.queryExecution.toRdd.mapPartitionsWithIndex { (shard, rows) =>
+    series.queryExecution.toRdd.mapPartitionsWithIndex { (shard, rows) =>
       val conf = serializableConf.value
       val labelsWriter = new ShardFileWriter(
         s"$dir/$shard.labels.parquet", labelsSchema(labelNamesSorted),
@@ -343,7 +381,7 @@ object ParquetShardStore {
           val samples = row.getArray(nLabels)
           val n = samples.numElements()
           val blobs = new Array[Array[Byte]](nCols)
-          def tsAt(i: Int): Long = samples.getStruct(i, sampleFields).getLong(0)
+          def tsAt(i: Int): Long = samples.getStruct(i, fields).getLong(0)
           var start = 0
           while (start < n) {
             val ci = dataColumnIdx(tsAt(start), mintMs, colDurationMs)
@@ -352,7 +390,7 @@ object ParquetShardStore {
                 dataColumnIdx(tsAt(end), mintMs, colDurationMs) == ci) end += 1
             val slice = new GenericArrayData(
               (start until end).map(i =>
-                samples.getStruct(i, sampleFields).copy()).toArray[Any])
+                samples.getStruct(i, fields).copy()).toArray[Any])
             blobs(ci) = encodeSlice(slice)
             start = end
           }
@@ -641,23 +679,28 @@ object ParquetShardStore {
     * several samples of a series at one ts (a [[write]] of duplicate
     * rows keeps them all) contributes its LAST one in stored order.
     * Both rules depend only on the files, never on partitioning. The
-    * series-sized merge result is checkpointed once, since the tail
-    * reads it twice (bounds, then the encode).
+    * output's footer bounds are the inputs' ([[MergeInputs.bounds]]),
+    * so the tail reads the merged series once, with no checkpoint;
+    * only inputs a graft writer did not write make the bounds one more
+    * action over the merged series ([[sampleBounds]]).
     */
   def mergeShards(spark: SparkSession, dirs: Seq[String], outDir: String,
       colDurationMs: Long = DefaultColDurationMs,
       samplesPerChunk: Int = 120, shards: Int = 1,
       bloomFilterLabels: Seq[String] = Nil): Unit = {
-    val (names, runs) = shardInputs(spark, dirs, XorFamily, "XOR (float-sample)")
-    val merged = mergeSeries(names, runs, shards,
+    val in = shardInputs(spark, dirs, XorFamily, "XOR (float-sample)")
+    val merged = mergeSeries(in.names, in.runs, shards,
       xorDecode(Long.MinValue, Long.MaxValue))
-    writeSeries(merged, seriesBounds(merged), outDir, names,
-      sampleFields = 2, colDurationMs, rowGroupSize = 1L << 20,
-      bloomFilterLabels, xorEncoder(samplesPerChunk), XorFamily)
+    writing(merged) {
+      val (mintMs, maxtMs) = in.bounds.getOrElse(sampleBounds(merged))
+      writeSeries(merged, mintMs, maxtMs, outDir, in.names,
+        colDurationMs, rowGroupSize = 1L << 20,
+        bloomFilterLabels, xorEncoder(samplesPerChunk), XorFamily)
+    }
   }
 
   /** The series-grain LWW merge of `runs` (the inputs' series rows,
-    * from [[shardInputs]]), arranged into `shards` and checkpointed:
+    * from [[shardInputs]]), arranged into `shards`:
     * one row per series with a non-empty merged `_samples` array of
     * `decode`'s sample structs. The one exchange moves each input
     * series row's ENCODED cells, range-partitioned by the labels
@@ -677,41 +720,50 @@ object ParquetShardStore {
         ColumnBridge.expression(decoded))).as("_samples"): _*)
       .filter(size(col("_samples")) > 0)
       .sortWithinPartitions(names.map(col): _*)
-      .localCheckpoint()
   }
 
-  /** (mint, maxt) of a series frame: its arrays' first and last
-    * timestamps. */
-  private def seriesBounds(series: DataFrame): DataFrame =
-    series.agg(min(col("_samples")(0)("ts")),
-      max(element_at(col("_samples"), -1)("ts")))
+  /** The inputs of a merge: their shared label `names`; each dir's
+    * series rows (`runs`) — the labels plus `_run`, the row's priority
+    * `pri` and its encoded `cells`; and the output's footer `bounds`
+    * when every input's footer carries graft's writer key
+    * ([[ParquetShardSchema.FamilyMaskMd]]): the min of their minT and
+    * the max of their maxT. A graft writer's footer bounds are its
+    * exact sample bounds, every shard of a dir carries shard 0's
+    * ([[ShardRowMatch.resolve]] checks), and the LWW merge keeps the
+    * union of the inputs' timestamps, so these are the merged series'
+    * exact bounds. A reference-written or pre-key footer may be wider
+    * than its samples: then `bounds` is None. */
+  private final case class MergeInputs(names: Seq[String], runs: Seq[DataFrame],
+      bounds: Option[(Long, Long)])
 
-  /** The inputs of a merge: their shared label names, and each dir's
-    * series rows — the labels plus `_run`, the row's priority `pri`
-    * and its encoded `cells` — read through the select's front half
-    * ([[matchedRows]] with no matchers and the open range), so a merge
-    * makes the select's row-alignment and "changed after the select"
-    * checks. The priority is (input position, shard, row), so even a
-    * dir holding one label set on two rows merges deterministically.
-    * The dirs must share one label universe and hold no chunk family
-    * beyond `allowedMask`.
+  /** [[MergeInputs]] of `dirs`, each read through the select's front
+    * half ([[matchedRows]] with no matchers and the open range), so a
+    * merge makes the select's row-alignment and "changed after the
+    * select" checks. The priority is (input position, shard, row), so
+    * even a dir holding one label set on two rows merges
+    * deterministically. The dirs must share one label universe and
+    * hold no chunk family beyond `allowedMask`.
     */
   private def shardInputs(spark: SparkSession, dirs: Seq[String],
-      allowedMask: Int, what: String): (Seq[String], Seq[DataFrame]) = {
+      allowedMask: Int, what: String): MergeInputs = {
     require(dirs.nonEmpty, "need at least one shard directory")
     val footers = dirs.map(new ShardFooters(spark, _))
     val names = footers.head.labelNames
     require(footers.forall(_.labelNames == names),
       "all inputs must share one label universe (the reference merges " +
         "blocks of one tenant/schema)")
-    (names, footers.zipWithIndex.map { case (f, pri) =>
+    val runs = footers.zipWithIndex.map { case (f, pri) =>
       val (rows, dataCols, _) =
         matchedRows(f, Long.MinValue, Long.MaxValue, Nil, rowKey = true)
       assertSingleFamily(f, rows, dataCols, allowedMask, what)
       rows.select(names.map(n => col("_l")(n).as(n)) :+ struct(
         struct(lit(pri), col("_shard"), col("_row")).as("pri"),
         array(dataCols.map(col): _*).as("cells")).as("_run"): _*)
-    })
+    }
+    val metas = footers.map(_.meta)
+    MergeInputs(names, runs,
+      if (!metas.forall(_.familyMask.isDefined)) None
+      else Some((metas.map(_.mintMs).min, metas.map(_.maxtMs).max)))
   }
 
   /** Loud-refusal guard for the family-specific compactors: a
@@ -749,26 +801,29 @@ object ParquetShardStore {
   }
 
   /** [[mergeShards]] for HISTOGRAM shard dirs: the same series-grain
-    * plan and duplicate rule — the inputs read through the select's
-    * two phases with no join, one exchange of encoded cells, the
-    * [[graft.functions.MergeSampleRuns]] LWW merge (later dir wins;
-    * within one input, its last sample at a ts), one checkpoint —
-    * then the shared [[writeSeries]] tail with [[writeHist]]'s
-    * encoder. The chunk schema and NHCB bound list come from the
-    * decoded samples and must agree across every input (one metric
-    * family per merge, the same constraint the chunked layout's
-    * compaction enforces); the check reads the series-grain
-    * checkpoint. `gauge` re-marks the headers, since the sample row
-    * model carries no gauge flag.
+    * plan, duplicate rule and footer bounds — the inputs read through
+    * the select's two phases with no join, one exchange of encoded
+    * cells, the [[graft.functions.MergeSampleRuns]] LWW merge (later
+    * dir wins; within one input, its last sample at a ts) — then the
+    * shared [[writeSeries]] tail with [[writeHist]]'s encoder. The
+    * chunk schema and NHCB bound list come from the decoded samples
+    * and must agree across every input (one metric family per merge,
+    * the same constraint the chunked layout's compaction enforces);
+    * that check reads the merged series before the write does, so
+    * they are checkpointed, the merge's one checkpoint. `gauge`
+    * re-marks the headers, since the sample row model carries no gauge
+    * flag.
     */
   def mergeShardsHist(spark: SparkSession, dirs: Seq[String],
       outDir: String, colDurationMs: Long = DefaultColDurationMs,
       samplesPerChunk: Int = 120, shards: Int = 1,
       bloomFilterLabels: Seq[String] = Nil,
       gauge: Boolean = false): Unit = {
-    val (names, runs) = shardInputs(spark, dirs, HistFamily, "integer-histogram")
-    val merged = mergeSeries(names, runs, shards,
-      histDecode(Long.MinValue, Long.MaxValue))
+    val in = shardInputs(spark, dirs, HistFamily, "integer-histogram")
+    val names = in.names
+    // the family check below and the write both read the merged series
+    val merged = mergeSeries(names, in.runs, shards,
+      histDecode(Long.MinValue, Long.MaxValue)).localCheckpoint()
     val fams = merged
       .select(explode(array_distinct(transform(col("_samples"),
         s => struct(s("schema"), s("cv"))))).as("f"))
@@ -783,12 +838,14 @@ object ParquetShardStore {
     val series = merged.select(names.map(col) :+ transform(col("_samples"),
       s => struct(HistChunkExpressions.sampleType(float = false).fieldNames
         .map(f => s(f)).toSeq: _*)).as("_samples"): _*)
-    writeSeries(series, seriesBounds(merged), outDir, names,
-      HistSampleFields, colDurationMs, rowGroupSize = 1L << 20,
-      bloomFilterLabels,
-      histEncoder(float = false, fam.getInt(0), samplesPerChunk,
-        fam.getSeq[Double](1), gauge),
-      HistFamily)
+    writing(series) {
+      val (mintMs, maxtMs) = in.bounds.getOrElse(sampleBounds(series))
+      writeSeries(series, mintMs, maxtMs, outDir, names, colDurationMs,
+        rowGroupSize = 1L << 20, bloomFilterLabels,
+        histEncoder(float = false, fam.getInt(0), samplesPerChunk,
+          fam.getSeq[Double](1), gauge),
+        HistFamily)
+    }
   }
 
   /** [[select]] with the reference's strict chunk-byte quota

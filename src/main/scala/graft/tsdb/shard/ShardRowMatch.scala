@@ -28,8 +28,8 @@ import org.apache.spark.sql.graft.TaskHadoopConf
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.tsdb.Matcher
-import ParquetShardSchema.labelToColumn
+import graft.tsdb.{GraftFormatException, Matcher}
+import ParquetShardSchema.{labelToColumn, DataColSizeMd, FamilyMaskMd, MaxTMd, MinTMd}
 
 /** Phase 1 of a shard select, on the driver with no Spark job: the
   * matchers become the matched rows of each shard's labels file, with
@@ -83,10 +83,16 @@ private[shard] object ShardRowMatch {
     }.toMap
   }
 
+  /** Footer keys every labels file of a dir shares with shard 0's:
+    * a dir's bounds, grid and writer are read from shard 0 alone. */
+  private val SharedFooterKeys = Seq(MinTMd, MaxTMd, DataColSizeMd, FamilyMaskMd)
+
   /** The rows of the shard dir `dir` that `predicate` matches, with
     * the values of the label columns `names`. `matchers` only prune:
     * the `=`/set ones become the parquet filter. A chunks file with no
-    * labels file beside it fails every read of the dir. */
+    * labels file beside it fails every read of the dir, and so does a
+    * labels file whose footer minT, maxT, column duration or writer
+    * key differs from shard 0's. */
   def resolve(spark: SparkSession, dir: String, names: Seq[String],
       matchers: Seq[Matcher], predicate: Option[Compiled]): MatchedSeries = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -96,11 +102,21 @@ private[shard] object ShardRowMatch {
         s"$dir: shard $s has a chunks file and no labels file"))
     val filter = predicate.flatMap(_ => pushable(matchers, names.toSet))
     val dicts = names.map(_ => new java.util.HashMap[String, Integer]())
+    var shard0: (String, Seq[String]) = null
     val shards = files.keys.collect { case (s, "labels") => s }.toSeq.sorted
       .flatMap { s =>
         val labels = files((s, "labels"))
-        val (rows, values, nRows) = readLabels(conf, labels, filter, predicate,
+        val (rows, values, nRows, kv) = readLabels(conf, labels, filter, predicate,
           names.map(labelToColumn))
+        val shared = SharedFooterKeys.map(kv.get)
+        def show(vs: Seq[String]) =
+          SharedFooterKeys.zip(vs).map { case (k, v) => s"$k=$v" }.mkString(", ")
+        if (shard0 == null) shard0 = (labels.getPath.getName, shared)
+        else if (shared != shard0._2)
+          throw new GraftFormatException(labels.getPath.toString,
+            s"footer (${show(shared)}) differs from ${shard0._1}'s " +
+              s"(${show(shard0._2)}): the shards of one dir share one time " +
+              "range, column duration and writer")
         if (rows.isEmpty) None
         else Some(new MatchedShard(s, nRows, files.get((s, "chunks")).orNull, rows,
           values.zip(dicts).map { case (vs, d) =>
@@ -136,10 +152,12 @@ private[shard] object ShardRowMatch {
   }
 
   /** One labels file: its matched rows (ascending), the values of
-    * `outCols` on those rows (null = absent) and its row count. */
+    * `outCols` on those rows (null = absent), its row count and its
+    * footer's key-value metadata. */
   private def readLabels(conf: Configuration, labels: FileStatus,
       filter: Option[FilterPredicate], predicate: Option[Compiled],
-      outCols: Seq[String]): (Array[Long], Seq[Array[String]], Long) = {
+      outCols: Seq[String])
+      : (Array[Long], Seq[Array[String]], Long, java.util.Map[String, String]) = {
     val file = HadoopInputFile.fromStatus(labels, conf)
     // pass 1: (first row of the row group, its matching rows) per row
     // group the filter's statistics, dictionaries and bloom filters kept
@@ -202,7 +220,7 @@ private[shard] object ShardRowMatch {
     val matched = hits.flatMap { case (first, rows) => rows.map(_ + first) }.toArray
     val byCol = present.zip(values.map(_.result())).toMap
     (matched, outCols.map(c => byCol.getOrElse(c, new Array[String](matched.length))),
-      footer.getBlocks.asScala.map(_.getRowCount).sum)
+      footer.getBlocks.asScala.map(_.getRowCount).sum, md.getKeyValueMetaData)
   }
 
   private def project(schema: MessageType, cols: Seq[String]): MessageType =

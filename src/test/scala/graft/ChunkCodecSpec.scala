@@ -122,6 +122,58 @@ class ChunkCodecSpec extends AnyFunSuite {
     assert(touched)
   }
 
+  test("a frame whose chunk reads past its body throws GraftFormatException naming " +
+      "the frame: XOR, histogram and float-histogram decoders") {
+    import graft.tsdb.{ChunkencHistCodec, GraftFormatException}
+    import graft.tsdb.block.ChunkencHistogram
+    import ChunkencHistogram.{FloatHistChunk, HistChunk, Span, UnknownCounterReset}
+    def uvarint(out: java.io.ByteArrayOutputStream, v: Long): Unit = {
+      var x = v
+      while (x >= 0x80L) { out.write(((x & 0x7f) | 0x80).toInt); x >>>= 7 }
+      out.write(x.toInt)
+    }
+    /** A frame of `enc` at [1000, 2000] declaring `body`. */
+    def frame(enc: Long, body: Array[Byte]): Array[Byte] = {
+      val out = new java.io.ByteArrayOutputStream()
+      Seq(enc, 1000L, 2000L, body.length.toLong).foreach(uvarint(out, _))
+      out.write(body, 0, body.length)
+      out.toByteArray
+    }
+    val xor = ChunkCodec.encodeChunk(Array(1000L, 2000L), Array(1.5, 2.5))
+    val hist = ChunkencHistogram.encodeHistChunk(HistChunk(UnknownCounterReset, 0,
+      0.0, Vector(Span(1, 1)), Vector.empty, Array(1000L), Array(7L), Array(2L),
+      Array(0.5), Array(Array(5L)), Array(Array.empty[Long])))
+    val floatHist = ChunkencHistogram.encodeFloatHistChunk(FloatHistChunk(
+      UnknownCounterReset, 0, 0.0, Vector(Span(1, 1)), Vector.empty, Array(1000L),
+      Array(7.0), Array(2.0), Array(0.5), Array(Array(5.0)), Array(Array.empty[Double])))
+    for ((what, enc, body, decode) <- Seq[(String, Long, Array[Byte], Array[Byte] => Any)](
+        ("XOR", ChunkCodec.EncXor, xor, ChunkCodec.decodeBlob(_, 0L, Long.MaxValue)),
+        ("histogram", ChunkCodec.EncHistogram, hist,
+          ChunkencHistCodec.decodeToArrayData(_, 0L, Long.MaxValue)),
+        ("float histogram", ChunkCodec.EncFloatHistogram, floatHist,
+          ChunkencHistCodec.decodeFloatToArrayData(_, 0L, Long.MaxValue)))) {
+      // a 0-byte first frame, then a valid one: the first chunk must not
+      // read its neighbour's header as its sample count
+      val valid = frame(enc, body)
+      decode(valid)
+      val e = intercept[GraftFormatException](decode(frame(enc, Array.emptyByteArray) ++ valid))
+      assert(e.getMessage.contains("the frame at byte 0") &&
+        e.getMessage.contains("0-byte bound"), s"$what: ${e.getMessage}")
+      // a body declared past the blob's end
+      val cut = intercept[GraftFormatException](decode(valid.dropRight(1)))
+      assert(cut.getMessage.contains("the frame at byte 0"), s"$what: ${cut.getMessage}")
+    }
+    // the chunk decoders bound themselves too, blob or no blob
+    val padded = hist ++ hist
+    for ((what, decode) <- Seq[(String, () => Any)](
+        "XOR" -> (() => ChunkCodec.decodeChunk(xor ++ xor, 0, 0)),
+        "histogram" -> (() => ChunkencHistogram.decodeHistChunk(padded, 0, 1)),
+        "float histogram" -> (() => ChunkencHistogram.decodeFloatHistChunk(padded, 0, 1)))) {
+      val e = intercept[GraftFormatException](decode())
+      assert(e.getMessage.contains("the chunk body at byte 0"), s"$what: ${e.getMessage}")
+    }
+  }
+
   test("codec density: dense series shapes beat the 16 B/sample row model") {
     // one day at 15 s scrape — the Prometheus-dense shape the codec
     // exists for (Gorilla paper §4.1 reports 1.37 B/sample on

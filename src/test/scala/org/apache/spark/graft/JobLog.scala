@@ -1,29 +1,56 @@
 package org.apache.spark.graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 
 /** Records the Spark jobs a block of code starts, as the SQL
   * execution id each job ran under (None outside any SQL execution,
-  * e.g. a parquet schema-inference job). Lives under `org.apache.spark`
+  * e.g. a parquet schema-inference job) — or, with [[timed]], also
+  * each job's first stage and wall time. Lives under `org.apache.spark`
   * because draining the listener bus — so every job start is delivered
   * before the log is read — is package-private.
   */
 object JobLog {
   def apply[T](sc: SparkContext)(body: => T): (T, Seq[Option[String]]) = {
-    val jobs = new ConcurrentLinkedQueue[Option[String]]
+    val (result, jobs) = timed(sc)(body)
+    (result, jobs.map(_.executionId))
+  }
+
+  /** One job: its SQL execution id; the name of its first stage (its
+    * call site, e.g. `count at Foo.scala:12`, or an anonymous function
+    * for a stage adaptive execution submits); the call site that made
+    * the last RDD of its last stage (for an adaptive stage, the user
+    * line that planned it; for a checkpoint, `localCheckpoint at ...`);
+    * and its wall time from start to end. */
+  final case class Job(executionId: Option[String], firstStage: String,
+      site: String, wallMs: Long) {
+    override def toString: String = s"$firstStage / $site, $wallMs ms" +
+      executionId.fold("")(id => s", SQL execution $id")
+  }
+
+  /** [[apply]] with each job's stages, call site and wall time, in
+    * start order — what a job-count assertion prints to say where the
+    * jobs went. */
+  def timed[T](sc: SparkContext)(body: => T): (T, Seq[Job]) = {
+    val starts = new ConcurrentHashMap[Int, SparkListenerJobStart]
+    val ends = new ConcurrentHashMap[Int, Long]
     val result = listening(sc, new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.sql.execution.id"))))
+      override def onJobStart(e: SparkListenerJobStart): Unit = starts.put(e.jobId, e)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ends.put(e.jobId, e.time)
     })(body)
-    (result, jobs.asScala.toSeq)
+    (result, starts.asScala.toSeq.sortBy(_._1).map { case (id, e) =>
+      val stages = e.stageInfos.sortBy(_.stageId)
+      Job(Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id"))),
+        stages.headOption.fold("")(_.name),
+        stages.lastOption.flatMap(_.rddInfos.sortBy(_.id).lastOption).fold("")(_.callSite),
+        ends.asScala.get(id).fold(-1L)(_ - e.time))
+    })
   }
 
   /** Runs `body` with `listener` attached; every event `body` caused
