@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, RowOrdering, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -355,7 +356,7 @@ object SampleRuns {
   def merge(runs: ArrayData, priOrdering: Ordering[Any], priType: DataType,
       sampleArity: Int): ArrayData = {
     // ascending priority: a later run overrides an earlier one
-    val samples = (0 until runs.numElements()).iterator
+    mergeSorted((0 until runs.numElements()).iterator
       .filterNot(runs.isNullAt)
       .map(runs.getStruct(_, 2))
       .filterNot(_.isNullAt(1))
@@ -365,7 +366,12 @@ object SampleRuns {
         val a = run.getArray(1)
         (0 until a.numElements()).filterNot(a.isNullAt)
           .map(a.getStruct(_, sampleArity)).toArray
-      }
+      })
+  }
+
+  /** The merge of `samples`, one ts-sorted run of sample structs per
+    * element, in ascending priority. */
+  def mergeSorted(samples: Array[Array[InternalRow]]): ArrayData = {
     val ts = samples.map(_.map(_.getLong(0)))
     val k = samples.length
     val cur = new Array[Int](k)

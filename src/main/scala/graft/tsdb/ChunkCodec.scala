@@ -449,13 +449,19 @@ object ChunkCodec {
   // ---------------------------------------------------------------
 
   /** samples: array<struct<ts:long, value:double>> (sorted) → blob. */
-  def encodeArrayData(samples: ArrayData, samplesPerChunk: Int): Array[Byte] = {
-    val n = samples.numElements()
+  def encodeArrayData(samples: ArrayData, samplesPerChunk: Int): Array[Byte] =
+    encodeArrayData(samples, 0, samples.numElements(), samplesPerChunk)
+
+  /** [[encodeArrayData]] of the elements `[from, until)` of `samples`,
+    * read in place. */
+  def encodeArrayData(samples: ArrayData, from: Int, until: Int,
+      samplesPerChunk: Int): Array[Byte] = {
+    val n = until - from
     val ts = new Array[Long](n)
     val vs = new Array[Double](n)
     var i = 0
     while (i < n) {
-      val row = samples.getStruct(i, 2)
+      val row = samples.getStruct(from + i, 2)
       ts(i) = row.getLong(0)
       vs(i) = row.getDouble(1)
       i += 1

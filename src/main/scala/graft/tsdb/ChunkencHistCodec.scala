@@ -75,9 +75,16 @@ object ChunkencHistCodec {
     * `exactLayout`: see the object doc. */
   def encodeArrayData(samples: ArrayData, schema: Int,
       samplesPerChunk: Int, customValues: Array[Double],
+      gauge: Boolean, exactLayout: Boolean): Array[Byte] =
+    encodeArrayData(samples, 0, samples.numElements(), schema,
+      samplesPerChunk, customValues, gauge, exactLayout)
+
+  /** [[encodeArrayData]] of the elements `[from, until)` of `samples`,
+    * read in place. */
+  def encodeArrayData(samples: ArrayData, from: Int, until: Int, schema: Int,
+      samplesPerChunk: Int, customValues: Array[Double],
       gauge: Boolean, exactLayout: Boolean): Array[Byte] = {
     require(samplesPerChunk > 0, "samplesPerChunk must be positive")
-    val n = samples.numElements()
     val out = new java.io.ByteArrayOutputStream()
     val tsB = new Array[Long](samplesPerChunk)
     val zeroB = new Array[Long](samplesPerChunk)
@@ -103,8 +110,8 @@ object ChunkencHistCodec {
     var lastCnt: Array[Long] = null
     var lastNIdx: Array[Int] = null
     var lastNCnt: Array[Long] = null
-    var i = 0
-    while (i < n) {
+    var i = from
+    while (i < until) {
       val r = samples.getStruct(i, 7)
       val ts = r.getLong(0)
       val zero = r.getLong(1)
@@ -140,6 +147,30 @@ object ChunkencHistCodec {
     flush()
     out.toByteArray
   }
+
+  /** The distinct (schema, NHCB bound list) of the non-empty enc=2
+    * chunks of a blob, from the chunk headers alone; foreign-family
+    * frames skip by header, as in [[decodeToArrayData]]. */
+  def chunkSchemas(blob: Array[Byte]): Set[(Int, Seq[Double])] = {
+    val out = Set.newBuilder[(Int, Seq[Double])]
+    val pos = Array(0)
+    while (pos(0) < blob.length) {
+      val frameStart = pos(0)
+      val enc = ChunkCodec.readUvarint(blob, pos)
+      ChunkCodec.readUvarint(blob, pos) // mint
+      ChunkCodec.readUvarint(blob, pos) // maxt
+      val size = ChunkCodec.readUvarint(blob, pos).toInt
+      val bodyStart = pos(0)
+      pos(0) = bodyStart + size
+      if (enc == ChunkCodec.EncHistogram)
+        ChunkCodec.frameBody(blob, frameStart, bodyStart, size)(
+          ChunkencHistogram.histChunkSchema(blob, bodyStart, size))
+          .foreach { case (schema, cv) => out += ((schema, cv.toSeq)) }
+      else ChunkCodec.requireKnown(enc, frameStart)
+    }
+    out.result()
+  }
+
 
   /** blob → array<struct<ts, zero, idx, cnt, sum, schema, cv, nidx,
     * ncnt>> of the enc=2 chunks whose header overlaps [qmint, qmaxt]
@@ -198,9 +229,16 @@ object ChunkencHistCodec {
     * ncnt:array<double>>), bodies enc=3 chunkenc float chunks. */
   def encodeFloatArrayData(samples: ArrayData, schema: Int,
       samplesPerChunk: Int, customValues: Array[Double],
+      gauge: Boolean, exactLayout: Boolean): Array[Byte] =
+    encodeFloatArrayData(samples, 0, samples.numElements(), schema,
+      samplesPerChunk, customValues, gauge, exactLayout)
+
+  /** [[encodeFloatArrayData]] of the elements `[from, until)` of
+    * `samples`, read in place. */
+  def encodeFloatArrayData(samples: ArrayData, from: Int, until: Int,
+      schema: Int, samplesPerChunk: Int, customValues: Array[Double],
       gauge: Boolean, exactLayout: Boolean): Array[Byte] = {
     require(samplesPerChunk > 0, "samplesPerChunk must be positive")
-    val n = samples.numElements()
     val out = new java.io.ByteArrayOutputStream()
     val tsB = new Array[Long](samplesPerChunk)
     val zeroB = new Array[Double](samplesPerChunk)
@@ -227,8 +265,8 @@ object ChunkencHistCodec {
     var lastCnt: Array[Double] = null
     var lastNIdx: Array[Int] = null
     var lastNCnt: Array[Double] = null
-    var i = 0
-    while (i < n) {
+    var i = from
+    while (i < until) {
       val r = samples.getStruct(i, 7)
       val ts = r.getLong(0)
       val zero = r.getDouble(1)

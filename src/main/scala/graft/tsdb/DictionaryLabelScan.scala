@@ -9,8 +9,10 @@ import org.apache.parquet.hadoop.metadata.{BlockMetaData, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.{DelegatingSeekableInputStream, InputFile, SeekableInputStream}
 import org.apache.parquet.schema.LogicalTypeAnnotation
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** MAINTENANCE-FREE label enumeration from parquet DICTIONARY pages —
   * the reference's `MaterializeAllLabelValues`
@@ -26,8 +28,10 @@ import org.apache.spark.sql.functions._
   * Two metadata-sized passes: a FOOTER-ONLY planning pass on the
   * driver classifies every file (dictionary-complete vs
   * needs-data-scan) from its EncodingStats, as shard reads plan from
-  * footers, then the answer frame lazily reads dictionary pages of the
-  * good files in Spark tasks and data-scans the rest. Per good file
+  * footers, then ONE job reads the dictionary pages of the good files
+  * and the driver dedupes and sorts them into a local relation — the
+  * whole answer for a dictionary-complete dir; the rest are
+  * data-scanned lazily by the answer frame. Per good file
   * the IO is footer + one dictionary page per row group, asserted
   * ≪ column size by [[dictionaryScanBytes]] and its spec.
   *
@@ -52,12 +56,14 @@ object DictionaryLabelScan {
     */
   def labelValues(spark: SparkSession, dir: String, column: String,
       limit: Int = 0): DataFrame = {
-    import spark.implicits._
     val (goodFiles, fallbackFiles) = planScan(spark, dir, column)
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
+    // dictionaries are metadata-sized: one job collects them, and the
+    // driver dedupes and sorts them (UTF-8 byte order, as Spark sorts
+    // strings) into a local relation
     val dictValues =
-      if (goodFiles.isEmpty) spark.emptyDataset[String].toDF("label_value")
+      if (goodFiles.isEmpty) Array.empty[String]
       else spark.sparkContext
         .parallelize(goodFiles, tasksFor(spark, goodFiles.size))
         .mapPartitions(_.flatMap(p => fileDictionaryValues(
@@ -67,14 +73,21 @@ object DictionaryLabelScan {
           // rewrite between passes must fail loudly, not lose values
           throw new IllegalStateException(
             s"$p lost dictionary completeness between planning and read"))))
-        .toDF("label_value")
-    val all = if (fallbackFiles.isEmpty) dictValues
-      else dictValues.unionByName(
+        .collect()
+    val sorted = dictValues.distinct.map(UTF8String.fromString)
+    java.util.Arrays.sort(sorted.asInstanceOf[Array[AnyRef]])
+    def local(vs: Seq[UTF8String]): DataFrame = spark.createDataFrame(
+      vs.map(v => Row(v.toString)).asJava,
+      StructType(Seq(StructField("label_value", StringType))))
+    if (fallbackFiles.isEmpty) local(if (limit > 0) sorted.take(limit) else sorted)
+    else {
+      val base = local(sorted).unionByName(
         spark.read.parquet(fallbackFiles.toIndexedSeq: _*)
           .select(col(column).cast("string").as("label_value"))
           .filter(col("label_value").isNotNull))
-    val base = all.distinct().orderBy("label_value")
-    if (limit > 0) base.limit(limit) else base
+        .distinct().orderBy("label_value")
+      if (limit > 0) base.limit(limit) else base
+    }
   }
 
   /** Label NAMES with at least one value, from footers alone — the

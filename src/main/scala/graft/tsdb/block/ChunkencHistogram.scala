@@ -649,6 +649,22 @@ object ChunkencHistogram {
       ts, count, zeroCount, sum, posBuckets, negBuckets, customValues)
   }
 
+  /** The (schema, custom bound list) of one integer-histogram chunk in
+    * `bytes[start, start+len)`, from its header alone — no sample is
+    * read; None for a chunk with no sample. */
+  def histChunkSchema(bytes: Array[Byte], start: Int,
+      len: Int): Option[(Int, Array[Double])] = {
+    val r = new BitReader(bytes, start, start + len)
+    if (r.readBits(16) == 0) return None
+    r.readBits(8) // flags
+    readZeroThreshold(r)
+    val schema = readVarbitInt(r).toInt
+    readSpans(r)
+    readSpans(r)
+    Some((schema,
+      if (schema == CustomBucketsSchema) readCustomValues(r) else Array.empty[Double]))
+  }
+
   /** Inverse of [[writeBucketLine]]: roll the delta-form state and
     * return this sample's absolute counts. */
   private def readBucketLine(r: BitReader,

@@ -13,13 +13,13 @@ import org.apache.parquet.io.api.{Binary, RecordConsumer}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type, Types}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{ColumnBridge, SqlBridge}
-import org.apache.spark.sql.types.{ArrayType, BinaryType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, StringType, StructField, StructType}
 
-import graft.functions.{ChunkDecode, HistChunkExpressions, MergeSampleRuns, QueryConst}
+import graft.functions.{ChunkDecode, HistChunkExpressions, QueryConst}
 import graft.tsdb.{ChunkCodec, ChunkencHistCodec, Matcher}
 import ParquetShardSchema._
 
@@ -30,27 +30,26 @@ import ParquetShardSchema._
   * bytes a parquet-common reader (search/materialize.go) opens
   * directly, so data converted by either side is queryable by both.
   *
-  * WRITE is a sample-grain front half feeding one series-grain tail
-  * ([[writeSeries]]), shared by every write and every merge. The
-  * front half of [[write]]/[[writeHist]]/[[writeFloatHist]] is one
-  * wide shuffle (the converter's sort, convert/convert.go:366 — paid
-  * once at ingest): groupBy(labels) → per-series sorted samples →
-  * range-repartition into `shards` by the sort labels. The front half
-  * of [[mergeShards]]/[[mergeShardsHist]] range-repartitions the
-  * inputs' series rows instead and merges them per series. The tail
-  * takes the arranged series rows and the footer bounds (minT, maxT)
-  * as values, which the front half gets from work it already does: a
-  * write from one action over the arranged series, whose shuffle
-  * outputs the write reuses, so the input is read and decoded once; a
-  * merge of graft-written inputs from their footers. Each task
-  * re-encodes its series' samples into per-window chunk frames
+  * WRITE is a sample-grain front half feeding one per-shard tail
+  * ([[writeShard]]), shared by every write and every merge. The front
+  * half of [[write]]/[[writeHist]]/[[writeFloatHist]] is one wide
+  * shuffle (the converter's sort, convert/convert.go:366 — paid once
+  * at ingest): groupBy(labels) → per-series sorted samples →
+  * range-repartition into `shards` by the sort labels, with the footer
+  * bounds (minT, maxT) from one action over the arranged series, whose
+  * shuffle outputs the write reuses, so the input is read and decoded
+  * once. [[mergeShards]]/[[mergeShardsHist]] have no SQL front half:
+  * the driver plans every output shard from the inputs' phase 1 and
+  * footers, and one Spark job reads each shard's input rows by row
+  * range and merges them per series ([[ShardMerge]]). Each shard task
+  * re-encodes its series' samples into per-window chunk frames, each
+  * window straight from the series' sample array
   * ([[graft.tsdb.ChunkCodec]], the same codec the chunk gates pin
-  * bit-exactly, or the chunkenc histogram codecs) and streams TWO
-  * row-aligned parquet files through parquet-java, all in one SQL
-  * execution of the arranged series. Imperative per-partition IO is
-  * justified the same way as the TSDB block writer: the dual-file
-  * row-alignment contract and footer key-value metadata are file-
-  * format mechanics no Catalyst operator expresses.
+  * bit-exactly, or the chunkenc histogram codecs), and streams TWO
+  * row-aligned parquet files through parquet-java. Imperative per-shard
+  * IO is justified the same way as the TSDB block writer: the
+  * dual-file row-alignment contract and footer key-value metadata are
+  * file-format mechanics no Catalyst operator expresses.
   *
   * READ keeps the reference's two-phase IO shape
   * (search/constraint.go → rowrange.go → materialize.go):
@@ -96,10 +95,10 @@ import ParquetShardSchema._
   * union) carry no handle, and neither does a select whose phase 1
   * sees one label set on two rows, since a consumer of the twin would
   * take them for two series.
-  * The merges read their inputs through the same two phases, with no
-  * matchers and the open range: phase 1 lists every row, phase 2 scans
-  * every `s_data_<i>` column, so a merge makes the same row-count and
-  * "changed after the select" checks as a select, and plans no join.
+  * The merges read their inputs' labels through the same phase 1, with
+  * no matchers, and their chunks by row range in their own tasks, so a
+  * merge makes the same row-count and "changed after" checks as a
+  * select, with no SQL plan at all.
   */
 object ParquetShardStore {
 
@@ -135,20 +134,25 @@ object ParquetShardStore {
       colDurationMs, shards, rowGroupSize, bloomFilterLabels,
       xorEncoder(samplesPerChunk), XorFamily)
 
-  private val XorFamily = 1 << ChunkCodec.EncXor.toInt
-  private val HistFamily = 1 << ChunkCodec.EncHistogram.toInt
+  private[shard] val XorFamily = 1 << ChunkCodec.EncXor.toInt
+  private[shard] val HistFamily = 1 << ChunkCodec.EncHistogram.toInt
 
-  private def xorEncoder(samplesPerChunk: Int): ArrayData => Array[Byte] =
-    slice => ChunkCodec.encodeArrayData(slice, samplesPerChunk)
+  /** Encodes the samples `[from, until)` of a series' sample array,
+    * read in place, as one `s_data_<i>` cell. */
+  private[shard] type SliceEncoder = (ArrayData, Int, Int) => Array[Byte]
 
-  private def histEncoder(float: Boolean, histSchema: Int,
+  private[shard] def xorEncoder(samplesPerChunk: Int): SliceEncoder =
+    (samples, from, until) =>
+      ChunkCodec.encodeArrayData(samples, from, until, samplesPerChunk)
+
+  private[shard] def histEncoder(float: Boolean, histSchema: Int,
       samplesPerChunk: Int, customValues: Seq[Double],
-      gauge: Boolean): ArrayData => Array[Byte] = {
+      gauge: Boolean): SliceEncoder = {
     val cv = customValues.toArray
-    if (float) slice => ChunkencHistCodec.encodeFloatArrayData(
-      slice, histSchema, samplesPerChunk, cv, gauge, exactLayout = false)
-    else slice => ChunkencHistCodec.encodeArrayData(
-      slice, histSchema, samplesPerChunk, cv, gauge, exactLayout = false)
+    if (float) (samples, from, until) => ChunkencHistCodec.encodeFloatArrayData(
+      samples, from, until, histSchema, samplesPerChunk, cv, gauge, exactLayout = false)
+    else (samples, from, until) => ChunkencHistCodec.encodeArrayData(
+      samples, from, until, histSchema, samplesPerChunk, cv, gauge, exactLayout = false)
   }
 
   /** [[write]] for NATIVE-HISTOGRAM series (`zeroCol` long; `idxCol`
@@ -216,7 +220,7 @@ object ParquetShardStore {
   /** The sample-grain front half of every write: one series-grain
     * shuffle (groupBy labels → each series' samples as ONE sorted
     * array of sample structs, field 0 the ms timestamp), arranged into
-    * shards ([[byShard]], then sorted by the labels within each), with
+    * shards (range-partitioned, then sorted by the labels within each), with
     * the footer bounds read off the arranged series ([[sampleBounds]])
     * — then [[writeSeries]], which reuses that action's shuffle
     * outputs.
@@ -236,25 +240,28 @@ object ParquetShardStore {
   private def writeImpl(df: DataFrame, dir: String, labelCols: Seq[String],
       tsCol: String, sample: Column => Column, colDurationMs: Long,
       shards: Int, rowGroupSize: Long, bloomFilterLabels: Seq[String],
-      encodeSlice: ArrayData => Array[Byte], familyMask: Int): Unit = {
+      encodeSlice: SliceEncoder, familyMask: Int): Unit = {
+    require(labelCols.nonEmpty, "need at least one label column")
+    require(shards > 0, s"shards must be positive, got $shards")
     val series = df
       .groupBy(labelCols.map(c => col(c).cast("string").as(c)): _*)
       .agg(sort_array(collect_list(
         sample(unix_millis(col(tsCol).cast("timestamp"))))).as("_samples"))
-    val arranged = byShard(series, labelCols, shards)
+    // the converter's shard layout (convert/convert.go:366): range-
+    // partition into `shards` by the sort labels, so partition i is
+    // shard file i
+    val arranged = series.repartitionByRange(shards, labelCols.map(col): _*)
       .sortWithinPartitions(labelCols.map(col): _*)
-    writing(arranged) {
+    // the bounds action and the write run as ONE SQL execution of the
+    // arranged plan, so their jobs group under one query and the plan
+    // is posted like any action's
+    SqlBridge.withExecution(arranged, "write shards") {
       val (mintMs, maxtMs) = sampleBounds(arranged)
-      writeSeries(arranged, mintMs, maxtMs, dir, labelCols, colDurationMs, rowGroupSize, bloomFilterLabels, encodeSlice, familyMask)
+      writeSeries(arranged, dir, ShardLayout(labelCols, mintMs, maxtMs,
+        colDurationMs, rowGroupSize, bloomFilterLabels, encodeSlice, familyMask,
+        fieldsOf(arranged)))
     }
   }
-
-  /** Runs `write` — the write tail over `series`, and the bounds
-    * action before it, if any — as ONE SQL execution of `series`' plan,
-    * so their jobs group under one query and the plan is posted like
-    * any action's. */
-  private def writing(series: DataFrame)(write: => Unit): Unit =
-    SqlBridge.withExecution(series, "write shards")(write)
 
   /** (mint, maxt) of an arranged series frame: its arrays' first and
     * last timestamps (a null timestamp counts for neither, as in a
@@ -264,7 +271,7 @@ object ParquetShardStore {
     * Refuses a frame with no sample. */
   private def sampleBounds(series: DataFrame): (Long, Long) = {
     val at = series.schema.length - 1
-    val fields = sampleFields(series)
+    val fields = fieldsOf(series)
     val bounds = series.queryExecution.toRdd.mapPartitions { rows =>
       var (lo, hi) = (Long.MaxValue, Long.MinValue)
       rows.foreach { row =>
@@ -285,45 +292,76 @@ object ParquetShardStore {
 
   /** Fields of the sample structs in a series frame's `_samples`, its
     * last column. */
-  private def sampleFields(series: DataFrame): Int =
+  private def fieldsOf(series: DataFrame): Int =
     series.schema.last.dataType.asInstanceOf[ArrayType]
       .elementType.asInstanceOf[StructType].length
 
-  /** The converter's shard layout (convert/convert.go:366): range-
-    * partition into `shards` by the sort labels, so partition i is
-    * shard file i. */
-  private def byShard(df: DataFrame, labelCols: Seq[String],
-      shards: Int): DataFrame = {
-    require(labelCols.nonEmpty, "need at least one label column")
-    require(shards > 0, s"shards must be positive, got $shards")
-    df.repartitionByRange(shards, labelCols.map(col): _*)
-  }
-
-  /** The series-grain back half shared by every write and every
-    * merge. `series` is exactly `labelCols` (strings, null = absent
-    * label) + `_samples`, one row per series, its samples sorted by
-    * the ms timestamp in field 0; it is already arranged: partition i
-    * holds shard i's series ([[byShard]]), sorted by the labels.
-    * `mintMs`/`maxtMs` are the exact sample bounds, which size the
-    * `s_data_<i>` grid and go into the footers: a write reads them off
-    * `series` itself ([[sampleBounds]]), a merge of graft-written
-    * inputs from their footers. Each shard task splits every series'
-    * samples into per-window slices, encodes each with the family's
-    * codec, and streams the two row-aligned files.
-    */
-  private def writeSeries(series: DataFrame, mintMs: Long, maxtMs: Long,
-      dir: String, labelCols: Seq[String], colDurationMs: Long, rowGroupSize: Long, bloomFilterLabels: Seq[String],
-      encodeSlice: ArrayData => Array[Byte], familyMask: Int): Unit = {
+  /** What every output shard of one write or merge shares: the label
+    * columns (their values strings, null = absent label); the exact
+    * sample bounds `mintMs`/`maxtMs`, which size the `s_data_<i>` grid
+    * and go into the footers; the row-group size and bloom-filtered
+    * labels; the family's slice encoder and footer mask; and the field
+    * count of its sample structs, field 0 the ms timestamp. */
+  private[shard] final case class ShardLayout(labelCols: Seq[String],
+      mintMs: Long, maxtMs: Long, colDurationMs: Long, rowGroupSize: Long,
+      bloomFilterLabels: Seq[String], encodeSlice: SliceEncoder,
+      familyMask: Int, sampleFields: Int) {
     require(bloomFilterLabels.forall(labelCols.contains),
       s"bloomFilterLabels must be a subset of labelCols")
-    require(series.columns.toSeq == labelCols :+ "_samples",
-      s"series columns ${series.columns.mkString(", ")} are not the labels + _samples")
-    val spark = series.sparkSession
-    val fields = sampleFields(series)
     require(mintMs >= 0,
       "pre-epoch samples are unrepresentable in the reference's " +
         "uvarint frame headers (schema/encoder.go Encode)")
-    val nCols = numDataCols(mintMs, maxtMs, colDurationMs)
+    val nCols: Int = numDataCols(mintMs, maxtMs, colDurationMs)
+  }
+
+  /** The series-grain back half of every write: `series` is exactly
+    * the layout's label columns + `_samples`, one row per series, its
+    * samples sorted by the ms timestamp in field 0; it is already
+    * arranged: partition i holds shard i's series, sorted by the
+    * labels. Each partition is one [[writeShard]]. */
+  private def writeSeries(series: DataFrame, dir: String, layout: ShardLayout): Unit = {
+    require(series.columns.toSeq == layout.labelCols :+ "_samples",
+      s"series columns ${series.columns.mkString(", ")} are not the labels + _samples")
+    val spark = series.sparkSession
+    clearShards(spark, dir)
+    val nLabels = layout.labelCols.length
+    val conf = new org.apache.spark.util.SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
+    series.queryExecution.toRdd.mapPartitionsWithIndex { (shard, rows) =>
+      writeShard(dir, shard, layout, conf.value, rows.map(row =>
+        (Array.tabulate[String](nLabels)(i =>
+          if (row.isNullAt(i)) null else row.getUTF8String(i).toString),
+          row.getArray(nLabels))))
+      Iterator.single(shard)
+    }.count() // force the write
+  }
+
+  /** Removes the previous generation's shard files from `dir` (or makes
+    * `dir`): a rewrite with fewer shards would otherwise leave stale
+    * k.labels/chunks files that a read of the dir silently unions with
+    * the new data. Hadoop FS, not java.nio: the dir may be hdfs://-style
+    * at scale. */
+  private[shard] def clearShards(spark: SparkSession, dir: String): Unit = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(root))
+      fs.listStatus(root).foreach { st =>
+        val n = st.getPath.getName
+        if (n.matches("\\.?\\d+\\.(labels|chunks)\\.parquet(\\.crc)?"))
+          fs.delete(st.getPath, false)
+      }
+    else fs.mkdirs(root)
+  }
+
+  /** The per-shard tail shared by every write and every merge: streams
+    * `series` — (label values in `layout.labelCols` order, null =
+    * absent; samples sorted by ts), in the shard's sort order — into
+    * the two row-aligned files of shard `shard` under `dir`. Each
+    * series' samples split into per-window slices, each encoded in
+    * place with the family's codec. */
+  private[shard] def writeShard(dir: String, shard: Int, layout: ShardLayout,
+      conf: Configuration, series: Iterator[(Array[String], ArrayData)]): Unit = {
+    import layout._
     val labelNamesSorted = labelCols.sorted
     val colIdxByLabel = labelColumnIndexes(labelNamesSorted)
     val meta: Map[String, String] = Map(
@@ -331,91 +369,64 @@ object ParquetShardStore {
       MinTMd -> mintMs.toString,
       MaxTMd -> maxtMs.toString,
       FamilyMaskMd -> familyMask.toString)
-
-    // Hadoop FS, not java.nio: the dir may be hdfs://-style at scale.
-    // Clean the PREVIOUS generation's shard files first — a rewrite
-    // with fewer shards would otherwise leave stale k.labels/chunks
-    // files that the glob reads silently union with the new data.
-    locally {
-      val root = new org.apache.hadoop.fs.Path(dir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(root))
-        fs.listStatus(root).foreach { st =>
-          val n = st.getPath.getName
-          if (n.matches("\\.?\\d+\\.(labels|chunks)\\.parquet(\\.crc)?"))
-            fs.delete(st.getPath, false)
+    val labelsFileCols = labelsFileColumns(labelNamesSorted)
+    val chunksFileCols = chunksFileColumns(nCols)
+    // the series hash and the chunk cells are all but unique: a
+    // dictionary would hash every value only to fall back to plain
+    val labelsWriter = new ShardFileWriter(
+      s"$dir/$shard.labels.parquet", labelsSchema(labelNamesSorted),
+      meta, conf, rowGroupSize, bloomFilterLabels.map(labelToColumn),
+      plainCols = Seq(SeriesHashColumn))
+    val chunksWriter = new ShardFileWriter(
+      s"$dir/$shard.chunks.parquet", chunksSchema(nCols),
+      meta, conf, rowGroupSize, plainCols = chunksFileCols)
+    // per-shard constants, hoisted out of the per-series loop
+    val chunkColBlobIdx = chunksFileCols
+      .map(_.substring(DataColumnPrefix.length).toInt).toArray
+    val labelOfFileCol: Array[String] = labelsFileCols.map { c =>
+      if (c == ColIndexesColumn || c == SeriesHashColumn) null
+      else extractLabelFromColumn(c).get
+    }.toArray
+    try {
+      series.foreach { case (labels, samples) =>
+        // labels present on this series (nulls are absent labels)
+        val pairs = labelCols.indices.collect {
+          case i if labels(i) != null => labelCols(i) -> labels(i)
         }
-      else fs.mkdirs(root)
-    }
-    val nLabels = labelCols.length
-    val labelOrder = labelCols.toIndexedSeq // field positions in `series`
-    val serializableConf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    series.queryExecution.toRdd.mapPartitionsWithIndex { (shard, rows) =>
-      val conf = serializableConf.value
-      val labelsWriter = new ShardFileWriter(
-        s"$dir/$shard.labels.parquet", labelsSchema(labelNamesSorted),
-        meta, conf, rowGroupSize,
-        bloomFilterLabels.map(labelToColumn))
-      val chunksWriter = new ShardFileWriter(
-        s"$dir/$shard.chunks.parquet", chunksSchema(nCols),
-        meta, conf, rowGroupSize)
-      val labelsFileCols = labelsFileColumns(labelNamesSorted)
-      val chunksFileCols = chunksFileColumns(nCols)
-      // per-partition constants, hoisted out of the per-series loop
-      val chunkColBlobIdx = chunksFileCols
-        .map(_.substring(DataColumnPrefix.length).toInt).toArray
-      val labelOfFileCol: Array[String] = labelsFileCols.map { c =>
-        if (c == ColIndexesColumn || c == SeriesHashColumn) null
-        else extractLabelFromColumn(c).get
-      }.toArray
-      try {
-        rows.foreach { row =>
-          // labels present on this series (nulls are absent labels)
-          val pairs = (0 until nLabels).flatMap { i =>
-            if (row.isNullAt(i)) None
-            else Some(labelOrder(i) -> row.getUTF8String(i).toString)
-          }
-          val byName = pairs.toMap
-          // split the sorted samples into per-window framed blobs
-          val samples = row.getArray(nLabels)
-          val n = samples.numElements()
-          val blobs = new Array[Array[Byte]](nCols)
-          def tsAt(i: Int): Long = samples.getStruct(i, fields).getLong(0)
-          var start = 0
-          while (start < n) {
-            val ci = dataColumnIdx(tsAt(start), mintMs, colDurationMs)
-            var end = start + 1
-            while (end < n &&
-                dataColumnIdx(tsAt(end), mintMs, colDurationMs) == ci) end += 1
-            val slice = new GenericArrayData(
-              (start until end).map(i =>
-                samples.getStruct(i, fields).copy()).toArray[Any])
-            blobs(ci) = encodeSlice(slice)
-            start = end
-          }
-          // labels row, in physical (alphabetical) column order
-          val colIdxBytes = encodeIntSlice(
-            pairs.map(p => colIdxByLabel(p._1)))
-          val hashBytes = seriesHashBytes(pairs)
-          labelsWriter.write(labelsFileCols.indices.map { i =>
-            labelOfFileCol(i) match {
-              case null => if (labelsFileCols(i) == ColIndexesColumn)
-                colIdxBytes else hashBytes
-              case l => byName.get(l).map(_.getBytes("UTF-8")).orNull
-            }
-          }.toArray)
-          // chunks row: required columns, empty bytes where no data
-          chunksWriter.write(chunkColBlobIdx.map { ci =>
-            if (blobs(ci) == null) Array.emptyByteArray else blobs(ci)
-          })
+        val byName = pairs.toMap
+        // split the sorted samples into per-window framed blobs
+        val n = samples.numElements()
+        val blobs = new Array[Array[Byte]](nCols)
+        def tsAt(i: Int): Long = samples.getStruct(i, sampleFields).getLong(0)
+        var start = 0
+        while (start < n) {
+          val ci = dataColumnIdx(tsAt(start), mintMs, colDurationMs)
+          var end = start + 1
+          while (end < n &&
+              dataColumnIdx(tsAt(end), mintMs, colDurationMs) == ci) end += 1
+          blobs(ci) = encodeSlice(samples, start, end)
+          start = end
         }
-      } finally {
-        labelsWriter.close()
-        chunksWriter.close()
+        // labels row, in physical (alphabetical) column order
+        val colIdxBytes = encodeIntSlice(
+          pairs.map(p => colIdxByLabel(p._1)))
+        val hashBytes = seriesHashBytes(pairs)
+        labelsWriter.write(labelsFileCols.indices.map { i =>
+          labelOfFileCol(i) match {
+            case null => if (labelsFileCols(i) == ColIndexesColumn)
+              colIdxBytes else hashBytes
+            case l => byName.get(l).map(_.getBytes("UTF-8")).orNull
+          }
+        }.toArray)
+        // chunks row: required columns, empty bytes where no data
+        chunksWriter.write(chunkColBlobIdx.map { ci =>
+          if (blobs(ci) == null) Array.emptyByteArray else blobs(ci)
+        })
       }
-      Iterator.single(shard)
-    }.count() // force the write
+    } finally {
+      labelsWriter.close()
+      chunksWriter.close()
+    }
   }
 
   private def labelsSchema(labelNamesSorted: Seq[String]): MessageType = {
@@ -438,11 +449,12 @@ object ParquetShardStore {
   /** parquet-java writer for rows of pre-serialized binary cells
     * (aligned to the schema's field order; null skips an optional
     * field). All shard columns are physically BINARY, so one write
-    * support covers both files.
+    * support covers both files. `plainCols` are written with no
+    * dictionary.
     */
   private class ShardFileWriter(path: String, schema: MessageType,
       meta: Map[String, String], conf: Configuration, rowGroupSize: Long,
-      bloomCols: Seq[String] = Nil) {
+      bloomCols: Seq[String] = Nil, plainCols: Seq[String] = Nil) {
     private val support = new WriteSupport[Array[Array[Byte]]] {
       private var rc: RecordConsumer = _
       private val fields = schema.getFields
@@ -472,7 +484,7 @@ object ParquetShardStore {
       override def self(): B = this
       override def getWriteSupport(c: Configuration) = support
     }
-    private val writer = bloomCols.foldLeft(
+    private val writer = plainCols.foldLeft(bloomCols.foldLeft(
       new B(HadoopOutputFile.fromPath(
           new org.apache.hadoop.fs.Path(path), conf))
         .withConf(conf)
@@ -481,7 +493,8 @@ object ParquetShardStore {
         // the reference's WithBloomFilterLabels (convert.go:118):
         // row groups of a non-matching shard prune on the filter
         // before any page IO
-        (b, c) => b.withBloomFilterEnabled(c, true))
+        (b, c) => b.withBloomFilterEnabled(c, true)))(
+        (b, c) => b.withDictionaryEncoding(c, false))
       // a shard REWRITE (fixture rebuild, re-ingest) replaces the
       // files — parquet-java's default CREATE mode would fail on the
       // leftovers of a previous generation
@@ -664,153 +677,39 @@ object ParquetShardStore {
 
   /** Compact N shard dirs that may overlap in series/time into ONE
     * shard dir — the reference's vertical compaction applied to its
-    * own layout (convert/merge.go's NewMergeChunkSeriesSet feeding a
-    * fresh conversion), at SERIES grain end to end: each input is
-    * read through the select's two phases (every row, every data
-    * column, no join), and the inputs'
-    * series rows (labels + encoded cells, no explode) union into ONE
-    * exchange, range-partitioned by the labels into the output's
-    * shards; each series' rows group there, decode into one sorted
-    * sample array per input row, and [[graft.functions.MergeSampleRuns]]
-    * merges those arrays — then the shared [[writeSeries]] tail
-    * re-encodes, with no exchange of its own. Exactly one output
-    * sample per (series, ts): the LATER dir in `dirs` wins (the
-    * newer-block convention every graft merge uses); an input holding
-    * several samples of a series at one ts (a [[write]] of duplicate
-    * rows keeps them all) contributes its LAST one in stored order.
-    * Both rules depend only on the files, never on partitioning. The
-    * output's footer bounds are the inputs' ([[MergeInputs.bounds]]),
-    * so the tail reads the merged series once, with no checkpoint;
-    * only inputs a graft writer did not write make the bounds one more
-    * action over the merged series ([[sampleBounds]]).
+    * own layout (convert/merge.go's k-way merge of label-sorted series
+    * sets feeding a fresh conversion), at SERIES grain end to end and
+    * as ONE Spark job ([[ShardMerge]]): the driver reads each input's
+    * labels through the select's phase 1 (every row), sorts the union
+    * of the input series in the output's label order and cuts it into
+    * `shards` ranges whose series counts differ by at most 1; each
+    * output shard's task reads exactly its rows' `s_data_<i>` cells by
+    * row range, decodes them, merges each series' runs with the
+    * [[graft.functions.SampleRuns]] rule and writes through the shared
+    * [[writeShard]] tail, so the cells are the ones a fresh write of
+    * the merged samples makes. Exactly one output sample per (series,
+    * ts): the LATER dir in `dirs` wins (the newer-block convention
+    * every graft merge uses); an input holding several samples of a
+    * series at one ts (a [[write]] of duplicate rows keeps them all)
+    * contributes its LAST one in stored order. The output's footer
+    * bounds are the inputs' when graft wrote them all; only inputs
+    * without graft's writer key add one pre-pass job (their exact
+    * bounds and chunk families). Every refusal is thrown on the driver
+    * before any file of `outDir` is touched.
     */
   def mergeShards(spark: SparkSession, dirs: Seq[String], outDir: String,
       colDurationMs: Long = DefaultColDurationMs,
       samplesPerChunk: Int = 120, shards: Int = 1,
-      bloomFilterLabels: Seq[String] = Nil): Unit = {
-    val in = shardInputs(spark, dirs, XorFamily, "XOR (float-sample)")
-    val merged = mergeSeries(in.names, in.runs, shards,
-      xorDecode(Long.MinValue, Long.MaxValue))
-    writing(merged) {
-      val (mintMs, maxtMs) = in.bounds.getOrElse(sampleBounds(merged))
-      writeSeries(merged, mintMs, maxtMs, outDir, in.names,
-        colDurationMs, rowGroupSize = 1L << 20,
-        bloomFilterLabels, xorEncoder(samplesPerChunk), XorFamily)
-    }
-  }
+      bloomFilterLabels: Seq[String] = Nil): Unit =
+    ShardMerge.plan(spark, dirs, shards, ShardMerge.Xor(samplesPerChunk))
+      .write(outDir, colDurationMs, bloomFilterLabels)
 
-  /** The series-grain LWW merge of `runs` (the inputs' series rows,
-    * from [[shardInputs]]), arranged into `shards`:
-    * one row per series with a non-empty merged `_samples` array of
-    * `decode`'s sample structs. The one exchange moves each input
-    * series row's ENCODED cells, range-partitioned by the labels
-    * ([[byShard]]): that clusters every series' rows for the groupBy
-    * and is already the output's shard layout, so the write adds no
-    * exchange. Cells decode after it, every frame of each (the footer
-    * range bounds every sample).
-    */
-  private def mergeSeries(names: Seq[String], runs: Seq[DataFrame], shards: Int,
-      decode: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame = {
-    val decoded = transform(col("_runs"), r => struct(r("pri"),
-      flatten(transform(r("cells"), decode))))
-    byShard(runs.reduce(_ union _), names, shards)
-      .groupBy(names.map(col): _*)
-      .agg(collect_list(col("_run")).as("_runs"))
-      .select(names.map(col) :+ ColumnBridge.column(MergeSampleRuns(
-        ColumnBridge.expression(decoded))).as("_samples"): _*)
-      .filter(size(col("_samples")) > 0)
-      .sortWithinPartitions(names.map(col): _*)
-  }
-
-  /** The inputs of a merge: their shared label `names`; each dir's
-    * series rows (`runs`) — the labels plus `_run`, the row's priority
-    * `pri` and its encoded `cells`; and the output's footer `bounds`
-    * when every input's footer carries graft's writer key
-    * ([[ParquetShardSchema.FamilyMaskMd]]): the min of their minT and
-    * the max of their maxT. A graft writer's footer bounds are its
-    * exact sample bounds, every shard of a dir carries shard 0's
-    * ([[ShardRowMatch.resolve]] checks), and the LWW merge keeps the
-    * union of the inputs' timestamps, so these are the merged series'
-    * exact bounds. A reference-written or pre-key footer may be wider
-    * than its samples: then `bounds` is None. */
-  private final case class MergeInputs(names: Seq[String], runs: Seq[DataFrame],
-      bounds: Option[(Long, Long)])
-
-  /** [[MergeInputs]] of `dirs`, each read through the select's front
-    * half ([[matchedRows]] with no matchers and the open range), so a
-    * merge makes the select's row-alignment and "changed after the
-    * select" checks. The priority is (input position, shard, row), so
-    * even a dir holding one label set on two rows merges
-    * deterministically. The dirs must share one label universe and
-    * hold no chunk family beyond `allowedMask`.
-    */
-  private def shardInputs(spark: SparkSession, dirs: Seq[String],
-      allowedMask: Int, what: String): MergeInputs = {
-    require(dirs.nonEmpty, "need at least one shard directory")
-    val footers = dirs.map(new ShardFooters(spark, _))
-    val names = footers.head.labelNames
-    require(footers.forall(_.labelNames == names),
-      "all inputs must share one label universe (the reference merges " +
-        "blocks of one tenant/schema)")
-    val runs = footers.zipWithIndex.map { case (f, pri) =>
-      val (rows, dataCols, _) =
-        matchedRows(f, Long.MinValue, Long.MaxValue, Nil, rowKey = true)
-      assertSingleFamily(f, rows, dataCols, allowedMask, what)
-      rows.select(names.map(n => col("_l")(n).as(n)) :+ struct(
-        struct(lit(pri), col("_shard"), col("_row")).as("pri"),
-        array(dataCols.map(col): _*).as("cells")).as("_run"): _*)
-    }
-    val metas = footers.map(_.meta)
-    MergeInputs(names, runs,
-      if (!metas.forall(_.familyMask.isDefined)) None
-      else Some((metas.map(_.mintMs).min, metas.map(_.maxtMs).max)))
-  }
-
-  /** Loud-refusal guard for the family-specific compactors: a
-    * reference-written cell may MIX chunkenc families (a series that
-    * changed sample type — one appender per family per column,
-    * schema/encoder.go:75). The family-specific decode SKIPS foreign
-    * frames by header, which is right for a select but silent DATA
-    * LOSS for a compaction that rewrites the shard: refuse instead,
-    * telling the operator to merge one family at a time. One
-    * header-walk aggregation over the data columns of `rows`, dir
-    * `f`'s every row (bodies never parsed).
-    */
-  private def assertSingleFamily(f: ShardFooters, rows: DataFrame,
-      dataCols: Seq[String], allowedMask: Int, what: String): Unit = {
-    // graft-written shards record the writer's family bitmask in the
-    // footer — the guard is then one metadata read. The data walk
-    // below only runs for shards WITHOUT the key (reference-written,
-    // or pre-mask graft shards), whose cells may genuinely mix
-    // families.
-    val got = f.meta.familyMask.getOrElse {
-      import graft.functions.ChunkFamilies.families
-      val maskCol = dataCols
-        .map(c => coalesce(families(col(c)), lit(0)))
-        .reduce(_.bitwiseOR(_))
-      rows.select(maskCol.as("_m"))
-        .agg(coalesce(expr("bit_or(_m)"), lit(0)))
-        .head().getInt(0)
-    }
-    if ((got & ~allowedMask) != 0)
-      throw new IllegalArgumentException(
-        s"shard dir ${f.dir} holds chunkenc families beyond the $what " +
-          s"merge's (family bitmask $got, allowed $allowedMask): a " +
-          "family-specific merge would silently drop the foreign " +
-          "frames - merge one chunkenc family at a time")
-  }
-
-  /** [[mergeShards]] for HISTOGRAM shard dirs: the same series-grain
-    * plan, duplicate rule and footer bounds — the inputs read through
-    * the select's two phases with no join, one exchange of encoded
-    * cells, the [[graft.functions.MergeSampleRuns]] LWW merge (later
-    * dir wins; within one input, its last sample at a ts) — then the
-    * shared [[writeSeries]] tail with [[writeHist]]'s encoder. The
-    * chunk schema and NHCB bound list come from the decoded samples
-    * and must agree across every input (one metric family per merge,
-    * the same constraint the chunked layout's compaction enforces);
-    * that check reads the merged series before the write does, so
-    * they are checkpointed, the merge's one checkpoint. `gauge`
+  /** [[mergeShards]] for HISTOGRAM shard dirs: the same plan, duplicate
+    * rule and footer bounds, with [[writeHist]]'s encoder. The chunk
+    * schema and NHCB bound list must agree across every chunk of every
+    * input (one metric family per merge, the same constraint the
+    * chunked layout's compaction enforces): a pre-pass job over the
+    * same tasks reads the chunk headers before the write. `gauge`
     * re-marks the headers, since the sample row model carries no gauge
     * flag.
     */
@@ -818,35 +717,9 @@ object ParquetShardStore {
       outDir: String, colDurationMs: Long = DefaultColDurationMs,
       samplesPerChunk: Int = 120, shards: Int = 1,
       bloomFilterLabels: Seq[String] = Nil,
-      gauge: Boolean = false): Unit = {
-    val in = shardInputs(spark, dirs, HistFamily, "integer-histogram")
-    val names = in.names
-    // the family check below and the write both read the merged series
-    val merged = mergeSeries(names, in.runs, shards,
-      histDecode(Long.MinValue, Long.MaxValue)).localCheckpoint()
-    val fams = merged
-      .select(explode(array_distinct(transform(col("_samples"),
-        s => struct(s("schema"), s("cv"))))).as("f"))
-      .distinct().collect()
-    require(fams.nonEmpty, "cannot merge empty shard inputs")
-    require(fams.length == 1,
-      s"inputs mix ${fams.length} (schema, bounds) families — merge " +
-        "one metric family at a time")
-    val fam = fams.head.getStruct(0)
-    // NHCB chunks structurally carry no negative side: their nidx/ncnt
-    // decode empty, so the projection needs no per-family case
-    val series = merged.select(names.map(col) :+ transform(col("_samples"),
-      s => struct(HistChunkExpressions.sampleType(float = false).fieldNames
-        .map(f => s(f)).toSeq: _*)).as("_samples"): _*)
-    writing(series) {
-      val (mintMs, maxtMs) = in.bounds.getOrElse(sampleBounds(series))
-      writeSeries(series, mintMs, maxtMs, outDir, names, colDurationMs,
-        rowGroupSize = 1L << 20, bloomFilterLabels,
-        histEncoder(float = false, fam.getInt(0), samplesPerChunk,
-          fam.getSeq[Double](1), gauge),
-        HistFamily)
-    }
-  }
+      gauge: Boolean = false): Unit =
+    ShardMerge.plan(spark, dirs, shards, ShardMerge.Hist(samplesPerChunk, gauge))
+      .write(outDir, colDurationMs, bloomFilterLabels)
 
   /** [[select]] with the reference's strict chunk-byte quota
     * (search/limits.go NewQuota): the quota check is one
@@ -894,16 +767,13 @@ object ParquetShardStore {
     *      unmatched rows and attaches the labels — no join. The
     *      matched rows reach it as a broadcast the driver made, which
     *      starts no job.
-    * Output: the labels as one struct column `_l`, the data columns,
-    * nothing decoded, then — with `rowKey`, for the merges — the shard
-    * number `_shard` and the row index `_row` of each row; and the
-    * data column names and phase 1's answer. A window that misses the
-    * footer range or matches nothing gives an empty local relation,
-    * and nothing is scanned. The merges and their family guard read
-    * every row: no matchers and the open range.
+    * Output: the labels as one struct column `_l` and the data
+    * columns, nothing decoded; and the data column names and phase 1's
+    * answer. A window that misses the footer range or matches nothing
+    * gives an empty local relation, and nothing is scanned.
     */
   private def matchedRows(f: ShardFooters, mintMs: Long, maxtMs: Long,
-      matchers: Seq[Matcher], rowKey: Boolean = false)
+      matchers: Seq[Matcher])
       : (DataFrame, Seq[String], Option[MatchedSeries]) = {
     require(maxtMs > mintMs, s"empty range [$mintMs, $maxtMs)")
     val (spark, dir) = (f.spark, f.dir)
@@ -930,9 +800,7 @@ object ParquetShardStore {
         .filterNot(_.isEmpty)
     val rows = matched match {
       case None => spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType((StructField("_l", labelsType) +: dataCols.map(StructField(_, BinaryType))) ++
-          (if (rowKey) Seq(StructField("_shard", IntegerType), StructField("_row", LongType))
-           else Nil)))
+        StructType(StructField("_l", labelsType) +: dataCols.map(StructField(_, BinaryType))))
       case Some(series) =>
         val conf = spark.sparkContext.hadoopConfiguration
         val chunks = series.shards.map(s =>
@@ -941,12 +809,9 @@ object ParquetShardStore {
           Seq("file_name", "row_index", "file_modification_time", "file_size")
             .map(c => ColumnBridge.expression(col(s"_metadata.$c"))),
           spark.sparkContext.broadcast(series), labelsType))
-        val key = if (!rowKey) Nil else Seq(
-          regexp_extract(col("_metadata.file_name"), "^(\\d+)\\.", 1).cast("int").as("_shard"),
-          col("_metadata.row_index").as("_row"))
         spark.read.schema(sparkSchema(spark, chunks))
           .parquet(series.shards.map(_.chunks).toIndexedSeq: _*)
-          .select((lookup.as("_l") +: dataCols.map(col)) ++ key: _*)
+          .select(lookup.as("_l") +: dataCols.map(col): _*)
           .filter(col("_l").isNotNull)
     }
     (rows, dataCols, matched)
@@ -956,7 +821,7 @@ object ParquetShardStore {
     * `dir` has a chunks file (`chunks`, as listed) with as many rows
     * as its labels file (`labelsRows`). Returns the chunks footer,
     * which gives a scan its schema. */
-  private def alignedChunks(conf: Configuration, dir: String, shard: Int,
+  private[shard] def alignedChunks(conf: Configuration, dir: String, shard: Int,
       labelsRows: Long, chunks: org.apache.hadoop.fs.FileStatus): FileMetaData = {
     if (chunks == null)
       throw new IllegalStateException(s"$dir: shard $shard has a " +

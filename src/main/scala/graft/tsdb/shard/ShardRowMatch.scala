@@ -190,37 +190,54 @@ private[shard] object ShardRowMatch {
     }
     val md = footer.getFileMetaData
     val present = outCols.filter(md.getSchema.containsField)
-    val values = present.map(_ => Array.newBuilder[String])
+    val matched = hits.flatMap { case (first, rows) => rows.map(_ + first) }.toArray
     // pass 2: the output columns of the matched rows. A reader of its
     // own, unfiltered: parquet-java caches a row group's page index for
     // the columns of its first filtered read.
-    if (hits.nonEmpty && present.nonEmpty) {
-      val reader = ParquetFileReader.open(file, footer,
-        HadoopReadOptions.builder(conf).build(), file.newStream())
-      try {
-        val schema = project(md.getSchema, present)
-        reader.setRequestedSchema(schema)
-        val blockAt = reader.getRowGroups.asScala.zipWithIndex
-          .map { case (block, b) => block.getRowIndexOffset -> (block, b) }.toMap
-        hits.foreach { case (first, rows) =>
-          val (block, b) = blockAt(first)
-          val pages =
-            if (rows.length == block.getRowCount) reader.readRowGroup(b)
-            else try reader.readFilteredRowGroup(b, exactly(rows, block.getRowCount))
-            catch { case _: MissingOffsetIndexException => reader.readRowGroup(b) }
-          val (idx, vals) = readColumns(pages, schema, md.getCreatedBy,
-            _.toStringUsingUTF8)
-          // a whole-row-group read (no offset index) holds every row
-          val keep = if (idx.length == rows.length) idx.indices
-            else { val at = idx.zipWithIndex.toMap; rows.toSeq.map(at) }
-          vals.zip(values).foreach { case (v, out) => keep.foreach(i => out += v(i)) }
-        }
-      } finally reader.close()
-    }
-    val matched = hits.flatMap { case (first, rows) => rows.map(_ + first) }.toArray
-    val byCol = present.zip(values.map(_.result())).toMap
+    val values = if (matched.isEmpty || present.isEmpty) present.map(_ => Array.empty[String])
+      else {
+        val reader = ParquetFileReader.open(file, footer,
+          HadoopReadOptions.builder(conf).build(), file.newStream())
+        try readRows(reader, present, matched, _.toStringUsingUTF8) finally reader.close()
+      }
+    val byCol = present.zip(values).toMap
     (matched, outCols.map(c => byCol.getOrElse(c, new Array[String](matched.length))),
       footer.getBlocks.asScala.map(_.getRowCount).sum, md.getKeyValueMetaData)
+  }
+
+  /** The values of the flat binary columns `cols` on `rows` (ascending
+    * row numbers of the file `reader` reads, unfiltered), one array
+    * per column in `rows` order, null where undefined. Only the pages
+    * holding `rows` are read: each row group's rows become row ranges,
+    * and a row group with no offset index is read whole. */
+  def readRows[T: ClassTag](reader: ParquetFileReader, cols: Seq[String],
+      rows: Array[Long], value: Binary => T): Seq[Array[T]] = {
+    val md = reader.getFooter.getFileMetaData
+    val schema = project(md.getSchema, cols)
+    reader.setRequestedSchema(schema)
+    val out = cols.map(_ => new Array[T](rows.length))
+    var next = 0
+    reader.getRowGroups.asScala.zipWithIndex.foreach { case (block, b) =>
+      val (first, n) = (block.getRowIndexOffset, block.getRowCount)
+      val from = next
+      while (next < rows.length && rows(next) < first + n) next += 1
+      if (next > from) {
+        val inGroup = rows.slice(from, next).map(_ - first)
+        val pages =
+          if (inGroup.length == n) reader.readRowGroup(b)
+          else try reader.readFilteredRowGroup(b, exactly(inGroup, n))
+          catch { case _: MissingOffsetIndexException => reader.readRowGroup(b) }
+        val (idx, vals) = readColumns(pages, schema, md.getCreatedBy, value)
+        // a whole-row-group read (no offset index) holds every row
+        val keep = if (idx.length == inGroup.length) idx.indices.toArray
+          else { val at = idx.zipWithIndex.toMap; inGroup.map(at) }
+        vals.zip(out).foreach { case (v, o) =>
+          var i = 0
+          while (i < keep.length) { o(from + i) = v(keep(i)); i += 1 }
+        }
+      }
+    }
+    out
   }
 
   private def project(schema: MessageType, cols: Seq[String]): MessageType =
@@ -284,10 +301,32 @@ private[shard] object ShardRowMatch {
 private[shard] final class MatchedShard(val shard: Int, val rowCount: Long,
     @transient val chunksStatus: FileStatus,
     val rows: Array[Long], val codes: Seq[Array[Int]]) extends Serializable {
+  val listed: ListedChunks = ListedChunks(
+    Option(chunksStatus).map(_.getPath.toString).orNull,
+    Option(chunksStatus).fold(-1L)(_.getModificationTime),
+    Option(chunksStatus).fold(-1L)(_.getLen), rowCount)
   /** The chunks file as phase 1 listed it; null when it is missing. */
-  val chunks: String = Option(chunksStatus).map(_.getPath.toString).orNull
-  val chunksMtimeMs: Long = Option(chunksStatus).fold(-1L)(_.getModificationTime)
-  val chunksSize: Long = Option(chunksStatus).fold(-1L)(_.getLen)
+  def chunks: String = listed.path
+}
+
+/** A chunks file as phase 1 listed it: its path, mtime and size, and
+  * the row count of the labels file beside it. */
+private[shard] final case class ListedChunks(path: String, mtimeMs: Long,
+    size: Long, rows: Long) {
+
+  /** Throws unless the file, as a reader saw it (`mtimeMs`, `size`,
+    * `rows`) and as it is `now`, is the one listed: one generation's
+    * labels are never attached to another generation's chunks. `op`
+    * names the read ("select", "merge") and `since` what it did with
+    * the listing. */
+  def requireListed(mtimeMs: Long, size: Long, rows: Long, now: FileStatus,
+      op: String, since: String): Unit =
+    if (mtimeMs != this.mtimeMs || size != this.size || rows != this.rows ||
+        now.getModificationTime != this.mtimeMs || now.getLen != this.size)
+      throw new IllegalStateException(s"$path changed after the $op $since " +
+        s"(listed: mtime ${this.mtimeMs} ms, ${this.size} B, ${this.rows} rows; " +
+        s"now: mtime ${now.getModificationTime} ms, ${now.getLen} B): its rows " +
+        s"may no longer align with the labels read - run the $op again")
 }
 
 /** Phase 1's answer: the matched rows of every shard with at least
@@ -369,13 +408,10 @@ private[shard] case class MatchedRowLookup(children: Seq[Expression],
       throw new IllegalStateException(s"chunks file $name is not one this select listed"))
     val path = new Path(s.chunks)
     val now = path.getFileSystem(TaskHadoopConf.conf).getFileStatus(path)
-    if (mtimeMicros != s.chunksMtimeMs * 1000L || size != s.chunksSize ||
-        now.getModificationTime != s.chunksMtimeMs || now.getLen != s.chunksSize)
-      throw new IllegalStateException(s"${s.chunks} changed after the select " +
-        s"resolved its matchers (listed: mtime ${s.chunksMtimeMs} ms, " +
-        s"${s.chunksSize} B; now: mtime ${now.getModificationTime} ms, " +
-        s"${now.getLen} B): its rows may no longer align with the labels " +
-        "read - run the select again")
+    // `_metadata`'s time is the listing's, in µs
+    val seenMtimeMs = if (mtimeMicros == s.listed.mtimeMs * 1000L) s.listed.mtimeMs else -1L
+    s.listed.requireListed(seenMtimeMs, size, s.rowCount, now, "select",
+      "resolved its matchers")
     file = name
     shard = s
     lastRow = -1L

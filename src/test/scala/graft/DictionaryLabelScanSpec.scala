@@ -1,6 +1,7 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.graft.JobLog
 import org.apache.spark.sql.functions._
 import graft.tsdb.{ConvertOptions, DictionaryLabelScan, TsdbConverter}
 
@@ -124,5 +125,21 @@ class DictionaryLabelScanSpec extends SparkSpec {
       s"dictionary path read $read of a $columnBytes-byte column")
     assert(read * 4 < fileBytes,
       s"dictionary path read $read of $fileBytes file bytes")
+  }
+
+  test("labelValues over a dictionary-complete dir runs one job: the dictionary " +
+      "read; dedupe, sort and limit run on the driver") {
+    val p = "/tmp/graft_dictscan_jobs_spec"
+    (0 until 600).map(i => (s"svc_${(i * 7) % 31}", ts(i), 1.0))
+      .toDF("service", "ts", "value").repartition(3)
+      .write.mode("overwrite").parquet(p)
+    val want = (0 until 31).map(i => s"svc_$i").sorted
+    for (limit <- Seq(0, 5)) {
+      val (got, jobs) = JobLog(spark.sparkContext) {
+        DictionaryLabelScan.labelValues(spark, p, "service", limit).as[String].collect().toSeq
+      }
+      assert(got == (if (limit > 0) want.take(limit) else want), limit)
+      assert(jobs.size == 1, s"limit $limit: $jobs")
+    }
   }
 }

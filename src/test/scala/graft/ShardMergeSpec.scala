@@ -4,9 +4,10 @@ import java.sql.Timestamp
 import org.apache.spark.graft.ExecLog
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.tsdb.TsdbConverter
 import graft.tsdb.block.ChunkencHistogram
-import graft.tsdb.shard.ParquetShardStore
+import graft.tsdb.shard.{ParquetShardStore, ShardMerge}
 
 /** Series-grain shard compaction: `mergeShards`/`mergeShardsHist`
   * produce exactly what the sample-grain formulation — LWW
@@ -27,18 +28,45 @@ class ShardMergeSpec extends SparkSpec {
   private def labelsOf(s: Int): (String, String, String) =
     (if (s % 3 == 0) null else s"env_${s % 2}", s"i$s", s"job_${s % 4}")
 
-  /** XOR dir with series `ss`, one sample a minute in [lo, hi). */
+  /** XOR dir with series `ss`, one sample a minute in [lo, hi), its
+    * rows sorted by `sortBy`. */
   private def xorDir(name: String, ss: Seq[Int], lo: Int, hi: Int,
-      scale: Double, colDurationMs: Long): String = {
+      scale: Double, colDurationMs: Long, sortBy: Seq[String] = labels,
+      shards: Int = 1): String = {
     val d = s"/tmp/graft_pshard_smerge_$name"
     val rows = for (s <- ss; i <- lo until hi) yield {
       val (env, inst, job) = labelsOf(s)
       (env, inst, job, new Timestamp(base + i * minute), s * 1000 + i * scale)
     }
     ParquetShardStore.write(rows.toDF("env", "instance", "job", "ts", "value"),
-      d, labels, "ts", "value", colDurationMs = colDurationMs, samplesPerChunk = 40)
+      d, sortBy, "ts", "value", colDurationMs = colDurationMs, samplesPerChunk = 40,
+      shards = shards)
     d
   }
+
+  /** Each shard's label sets (in `labels` order) as stored, shard by
+    * shard. */
+  private def shardRows(dir: String): Seq[Seq[Seq[String]]] =
+    Iterator.from(0).map(s => s"$dir/$s.labels.parquet")
+      .takeWhile(new java.io.File(_).isFile).map { f =>
+        spark.read.parquet(f)
+          .select(labels.map(n => col(s"l_$n")) :+ col("_metadata.row_index"): _*)
+          .collect().sortBy(_.getLong(labels.size))
+          .map(r => labels.indices.map(r.getString).toSeq).toSeq
+      }.toSeq
+
+  /** The output order: label by label, an absent label first, values
+    * in UTF-8 byte order. */
+  private val outputOrder: Ordering[Seq[String]] = (a, b) =>
+    a.zip(b).iterator.map {
+      case (x, y) if x == y => 0
+      case (null, _) => -1
+      case (_, null) => 1
+      case (x, y) => UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+    }.find(_ != 0).getOrElse(0)
+
+  private def strictlyAscending(rows: Seq[Seq[String]]): Boolean =
+    rows.zip(rows.drop(1)).forall { case (a, b) => outputOrder.lt(a, b) }
 
   private def fullRange(d: String): (Long, Long) = {
     val m = ParquetShardStore.meta(spark, d)
@@ -216,8 +244,8 @@ class ShardMergeSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.shuffle.partitions", before)
   }
 
-  test("merge grain: shuffle records stay within 3x the input series rows " +
-      "and no executed plan aggregates on a key containing ts") {
+  test("merge grain: a merge of graft-written dirs writes no shuffle record and " +
+      "runs no SQL plan, so no ts-keyed aggregate") {
     val dirs = Seq(
       xorDir("grain_a", 0 until 12, 0, 240, 1.0, hour),
       xorDir("grain_b", 0 until 12, 120, 360, 10.0, hour))
@@ -227,18 +255,95 @@ class ShardMergeSpec extends SparkSpec {
     val (_, log) = ExecLog(spark.sparkContext) {
       ParquetShardStore.mergeShards(spark, dirs, out, colDurationMs = hour)
     }
-    // 24 series rows carry 5,760 samples: a sample-grain exchange
-    // writes thousands of records
+    // 24 series rows carry 5,760 samples
     assert(inputSeries == 24)
-    assert(log.shuffleRecordsWritten <= 3 * inputSeries,
-      s"${log.shuffleRecordsWritten} shuffle records for $inputSeries series rows")
-    val aggKeys = log.nodes.filter(_.nodeName.contains("Aggregate"))
-      .flatMap(n => "keys=\\[([^\\]]*)\\]".r.findFirstMatchIn(n.simpleString))
-      .map(_.group(1))
-    assert(aggKeys.exists(_.contains("instance#")), s"no series aggregate: $aggKeys")
-    assert(!aggKeys.exists(k => "(^|[ ,])ts#".r.findFirstIn(k).isDefined),
-      s"sample-grain aggregate keys: $aggKeys")
+    assert(log.shuffleRecordsWritten == 0, log.shuffleRecordsWritten)
+    assert(log.plans.isEmpty, log.nodes.map(_.simpleString))
     val (lo, hi) = fullRange(out)
     assert(ParquetShardStore.select(spark, out, lo, hi).count() == 12 * 360)
+  }
+
+  test("an input sorted in another label order merges exactly against the " +
+      "sample-grain oracle, into the output order") {
+    // B's rows are sorted by job, then instance, then env; one output
+    // shard of 5,000 series takes more than one read batch
+    val dirs = Seq(
+      xorDir("order_a", 0 until 10, 0, 150, 1.0, hour, shards = 2),
+      xorDir("order_b", 4 until 5000, 148, 151, 10.0, hour,
+        sortBy = Seq("job", "instance", "env"), shards = 2))
+    assert(!strictlyAscending(shardRows(dirs(1)).flatten))
+    val out = "/tmp/graft_pshard_smerge_order_out"
+    val oracle = "/tmp/graft_pshard_smerge_order_oracle"
+    ParquetShardStore.mergeShards(spark, dirs, out, colDurationMs = hour)
+    val scans = dirs.map { d =>
+      val (lo, hi) = fullRange(d)
+      ParquetShardStore.select(spark, d, lo, hi)
+    }
+    ParquetShardStore.write(
+      TsdbConverter.mergeShards(scans, labels, "ts", "value"), oracle,
+      labels, "ts", "value", colDurationMs = hour)
+    assert(ParquetShardStore.meta(spark, out) == ParquetShardStore.meta(spark, oracle))
+    val (lo, hi) = fullRange(out)
+    val got = bySeries(ParquetShardStore.select(spark, out, lo, hi))
+    assert(got.size == 5000)
+    assert(got == bySeries(ParquetShardStore.select(spark, oracle, lo, hi)))
+    assert(cells(out) == cells(oracle))
+    assert(strictlyAscending(shardRows(out).flatten))
+  }
+
+  test("the output shards are contiguous ranges of the output order whose series " +
+      "counts differ by at most 1") {
+    val dirs = Seq(
+      xorDir("cut_a", 0 until 11, 0, 30, 1.0, hour),
+      xorDir("cut_b", 6 until 17, 20, 50, 2.0, hour, shards = 2))
+    val out = "/tmp/graft_pshard_smerge_cut_out"
+    for (shards <- Seq(1, 3, 4, 5)) {
+      ParquetShardStore.mergeShards(spark, dirs, out, colDurationMs = hour, shards = shards)
+      val rows = shardRows(out)
+      val sizes = rows.map(_.size)
+      assert(sizes.size == shards && sizes.sum == 17, sizes)
+      assert(sizes.max - sizes.min <= 1, sizes)
+      assert(strictlyAscending(rows.flatten), rows)
+    }
+  }
+
+  test("a chunks file rewritten after the merge is planned fails the merge with " +
+      "the changed-after error") {
+    val a = xorDir("gen_a", 0 until 6, 0, 60, 1.0, hour)
+    val b = xorDir("gen_b", 3 until 9, 30, 90, 10.0, hour)
+    val out = "/tmp/graft_pshard_smerge_gen_out"
+    val planned = ShardMerge.plan(spark, Seq(a, b), 2, ShardMerge.Xor(samplesPerChunk = 40))
+    xorDir("gen_b", 3 until 12, 30, 90, 10.0, hour) // a new generation of b
+    val e = intercept[Exception](planned.write(out, hour, Nil))
+    assert(e.toString.contains("changed after the merge") ||
+      Option(e.getCause).exists(_.toString.contains("changed after the merge")), e)
+    // a fresh merge reads the new generation
+    ParquetShardStore.mergeShards(spark, Seq(a, b), out, colDurationMs = hour, shards = 2)
+    assert(ParquetShardStore.series(spark, out).count() == 12)
+  }
+
+  test("mixed histogram families and XOR/histogram cross-family inputs are refused " +
+      "on the driver, and the output dir's previous files survive") {
+    val exp = histDir(Signed, "fam_exp", 0 until 3, 0, 30, 1L, hour)
+    val nhcb = histDir(Nhcb, "fam_nhcb", 2 until 5, 10, 40, 1L, hour)
+    val xor = xorDir("fam_x", 0 until 3, 0, 30, 1.0, hour)
+    val out = "/tmp/graft_pshard_smerge_fam_out"
+    ParquetShardStore.mergeShards(spark, Seq(xor), out, colDurationMs = hour, shards = 2)
+    def listing = new java.io.File(out).listFiles()
+      .map(f => (f.getName, f.length, f.lastModified)).sorted.toSeq
+    val before = listing
+    for ((what, merge, msg) <- Seq[(String, () => Unit, String)](
+        ("exponential + NHCB", () => ParquetShardStore.mergeShardsHist(spark,
+          Seq(exp, nhcb), out, colDurationMs = hour), "(schema, bounds) families"),
+        ("XOR merge of a histogram dir", () => ParquetShardStore.mergeShards(spark,
+          Seq(xor, exp), out, colDurationMs = hour), "chunkenc families"),
+        ("histogram merge of an XOR dir", () => ParquetShardStore.mergeShardsHist(spark,
+          Seq(exp, xor), out, colDurationMs = hour), "chunkenc families"))) {
+      val e = intercept[IllegalArgumentException](merge())
+      assert(e.getMessage.contains(msg), s"$what: ${e.getMessage}")
+      assert(listing == before, what)
+    }
+    val (lo, hi) = fullRange(out)
+    assert(ParquetShardStore.select(spark, out, lo, hi).count() == 3 * 30)
   }
 }

@@ -89,18 +89,16 @@ class ShardSelectPlanSpec extends SparkSpec {
     }
   }
 
-  test("the merges read through the select's phases: no Join or BroadcastExchange " +
-      "in any executed plan of mergeShards or mergeShardsHist") {
+  test("the merges run no SQL plan: no Join, BroadcastExchange or Exchange in " +
+      "mergeShards or mergeShardsHist") {
     for ((what, merge) <- Seq[(String, () => Unit)](
         "mergeShards" -> (() => ParquetShardStore.mergeShards(spark, Seq(xorDir),
           "/tmp/graft_pshard_selplan_merge_xor", colDurationMs = hour, shards = 3)),
         "mergeShardsHist" -> (() => ParquetShardStore.mergeShardsHist(spark, Seq(hDir),
           "/tmp/graft_pshard_selplan_merge_hist", colDurationMs = hour, shards = 3)))) {
       val (_, log) = ExecLog(spark.sparkContext)(merge())
-      val names = log.nodes.map(_.nodeName)
-      assert(names.exists(_.startsWith("Scan parquet")), s"$what: $names")
-      assert(!names.exists(n => n.contains("Join") || n.contains("BroadcastExchange")),
-        s"$what: $names")
+      assert(log.plans.isEmpty, s"$what: ${log.nodes.map(_.nodeName)}")
+      assert(log.shuffleRecordsWritten == 0, s"$what: ${log.shuffleRecordsWritten}")
     }
   }
 

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-import org.apache.spark.graft.JobLog
+import org.apache.spark.graft.{ExecLog, JobLog}
 import org.apache.spark.sql.functions._
 
 import graft.tsdb.GraftFormatException
@@ -116,17 +116,29 @@ class ShardWritePlanSpec extends SparkSpec {
     assert(bounds(dir) == (base + 7 * minute, base + 199 * minute))
   }
 
-  test("mergeShards of two graft-written 2-shard dirs starts 3 jobs and no checkpoint") {
+  test("mergeShards of two graft-written 2-shard dirs runs 1 job with no shuffle and " +
+      "no checkpoint; mergeShardsHist adds only its header pre-pass") {
     val a = write("/tmp/graft_pshard_wplan_jobs_a", 0 until 12, 0, 120)
     val b = write("/tmp/graft_pshard_wplan_jobs_b", 6 until 18, 60, 240)
     val out = "/tmp/graft_pshard_wplan_jobs_out"
-    val (_, jobs) = JobLog.timed(spark.sparkContext) {
+    val ((_, log), jobs) = JobLog.timed(spark.sparkContext)(ExecLog(spark.sparkContext) {
       ParquetShardStore.mergeShards(spark, Seq(a, b), out, colDurationMs = hour, shards = 2)
-    }
-    assert(jobs.size == 3, s"${jobs.size} merge jobs:\n${jobs.mkString("\n")}")
+    })
+    assert(jobs.size == 1, s"${jobs.size} merge jobs:\n${jobs.mkString("\n")}")
+    assert(log.shuffleRecordsWritten == 0, log.shuffleRecordsWritten)
     assert(!jobs.exists(j => s"${j.firstStage} ${j.site}".contains("heckpoint")),
       jobs.mkString("\n"))
     assert(bounds(out) == (base, base + 239 * minute))
+    // the histogram merge: its (schema, bounds) pre-pass, then the write
+    val h = histDir("/tmp/graft_pshard_wplan_jobs_h")
+    val ((_, hlog), hjobs) = JobLog.timed(spark.sparkContext)(ExecLog(spark.sparkContext) {
+      ParquetShardStore.mergeShardsHist(spark, Seq(h), s"${out}_h", colDurationMs = hour,
+        shards = 2)
+    })
+    assert(hjobs.size == 2, s"${hjobs.size} merge jobs:\n${hjobs.mkString("\n")}")
+    assert(hlog.shuffleRecordsWritten == 0, hlog.shuffleRecordsWritten)
+    assert(!hjobs.exists(j => s"${j.firstStage} ${j.site}".contains("heckpoint")),
+      hjobs.mkString("\n"))
   }
 
   test("write and merge footers carry the exact sample min and max, on every shard, " +
@@ -203,6 +215,31 @@ class ShardWritePlanSpec extends SparkSpec {
         val e = intercept[GraftFormatException](run())
         assert(e.getMessage.contains("1.labels.parquet") && e.getMessage.contains(what) &&
           e.getMessage.contains("0.labels.parquet"), s"$what, $op: ${e.getMessage}")
+      }
+    }
+  }
+
+  test("shard files pin their column encodings: no dictionary for s_data_* and " +
+      "s_series_hash, dictionary-encoded label columns") {
+    val d = write("/tmp/graft_pshard_wplan_enc", 0 until 12, 0, 200)
+    val merged = "/tmp/graft_pshard_wplan_enc_merged"
+    ParquetShardStore.mergeShards(spark, Seq(d), merged, colDurationMs = hour, shards = 2)
+    for (dir <- Seq(d, merged); f <- shardFiles(dir)) {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
+      val chunks = try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala).toSeq
+        finally r.close()
+      def dictionary(c: org.apache.parquet.hadoop.metadata.ColumnChunkMetaData) =
+        c.hasDictionaryPage || c.getEncodings.asScala.exists(_.usesDictionary)
+      val names = chunks.map(_.getPath.toDotString).toSet
+      assert(names.exists(n => n.startsWith("s_data_") || n == "s_series_hash"), f)
+      chunks.foreach { c =>
+        val n = c.getPath.toDotString
+        if (n.startsWith("s_data_") || n == "s_series_hash")
+          assert(!dictionary(c), s"$f $n: ${c.getEncodings}")
+        // l_env repeats three values: its pages are all dictionary-encoded
+        if (n == "l_env")
+          assert(dictionary(c) && !c.getEncodingStats.hasNonDictionaryEncodedPages,
+            s"$f $n: ${c.getEncodings}")
       }
     }
   }
