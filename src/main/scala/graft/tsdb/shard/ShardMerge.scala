@@ -52,8 +52,8 @@ private[graft] final class ShardMerge private (spark: SparkSession,
     family: ShardMerge.Family) {
   import ShardMerge._
 
-  /** Runs the pre-pass if one is needed, makes the driver's checks,
-    * then writes `outDir`'s shards in one job. */
+  /** Runs the pre-pass if one is needed, refuses inputs whose families
+    * or schemas do not match, then writes `outDir`'s shards in one job. */
   def write(outDir: String, colDurationMs: Long, bloomFilterLabels: Seq[String]): Unit = {
     val sc = spark.sparkContext
     val conf = new SerializableConfiguration(sc.hadoopConfiguration)
@@ -328,7 +328,7 @@ private[graft] object ShardMerge {
       else Some((task.labels(i), family.toWrite(merged)))
     }
 
-  /** What the driver checks before a write that footers cannot tell:
+  /** What a merge must know before its write that footers cannot tell:
     * each input's chunk families, the samples' exact bounds (`lo` >
     * `hi` when there is none), and the histogram chunks' (schema,
     * bound list) set. */
