@@ -158,10 +158,10 @@ object GraftFunctions {
     Seq(dotProduct, shingles, minhashSignature, simhash, chunkEncode,
       chunkDecode, histChunkEncode("graft_hist_chunk_encode"),
       histChunkDecode("graft_hist_chunk_decode", classOf[ChunkencHistDecode],
-        ChunkencHistDecode),
+        ChunkencHistDecode(_, _, _)),
       histChunkEncode("graft_float_hist_chunk_encode"),
       histChunkDecode("graft_float_hist_chunk_decode",
-        classOf[ChunkencFloatHistDecode], ChunkencFloatHistDecode))
+        classOf[ChunkencFloatHistDecode], ChunkencFloatHistDecode(_, _, _)))
 
   /** Register on an already-built session. */
   def register(spark: SparkSession): Unit = {

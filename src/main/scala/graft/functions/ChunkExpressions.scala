@@ -53,9 +53,12 @@ case class ChunkEncode(child: Expression, samplesPerChunk: Int)
   * chunks whose frame header overlaps [qmint, qmaxt] (inclusive, the
   * reference decoder's filter — schema/encoder.go:310). Skipped
   * chunks are never parsed. Callers explode the result and apply the
-  * exact per-sample range predicate on top.
+  * exact per-sample range predicate on top — or decode with `exact`,
+  * which keeps only the samples inside [qmint, qmaxt] (the SQL
+  * function keeps the header-only semantics).
   */
-case class ChunkDecode(blob: Expression, qmint: Expression, qmaxt: Expression)
+case class ChunkDecode(blob: Expression, qmint: Expression, qmaxt: Expression,
+    exact: Boolean = false)
     extends TernaryExpression with ExpectsInputTypes {
 
   override def first: Expression = blob
@@ -72,11 +75,11 @@ case class ChunkDecode(blob: Expression, qmint: Expression, qmaxt: Expression)
 
   override def nullSafeEval(b: Any, mi: Any, ma: Any): Any =
     ChunkCodec.decodeToArrayData(b.asInstanceOf[Array[Byte]],
-      mi.asInstanceOf[Long], ma.asInstanceOf[Long])
+      mi.asInstanceOf[Long], ma.asInstanceOf[Long], exact)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (b, mi, ma) =>
-      s"${ev.value} = graft.tsdb.ChunkCodec.decodeToArrayData($b, $mi, $ma);")
+      s"${ev.value} = graft.tsdb.ChunkCodec.decodeToArrayData($b, $mi, $ma, $exact);")
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression,
@@ -205,10 +208,10 @@ case class ChunkencHistEncode(child: Expression, histSchema: Int,
   * ([[graft.tsdb.ChunkencHistCodec]]) → native-histogram samples of
   * the overlapping chunks, on each chunk's union bucket layout.
   * Foreign-family frames (XOR / float-hist in a mixed cell) skip by
-  * header; skipped bodies never parsed.
+  * header; skipped bodies never parsed. `exact` as in [[ChunkDecode]].
   */
 case class ChunkencHistDecode(blob: Expression, qmint: Expression,
-    qmaxt: Expression)
+    qmaxt: Expression, exact: Boolean = false)
     extends TernaryExpression with ExpectsInputTypes {
 
   override def first: Expression = blob
@@ -223,11 +226,11 @@ case class ChunkencHistDecode(blob: Expression, qmint: Expression,
   override def nullSafeEval(b: Any, mi: Any, ma: Any): Any =
     graft.tsdb.ChunkencHistCodec.decodeToArrayData(
       b.asInstanceOf[Array[Byte]], mi.asInstanceOf[Long],
-      ma.asInstanceOf[Long])
+      ma.asInstanceOf[Long], exact)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (b, mi, ma) =>
-      s"${ev.value} = graft.tsdb.ChunkencHistCodec.decodeToArrayData($b, $mi, $ma);")
+      s"${ev.value} = graft.tsdb.ChunkencHistCodec.decodeToArrayData($b, $mi, $ma, $exact);")
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression,
@@ -238,7 +241,7 @@ case class ChunkencHistDecode(blob: Expression, qmint: Expression,
 /** `graft_float_hist_chunk_decode`: [[ChunkencHistDecode]] for enc=3
   * FLOAT-histogram frame bodies. */
 case class ChunkencFloatHistDecode(blob: Expression, qmint: Expression,
-    qmaxt: Expression)
+    qmaxt: Expression, exact: Boolean = false)
     extends TernaryExpression with ExpectsInputTypes {
 
   override def first: Expression = blob
@@ -253,11 +256,11 @@ case class ChunkencFloatHistDecode(blob: Expression, qmint: Expression,
   override def nullSafeEval(b: Any, mi: Any, ma: Any): Any =
     graft.tsdb.ChunkencHistCodec.decodeFloatToArrayData(
       b.asInstanceOf[Array[Byte]], mi.asInstanceOf[Long],
-      ma.asInstanceOf[Long])
+      ma.asInstanceOf[Long], exact)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (b, mi, ma) =>
-      s"${ev.value} = graft.tsdb.ChunkencHistCodec.decodeFloatToArrayData($b, $mi, $ma);")
+      s"${ev.value} = graft.tsdb.ChunkencHistCodec.decodeFloatToArrayData($b, $mi, $ma, $exact);")
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression,

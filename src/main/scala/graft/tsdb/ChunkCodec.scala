@@ -407,9 +407,11 @@ object ChunkCodec {
     * chunks' bodies are never parsed. Returns parallel arrays of
     * the kept samples; per-sample range trimming is the CALLER's
     * filter (the reference also returns whole chunks and lets the
-    * iterator seek).
+    * iterator seek), unless `exact`: then only the samples inside
+    * [qmint, qmaxt] are kept.
     */
-  def decodeBlob(blob: Array[Byte], qmint: Long, qmaxt: Long): (Array[Long], Array[Double]) = {
+  def decodeBlob(blob: Array[Byte], qmint: Long, qmaxt: Long,
+      exact: Boolean = false): (Array[Long], Array[Double]) = {
     var outT = new Array[Long](64)
     var outV = new Array[Double](64)
     var n = 0
@@ -430,14 +432,21 @@ object ChunkCodec {
       if (enc == EncXor && mint <= qmaxt && maxt >= qmint) {
         val (ct, cv) = frameBody(blob, frameStart, bodyStart, size)(
           decodeChunk(blob, bodyStart, size))
-        if (n + ct.length > outT.length) {
-          val cap = math.max(outT.length * 2, n + ct.length)
+        // a chunk's samples are ts-sorted: the kept ones are a slice
+        var (from, until) = (0, ct.length)
+        if (exact) {
+          while (from < until && ct(from) < qmint) from += 1
+          while (until > from && ct(until - 1) > qmaxt) until -= 1
+        }
+        val k = until - from
+        if (n + k > outT.length) {
+          val cap = math.max(outT.length * 2, n + k)
           outT = java.util.Arrays.copyOf(outT, cap)
           outV = java.util.Arrays.copyOf(outV, cap)
         }
-        System.arraycopy(ct, 0, outT, n, ct.length)
-        System.arraycopy(cv, 0, outV, n, cv.length)
-        n += ct.length
+        System.arraycopy(ct, from, outT, n, k)
+        System.arraycopy(cv, from, outV, n, k)
+        n += k
       }
     }
     (java.util.Arrays.copyOf(outT, n), java.util.Arrays.copyOf(outV, n))
@@ -493,9 +502,11 @@ object ChunkCodec {
   }
 
   /** blob → array<struct<ts:long, value:double>> of chunks
-    * overlapping [qmint, qmaxt]. */
-  def decodeToArrayData(blob: Array[Byte], qmint: Long, qmaxt: Long): ArrayData = {
-    val (ts, vs) = decodeBlob(blob, qmint, qmaxt)
+    * overlapping [qmint, qmaxt]; `exact` keeps only the samples inside
+    * [qmint, qmaxt]. */
+  def decodeToArrayData(blob: Array[Byte], qmint: Long, qmaxt: Long,
+      exact: Boolean = false): ArrayData = {
+    val (ts, vs) = decodeBlob(blob, qmint, qmaxt, exact)
     val rows = new Array[Any](ts.length)
     var i = 0
     while (i < ts.length) {

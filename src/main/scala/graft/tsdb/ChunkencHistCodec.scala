@@ -180,9 +180,10 @@ object ChunkencHistCodec {
     * drop zero-count buckets when they want the sparse view.
     * `schema` and the NHCB bound list `cv` ride each sample so
     * custom-bucket consumers resolve bounds from the decoded bytes,
-    * like the block reader's `custom_values` column. */
-  def decodeToArrayData(blob: Array[Byte], qmint: Long,
-      qmaxt: Long): ArrayData = {
+    * like the block reader's `custom_values` column. `exact` keeps only
+    * the samples inside [qmint, qmaxt]. */
+  def decodeToArrayData(blob: Array[Byte], qmint: Long, qmaxt: Long,
+      exact: Boolean = false): ArrayData = {
     val rows = Vector.newBuilder[Any]
     val pos = Array(0)
     while (pos(0) < blob.length) {
@@ -203,11 +204,12 @@ object ChunkencHistCodec {
           val nIdxArr = new GenericArrayData(nUnion)
           var i = 0
           while (i < c.ts.length) {
-            rows += InternalRow(c.ts(i), c.zeroCount(i),
-              new GenericArrayData(union),
-              new GenericArrayData(c.posBuckets(i)), c.sum(i),
-              c.schema, cv, nIdxArr,
-              new GenericArrayData(c.negBuckets(i)))
+            if (!exact || (c.ts(i) >= qmint && c.ts(i) <= qmaxt))
+              rows += InternalRow(c.ts(i), c.zeroCount(i),
+                new GenericArrayData(union),
+                new GenericArrayData(c.posBuckets(i)), c.sum(i),
+                c.schema, cv, nIdxArr,
+                new GenericArrayData(c.negBuckets(i)))
             i += 1
           }
         }
@@ -302,8 +304,8 @@ object ChunkencHistCodec {
   }
 
   /** [[decodeToArrayData]] for enc=3 float-histogram frames. */
-  def decodeFloatToArrayData(blob: Array[Byte], qmint: Long,
-      qmaxt: Long): ArrayData = {
+  def decodeFloatToArrayData(blob: Array[Byte], qmint: Long, qmaxt: Long,
+      exact: Boolean = false): ArrayData = {
     val rows = Vector.newBuilder[Any]
     val pos = Array(0)
     while (pos(0) < blob.length) {
@@ -324,11 +326,12 @@ object ChunkencHistCodec {
           val nIdxArr = new GenericArrayData(nUnion)
           var i = 0
           while (i < c.ts.length) {
-            rows += InternalRow(c.ts(i), c.zeroCount(i),
-              new GenericArrayData(union),
-              new GenericArrayData(c.posBuckets(i)), c.sum(i),
-              c.schema, cv, nIdxArr,
-              new GenericArrayData(c.negBuckets(i)))
+            if (!exact || (c.ts(i) >= qmint && c.ts(i) <= qmaxt))
+              rows += InternalRow(c.ts(i), c.zeroCount(i),
+                new GenericArrayData(union),
+                new GenericArrayData(c.posBuckets(i)), c.sum(i),
+                c.schema, cv, nIdxArr,
+                new GenericArrayData(c.negBuckets(i)))
             i += 1
           }
         }

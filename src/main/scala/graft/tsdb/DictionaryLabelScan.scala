@@ -7,7 +7,7 @@ import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.{BlockMetaData, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.{DelegatingSeekableInputStream, InputFile, SeekableInputStream}
+import org.apache.parquet.io.InputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -25,15 +25,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * bucket pruning); this is the zero-upkeep complement for data
   * nobody indexed.
   *
-  * Two metadata-sized passes: a FOOTER-ONLY planning pass on the
-  * driver classifies every file (dictionary-complete vs
-  * needs-data-scan) from its EncodingStats, as shard reads plan from
-  * footers, then ONE job reads the dictionary pages of the good files
-  * and the driver dedupes and sorts them into a local relation — the
-  * whole answer for a dictionary-complete dir; the rest are
-  * data-scanned lazily by the answer frame. Per good file
-  * the IO is footer + one dictionary page per row group, asserted
-  * ≪ column size by [[dictionaryScanBytes]] and its spec.
+  * One metadata-sized pass on the driver, as shard reads plan from
+  * footers: each file is opened once, its footer classifies it
+  * (dictionary-complete vs needs-data-scan) from its EncodingStats,
+  * and a dictionary-complete file's dictionary pages are read in that
+  * same open. The driver dedupes and sorts the values into a local
+  * relation — the whole answer for a dictionary-complete dir, with no
+  * Spark job; the rest are data-scanned lazily by the answer frame.
+  * Per good file the IO is footer + one dictionary page per row group,
+  * asserted ≪ column size by [[dictionaryScanBytes]] and its spec.
   *
   * EXACTNESS: a dictionary is only the complete value set while
   * every data page of the chunk is dictionary-encoded; parquet
@@ -56,25 +56,11 @@ object DictionaryLabelScan {
     */
   def labelValues(spark: SparkSession, dir: String, column: String,
       limit: Int = 0): DataFrame = {
-    val (goodFiles, fallbackFiles) = planScan(spark, dir, column)
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    // dictionaries are metadata-sized: one job collects them, and the
-    // driver dedupes and sorts them (UTF-8 byte order, as Spark sorts
-    // strings) into a local relation
-    val dictValues =
-      if (goodFiles.isEmpty) Array.empty[String]
-      else spark.sparkContext
-        .parallelize(goodFiles, tasksFor(spark, goodFiles.size))
-        .mapPartitions(_.flatMap(p => fileDictionaryValues(
-          HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p),
-            conf.value), column, conf.value).getOrElse(
-          // the planning pass vouched for this file; a concurrent
-          // rewrite between passes must fail loudly, not lose values
-          throw new IllegalStateException(
-            s"$p lost dictionary completeness between planning and read"))))
-        .collect()
-    val sorted = dictValues.distinct.map(UTF8String.fromString)
+    val (dictValues, fallbackFiles) = planScan(spark, dir, column)
+    // dictionaries are metadata-sized: the driver dedupes and sorts
+    // them (UTF-8 byte order, as Spark sorts strings) into a local
+    // relation
+    val sorted = dictValues.distinct.map(UTF8String.fromString).toArray
     java.util.Arrays.sort(sorted.asInstanceOf[Array[AnyRef]])
     def local(vs: Seq[UTF8String]): DataFrame = spark.createDataFrame(
       vs.map(v => Row(v.toString)).asJava,
@@ -192,20 +178,21 @@ object DictionaryLabelScan {
     (read, columnBytes, fileBytes)
   }
 
-  /** The footer-only planning pass, on the driver as shard reads plan:
-    * (dictionary-complete files, data-scan files). Files without the
-    * column, or with only nulls in it, contribute nothing and are
-    * dropped.
+  /** The planning pass, on the driver as shard reads plan: one open
+    * per file reads its footer and, when the footer shows the
+    * dictionary pages are the complete value set, those pages.
+    * Returns (the dictionary values, the files that need a data scan).
+    * Files without the column, or with only nulls in it, contribute
+    * nothing.
     */
   private def planScan(spark: SparkSession, dir: String,
       column: String): (Seq[String], Seq[String]) = {
     val conf = spark.sparkContext.hadoopConfiguration
     val classified = listParquetFiles(spark, dir).map { p =>
       val r = open(HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p), conf), conf)
-      try (p, dictionaryBlocks(r.getFooter, column)) finally r.close()
+      try (p, dictionaryValues(r, column)) finally r.close()
     }
-    (classified.collect { case (p, Some(bs)) if bs.nonEmpty => p },
-      classified.collect { case (p, None) => p })
+    (classified.flatMap(_._2.getOrElse(Nil)), classified.collect { case (p, None) => p })
   }
 
   /** Opens `input` with read options from `conf`: without them
@@ -288,10 +275,17 @@ object DictionaryLabelScan {
     * hold for this file. A file without the column (or with only-null
     * chunks) contributes no values.
     */
-  private[tsdb] def fileDictionaryValues(input: InputFile,
+  private def fileDictionaryValues(input: InputFile,
       column: String, conf: Configuration): Option[Seq[String]] = {
     val reader = open(input, conf)
-    try dictionaryBlocks(reader.getFooter, column).flatMap { blocks =>
+    try dictionaryValues(reader, column) finally reader.close()
+  }
+
+  /** [[fileDictionaryValues]] of the file `reader` has open; None also
+    * when a row group's chunk has no dictionary page. */
+  private def dictionaryValues(reader: ParquetFileReader,
+      column: String): Option[Seq[String]] =
+    dictionaryBlocks(reader.getFooter, column).flatMap { blocks =>
       lazy val desc = reader.getFooter.getFileMetaData.getSchema
         .getColumnDescription(Array(column))
       val out = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -318,45 +312,5 @@ object DictionaryLabelScan {
         }
       }
       Some(out.toSeq)
-    } finally reader.close()
-  }
-
-  /** InputFile whose streams count every byte read — the spec's
-    * evidence that the dictionary path touches footer + dictionary
-    * pages only. */
-  private class CountingInputFile(delegate: InputFile) extends InputFile {
-    private val counter = new java.util.concurrent.atomic.AtomicLong()
-    def bytesRead: Long = counter.get()
-    override def getLength: Long = delegate.getLength
-    override def newStream(): SeekableInputStream = {
-      val in = delegate.newStream()
-      new DelegatingSeekableInputStream(in) {
-        override def getPos: Long = in.getPos
-        override def seek(newPos: Long): Unit = in.seek(newPos)
-        override def read(): Int = {
-          val r = super.read(); if (r >= 0) counter.incrementAndGet(); r
-        }
-        override def read(b: Array[Byte], off: Int, len: Int): Int = {
-          val r = super.read(b, off, len)
-          if (r > 0) counter.addAndGet(r.toLong)
-          r
-        }
-        override def read(buf: java.nio.ByteBuffer): Int = {
-          val r = super.read(buf)
-          if (r > 0) counter.addAndGet(r.toLong)
-          r
-        }
-        override def readFully(b: Array[Byte]): Unit = {
-          super.readFully(b); counter.addAndGet(b.length.toLong)
-        }
-        override def readFully(b: Array[Byte], off: Int, len: Int): Unit = {
-          super.readFully(b, off, len); counter.addAndGet(len.toLong)
-        }
-        override def readFully(buf: java.nio.ByteBuffer): Unit = {
-          val n = buf.remaining()
-          super.readFully(buf); counter.addAndGet(n.toLong)
-        }
-      }
     }
-  }
 }

@@ -7,7 +7,7 @@ import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
-import org.apache.parquet.hadoop.metadata.{CompressionCodecName, FileMetaData}
+import org.apache.parquet.hadoop.metadata.{CompressionCodecName, FileMetaData, ParquetMetadata}
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.io.api.{Binary, RecordConsumer}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type, Types}
@@ -56,10 +56,8 @@ import ParquetShardSchema._
   *   0. planning is footer reads, not Spark jobs: shard 0's labels footer
   *      gives the [[ShardMeta]] and the labels schema, and building
   *      any read frame (`meta`, `labelNames`, `series`, every
-  *      `select*`) starts zero Spark jobs. File listing starts no job
-  *      either, up to Spark's parallel-listing threshold
-  *      (`spark.sql.sources.parallelPartitionDiscovery.threshold`,
-  *      32 paths by default);
+  *      `select*`) starts zero Spark jobs. File listing is one
+  *      listing of the dir on the driver;
   *   1. on the driver, the matchers become each shard's matched rows
   *      ([[ShardRowMatch]]): parquet-java reads only the label columns
   *      the matchers name, skipping the row groups and pages the
@@ -67,30 +65,30 @@ import ParquetShardSchema._
   *      the exact `Matcher.compile` predicate, then reads the output
   *      label columns of the matched rows only. The labels and chunks
   *      footers of each matched shard must agree on the row count;
-  *   2. the chunks files of the shards with a match are scanned with
-  *      no join: one [[MatchedRowLookup]] on (shard file,
-  *      `_metadata.row_index`) — Spark's row index IS the row
-  *      alignment the reference gets from its RowRange machinery —
-  *      drops the unmatched rows and attaches the labels from a
-  *      broadcast the driver made (no job), and throws if a chunks
-  *      file changed since phase 1 listed it. `series` is phase 1
-  *      alone, a local relation;
-  *   3. the chunks scan reads ONLY the `s_data_<i>` columns whose
-  *      window overlaps the query range (`ReadSchema` pruning — the
-  *      columnar analog of the reference reading only in-range data
-  *      columns, schema.go DataColumIdx), and [[ChunkDecode]] skips
-  *      non-overlapping frames inside each cell by header. The
-  *      decode bounds and the per-sample range filter are
-  *      [[graft.functions.QueryConst]]s, and the output ts carries
-  *      the decoded-sample mark, so a moved window reuses the
-  *      compiled code of the last one.
+  *   2. graft tasks read the matched rows by row range
+  *      ([[ShardRowScan]], the reference's materialize step): the
+  *      driver sizes the read from each matched shard's chunks footer
+  *      and packs the row groups holding matches into splits of
+  *      Spark's own split size; each task opens its chunks files,
+  *      throws if one changed since phase 1 listed it, reads ONLY its
+  *      rows' `s_data_<i>` cells whose window overlaps the query range
+  *      (the pages that hold them, schema.go DataColumIdx) and attaches
+  *      the labels — no Spark file scan, no join, no broadcast job. A
+  *      read that fits one split plans as one partition, so the
+  *      aggregates and joins over it need no exchange. `series` is
+  *      phase 1 alone, a local relation;
+  *   3. [[ChunkDecode]] skips non-overlapping frames inside each cell
+  *      by header and keeps exactly the samples in `[mint, maxt)`. The
+  *      decode bounds are [[graft.functions.QueryConst]]s and the
+  *      output ts carries the decoded-sample mark, so a moved window
+  *      reuses the compiled code of the last one.
   * A [[select]] (or [[selectStrict]]) frame also carries, as a tag on
   * its own logical plan, a handle to its SERIES-GRAIN TWIN
   * ([[seriesGrain]]): one row per matched series, the label columns
   * plus `_samples`, the series' decoded in-range samples as one array
   * in stored order — the reference's materialized series (labels +
   * chunks, search/materialize.go) — built from the same phase-1 rows
-  * and chunks scan. PromQL evaluates its range functions on it per
+  * and row-range read. PromQL evaluates its range functions on it per
   * series. Frames derived from the select (a filter, a projection, a
   * union) carry no handle, and neither does a select whose phase 1
   * sees one label set on two rows, since a consumer of the twin would
@@ -575,7 +573,7 @@ object ParquetShardStore {
     * in `[mintMs, maxtMs)` as array<struct<ts: long ms, value:
     * double>> — the concat of its decoded in-range `s_data` cells, in
     * stored order. It is built from the select's own phase-1 rows and
-    * chunks scan, so the row-count and "changed after the select"
+    * row-range read, so the row-count and "changed after the select"
     * checks hold for it too. A consumer that evaluates per series
     * (PromQL's range functions) reads it instead of exploding and
     * regrouping the select's samples.
@@ -605,9 +603,8 @@ object ParquetShardStore {
     c => ColumnBridge.column(ChunkDecode(
       ColumnBridge.expression(c),
       ColumnBridge.expression(QueryConst.long(mintMs)),
-      // frame-header filter is inclusive (reference semantics);
-      // the exact [mint, maxt) bound re-applies per sample after
-      ColumnBridge.expression(QueryConst.long(maxtMs - 1))))
+      // inclusive bounds: exactly the samples in [mint, maxt)
+      ColumnBridge.expression(QueryConst.long(maxtMs - 1)), exact = true))
 
   /** [[select]] over a [[writeHist]] shard: output is the
     * NativeHistogram row model (`zero_count`/`pos_idx`/`pos_counts`
@@ -630,7 +627,7 @@ object ParquetShardStore {
     c => ColumnBridge.column(graft.functions.ChunkencHistDecode(
       ColumnBridge.expression(c),
       ColumnBridge.expression(QueryConst.long(mintMs)),
-      ColumnBridge.expression(QueryConst.long(maxtMs - 1))))
+      ColumnBridge.expression(QueryConst.long(maxtMs - 1)), exact = true))
 
   /** [[selectHist]] over a [[writeFloatHist]] shard (enc=3 cells);
     * zero/counts come back as doubles. */
@@ -645,7 +642,7 @@ object ParquetShardStore {
     c => ColumnBridge.column(graft.functions.ChunkencFloatHistDecode(
       ColumnBridge.expression(c),
       ColumnBridge.expression(QueryConst.long(mintMs)),
-      ColumnBridge.expression(QueryConst.long(maxtMs - 1))))
+      ColumnBridge.expression(QueryConst.long(maxtMs - 1)), exact = true))
 
   private def histOutput: Seq[org.apache.spark.sql.Column] = Seq(
     col("_s.zero").as("zero_count"),
@@ -761,16 +758,15 @@ object ParquetShardStore {
     * reference's constraint → row ranges → materialize):
     *   1. on the driver, [[ShardRowMatch.resolve]] turns the matchers
     *      into each shard's matched rows and their label values;
-    *   2. the chunks files of the shards with a match are scanned for
-    *      the in-range `s_data_<i>` columns only, and one
-    *      [[MatchedRowLookup]] on (shard file, row index) drops the
-    *      unmatched rows and attaches the labels — no join. The
-    *      matched rows reach it as a broadcast the driver made, which
-    *      starts no job.
+    *   2. graft tasks read exactly those rows' in-range `s_data_<i>`
+    *      cells by row range and attach the labels ([[ShardRowScan]]):
+    *      no Spark file scan and no join. A read that fits one split
+    *      is a single-partition plan, so the aggregates over it need
+    *      no exchange.
     * Output: the labels as one struct column `_l` and the data
     * columns, nothing decoded; and the data column names and phase 1's
     * answer. A window that misses the footer range or matches nothing
-    * gives an empty local relation, and nothing is scanned.
+    * gives an empty local relation, and nothing is read.
     */
   private def matchedRows(f: ShardFooters, mintMs: Long, maxtMs: Long,
       matchers: Seq[Matcher])
@@ -781,10 +777,10 @@ object ParquetShardStore {
     val names = f.labelNames
     val predicate = ShardRowMatch.compile(spark, names, matchers)
 
-    // data columns overlapping the query range (ReadSchema pruning).
-    // Clamp in LONG before narrowing: an open-ended bound like
-    // Long.MaxValue would wrap dataColumnIdx's Int and silently
-    // empty the select.
+    // data columns overlapping the query range (the columnar analog of
+    // the reference reading only in-range data columns). Clamp in LONG
+    // before narrowing: an open-ended bound like Long.MaxValue would
+    // wrap dataColumnIdx's Int and silently empty the select.
     def colIdxClamped(t: Long): Int =
       if (t < m.mintMs) 0
       else math.min((t - m.mintMs) / m.colDurationMs,
@@ -801,18 +797,7 @@ object ParquetShardStore {
     val rows = matched match {
       case None => spark.createDataFrame(java.util.Collections.emptyList[Row](),
         StructType(StructField("_l", labelsType) +: dataCols.map(StructField(_, BinaryType))))
-      case Some(series) =>
-        val conf = spark.sparkContext.hadoopConfiguration
-        val chunks = series.shards.map(s =>
-          alignedChunks(conf, dir, s.shard, s.rowCount, s.chunksStatus)).head
-        val lookup = ColumnBridge.column(MatchedRowLookup(
-          Seq("file_name", "row_index", "file_modification_time", "file_size")
-            .map(c => ColumnBridge.expression(col(s"_metadata.$c"))),
-          spark.sparkContext.broadcast(series), labelsType))
-        spark.read.schema(sparkSchema(spark, chunks))
-          .parquet(series.shards.map(_.chunks).toIndexedSeq: _*)
-          .select(lookup.as("_l") +: dataCols.map(col): _*)
-          .filter(col("_l").isNotNull)
+      case Some(series) => ShardRowScan.frame(spark, dir, series, labelsType, dataCols)
     }
     (rows, dataCols, matched)
   }
@@ -820,9 +805,9 @@ object ParquetShardStore {
   /** The row-alignment check, from the footers: shard `shard` of
     * `dir` has a chunks file (`chunks`, as listed) with as many rows
     * as its labels file (`labelsRows`). Returns the chunks footer,
-    * which gives a scan its schema. */
+    * whose row groups size a read. */
   private[shard] def alignedChunks(conf: Configuration, dir: String, shard: Int,
-      labelsRows: Long, chunks: org.apache.hadoop.fs.FileStatus): FileMetaData = {
+      labelsRows: Long, chunks: org.apache.hadoop.fs.FileStatus): ParquetMetadata = {
     if (chunks == null)
       throw new IllegalStateException(s"$dir: shard $shard has a " +
         "labels file and no chunks file")
@@ -837,7 +822,7 @@ object ParquetShardStore {
         throw new IllegalStateException(s"$dir: shard $shard's labels " +
           s"file has $labelsRows rows and its chunks file $n - the two " +
           "files are not row-aligned")
-      reader.getFooter.getFileMetaData
+      reader.getFooter
     } finally reader.close()
   }
 
@@ -860,19 +845,16 @@ object ParquetShardStore {
           s"select would fetch $bytes encoded chunk bytes " +
             s"(quota $chunkBytesQuota)")
     }
+    // the decode keeps exactly the samples in [mintMs, maxtMs)
     val decoded = dataCols.map(c => decode(col(c)))
     val allSamples = if (decoded.size == 1) decoded.head else concat(decoded: _*)
     val labels = names.map(n => col("_l")(n).as(n))
     val out = rows
       .select(labels :+ explode(allSamples).as("_s"): _*)
-      .filter(col("_s.ts") >= QueryConst.long(mintMs) &&
-        col("_s.ts") < QueryConst.long(maxtMs))
       .select((names.map(col) :+ QueryConst.decodedTs(
         timestamp_millis(col("_s.ts")), tsCol)) ++ sampleOutput: _*)
     twinValueCol.foreach { valueCol =>
-      def twin = rows.select(labels :+ filter(allSamples, s =>
-        s("ts") >= QueryConst.long(mintMs) && s("ts") < QueryConst.long(maxtMs))
-        .as("_samples"): _*)
+      def twin = rows.select(labels :+ allSamples.as("_samples"): _*)
       out.queryExecution.logical.setTagValue(SeriesGrainTag,
         new SeriesGrain(twin, names, tsCol, valueCol, matched))
     }

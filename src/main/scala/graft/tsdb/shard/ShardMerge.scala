@@ -1,10 +1,7 @@
 package graft.tsdb.shard
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -259,13 +256,7 @@ private[graft] object ShardMerge {
     val readers = new Array[ParquetFileReader](task.files.length)
     try {
       task.files.indices.foreach { k =>
-        val listed = task.files(k).listed
-        val path = new Path(listed.path)
-        val now = path.getFileSystem(conf).getFileStatus(path)
-        readers(k) = ParquetFileReader.open(HadoopInputFile.fromStatus(now, conf),
-          HadoopReadOptions.builder(conf).build())
-        listed.requireListed(now.getModificationTime, now.getLen,
-          readers(k).getRecordCount, now, "merge", "listed its inputs")
+        readers(k) = task.files(k).listed.open(conf, "merge", "listed its inputs")
       }
       body(readers)
     } finally readers.filter(_ != null).foreach(_.close())

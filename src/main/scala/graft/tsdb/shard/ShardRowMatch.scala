@@ -15,16 +15,13 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.internal.column.columnindex.OffsetIndex
 import org.apache.parquet.internal.filter2.columnindex.ColumnIndexStore.MissingOffsetIndexException
 import org.apache.parquet.internal.filter2.columnindex.RowRanges
+import org.apache.parquet.io.InputFile
 import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter}
 import org.apache.parquet.schema.MessageType
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BasePredicate, BindReferences, Expression, GenericInternalRow, Predicate}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BasePredicate, BindReferences, GenericInternalRow, Predicate}
 import org.apache.spark.sql.catalyst.plans.logical.Filter
-import org.apache.spark.sql.graft.TaskHadoopConf
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -314,25 +311,33 @@ private[shard] final class MatchedShard(val shard: Int, val rowCount: Long,
 private[shard] final case class ListedChunks(path: String, mtimeMs: Long,
     size: Long, rows: Long) {
 
-  /** Throws unless the file, as a reader saw it (`mtimeMs`, `size`,
-    * `rows`) and as it is `now`, is the one listed: one generation's
-    * labels are never attached to another generation's chunks. `op`
-    * names the read ("select", "merge") and `since` what it did with
-    * the listing. */
-  def requireListed(mtimeMs: Long, size: Long, rows: Long, now: FileStatus,
-      op: String, since: String): Unit =
-    if (mtimeMs != this.mtimeMs || size != this.size || rows != this.rows ||
-        now.getModificationTime != this.mtimeMs || now.getLen != this.size)
+  /** Opens the file with parquet-java (through `wrap`) and throws unless
+    * it is the one listed — same mtime, size and row count: one
+    * generation's labels are never attached to another generation's
+    * chunks. `op` names the read ("select", "merge") and `since` what
+    * it did with the listing. */
+  def open(conf: Configuration, op: String, since: String,
+      wrap: InputFile => InputFile = identity): ParquetFileReader = {
+    val file = new Path(path)
+    val now = file.getFileSystem(conf).getFileStatus(file)
+    val reader = ParquetFileReader.open(wrap(HadoopInputFile.fromStatus(now, conf)),
+      HadoopReadOptions.builder(conf).build())
+    val n = reader.getRecordCount
+    if (now.getModificationTime != mtimeMs || now.getLen != size || n != rows) {
+      reader.close()
       throw new IllegalStateException(s"$path changed after the $op $since " +
-        s"(listed: mtime ${this.mtimeMs} ms, ${this.size} B, ${this.rows} rows; " +
-        s"now: mtime ${now.getModificationTime} ms, ${now.getLen} B): its rows " +
+        s"(listed: mtime $mtimeMs ms, $size B, $rows rows; now: mtime " +
+        s"${now.getModificationTime} ms, ${now.getLen} B, $n rows): its rows " +
         s"may no longer align with the labels read - run the $op again")
+    }
+    reader
+  }
 }
 
 /** Phase 1's answer: the matched rows of every shard with at least
   * one, and the label values, dictionary-coded per label. It reaches
-  * the tasks as a broadcast value, so a task carries only its
-  * handle. */
+  * phase 2's tasks ([[ShardRowScan]]) as a broadcast value, so a task
+  * carries only its handle. */
 private[shard] final class MatchedSeries(val dicts: Array[Array[String]],
     val shards: Array[MatchedShard]) extends Serializable {
   def isEmpty: Boolean = shards.isEmpty
@@ -351,88 +356,4 @@ private[shard] final class MatchedSeries(val dicts: Array[Array[String]],
       if (c < 0) null else dicts(j)(c)
     }))
   }
-}
-
-/** Phase 2's lookup: the labels of the chunks row at (`file_name`,
-  * `row_index`) of `_metadata`, as a struct of the label values; null
-  * when phase 1 did not match the row. A filter on it drops the
-  * unmatched rows and a projection attaches the labels, with no join.
-  *
-  * The matched rows travel as `matched`, a broadcast the driver made
-  * without a job; the generated code binds only this expression as a
-  * reference, so the source does not change with the matched rows.
-  *
-  * Row alignment: the first row of each file in a task compares the
-  * file's `_metadata.file_modification_time`/`file_size` and its
-  * status now with what phase 1 listed, and throws if any differs —
-  * one generation's labels are never attached to another
-  * generation's chunks. Both are needed: `_metadata` is Spark's
-  * listing, taken when the select was built, and a dir rewritten
-  * after that leaves it unchanged while the scan reads the new files.
-  */
-private[shard] case class MatchedRowLookup(children: Seq[Expression],
-    matched: Broadcast[MatchedSeries], dataType: StructType) extends Expression {
-  require(children.length == 4, "file_name, row_index, file_modification_time, file_size")
-
-  override def nullable: Boolean = true
-
-  override def eval(input: InternalRow): Any = {
-    val Seq(f, r, t, s) = children.map(_.eval(input))
-    lookup(f.asInstanceOf[UTF8String], r.asInstanceOf[Long],
-      t.asInstanceOf[Long], s.asInstanceOf[Long])
-  }
-
-  @transient private var file: UTF8String = _
-  @transient private var shard: MatchedShard = _
-  @transient private var values: Array[Array[UTF8String]] = _
-  @transient private var lastRow = -1L
-  @transient private var last: InternalRow = _
-
-  /** The labels of `row` in chunks file `name`, or null. */
-  def lookup(name: UTF8String, row: Long, mtimeMicros: Long, size: Long): InternalRow = {
-    if (shard == null || !name.equals(file)) open(name.clone(), mtimeMicros, size)
-    else if (row == lastRow) return last
-    val i = java.util.Arrays.binarySearch(shard.rows, row)
-    lastRow = row
-    last = if (i < 0) null else new GenericInternalRow(Array.tabulate[Any](values.length) { j =>
-      val c = shard.codes(j)(i)
-      if (c < 0) null else values(j)(c)
-    })
-    last
-  }
-
-  private def open(name: UTF8String, mtimeMicros: Long, size: Long): Unit = {
-    val m = matched.value
-    if (values == null) values = m.dicts.map(_.map(UTF8String.fromString))
-    val s = m.shards.find(s => new Path(s.chunks).getName == name.toString).getOrElse(
-      throw new IllegalStateException(s"chunks file $name is not one this select listed"))
-    val path = new Path(s.chunks)
-    val now = path.getFileSystem(TaskHadoopConf.conf).getFileStatus(path)
-    // `_metadata`'s time is the listing's, in µs
-    val seenMtimeMs = if (mtimeMicros == s.listed.mtimeMs * 1000L) s.listed.mtimeMs else -1L
-    s.listed.requireListed(seenMtimeMs, size, s.rowCount, now, "select",
-      "resolved its matchers")
-    file = name
-    shard = s
-    lastRow = -1L
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("matchedRows", this)
-    val args = children.map(_.genCode(ctx))
-    ev.copy(code = code"""
-      |${args.map(_.code).reduce(_ + _)}
-      |${CodeGenerator.javaType(dataType)} ${ev.value} = $self.lookup(
-      |  ${args(0).value}, ${args(1).value}, ${args(2).value}, ${args(3).value});
-      |boolean ${ev.isNull} = ${ev.value} == null;""".stripMargin)
-  }
-
-  /** The four `_metadata` children and the label count: the labels
-    * type and the broadcast would repeat at every occurrence in a plan
-    * string. */
-  override protected def stringArgs: Iterator[Any] =
-    Iterator(children, s"${dataType.length} labels")
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression = copy(children = newChildren)
 }

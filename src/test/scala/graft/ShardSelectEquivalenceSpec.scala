@@ -2,8 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.graft.ReadLog
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
@@ -116,8 +118,47 @@ class ShardSelectEquivalenceSpec extends SparkSpec {
     assert(rowSet(ParquetShardStore.select(spark, dir, lo, hi,
       Seq(Matcher.Re("kind", "view")))).forall(_(2) == "view"))
     // a matcher confined to shard 0 leaves the other two shards unread
-    val files = ParquetShardStore.select(spark, dir, lo, hi, cases(10)._2).inputFiles
-    assert(files.length == 1 && files.head.endsWith("/0.chunks.parquet"), files.toSeq)
+    val files = ShardReads.of(ParquetShardStore.select(spark, dir, lo, hi, cases(10)._2))
+      .flatMap(_.files)
+    assert(files.length == 1 && files.head.endsWith("/0.chunks.parquet"), files)
+  }
+
+  test("a selective select reads only the chunks row groups that hold its matches") {
+    val d = "/tmp/graft_pshard_select_rowgroups"
+    ParquetShardStore.write(rows(0).toDF("svc", "env", "zone", "kind", "inst", "ts", "value"),
+      d, Seq("svc", "env", "zone", "kind", "inst"), "ts", "value",
+      colDurationMs = hour, rowGroupSize = 2048)
+    val footer = {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$d/0.chunks.parquet"),
+        spark.sparkContext.hadoopConfiguration))
+      try r.getFooter finally r.close()
+    }
+    val groups = footer.getBlocks.asScala.toSeq
+    assert(groups.size >= 8, s"${groups.size} chunks row groups")
+    // [1h, 3h) at 1h columns: s_data_1 and s_data_2
+    val (lo, hi) = (base + hour, base + 3 * hour)
+    val inRange = Set("s_data_1", "s_data_2")
+    def bytes(g: org.apache.parquet.hadoop.metadata.BlockMetaData) =
+      g.getColumns.asScala.filter(c => inRange(c.getPath.toDotString)).map(_.getTotalSize).sum
+    // the file's rows that match, from a Spark scan of the labels file
+    val ms = Seq(Matcher.Eq("svc", "svc_07"))
+    val matchedRows = spark.read.parquet(s"$d/0.labels.parquet")
+      .filter(col("l_svc") === "svc_07").select(col("_metadata.row_index"))
+      .as[Long].collect().toSet
+    val (hit, miss) = groups.partition(g => matchedRows.exists(r =>
+      r >= g.getRowIndexOffset && r < g.getRowIndexOffset + g.getRowCount))
+    assert(miss.size >= 6, s"${hit.size} of ${groups.size} row groups hold a match")
+    // indexes and footer follow the last column chunk
+    val tail = new java.io.File(s"$d/0.chunks.parquet").length -
+      groups.flatMap(_.getColumns.asScala).map(c => c.getStartingPos + c.getTotalSize).max
+    val select = ParquetShardStore.select(spark, d, lo, hi, ms)
+    val (got, bytesRead, recordsRead) = ReadLog(spark.sparkContext)(rowSet(select))
+    assert(got == rowSet(reference(d, lo, hi, ms)) && got.nonEmpty)
+    assert(recordsRead == matchedRows.size, recordsRead)
+    assert(bytesRead > 0 && bytesRead <= tail + hit.map(bytes).sum,
+      s"read $bytesRead B: footer region $tail B, matched row groups " +
+        s"${hit.map(bytes).sum} B, the others ${miss.map(bytes).sum} B")
   }
 
   test("a dir rewritten between select() and collect() fails the collect") {

@@ -3,19 +3,28 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.graft.{ExecLog, JobLog}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
+import org.apache.spark.sql.execution.{FilterExec, LogicalRDD, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import graft.tsdb.Matcher
 import graft.tsdb.promql.{PromQL, PromQLContext}
-import graft.tsdb.shard.ParquetShardStore
+import graft.tsdb.shard.{ParquetShardStore, ShardRowsRDD}
+
+/** The row-range readers ([[ShardRowsRDD]]) of a frame's plan. */
+object ShardReads {
+  def of(df: DataFrame): Seq[ShardRowsRDD] =
+    df.queryExecution.optimizedPlan.collect { case r: LogicalRDD => r.rdd }
+      .collect { case r: ShardRowsRDD => r }.distinct
+}
 
 /** The shape of a reference-layout shard select: the matchers resolve
-  * to matched rows on the driver (phase 1), so the executed plan is a
-  * scan of the matched shards' chunks files with no join and no
-  * broadcast exchange, its `ReadSchema` holds only the in-range
-  * `s_data_<i>` columns, and a raw select's collect runs one job —
-  * `series` none.
+  * to matched rows on the driver (phase 1), so the executed plan reads
+  * the matched shards' chunks files by row range with no join and no
+  * broadcast exchange, the reader requests only the in-range
+  * `s_data_<i>` columns, a raw select's collect runs one job —
+  * `series` none — and a one-split select is one partition, so the
+  * aggregates over it need no exchange.
   */
 class ShardSelectPlanSpec extends SparkSpec {
   import spark.implicits._
@@ -83,7 +92,8 @@ class ShardSelectPlanSpec extends SparkSpec {
       val (rows, log) = ExecLog(spark.sparkContext)(df.collect())
       assert(rows.nonEmpty, what)
       val names = log.nodes.map(_.nodeName)
-      assert(names.exists(_.startsWith("Scan parquet")), s"$what: $names")
+      assert(names.exists(_.startsWith("Scan ExistingRDD shard rows")) &&
+        !names.exists(_.startsWith("Scan parquet")), s"$what: $names")
       assert(!names.exists(n => n.contains("Join") || n.contains("BroadcastExchange")),
         s"$what: $names")
     }
@@ -102,35 +112,35 @@ class ShardSelectPlanSpec extends SparkSpec {
     }
   }
 
-  test("plan strings print the row lookup's four _metadata children and its label " +
-      "count, not its labels schema") {
+  test("a select's plan holds no row lookup and no _metadata column; the " +
+      "decode keeps the window with no Filter") {
+    for ((what, df) <- frames) {
+      assert(df.collect().nonEmpty, what)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("matchedrowlookup") && !plan.contains("_metadata"), s"$what: $plan")
+    }
     val df = ParquetShardStore.select(spark, xorDir, lo, hi, ms)
-    assert(df.collect().nonEmpty)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("matchedrowlookup(") && plan.contains("2 labels"), plan)
-    assert(!plan.contains("StructField("), plan)
+    assert(Stages.filters(df.queryExecution.executedPlan) == 0, df.queryExecution.executedPlan)
   }
 
-  test("the chunks ReadSchema holds only the in-range s_data columns") {
+  test("the reader requests only the in-range s_data columns") {
     for ((what, df) <- frames) {
-      val plan = df.queryExecution.explainString(FormattedMode)
-      val schemas = "ReadSchema: [^\\n]*".r.findAllIn(plan).toList
-      assert(schemas.size == 1, s"$what: one scan, the chunks files\n$plan")
-      assert("s_data_\\d+".r.findAllIn(schemas.head).toSet == inRange,
-        s"$what: ${schemas.head}")
+      val readers = ShardReads.of(df)
+      assert(readers.size == 1, s"$what: one reader, the chunks files")
+      assert(readers.head.dataCols.toSet == inRange, s"$what: ${readers.head.dataCols}")
     }
   }
 
   test("the scan lists only the chunks files of shards with a match") {
     def files(m: Seq[Matcher]) =
-      ParquetShardStore.select(spark, xorDir, lo, hi, m).inputFiles.toSeq
+      ShardReads.of(ParquetShardStore.select(spark, xorDir, lo, hi, m)).flatMap(_.files)
     val one = files(Seq(Matcher.Eq("svc", "svc_1")))
     assert(one.size == 1 && one.head.endsWith(".chunks.parquet"), one)
     assert(files(Nil).size == 3)
     // no match: an empty local relation, nothing listed or run
     val none = ParquetShardStore.select(spark, xorDir, lo, hi,
       Seq(Matcher.Eq("svc", "nope")))
-    assert(none.inputFiles.isEmpty)
+    assert(ShardReads.of(none).isEmpty && none.inputFiles.isEmpty)
     val (rows, jobs) = JobLog(spark.sparkContext)(none.collect())
     assert(rows.isEmpty && jobs.isEmpty, s"jobs: $jobs")
   }
@@ -161,6 +171,8 @@ class ShardSelectPlanSpec extends SparkSpec {
   private object Stages extends AdaptiveSparkPlanHelper {
     /** The shuffle exchanges of an executed plan's final stages. */
     def exchanges(p: SparkPlan): Int = collect(p) { case e: ShuffleExchangeExec => e }.size
+    def filters(p: SparkPlan): Int = collect(p) { case f: FilterExec => f }.size
+    def aggregates(p: SparkPlan): Int = collect(p) { case a: BaseAggregateExec => a }.size
   }
 
   test("max_over_time over a shard select runs one job with no Exchange, " +
@@ -174,14 +186,39 @@ class ShardSelectPlanSpec extends SparkSpec {
       n.simpleString.contains("sequence")), nodes.map(_.simpleString))
   }
 
-  test("sum by (env) (rate(x[30m])) over a shard select runs two jobs with one Exchange") {
+  test("sum by (env) (rate(x[30m])) over a one-split shard select runs one job " +
+      "with no Exchange") {
     val df = promql("sum by (env) (rate(x[30m]))",
       ParquetShardStore.select(spark, xorDir, lo, hi, ms))
     val (rows, jobs) = JobLog(spark.sparkContext)(df.collect())
     assert(rows.nonEmpty)
-    assert(jobs.size == 2, s"jobs: $jobs")
+    assert(jobs.size == 1, s"jobs: $jobs")
+    assert(Stages.exchanges(df.queryExecution.executedPlan) == 0,
+      df.queryExecution.executedPlan)
+    // the series-grain twin slices its window in the decode: no
+    // higher-order `filter` keeps its projection out of codegen
+    assert(!df.queryExecution.executedPlan.toString.contains("lambdafunction"),
+      df.queryExecution.executedPlan)
+  }
+
+  test("a select that spans more than one split keeps its exchange and gives " +
+      "the same answers") {
+    val query = "sum by (env) (rate(x[30m]))"
+    def run = {
+      val df = promql(query, ParquetShardStore.select(spark, xorDir, lo, hi, ms))
+      (df.collect().map(_.toSeq).toSet, df)
+    }
+    val (one, _) = run
+    val conf = spark.conf
+    val key = "spark.sql.files.maxPartitionBytes"
+    val before = conf.getOption(key)
+    conf.set(key, "64")
+    val (many, df) = try run finally before.fold(conf.unset(key))(conf.set(key, _))
+    val splits = ShardReads.of(df).map(_.getNumPartitions)
+    assert(splits.size == 1 && splits.head > 1, splits)
     assert(Stages.exchanges(df.queryExecution.executedPlan) == 1,
       df.queryExecution.executedPlan)
+    assert(many == one && one.nonEmpty)
   }
 
   test("an @-pinned selector and a frame derived from the select plan the sample grain") {
@@ -191,7 +228,9 @@ class ShardSelectPlanSpec extends SparkSpec {
         "derived" -> promql("max_over_time(x[5m])", sel.filter("value >= 0")))) {
       assert(!df.queryExecution.optimizedPlan.toString.contains("range_windows"), what)
       assert(df.collect().nonEmpty, what)
-      assert(Stages.exchanges(df.queryExecution.executedPlan) >= 1, what)
+      // the sample grain's per-(series, step) aggregate, which the
+      // series grain evaluates inside its per-series pass
+      assert(Stages.aggregates(df.queryExecution.executedPlan) >= 1, what)
     }
   }
 }

@@ -96,3 +96,19 @@ object ExecLog {
     (result, Log(records.get, plans.asScala.toSeq))
   }
 }
+
+/** The input a block of code's tasks read: the bytes and records their
+  * input metrics count. */
+object ReadLog {
+  def apply[T](sc: SparkContext)(body: => T): (T, Long, Long) = {
+    val (bytes, records) = (new AtomicLong, new AtomicLong)
+    val result = JobLog.listening(sc, new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach { m =>
+          bytes.addAndGet(m.inputMetrics.bytesRead)
+          records.addAndGet(m.inputMetrics.recordsRead)
+        }
+    })(body)
+    (result, bytes.get, records.get)
+  }
+}
