@@ -179,24 +179,17 @@ case class ChunkencHistEncode(child: Expression, histSchema: Int,
 
   override def dataType: DataType = BinaryType
 
-  private def method: String =
-    if (float) "encodeFloatArrayData" else "encodeArrayData"
-
   @transient private lazy val cv = customValues.toArray
 
-  override def nullSafeEval(v: Any): Any = {
-    val s = v.asInstanceOf[ArrayData]
-    if (float) ChunkencHistCodec.encodeFloatArrayData(s, histSchema,
-      samplesPerChunk, cv, gauge = false, exactLayout = true)
-    else ChunkencHistCodec.encodeArrayData(s, histSchema, samplesPerChunk,
-      cv, gauge = false, exactLayout = true)
-  }
+  override def nullSafeEval(v: Any): Any =
+    ChunkencHistCodec.encodeArrayData(v.asInstanceOf[ArrayData], histSchema,
+      samplesPerChunk, cv, gauge = false, exactLayout = true, float)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val cvRef = ctx.addReferenceObj("customValues", cv, "double[]")
     nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.tsdb.ChunkencHistCodec.$method($c, $histSchema, " +
-        s"$samplesPerChunk, $cvRef, false, true);")
+      s"${ev.value} = graft.tsdb.ChunkencHistCodec.encodeArrayData($c, $histSchema, " +
+        s"$samplesPerChunk, $cvRef, false, true, $float);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -230,7 +223,7 @@ case class ChunkencHistDecode(blob: Expression, qmint: Expression,
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (b, mi, ma) =>
-      s"${ev.value} = graft.tsdb.ChunkencHistCodec.decodeToArrayData($b, $mi, $ma, $exact);")
+      s"${ev.value} = graft.tsdb.ChunkencHistCodec.decodeToArrayData($b, $mi, $ma, $exact, false);")
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression,
@@ -254,13 +247,13 @@ case class ChunkencFloatHistDecode(blob: Expression, qmint: Expression,
     ArrayType(HistChunkExpressions.chunkencFloatSampleType, containsNull = false)
 
   override def nullSafeEval(b: Any, mi: Any, ma: Any): Any =
-    graft.tsdb.ChunkencHistCodec.decodeFloatToArrayData(
+    graft.tsdb.ChunkencHistCodec.decodeToArrayData(
       b.asInstanceOf[Array[Byte]], mi.asInstanceOf[Long],
-      ma.asInstanceOf[Long], exact)
+      ma.asInstanceOf[Long], exact, float = true)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (b, mi, ma) =>
-      s"${ev.value} = graft.tsdb.ChunkencHistCodec.decodeFloatToArrayData($b, $mi, $ma, $exact);")
+      s"${ev.value} = graft.tsdb.ChunkencHistCodec.decodeToArrayData($b, $mi, $ma, $exact, true);")
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression,

@@ -680,29 +680,14 @@ object Dedup {
       .filter(col("src") =!= col("dst"))
       .distinct())
 
-    // Rounds per checkpoint (measurement flag, default 1 = the
-    // established protocol): batching composes k smallStar∘largeStar
-    // rounds into one materialization, halving checkpoint jobs at the
-    // cost of convergence checks only every k rounds (a converged set
-    // is a fixpoint of the composed round, so the OUTPUT is identical
-    // — at worst k−1 extra no-op rounds run). Behind an env flag so
-    // the choice is made on measured sf1/sf3x numbers, not judgment.
-    val roundsPerCp = sys.env
-      .getOrElse("SPARK_GRAFT_CC_ROUNDS_PER_CHECKPOINT", "1").toInt.max(1)
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      var stepped = edges
-      var r = 0
-      while (r < roundsPerCp && i + r < maxIter) {
-        stepped = smallStar(largeStar(stepped))
-        r += 1
-      }
-      val (next, nfp) = materialize(stepped)
+      val (next, nfp) = materialize(smallStar(largeStar(edges)))
       converged = nfp == fp
       fp = nfp
       edges = next
-      i += r
+      i += 1
     }
     require(converged,
       s"connected components did not converge in $maxIter rounds")

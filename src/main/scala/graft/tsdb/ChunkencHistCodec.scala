@@ -3,7 +3,7 @@ package graft.tsdb
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 
-import graft.tsdb.block.{ChunkencHistogram, TsdbBlockStore}
+import graft.tsdb.block.{ChunkencHistogram, HistAppender, HistFamily}
 
 /** Shard-cell codec whose frame BODIES are REAL Prometheus chunkenc
   * histogram chunks ([[graft.tsdb.block.ChunkencHistogram]] — the
@@ -23,15 +23,15 @@ import graft.tsdb.block.{ChunkencHistogram, TsdbBlockStore}
   * ([[graft.tsdb.shard.ParquetShardStore]]) and the chunked store
   * ([[HistChunkStore]]) both write and read it.
   *
-  * Encode mirrors the Prometheus appender's chunk-cut ladder the
-  * block writer uses (TsdbBlockStore.writeRows): a counter RESET
-  * (zero bucket or any same-index bucket count decreasing, a bucket
-  * VANISHING — the appender's test) cuts a chunk and marks the next
-  * one CounterReset; a `samplesPerChunk` cap cut marks it
-  * NotCounterReset; gauge series carry GaugeType on every chunk and
-  * never reset-cut. Within one chunk the samples are re-laid onto
-  * the UNION bucket layout with absolute-0 fills — what chunkenc's
-  * own recode produces when buckets appear mid-chunk. With
+  * Encode runs the block writer's appender
+  * ([[graft.tsdb.block.HistAppender]], one for both families): a
+  * counter RESET (zero bucket or any same-index bucket count
+  * decreasing, a bucket VANISHING — the appender's test) cuts a chunk
+  * and marks the next one CounterReset; a `samplesPerChunk` cap cut
+  * marks it NotCounterReset; gauge series carry GaugeType on every
+  * chunk and never reset-cut. Within one chunk the samples are re-laid
+  * onto the UNION bucket layout with absolute-0 fills — what
+  * chunkenc's own recode produces when buckets appear mid-chunk. With
   * `exactLayout` the encoder also cuts (NotCounterReset) wherever a
   * sample's positive or negative index set differs from the previous
   * sample's, so every chunk holds one layout and each sample decodes
@@ -56,95 +56,49 @@ import graft.tsdb.block.{ChunkencHistogram, TsdbBlockStore}
   */
 object ChunkencHistCodec {
 
-  /** `exactLayout`'s cut: a sample's positive or negative index set
-    * differs from the previous sample's (none before the first). */
-  private def layoutChanged(lastIdx: Array[Int], idx: Array[Int],
-      lastNIdx: Array[Int], nidx: Array[Int]): Boolean =
-    lastIdx != null && !(java.util.Arrays.equals(lastIdx, idx) &&
-      java.util.Arrays.equals(lastNIdx, nidx))
-
-  // ---------------------------------------------------------------
-  // integer family (EncHistogram, ordinal 2)
-  // ---------------------------------------------------------------
-
   /** samples: sorted array<struct<ts:long, zero:long, idx:array<int>,
     * cnt:array<long>, sum:double?, nidx:array<int>, ncnt:array<long>>>
-    * → framed blob of enc=2 chunkenc chunks. `customValues` non-empty
-    * iff schema == -53 (NHCB — no negative side allowed). Positive-
-    * only series pass empty neg arrays. A null sum is stored as NaN.
-    * `exactLayout`: see the object doc. */
+    * → framed blob of enc=2 chunkenc chunks; with `float` the zero and
+    * bucket counts are doubles and the bodies enc=3 float chunks.
+    * `customValues` non-empty iff schema == -53 (NHCB — no negative
+    * side allowed). Positive-only series pass empty neg arrays. A null
+    * sum is stored as NaN. `exactLayout`: see the object doc. */
   def encodeArrayData(samples: ArrayData, schema: Int,
       samplesPerChunk: Int, customValues: Array[Double],
-      gauge: Boolean, exactLayout: Boolean): Array[Byte] =
+      gauge: Boolean, exactLayout: Boolean, float: Boolean): Array[Byte] =
     encodeArrayData(samples, 0, samples.numElements(), schema,
-      samplesPerChunk, customValues, gauge, exactLayout)
+      samplesPerChunk, customValues, gauge, exactLayout, float)
 
   /** [[encodeArrayData]] of the elements `[from, until)` of `samples`,
     * read in place. */
   def encodeArrayData(samples: ArrayData, from: Int, until: Int, schema: Int,
       samplesPerChunk: Int, customValues: Array[Double],
-      gauge: Boolean, exactLayout: Boolean): Array[Byte] = {
-    require(samplesPerChunk > 0, "samplesPerChunk must be positive")
+      gauge: Boolean, exactLayout: Boolean, float: Boolean): Array[Byte] =
+    encode(new HistAppender(HistFamily(float), schema, 0.0, customValues,
+      gauge, samplesPerChunk, exactLayout), samples, from, until)
+
+  private def encode[A <: AnyRef](app: HistAppender[A], samples: ArrayData,
+      from: Int, until: Int): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    val tsB = new Array[Long](samplesPerChunk)
-    val zeroB = new Array[Long](samplesPerChunk)
-    val sumB = new Array[Double](samplesPerChunk)
-    val idxB = new Array[Array[Int]](samplesPerChunk)
-    val cntB = new Array[Array[Long]](samplesPerChunk)
-    val nIdxB = new Array[Array[Int]](samplesPerChunk)
-    val nCntB = new Array[Array[Long]](samplesPerChunk)
-    var m = 0
-    var flags = if (gauge) ChunkencHistogram.GaugeType
-      else ChunkencHistogram.UnknownCounterReset
-
-    def flush(): Unit = if (m > 0) {
-      ChunkCodec.putFrame(out, ChunkCodec.EncHistogram, tsB(0), tsB(m - 1),
-        ChunkencHistogram.encodeUnionHistChunk(flags, schema, 0.0,
-          customValues, m, tsB, zeroB, sumB, idxB, cntB, nIdxB, nCntB))
-      m = 0
+    val family = app.family
+    def flush(): Unit = {
+      val (data, mint, maxt) = app.flush()
+      ChunkCodec.putFrame(out, family.encoding.toLong, mint, maxt, data)
     }
-
-    var lastZero = 0L
-    var lastTs = Long.MinValue
-    var lastIdx: Array[Int] = null
-    var lastCnt: Array[Long] = null
-    var lastNIdx: Array[Int] = null
-    var lastNCnt: Array[Long] = null
     var i = from
     while (i < until) {
       val r = samples.getStruct(i, 7)
-      val ts = r.getLong(0)
-      val zero = r.getLong(1)
+      val zero = family.zeroCount(r, 1)
       val idx = r.getArray(2).toIntArray()
-      val cnt = r.getArray(3).toLongArray()
+      val cnt = family.counts(r.getArray(3))
       val nidx = r.getArray(5).toIntArray()
-      val ncnt = r.getArray(6).toLongArray()
-      TsdbBlockStore.requireAscending(idx)
-      TsdbBlockStore.requireAscending(nidx)
-      val sum = if (r.isNullAt(4)) Double.NaN else r.getDouble(4)
-      require(lastIdx == null || ts >= lastTs,
-        "samples must be sorted by timestamp")
-      // the appender's cut ladder: reset first (a reset landing on a
-      // cap boundary must not be filed as a continuation), then cap
-      if (!gauge && lastIdx != null &&
-          (zero < lastZero ||
-            TsdbBlockStore.sparseDecreased(lastIdx, lastCnt, idx, cnt) ||
-            TsdbBlockStore.sparseDecreased(lastNIdx, lastNCnt, nidx, ncnt))) {
-        flush()
-        flags = ChunkencHistogram.CounterReset
-      } else if (m == samplesPerChunk ||
-          (exactLayout && layoutChanged(lastIdx, idx, lastNIdx, nidx))) {
-        flush()
-        if (!gauge) flags = ChunkencHistogram.NotCounterReset
-      }
-      tsB(m) = ts; zeroB(m) = zero; sumB(m) = sum
-      idxB(m) = idx; cntB(m) = cnt; nIdxB(m) = nidx; nCntB(m) = ncnt
-      m += 1
-      lastZero = zero; lastTs = ts; lastIdx = idx; lastCnt = cnt
-      lastNIdx = nidx; lastNCnt = ncnt
+      val ncnt = family.counts(r.getArray(6))
+      if (app.cutBefore(zero, idx, cnt, nidx, ncnt)) flush()
+      app.add(r.getLong(0), zero, if (r.isNullAt(4)) Double.NaN else r.getDouble(4),
+        idx, cnt, nidx, ncnt)
       i += 1
     }
-    flush()
+    if (app.size > 0) flush()
     out.toByteArray
   }
 
@@ -171,19 +125,19 @@ object ChunkencHistCodec {
     out.result()
   }
 
-
   /** blob → array<struct<ts, zero, idx, cnt, sum, schema, cv, nidx,
-    * ncnt>> of the enc=2 chunks whose header overlaps [qmint, qmaxt]
-    * (inclusive, the reference decoder's filter). idx/cnt (and the
-    * negative side) come back on the chunk's UNION layout (absent
-    * buckets read absolute 0 — chunkenc's recode semantics); callers
-    * drop zero-count buckets when they want the sparse view.
-    * `schema` and the NHCB bound list `cv` ride each sample so
-    * custom-bucket consumers resolve bounds from the decoded bytes,
-    * like the block reader's `custom_values` column. `exact` keeps only
-    * the samples inside [qmint, qmaxt]. */
+    * ncnt>> of the enc=2 chunks (enc=3 with `float`, double counts)
+    * whose header overlaps [qmint, qmaxt] (inclusive, the reference
+    * decoder's filter). idx/cnt (and the negative side) come back on
+    * the chunk's UNION layout (absent buckets read absolute 0 —
+    * chunkenc's recode semantics); callers drop zero-count buckets
+    * when they want the sparse view. `schema` and the NHCB bound list
+    * `cv` ride each sample so custom-bucket consumers resolve bounds
+    * from the decoded bytes, like the block reader's `custom_values`
+    * column. `exact` keeps only the samples inside [qmint, qmaxt]. */
   def decodeToArrayData(blob: Array[Byte], qmint: Long, qmaxt: Long,
-      exact: Boolean = false): ArrayData = {
+      exact: Boolean = false, float: Boolean = false): ArrayData = {
+    val family = HistFamily(float)
     val rows = Vector.newBuilder[Any]
     val pos = Array(0)
     while (pos(0) < blob.length) {
@@ -194,10 +148,10 @@ object ChunkencHistCodec {
       val size = ChunkCodec.readUvarint(blob, pos).toInt
       val bodyStart = pos(0)
       pos(0) = bodyStart + size
-      if (enc == ChunkCodec.EncHistogram) {
+      if (enc == family.encoding) {
         if (mint <= qmaxt && maxt >= qmint) {
           val c = ChunkCodec.frameBody(blob, frameStart, bodyStart, size)(
-            ChunkencHistogram.decodeHistChunk(blob, bodyStart, size))
+            family.decode(blob, bodyStart, size))
           val union = ChunkencHistogram.bucketIndexes(c.posSpans)
           val nUnion = ChunkencHistogram.bucketIndexes(c.negSpans)
           val cv = new GenericArrayData(c.customValues)
@@ -205,133 +159,11 @@ object ChunkencHistCodec {
           var i = 0
           while (i < c.ts.length) {
             if (!exact || (c.ts(i) >= qmint && c.ts(i) <= qmaxt))
-              rows += InternalRow(c.ts(i), c.zeroCount(i),
+              rows += InternalRow(c.ts(i), c.zeroAt(i),
                 new GenericArrayData(union),
-                new GenericArrayData(c.posBuckets(i)), c.sum(i),
+                new GenericArrayData(c.posAt(i): Any), c.sum(i),
                 c.schema, cv, nIdxArr,
-                new GenericArrayData(c.negBuckets(i)))
-            i += 1
-          }
-        }
-      } else {
-        // a foreign family in a mixed cell is theirs, not ours: skip it
-        ChunkCodec.requireKnown(enc, frameStart)
-      }
-    }
-    new GenericArrayData(rows.result().toArray)
-  }
-
-  // ---------------------------------------------------------------
-  // float family (EncFloatHistogram, ordinal 3)
-  // ---------------------------------------------------------------
-
-  /** [[encodeArrayData]] for FLOAT histograms: zero and bucket counts
-    * are doubles (struct<ts:long, zero:double, idx:array<int>,
-    * cnt:array<double>, sum:double?, nidx:array<int>,
-    * ncnt:array<double>>), bodies enc=3 chunkenc float chunks. */
-  def encodeFloatArrayData(samples: ArrayData, schema: Int,
-      samplesPerChunk: Int, customValues: Array[Double],
-      gauge: Boolean, exactLayout: Boolean): Array[Byte] =
-    encodeFloatArrayData(samples, 0, samples.numElements(), schema,
-      samplesPerChunk, customValues, gauge, exactLayout)
-
-  /** [[encodeFloatArrayData]] of the elements `[from, until)` of
-    * `samples`, read in place. */
-  def encodeFloatArrayData(samples: ArrayData, from: Int, until: Int,
-      schema: Int, samplesPerChunk: Int, customValues: Array[Double],
-      gauge: Boolean, exactLayout: Boolean): Array[Byte] = {
-    require(samplesPerChunk > 0, "samplesPerChunk must be positive")
-    val out = new java.io.ByteArrayOutputStream()
-    val tsB = new Array[Long](samplesPerChunk)
-    val zeroB = new Array[Double](samplesPerChunk)
-    val sumB = new Array[Double](samplesPerChunk)
-    val idxB = new Array[Array[Int]](samplesPerChunk)
-    val cntB = new Array[Array[Double]](samplesPerChunk)
-    val nIdxB = new Array[Array[Int]](samplesPerChunk)
-    val nCntB = new Array[Array[Double]](samplesPerChunk)
-    var m = 0
-    var flags = if (gauge) ChunkencHistogram.GaugeType
-      else ChunkencHistogram.UnknownCounterReset
-
-    def flush(): Unit = if (m > 0) {
-      ChunkCodec.putFrame(out, ChunkCodec.EncFloatHistogram, tsB(0),
-        tsB(m - 1), ChunkencHistogram.encodeUnionFloatHistChunk(flags,
-          schema, 0.0, customValues, m, tsB, zeroB, sumB, idxB, cntB,
-          nIdxB, nCntB))
-      m = 0
-    }
-
-    var lastZero = 0.0
-    var lastTs = Long.MinValue
-    var lastIdx: Array[Int] = null
-    var lastCnt: Array[Double] = null
-    var lastNIdx: Array[Int] = null
-    var lastNCnt: Array[Double] = null
-    var i = from
-    while (i < until) {
-      val r = samples.getStruct(i, 7)
-      val ts = r.getLong(0)
-      val zero = r.getDouble(1)
-      val idx = r.getArray(2).toIntArray()
-      val cnt = r.getArray(3).toDoubleArray()
-      val nidx = r.getArray(5).toIntArray()
-      val ncnt = r.getArray(6).toDoubleArray()
-      TsdbBlockStore.requireAscending(idx)
-      TsdbBlockStore.requireAscending(nidx)
-      val sum = if (r.isNullAt(4)) Double.NaN else r.getDouble(4)
-      require(lastIdx == null || ts >= lastTs,
-        "samples must be sorted by timestamp")
-      if (!gauge && lastIdx != null &&
-          (zero < lastZero ||
-            TsdbBlockStore.sparseDecreasedD(lastIdx, lastCnt, idx, cnt) ||
-            TsdbBlockStore.sparseDecreasedD(lastNIdx, lastNCnt, nidx, ncnt))) {
-        flush()
-        flags = ChunkencHistogram.CounterReset
-      } else if (m == samplesPerChunk ||
-          (exactLayout && layoutChanged(lastIdx, idx, lastNIdx, nidx))) {
-        flush()
-        if (!gauge) flags = ChunkencHistogram.NotCounterReset
-      }
-      tsB(m) = ts; zeroB(m) = zero; sumB(m) = sum
-      idxB(m) = idx; cntB(m) = cnt; nIdxB(m) = nidx; nCntB(m) = ncnt
-      m += 1
-      lastZero = zero; lastTs = ts; lastIdx = idx; lastCnt = cnt
-      lastNIdx = nidx; lastNCnt = ncnt
-      i += 1
-    }
-    flush()
-    out.toByteArray
-  }
-
-  /** [[decodeToArrayData]] for enc=3 float-histogram frames. */
-  def decodeFloatToArrayData(blob: Array[Byte], qmint: Long, qmaxt: Long,
-      exact: Boolean = false): ArrayData = {
-    val rows = Vector.newBuilder[Any]
-    val pos = Array(0)
-    while (pos(0) < blob.length) {
-      val frameStart = pos(0)
-      val enc = ChunkCodec.readUvarint(blob, pos)
-      val mint = ChunkCodec.readUvarint(blob, pos)
-      val maxt = ChunkCodec.readUvarint(blob, pos)
-      val size = ChunkCodec.readUvarint(blob, pos).toInt
-      val bodyStart = pos(0)
-      pos(0) = bodyStart + size
-      if (enc == ChunkCodec.EncFloatHistogram) {
-        if (mint <= qmaxt && maxt >= qmint) {
-          val c = ChunkCodec.frameBody(blob, frameStart, bodyStart, size)(
-            ChunkencHistogram.decodeFloatHistChunk(blob, bodyStart, size))
-          val union = ChunkencHistogram.bucketIndexes(c.posSpans)
-          val nUnion = ChunkencHistogram.bucketIndexes(c.negSpans)
-          val cv = new GenericArrayData(c.customValues)
-          val nIdxArr = new GenericArrayData(nUnion)
-          var i = 0
-          while (i < c.ts.length) {
-            if (!exact || (c.ts(i) >= qmint && c.ts(i) <= qmaxt))
-              rows += InternalRow(c.ts(i), c.zeroCount(i),
-                new GenericArrayData(union),
-                new GenericArrayData(c.posBuckets(i)), c.sum(i),
-                c.schema, cv, nIdxArr,
-                new GenericArrayData(c.negBuckets(i)))
+                new GenericArrayData(c.negAt(i): Any))
             i += 1
           }
         }

@@ -114,6 +114,23 @@ object ChunkencHistogram {
     * `length` the number of buckets. */
   final case class Span(offset: Int, length: Int)
 
+  /** What the frame decoders read of a decoded chunk of either
+    * family: the shared layout and per-sample fields, with each
+    * sample's zero count boxed and its bucket counts as the family's
+    * primitive array (`Array[Long]` / `Array[Double]`). */
+  sealed trait HistChunkSamples {
+    def flags: Int
+    def schema: Int
+    def posSpans: Vector[Span]
+    def negSpans: Vector[Span]
+    def ts: Array[Long]
+    def sum: Array[Double]
+    def customValues: Array[Double]
+    def zeroAt(i: Int): Any
+    def posAt(i: Int): AnyRef
+    def negAt(i: Int): AnyRef
+  }
+
   /** One decoded integer-histogram chunk: shared layout + parallel
     * per-sample arrays. Bucket counts are ABSOLUTE per expanded
     * bucket position (wire deltas are undone on decode). */
@@ -122,7 +139,11 @@ object ChunkencHistogram {
       negSpans: Vector[Span], ts: Array[Long], count: Array[Long],
       zeroCount: Array[Long], sum: Array[Double],
       posBuckets: Array[Array[Long]], negBuckets: Array[Array[Long]],
-      customValues: Array[Double] = Array.empty)
+      customValues: Array[Double] = Array.empty) extends HistChunkSamples {
+    def zeroAt(i: Int): Any = zeroCount(i)
+    def posAt(i: Int): AnyRef = posBuckets(i)
+    def negAt(i: Int): AnyRef = negBuckets(i)
+  }
 
   /** Float-histogram chunk: counts are doubles, buckets absolute. */
   final case class FloatHistChunk(flags: Int, schema: Int,
@@ -131,7 +152,11 @@ object ChunkencHistogram {
       zeroCount: Array[Double], sum: Array[Double],
       posBuckets: Array[Array[Double]],
       negBuckets: Array[Array[Double]],
-      customValues: Array[Double] = Array.empty)
+      customValues: Array[Double] = Array.empty) extends HistChunkSamples {
+    def zeroAt(i: Int): Any = zeroCount(i)
+    def posAt(i: Int): AnyRef = posBuckets(i)
+    def negAt(i: Int): AnyRef = negBuckets(i)
+  }
 
   // ---------------------------------------------------------------
   // Gorilla XOR window (the xor.go value scheme) over a shared bit
@@ -411,12 +436,12 @@ object ChunkencHistogram {
   }
 
   // ---------------------------------------------------------------
-  // union-layout chunks from sparse samples
+  // union layout of sparse samples (HistAppender's flush)
   // ---------------------------------------------------------------
 
   /** Sorted union of the first `n` (each already ascending) index
     * arrays — the chunk's shared bucket layout. */
-  private def unionIndexes(idx: Array[Array[Int]], n: Int): Array[Int] = {
+  private[block] def unionIndexes(idx: Array[Array[Int]], n: Int): Array[Int] = {
     val set = new java.util.TreeSet[Integer]()
     var i = 0
     while (i < n) {
@@ -431,7 +456,7 @@ object ChunkencHistogram {
   }
 
   /** Position of each of `idx`'s buckets in `union` (a superset). */
-  private def unionSlots(idx: Array[Int], union: Array[Int]): Array[Int] = {
+  private[block] def unionSlots(idx: Array[Int], union: Array[Int]): Array[Int] = {
     val slots = new Array[Int](idx.length)
     var k = 0
     var j = 0
@@ -441,66 +466,6 @@ object ChunkencHistogram {
       j += 1
     }
     slots
-  }
-
-  /** Encode the first `n` buffered SPARSE samples (per-sample
-    * ascending `idx`/`cnt`, optional negative side `nIdx`/`nCnt` —
-    * null for none) as one integer chunk: every sample is re-laid onto
-    * the union bucket layout, absent buckets as absolute 0 (chunkenc's
-    * recode when buckets appear mid-chunk), and its count is the zero
-    * count plus every bucket. */
-  def encodeUnionHistChunk(flags: Int, schema: Int, zeroThreshold: Double,
-      customValues: Array[Double], n: Int, ts: Array[Long],
-      zero: Array[Long], sum: Array[Double], idx: Array[Array[Int]],
-      cnt: Array[Array[Long]], nIdx: Array[Array[Int]],
-      nCnt: Array[Array[Long]]): Array[Byte] = {
-    val union = unionIndexes(idx, n)
-    val nUnion = if (nIdx == null) Array.empty[Int] else unionIndexes(nIdx, n)
-    def fill(i: Array[Int], c: Array[Long], u: Array[Int]): Array[Long] = {
-      val abs = new Array[Long](u.length)
-      val slots = unionSlots(i, u)
-      var j = 0
-      while (j < slots.length) { abs(slots(j)) = c(j); j += 1 }
-      abs
-    }
-    val pos = Array.tabulate(n)(i => fill(idx(i), cnt(i), union))
-    val neg = Array.tabulate(n)(i =>
-      if (nUnion.isEmpty) Array.empty[Long] else fill(nIdx(i), nCnt(i), nUnion))
-    val count = Array.tabulate(n)(i => zero(i) + pos(i).sum + neg(i).sum)
-    encodeHistChunk(HistChunk(flags, schema, zeroThreshold,
-      spansFromIndexes(union), spansFromIndexes(nUnion),
-      java.util.Arrays.copyOf(ts, n), count, java.util.Arrays.copyOf(zero, n),
-      java.util.Arrays.copyOf(sum, n), pos, neg, customValues))
-  }
-
-  /** [[encodeUnionHistChunk]] for float histograms. */
-  def encodeUnionFloatHistChunk(flags: Int, schema: Int,
-      zeroThreshold: Double, customValues: Array[Double], n: Int,
-      ts: Array[Long], zero: Array[Double], sum: Array[Double],
-      idx: Array[Array[Int]], cnt: Array[Array[Double]],
-      nIdx: Array[Array[Int]], nCnt: Array[Array[Double]]): Array[Byte] = {
-    val union = unionIndexes(idx, n)
-    val nUnion = if (nIdx == null) Array.empty[Int] else unionIndexes(nIdx, n)
-    def fill(i: Array[Int], c: Array[Double], u: Array[Int]): Array[Double] = {
-      val abs = new Array[Double](u.length)
-      val slots = unionSlots(i, u)
-      var j = 0
-      while (j < slots.length) { abs(slots(j)) = c(j); j += 1 }
-      abs
-    }
-    val pos = Array.tabulate(n)(i => fill(idx(i), cnt(i), union))
-    val neg = Array.tabulate(n)(i =>
-      if (nUnion.isEmpty) Array.empty[Double] else fill(nIdx(i), nCnt(i), nUnion))
-    val count = Array.tabulate(n) { i =>
-      var total = zero(i)
-      pos(i).foreach(total += _)
-      neg(i).foreach(total += _)
-      total
-    }
-    encodeFloatHistChunk(FloatHistChunk(flags, schema, zeroThreshold,
-      spansFromIndexes(union), spansFromIndexes(nUnion),
-      java.util.Arrays.copyOf(ts, n), count, java.util.Arrays.copyOf(zero, n),
-      java.util.Arrays.copyOf(sum, n), pos, neg, customValues))
   }
 
   // ---------------------------------------------------------------

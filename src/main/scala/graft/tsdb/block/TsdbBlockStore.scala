@@ -79,18 +79,11 @@ object TsdbBlockStore {
     def size: Int
     /** Encode the buffered samples, reset; (data, mint, maxt). */
     def flush(): (Array[Byte], Long, Long)
-    /** True when `r` is a COUNTER RESET vs the last sample appended
-      * in this series (any histogram component decreased — the
-      * Prometheus appender's cut trigger). False for float/gauge
-      * bufs and at series start. */
-    def wouldReset(r: InternalRow): Boolean = false
-    /** Counter-reset header for the NEXT chunk this buf encodes
-      * (no-op for float/gauge bufs — gauge chunks keep GaugeType on
-      * every chunk). */
-    def markNextChunk(flags: Int): Unit = {}
-    /** Forget cross-chunk reset state at a series (or block)
-      * boundary: the next chunk starts UnknownCounterReset with no
-      * prior sample, like a fresh Prometheus head chunk. */
+    /** True when `r` must open a new chunk: by default when the open
+      * one holds `samplesPerChunk` samples. */
+    def cutBefore(r: InternalRow, samplesPerChunk: Int): Boolean =
+      size == samplesPerChunk
+    /** Forget cross-chunk state at a series (or block) boundary. */
     def resetSeriesState(): Unit = {}
   }
 
@@ -119,253 +112,55 @@ object TsdbBlockStore {
     }
   }
 
-  /** Integer native-histogram chunks (chunkenc encoding 2). The
-    * buffered samples' sparse (idx, count) rows are re-laid onto
-    * the chunk's UNION bucket layout at flush — absent buckets fill
-    * with absolute 0, exactly what chunkenc's recode produces when
-    * buckets appear mid-chunk, so one chunk keeps one span set (the
-    * format invariant). */
-  private final class HistSampleBuf(tsIdx: Int, zeroIdx: Int,
-      idxIdx: Int, cntIdx: Int, sumIdx: Int, schema: Int,
-      zeroThreshold: Double, flags: Int, cap: Int,
-      customVals: Array[Double], negIdxIdx: Int = -1,
-      negCntIdx: Int = -1, hintIdx: Int = -1) extends SampleBuf {
-    private val tsB = new Array[Long](cap)
-    private val zeroB = new Array[Long](cap)
-    private val sumB = new Array[Double](cap)
-    private val idxB = new Array[Array[Int]](cap)
-    private val cntB = new Array[Array[Long]](cap)
+  /** Native-histogram chunks of either family (chunkenc encoding 2 or
+    * 3): reads each sample's columns and runs the shared
+    * [[HistAppender]], its cut ladder included. `hintIdx` is the
+    * optional per-sample reset-hint column: an explicit hint
+    * (compaction re-writing hinted reads) beats value comparison — the
+    * same ladder the query fold runs, so header-only resets survive a
+    * rewrite. */
+  private final class HistSampleBuf[A <: AnyRef](family: HistFamily[A],
+      tsIdx: Int, zeroIdx: Int, idxIdx: Int, cntIdx: Int, sumIdx: Int,
+      schema: Int, zeroThreshold: Double, gauge: Boolean, cap: Int,
+      customValues: Array[Double], negIdxIdx: Int, negCntIdx: Int,
+      hintIdx: Int) extends SampleBuf {
+    private val app = new HistAppender(family, schema, zeroThreshold,
+      customValues, gauge, cap, exactLayout = false)
     private val hasNeg = negIdxIdx >= 0
-    private val nIdxB = if (hasNeg) new Array[Array[Int]](cap) else null
-    private val nCntB = if (hasNeg) new Array[Array[Long]](cap) else null
-    private var n = 0
-    // counter-reset bookkeeping (the Prometheus appender's): header
-    // of the chunk being built + the last APPENDED sample (surviving
-    // chunk flushes — a reset straddling a cap cut must still be
-    // seen), both cleared at series/block boundaries
-    private val isGauge = flags == ChunkencHistogram.GaugeType
-    private var curFlags = flags
-    private var lastZero = -1L
-    private var lastIdx: Array[Int] = null
-    private var lastCnt: Array[Long] = null
-    private var lastNIdx: Array[Int] = null
-    private var lastNCnt: Array[Long] = null
-    override def markNextChunk(f: Int): Unit = if (!isGauge) curFlags = f
-    override def resetSeriesState(): Unit = {
-      curFlags = flags
-      lastIdx = null; lastCnt = null; lastNIdx = null; lastNCnt = null
-    }
-    override def wouldReset(r: InternalRow): Boolean = {
-      if (isGauge || lastIdx == null) return false
-      // an explicit per-sample hint (compaction re-writing hinted
-      // reads) beats value comparison — the same ladder the query
-      // fold runs, so header-only resets survive a rewrite
-      if (hintIdx >= 0) {
-        val h = r.getUTF8String(hintIdx).toString
-        if (h == "counter_reset") return true
-        if (h == "not_counter_reset" || h == "gauge") return false
+    private def negIdx(r: InternalRow): Array[Int] =
+      if (hasNeg) r.getArray(negIdxIdx).toIntArray() else NoIndexes
+    private def negCnt(r: InternalRow): A =
+      if (hasNeg) family.counts(r.getArray(negCntIdx)) else family.noCounts
+    private def hint(r: InternalRow): Int =
+      if (hintIdx < 0) ChunkencHistogram.UnknownCounterReset
+      else r.getUTF8String(hintIdx).toString match {
+        case "counter_reset" => ChunkencHistogram.CounterReset
+        case "not_counter_reset" => ChunkencHistogram.NotCounterReset
+        case "gauge" => ChunkencHistogram.GaugeType
+        case _ => ChunkencHistogram.UnknownCounterReset
       }
-      if (r.getLong(zeroIdx) < lastZero) return true
-      if (sparseDecreased(lastIdx, lastCnt,
-        r.getArray(idxIdx).toIntArray(),
-        r.getArray(cntIdx).toLongArray())) return true
-      hasNeg && sparseDecreased(lastNIdx, lastNCnt,
-        r.getArray(negIdxIdx).toIntArray(),
-        r.getArray(negCntIdx).toLongArray())
-    }
-    def encoding: Int = EncHistogram
+    override def cutBefore(r: InternalRow, samplesPerChunk: Int): Boolean =
+      app.cutBefore(family.zeroCount(r, zeroIdx), r.getArray(idxIdx).toIntArray(),
+        family.counts(r.getArray(cntIdx)), negIdx(r), negCnt(r), hint(r))
+    override def resetSeriesState(): Unit = app.resetSeries()
+    def encoding: Int = family.encoding
     def ts(r: InternalRow): Long = r.getLong(tsIdx)
     def digest(r: InternalRow): Long = {
-      var h = r.getLong(zeroIdx)
+      var h = family.zeroCount(r, zeroIdx)
       h = h * 31 + java.lang.Double.doubleToRawLongBits(r.getDouble(sumIdx))
-      val idx = r.getArray(idxIdx)
-      val cnt = r.getArray(cntIdx)
-      var j = 0
-      while (j < idx.numElements()) {
-        h = h * 31 + idx.getInt(j)
-        h = h * 31 + cnt.getLong(j)
-        j += 1
-      }
-      if (hasNeg) {
-        val ni = r.getArray(negIdxIdx)
-        val nc = r.getArray(negCntIdx)
-        var k = 0
-        while (k < ni.numElements()) {
-          h = h * 31 + ni.getInt(k)
-          h = h * 31 + nc.getLong(k)
-          k += 1
-        }
-      }
-      h
+      h = family.digest(h, r.getArray(idxIdx), r.getArray(cntIdx))
+      if (hasNeg) family.digest(h, r.getArray(negIdxIdx), r.getArray(negCntIdx))
+      else h
     }
-    def add(r: InternalRow): Unit = {
-      tsB(n) = r.getLong(tsIdx)
-      zeroB(n) = r.getLong(zeroIdx)
-      sumB(n) = r.getDouble(sumIdx)
-      idxB(n) = r.getArray(idxIdx).toIntArray()
-      cntB(n) = r.getArray(cntIdx).toLongArray()
-      requireAscending(idxB(n))
-      if (hasNeg) {
-        nIdxB(n) = r.getArray(negIdxIdx).toIntArray()
-        nCntB(n) = r.getArray(negCntIdx).toLongArray()
-        requireAscending(nIdxB(n))
-      }
-      lastZero = zeroB(n)
-      lastIdx = idxB(n); lastCnt = cntB(n)
-      if (hasNeg) { lastNIdx = nIdxB(n); lastNCnt = nCntB(n) }
-      n += 1
-    }
-    def size: Int = n
-    def flush(): (Array[Byte], Long, Long) = {
-      val res = (ChunkencHistogram.encodeUnionHistChunk(curFlags, schema,
-        zeroThreshold, customVals, n, tsB, zeroB, sumB, idxB, cntB, nIdxB,
-        nCntB), tsB(0), tsB(n - 1))
-      n = 0
-      res
-    }
+    def add(r: InternalRow): Unit =
+      app.add(r.getLong(tsIdx), family.zeroCount(r, zeroIdx), r.getDouble(sumIdx),
+        r.getArray(idxIdx).toIntArray(), family.counts(r.getArray(cntIdx)),
+        negIdx(r), negCnt(r))
+    def size: Int = app.size
+    def flush(): (Array[Byte], Long, Long) = app.flush()
   }
 
-  /** Float native-histogram chunks (chunkenc encoding 3) — the
-    * same union-layout fill with double counts. */
-  private final class FloatHistSampleBuf(tsIdx: Int, zeroIdx: Int,
-      idxIdx: Int, cntIdx: Int, sumIdx: Int, schema: Int,
-      zeroThreshold: Double, flags: Int, cap: Int,
-      customVals: Array[Double], negIdxIdx: Int = -1,
-      negCntIdx: Int = -1, hintIdx: Int = -1) extends SampleBuf {
-    private val tsB = new Array[Long](cap)
-    private val zeroB = new Array[Double](cap)
-    private val sumB = new Array[Double](cap)
-    private val idxB = new Array[Array[Int]](cap)
-    private val cntB = new Array[Array[Double]](cap)
-    private val hasNeg = negIdxIdx >= 0
-    private val nIdxB = if (hasNeg) new Array[Array[Int]](cap) else null
-    private val nCntB = if (hasNeg) new Array[Array[Double]](cap) else null
-    private var n = 0
-    // counter-reset bookkeeping — see HistSampleBuf
-    private val isGauge = flags == ChunkencHistogram.GaugeType
-    private var curFlags = flags
-    private var lastZero = Double.NegativeInfinity
-    private var lastIdx: Array[Int] = null
-    private var lastCnt: Array[Double] = null
-    private var lastNIdx: Array[Int] = null
-    private var lastNCnt: Array[Double] = null
-    override def markNextChunk(f: Int): Unit = if (!isGauge) curFlags = f
-    override def resetSeriesState(): Unit = {
-      curFlags = flags
-      lastIdx = null; lastCnt = null; lastNIdx = null; lastNCnt = null
-    }
-    override def wouldReset(r: InternalRow): Boolean = {
-      if (isGauge || lastIdx == null) return false
-      if (hintIdx >= 0) {
-        val h = r.getUTF8String(hintIdx).toString
-        if (h == "counter_reset") return true
-        if (h == "not_counter_reset" || h == "gauge") return false
-      }
-      if (r.getDouble(zeroIdx) < lastZero) return true
-      if (sparseDecreasedD(lastIdx, lastCnt,
-        r.getArray(idxIdx).toIntArray(),
-        r.getArray(cntIdx).toDoubleArray())) return true
-      hasNeg && sparseDecreasedD(lastNIdx, lastNCnt,
-        r.getArray(negIdxIdx).toIntArray(),
-        r.getArray(negCntIdx).toDoubleArray())
-    }
-    def encoding: Int = EncFloatHistogram
-    def ts(r: InternalRow): Long = r.getLong(tsIdx)
-    def digest(r: InternalRow): Long = {
-      var h = java.lang.Double.doubleToRawLongBits(r.getDouble(zeroIdx))
-      h = h * 31 + java.lang.Double.doubleToRawLongBits(r.getDouble(sumIdx))
-      val idx = r.getArray(idxIdx)
-      val cnt = r.getArray(cntIdx)
-      var j = 0
-      while (j < idx.numElements()) {
-        h = h * 31 + idx.getInt(j)
-        h = h * 31 + java.lang.Double.doubleToRawLongBits(cnt.getDouble(j))
-        j += 1
-      }
-      if (hasNeg) {
-        val ni = r.getArray(negIdxIdx)
-        val nc = r.getArray(negCntIdx)
-        var k = 0
-        while (k < ni.numElements()) {
-          h = h * 31 + ni.getInt(k)
-          h = h * 31 + java.lang.Double.doubleToRawLongBits(nc.getDouble(k))
-          k += 1
-        }
-      }
-      h
-    }
-    def add(r: InternalRow): Unit = {
-      tsB(n) = r.getLong(tsIdx)
-      zeroB(n) = r.getDouble(zeroIdx)
-      sumB(n) = r.getDouble(sumIdx)
-      idxB(n) = r.getArray(idxIdx).toIntArray()
-      cntB(n) = r.getArray(cntIdx).toDoubleArray()
-      requireAscending(idxB(n))
-      if (hasNeg) {
-        nIdxB(n) = r.getArray(negIdxIdx).toIntArray()
-        nCntB(n) = r.getArray(negCntIdx).toDoubleArray()
-        requireAscending(nIdxB(n))
-      }
-      lastZero = zeroB(n)
-      lastIdx = idxB(n); lastCnt = cntB(n)
-      if (hasNeg) { lastNIdx = nIdxB(n); lastNCnt = nCntB(n) }
-      n += 1
-    }
-    def size: Int = n
-    def flush(): (Array[Byte], Long, Long) = {
-      val res = (ChunkencHistogram.encodeUnionFloatHistChunk(curFlags,
-        schema, zeroThreshold, customVals, n, tsB, zeroB, sumB, idxB, cntB,
-        nIdxB, nCntB), tsB(0), tsB(n - 1))
-      n = 0
-      res
-    }
-  }
-
-  /** True when any prev bucket's count exceeds cur's at the same
-    * index (a missing cur bucket reads 0) — the histogram counter-
-    * reset test over two ascending sparse layouts, two-pointer, no
-    * allocation. A bucket APPEARING in cur is growth, not a reset. */
-  private[tsdb] def sparseDecreased(prevIdx: Array[Int], prevCnt: Array[Long],
-      curIdx: Array[Int], curCnt: Array[Long]): Boolean = {
-    var j = 0
-    var k = 0
-    while (j < prevIdx.length) {
-      while (k < curIdx.length && curIdx(k) < prevIdx(j)) k += 1
-      val cur = if (k < curIdx.length && curIdx(k) == prevIdx(j))
-        curCnt(k) else 0L
-      if (cur < prevCnt(j)) return true
-      j += 1
-    }
-    false
-  }
-
-  private[tsdb] def sparseDecreasedD(prevIdx: Array[Int], prevCnt: Array[Double],
-      curIdx: Array[Int], curCnt: Array[Double]): Boolean = {
-    var j = 0
-    var k = 0
-    while (j < prevIdx.length) {
-      while (k < curIdx.length && curIdx(k) < prevIdx(j)) k += 1
-      val cur = if (k < curIdx.length && curIdx(k) == prevIdx(j))
-        curCnt(k) else 0.0
-      if (cur < prevCnt(j)) return true
-      j += 1
-    }
-    false
-  }
-
-  /** The flush merge cursor assumes each sample's index array is
-    * strictly ascending — an unsorted or duplicated array would
-    * silently drop bucket counts (the cursor never matches), so the
-    * bufs fail loudly at add() instead, mirroring
-    * `spansFromIndexes`' require. */
-  private[tsdb] def requireAscending(idx: Array[Int]): Unit = {
-    var j = 1
-    while (j < idx.length) {
-      require(idx(j) > idx(j - 1),
-        "bucket index arrays must be strictly ascending")
-      j += 1
-    }
-  }
+  private val NoIndexes = Array.empty[Int]
 
   /** Write `df` (label columns + a millisecond timestamp column + a
     * double value column) as TSDB blocks of `blockDurationMs` under
@@ -421,49 +216,11 @@ object TsdbBlockStore {
       customValues: Seq[Double] = Nil,
       negIdxCol: Option[String] = None,
       negCountsCol: Option[String] = None,
-      resetHintCol: Option[String] = None): Seq[String] = {
-    require(negIdxCol.isDefined == negCountsCol.isDefined,
-      "negIdxCol and negCountsCol must be passed together")
-    require(negIdxCol.isEmpty || customValues.isEmpty,
-      "custom-bucket (NHCB) histograms cannot carry negative buckets")
-    val negCols = negIdxCol.map(c =>
-      Seq(col(c).cast("array<int>").as("_nidx"),
-        col(negCountsCol.get).cast("array<long>").as("_ncnt")))
-      .getOrElse(Nil)
-    val hintCols = resetHintCol.map(c =>
-      Seq(col(c).cast("string").as("_hint"))).getOrElse(Nil)
-    val prepared = df
-      .select((labelCols.map(c => col(c).cast("string").as(c)) :+
-        col(tsCol).cast("long").as("_ts") :+
-        col(zeroCountCol).cast("long").as("_zero") :+
-        col(posIdxCol).cast("array<int>").as("_idx") :+
-        col(posCountsCol).cast("array<long>").as("_cnt") :+
-        col(sumCol).cast("double").as("_sum")) ++ negCols ++ hintCols: _*)
-    val flags = if (gauge) ChunkencHistogram.GaugeType
-      else ChunkencHistogram.UnknownCounterReset
-    val cv = customValues.toArray
-    val hasNeg = negIdxCol.isDefined
-    val hasHint = resetHintCol.isDefined
-    // _idx/_cnt (and the negative side when present) join the
-    // tiebreak: two samples tied on (series, ts, zero, sum) but with
-    // different buckets must sort deterministically or the content
-    // hash — which folds bucket arrays — and hence the ULID would
-    // depend on shuffle-fetch order. _hint joins for the same
-    // reason: it drives chunk cuts.
-    writeRows(prepared, root, labelCols, blockDurationMs,
-      Seq(col("_zero"), col("_sum"), col("_idx"), col("_cnt")) ++
-        (if (hasNeg) Seq(col("_nidx"), col("_ncnt")) else Nil) ++
-        (if (hintCols.nonEmpty) Seq(col("_hint")) else Nil),
-      sch => new HistSampleBuf(
-        sch.fieldIndex("_ts"), sch.fieldIndex("_zero"),
-        sch.fieldIndex("_idx"), sch.fieldIndex("_cnt"),
-        sch.fieldIndex("_sum"), schema, zeroThreshold, flags,
-        samplesPerChunk, cv,
-        if (hasNeg) sch.fieldIndex("_nidx") else -1,
-        if (hasNeg) sch.fieldIndex("_ncnt") else -1,
-        if (hasHint) sch.fieldIndex("_hint") else -1),
-      samplesPerChunk, segmentBytes)
-  }
+      resetHintCol: Option[String] = None): Seq[String] =
+    writeHistFamily(HistFamily.Ints, df, root, labelCols, tsCol, zeroCountCol,
+      posIdxCol, posCountsCol, sumCol, schema, zeroThreshold, gauge,
+      blockDurationMs, samplesPerChunk, segmentBytes, customValues, negIdxCol,
+      negCountsCol, resetHintCol)
 
   /** [[writeHist]] for FLOAT histograms (double zero/bucket counts,
     * chunkenc EncFloatHistogram chunks) — what recording rules
@@ -478,39 +235,54 @@ object TsdbBlockStore {
       customValues: Seq[Double] = Nil,
       negIdxCol: Option[String] = None,
       negCountsCol: Option[String] = None,
-      resetHintCol: Option[String] = None): Seq[String] = {
+      resetHintCol: Option[String] = None): Seq[String] =
+    writeHistFamily(HistFamily.Floats, df, root, labelCols, tsCol, zeroCountCol,
+      posIdxCol, posCountsCol, sumCol, schema, zeroThreshold, gauge,
+      blockDurationMs, samplesPerChunk, segmentBytes, customValues, negIdxCol,
+      negCountsCol, resetHintCol)
+
+  private def writeHistFamily(family: HistFamily[_ <: AnyRef], df: DataFrame,
+      root: String, labelCols: Seq[String], tsCol: String, zeroCountCol: String,
+      posIdxCol: String, posCountsCol: String, sumCol: String, schema: Int,
+      zeroThreshold: Double, gauge: Boolean, blockDurationMs: Long,
+      samplesPerChunk: Int, segmentBytes: Long, customValues: Seq[Double],
+      negIdxCol: Option[String], negCountsCol: Option[String],
+      resetHintCol: Option[String]): Seq[String] = {
     require(negIdxCol.isDefined == negCountsCol.isDefined,
       "negIdxCol and negCountsCol must be passed together")
     require(negIdxCol.isEmpty || customValues.isEmpty,
       "custom-bucket (NHCB) histograms cannot carry negative buckets")
+    val counts = ArrayType(family.countType)
     val negCols = negIdxCol.map(c =>
       Seq(col(c).cast("array<int>").as("_nidx"),
-        col(negCountsCol.get).cast("array<double>").as("_ncnt")))
+        col(negCountsCol.get).cast(counts).as("_ncnt")))
       .getOrElse(Nil)
     val hintCols = resetHintCol.map(c =>
       Seq(col(c).cast("string").as("_hint"))).getOrElse(Nil)
     val prepared = df
       .select((labelCols.map(c => col(c).cast("string").as(c)) :+
         col(tsCol).cast("long").as("_ts") :+
-        col(zeroCountCol).cast("double").as("_zero") :+
+        col(zeroCountCol).cast(family.countType).as("_zero") :+
         col(posIdxCol).cast("array<int>").as("_idx") :+
-        col(posCountsCol).cast("array<double>").as("_cnt") :+
+        col(posCountsCol).cast(counts).as("_cnt") :+
         col(sumCol).cast("double").as("_sum")) ++ negCols ++ hintCols: _*)
-    val flags = if (gauge) ChunkencHistogram.GaugeType
-      else ChunkencHistogram.UnknownCounterReset
     val cv = customValues.toArray
     val hasNeg = negIdxCol.isDefined
     val hasHint = resetHintCol.isDefined
-    // _idx/_cnt (+ neg side, + _hint — it drives chunk cuts) in the
-    // tiebreak for the same ULID-determinism reason as writeHist
+    // _idx/_cnt (and the negative side when present) join the
+    // tiebreak: two samples tied on (series, ts, zero, sum) but with
+    // different buckets must sort deterministically or the content
+    // hash — which folds bucket arrays — and hence the ULID would
+    // depend on shuffle-fetch order. _hint joins for the same
+    // reason: it drives chunk cuts.
     writeRows(prepared, root, labelCols, blockDurationMs,
       Seq(col("_zero"), col("_sum"), col("_idx"), col("_cnt")) ++
         (if (hasNeg) Seq(col("_nidx"), col("_ncnt")) else Nil) ++
         (if (hintCols.nonEmpty) Seq(col("_hint")) else Nil),
-      sch => new FloatHistSampleBuf(
+      sch => new HistSampleBuf(family,
         sch.fieldIndex("_ts"), sch.fieldIndex("_zero"),
         sch.fieldIndex("_idx"), sch.fieldIndex("_cnt"),
-        sch.fieldIndex("_sum"), schema, zeroThreshold, flags,
+        sch.fieldIndex("_sum"), schema, zeroThreshold, gauge,
         samplesPerChunk, cv,
         if (hasNeg) sch.fieldIndex("_nidx") else -1,
         if (hasNeg) sch.fieldIndex("_ncnt") else -1,
@@ -697,18 +469,7 @@ object TsdbBlockStore {
         curLabels = labels
         labels.foreach(s => mix(s.hashCode.toLong))
       }
-      // the Prometheus appender's chunk-cut ladder: a counter reset
-      // cuts a new chunk marked CounterReset (checked FIRST — a
-      // reset landing exactly on a cap boundary must not be filed as
-      // a continuation); a cap cut continues the counter, so the new
-      // chunk is NotCounterReset. Float/gauge bufs no-op both.
-      if (buf.wouldReset(r)) {
-        flushChunk()
-        buf.markNextChunk(ChunkencHistogram.CounterReset)
-      } else if (buf.size == samplesPerChunk) {
-        flushChunk()
-        buf.markNextChunk(ChunkencHistogram.NotCounterReset)
-      }
+      if (buf.cutBefore(r, samplesPerChunk)) flushChunk()
       buf.add(r)
       nSamples += 1
       mix(buf.ts(r))
@@ -820,7 +581,7 @@ object TsdbBlockStore {
       maxt: Long = Long.MaxValue, matchers: Seq[Matcher] = Nil,
       shardsPerBlock: Int = 1, withResetHint: Boolean = false): DataFrame =
     sampleFrame(spark, root, labelCols, mint, maxt, matchers,
-      shardsPerBlock, histDecoder(mint, maxt, withResetHint),
+      shardsPerBlock, histDecoder(HistFamily.Ints, mint, maxt, withResetHint),
       histTail(LongType, withResetHint))
 
   /** The sample fields of [[readHistLabels]] (`count` = LongType) and
@@ -848,7 +609,7 @@ object TsdbBlockStore {
       maxt: Long = Long.MaxValue, matchers: Seq[Matcher] = Nil,
       shardsPerBlock: Int = 1, withResetHint: Boolean = false): DataFrame =
     sampleFrame(spark, root, labelCols, mint, maxt, matchers,
-      shardsPerBlock, floatHistDecoder(mint, maxt, withResetHint),
+      shardsPerBlock, histDecoder(HistFamily.Floats, mint, maxt, withResetHint),
       histTail(DoubleType, withResetHint))
 
   /** The one row builder of the block readers: one Catalyst row per
@@ -951,7 +712,7 @@ object TsdbBlockStore {
     val cols = labelCols.toIndexedSeq
     val flat = sampleFrame(spark, root, cols, Long.MinValue, Long.MaxValue,
       Nil, shardsPerBlock,
-      histDecoder(Long.MinValue, Long.MaxValue, withHint = true),
+      histDecoder(HistFamily.Ints, Long.MinValue, Long.MaxValue, withHint = true),
       histTail(LongType, withResetHint = true), blockCol = Some("_ulid"))
       .withColumnsRenamed(Map("zero_count" -> "zero", "pos_idx" -> "idx",
         "pos_counts" -> "cnt", "hist_sum" -> "hsum", "custom_values" -> "_cv",
@@ -1107,45 +868,27 @@ object TsdbBlockStore {
     else "unknown"
   }
 
-  /** Sample tail for the flat hist row: (ts, schema, zero, idx,
-    * counts, sum, custom_values — empty for exponential schemas,
-    * neg_idx, neg_counts — empty for positive-only series,
-    * [reset_hint when `withHint`] — appended LAST so positional
-    * consumers stay stable). */
-  private def histDecoder(mint: Long, maxt: Long,
-      withHint: Boolean = false): ChunkDecoder[Array[Any]] = {
-    case (EncHistogram, data, deleted) =>
-      val c = ChunkencHistogram.decodeHistChunk(data, 0, data.length)
+  /** Sample tail for the flat hist row of `family`'s chunks: (ts,
+    * schema, zero, idx, counts, sum, custom_values — empty for
+    * exponential schemas, neg_idx, neg_counts — empty for
+    * positive-only series, [reset_hint when `withHint`] — appended
+    * LAST so positional consumers stay stable). */
+  private def histDecoder(family: HistFamily[_ <: AnyRef], mint: Long,
+      maxt: Long, withHint: Boolean = false): ChunkDecoder[Array[Any]] = {
+    case (enc, data, deleted) if enc == family.encoding =>
+      val c = family.decode(data, 0, data.length)
       val idx = ArrayData.toArrayData(ChunkencHistogram.bucketIndexes(c.posSpans))
       val nidx = ArrayData.toArrayData(ChunkencHistogram.bucketIndexes(c.negSpans))
       val cv = ArrayData.toArrayData(c.customValues)
       c.ts.indices.iterator
         .filter(i => keepTs(c.ts(i), mint, maxt, deleted))
-        .map(i => Array[Any](c.ts(i), c.schema, c.zeroCount(i),
-          idx, ArrayData.toArrayData(c.posBuckets(i)), c.sum(i), cv,
-          nidx, ArrayData.toArrayData(c.negBuckets(i))) ++
+        .map(i => Array[Any](c.ts(i), c.schema, c.zeroAt(i),
+          idx, ArrayData.toArrayData(c.posAt(i)), c.sum(i), cv,
+          nidx, ArrayData.toArrayData(c.negAt(i))) ++
           (if (withHint) Array[Any](UTF8String.fromString(sampleHint(c.flags, i)))
            else Array.empty[Any]))
-    case (EncXOR, _, _) | (EncFloatHistogram, _, _) => Iterator.empty
-    case (enc, _, _) =>
-      throw new IllegalArgumentException(s"unsupported chunk encoding $enc")
-  }
-
-  private def floatHistDecoder(mint: Long, maxt: Long,
-      withHint: Boolean = false): ChunkDecoder[Array[Any]] = {
-    case (EncFloatHistogram, data, deleted) =>
-      val c = ChunkencHistogram.decodeFloatHistChunk(data, 0, data.length)
-      val idx = ArrayData.toArrayData(ChunkencHistogram.bucketIndexes(c.posSpans))
-      val nidx = ArrayData.toArrayData(ChunkencHistogram.bucketIndexes(c.negSpans))
-      val cv = ArrayData.toArrayData(c.customValues)
-      c.ts.indices.iterator
-        .filter(i => keepTs(c.ts(i), mint, maxt, deleted))
-        .map(i => Array[Any](c.ts(i), c.schema, c.zeroCount(i),
-          idx, ArrayData.toArrayData(c.posBuckets(i)), c.sum(i), cv,
-          nidx, ArrayData.toArrayData(c.negBuckets(i))) ++
-          (if (withHint) Array[Any](UTF8String.fromString(sampleHint(c.flags, i)))
-           else Array.empty[Any]))
-    case (EncXOR, _, _) | (EncHistogram, _, _) => Iterator.empty
+    case (EncXOR, _, _) | (EncHistogram, _, _) | (EncFloatHistogram, _, _) =>
+      Iterator.empty
     case (enc, _, _) =>
       throw new IllegalArgumentException(s"unsupported chunk encoding $enc")
   }
@@ -1166,12 +909,8 @@ object TsdbBlockStore {
     import spark.implicits._
     val cols = labelCols.toIndexedSeq
     val decoder: ChunkDecoder[(Int, Long, Long, Int)] = {
-      case (EncHistogram, data, _) =>
-        val c = ChunkencHistogram.decodeHistChunk(data, 0, data.length)
-        if (c.ts.isEmpty) Iterator.empty
-        else Iterator.single((c.flags, c.ts.head, c.ts.last, c.ts.length))
-      case (EncFloatHistogram, data, _) =>
-        val c = ChunkencHistogram.decodeFloatHistChunk(data, 0, data.length)
+      case (enc, data, _) if enc == EncHistogram || enc == EncFloatHistogram =>
+        val c = HistFamily(enc == EncFloatHistogram).decode(data, 0, data.length)
         if (c.ts.isEmpty) Iterator.empty
         else Iterator.single((c.flags, c.ts.head, c.ts.last, c.ts.length))
       case (EncXOR, _, _) => Iterator.empty

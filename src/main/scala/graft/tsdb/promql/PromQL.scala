@@ -1045,29 +1045,40 @@ object PromQL {
       */
     private def rollupRangeVec(e: Expr): Option[RollupRangeVec] = e match {
       case r: Expr.Range =>
-        ctx.rollups.get(r.sel.metric).flatMap { layers =>
-          val at = resolveAt(r.sel.at)
-          def aligned(res: Long): Boolean =
-            r.rangeMs % res == 0 && ((grid, at) match {
-              case (Some(g), None) =>
-                (g.startMs - r.sel.offsetMs) % res == 0 && g.stepMs % res == 0
-              case (_, a) =>
-                (a.getOrElse(ctx.evalMs) - r.sel.offsetMs) % res == 0
-            })
-          layers
-            .filter(l => l.resolutionMs * 5 <= r.rangeMs &&
-              aligned(l.resolutionMs))
-            .sortBy(-_.resolutionMs).headOption
-            .map { layer =>
-              val wins = rangeRowsBy(r.sel, r.rangeMs, (s, e2) =>
-                graft.tsdb.RollupStore
-                  .select(sparkOf, layer.path, s, e2, r.sel.matchers)
-                  .withColumn(TS, col("window_ms")))
-              RollupRangeVec(wins, ctx.labelCols, r.rangeMs,
-                r.sel.offsetMs, at)
-            }
-        }
+        ctx.rollups.get(r.sel.metric)
+          .flatMap(routeLayer(_, r.sel, r.rangeMs))
+          .map { layer =>
+            val wins = rangeRowsBy(r.sel, r.rangeMs, (s, e2) =>
+              graft.tsdb.RollupStore
+                .select(sparkOf, layer.path, s, e2, r.sel.matchers)
+                .withColumn(TS, col("window_ms")))
+            RollupRangeVec(wins, ctx.labelCols, r.rangeMs,
+              r.sel.offsetMs, resolveAt(r.sel.at))
+          }
       case _ => None
+    }
+
+    /** The layer routing rule of [[rollupRangeVec]],
+      * [[sketchRangeVec]] and [[histRollupWins]]: the COARSEST of
+      * `layers` passing Thanos's eligibility rule resolution*5 ≤
+      * `rangeMs`, exact grid alignment — range, step and every
+      * element end all multiples of the resolution — and `accepts`
+      * (checked first), or None. */
+    private def routeLayer(layers: Seq[graft.tsdb.RollupStore.RollupLayer],
+        sel: Expr.Selector, rangeMs: Long,
+        accepts: Long => Boolean = _ => true)
+        : Option[graft.tsdb.RollupStore.RollupLayer] = {
+      val at = resolveAt(sel.at)
+      def aligned(res: Long): Boolean =
+        accepts(res) && rangeMs % res == 0 && ((grid, at) match {
+          case (Some(g), None) =>
+            (g.startMs - sel.offsetMs) % res == 0 && g.stepMs % res == 0
+          case (_, a) =>
+            (a.getOrElse(ctx.evalMs) - sel.offsetMs) % res == 0
+        })
+      layers
+        .filter(l => l.resolutionMs * 5 <= rangeMs && aligned(l.resolutionMs))
+        .sortBy(-_.resolutionMs).headOption
     }
 
     /** The quantile-sketch analog of [[rollupRangeVec]]: same
@@ -1078,28 +1089,16 @@ object PromQL {
       */
     private def sketchRangeVec(e: Expr): Option[RollupRangeVec] = e match {
       case r: Expr.Range =>
-        ctx.quantileSketches.get(r.sel.metric).flatMap { layers =>
-          val at = resolveAt(r.sel.at)
-          def aligned(res: Long): Boolean =
-            r.rangeMs % res == 0 && ((grid, at) match {
-              case (Some(g), None) =>
-                (g.startMs - r.sel.offsetMs) % res == 0 && g.stepMs % res == 0
-              case (_, a) =>
-                (a.getOrElse(ctx.evalMs) - r.sel.offsetMs) % res == 0
-            })
-          layers
-            .filter(l => l.resolutionMs * 5 <= r.rangeMs &&
-              aligned(l.resolutionMs))
-            .sortBy(-_.resolutionMs).headOption
-            .map { layer =>
-              val wins = rangeRowsBy(r.sel, r.rangeMs, (s, e2) =>
-                graft.tsdb.QuantileSketchStore
-                  .select(sparkOf, layer.path, s, e2, r.sel.matchers)
-                  .withColumn(TS, col("window_ms")))
-              RollupRangeVec(wins, ctx.labelCols, r.rangeMs,
-                r.sel.offsetMs, at)
-            }
-        }
+        ctx.quantileSketches.get(r.sel.metric)
+          .flatMap(routeLayer(_, r.sel, r.rangeMs))
+          .map { layer =>
+            val wins = rangeRowsBy(r.sel, r.rangeMs, (s, e2) =>
+              graft.tsdb.QuantileSketchStore
+                .select(sparkOf, layer.path, s, e2, r.sel.matchers)
+                .withColumn(TS, col("window_ms")))
+            RollupRangeVec(wins, ctx.labelCols, r.rangeMs,
+              r.sel.offsetMs, resolveAt(r.sel.at))
+          }
       case _ => None
     }
 
@@ -1736,24 +1735,13 @@ object PromQL {
       */
     private def histRollupWins(sel: Expr.Selector, ht: HistTable,
         rangeMs: Long): Option[DataFrame] = {
-      if (ht.rollups.isEmpty) return None
-      val at = resolveAt(sel.at)
       // the select below converts the ms span to the layer's
       // whole-second window grain, so a layer whose resolution is
       // not a whole-second multiple must never pass eligibility
       // (truncating division would silently shift its bounds), and
       // the conversion itself floors — pre-epoch spans must round
       // toward -∞, not toward zero
-      def aligned(res: Long): Boolean =
-        res % 1000L == 0 && rangeMs % res == 0 && ((grid, at) match {
-          case (Some(g), None) =>
-            (g.startMs - sel.offsetMs) % res == 0 && g.stepMs % res == 0
-          case (_, a) =>
-            (a.getOrElse(ctx.evalMs) - sel.offsetMs) % res == 0
-        })
-      ht.rollups
-        .filter(l => l.resolutionMs * 5 <= rangeMs && aligned(l.resolutionMs))
-        .sortBy(-_.resolutionMs).headOption
+      routeLayer(ht.rollups, sel, rangeMs, _ % 1000L == 0)
         .map { layer =>
           rangeRowsBy(sel, rangeMs, (s, e) =>
             graft.tsdb.HistRollupStore

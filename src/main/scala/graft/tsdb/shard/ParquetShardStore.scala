@@ -147,10 +147,8 @@ object ParquetShardStore {
       samplesPerChunk: Int, customValues: Seq[Double],
       gauge: Boolean): SliceEncoder = {
     val cv = customValues.toArray
-    if (float) (samples, from, until) => ChunkencHistCodec.encodeFloatArrayData(
-      samples, from, until, histSchema, samplesPerChunk, cv, gauge, exactLayout = false)
-    else (samples, from, until) => ChunkencHistCodec.encodeArrayData(
-      samples, from, until, histSchema, samplesPerChunk, cv, gauge, exactLayout = false)
+    (samples, from, until) => ChunkencHistCodec.encodeArrayData(samples, from,
+      until, histSchema, samplesPerChunk, cv, gauge, exactLayout = false, float)
   }
 
   /** [[write]] for NATIVE-HISTOGRAM series (`zeroCol` long; `idxCol`

@@ -151,7 +151,7 @@ class ChunkCodecSpec extends AnyFunSuite {
         ("histogram", ChunkCodec.EncHistogram, hist,
           ChunkencHistCodec.decodeToArrayData(_, 0L, Long.MaxValue)),
         ("float histogram", ChunkCodec.EncFloatHistogram, floatHist,
-          ChunkencHistCodec.decodeFloatToArrayData(_, 0L, Long.MaxValue)))) {
+          ChunkencHistCodec.decodeToArrayData(_, 0L, Long.MaxValue, float = true)))) {
       // a 0-byte first frame, then a valid one: the first chunk must not
       // read its neighbour's header as its sample count
       val valid = frame(enc, body)

@@ -573,7 +573,7 @@ class HistChunkCodecSpec extends SparkSpec {
         ChunkCodec.decodeBlob(_, 1L, Long.MaxValue),
         ChunkCodec.frameFamilyMask,
         ChunkencHistCodec.decodeToArrayData(_, 1L, Long.MaxValue),
-        ChunkencHistCodec.decodeFloatToArrayData(_, 1L, Long.MaxValue))) {
+        ChunkencHistCodec.decodeToArrayData(_, 1L, Long.MaxValue, float = true))) {
       val e = intercept[GraftFormatException](decode(cell))
       assert(e.getMessage.contains("encoding 9 in the frame at byte 4"), e.getMessage)
     }

@@ -3,7 +3,9 @@ package graft.golden
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
-import graft.tsdb.ChunkCodec
+import org.apache.spark.sql.catalyst.util.ArrayData
+
+import graft.tsdb.{ChunkCodec, ChunkencHistCodec}
 import graft.tsdb.block.{ChunkencHistogram => CH, TsdbBlockFormat => F, TsdbBlockStore}
 
 /** Regression anchor against IMMUTABLE committed bytes
@@ -354,6 +356,69 @@ class GoldenBytesSpec extends AnyFunSuite {
         e.posBuckets(i).toSeq.map(java.lang.Double.doubleToRawLongBits))
       assert(java.lang.Double.doubleToRawLongBits(r.getDouble(6)) ==
         java.lang.Double.doubleToRawLongBits(e.sum(i)))
+    }
+  }
+
+  test("histogram cells of both families are byte-identical to the committed fixtures") {
+    for (v <- GoldenData.ladderVariants; float <- Seq(false, true);
+         exact <- Seq(false, true)) {
+      val name = GoldenData.ladderCellName(v, float, exact)
+      assert(GoldenData.ladderCellBytes(v, float, exact).toSeq ==
+        committed(name).toSeq, s"writer drift in $name")
+    }
+  }
+
+  private def decodeCell(b: Array[Byte], float: Boolean): ArrayData =
+    ChunkencHistCodec.decodeToArrayData(b, Long.MinValue, Long.MaxValue, float = float)
+
+  test("exact-layout cells decode from committed bytes to the samples written") {
+    for (v <- GoldenData.ladderVariants; float <- Seq(false, true)) {
+      val name = GoldenData.ladderCellName(v, float, exactLayout = true)
+      val got = decodeCell(committed(name), float)
+      val want = GoldenData.ladderSamples(v, float)
+      assert(got.numElements() == want.numElements(), name)
+      def counts(a: ArrayData): Seq[Long] =
+        if (float) raw(a.toDoubleArray()) else a.toLongArray().toSeq
+      for (i <- 0 until want.numElements()) {
+        val g = got.getStruct(i, 9)
+        val w = want.getStruct(i, 7)
+        val zero = (r: org.apache.spark.sql.catalyst.InternalRow) =>
+          if (float) java.lang.Double.doubleToRawLongBits(r.getDouble(1))
+          else r.getLong(1)
+        assert(g.getLong(0) == w.getLong(0), s"$name ts $i")
+        assert(zero(g) == zero(w), s"$name zero $i")
+        assert(g.getArray(2).toIntArray().toSeq == w.getArray(2).toIntArray().toSeq,
+          s"$name idx $i")
+        assert(counts(g.getArray(3)) == counts(w.getArray(3)), s"$name cnt $i")
+        assert(java.lang.Double.doubleToRawLongBits(g.getDouble(4)) ==
+          java.lang.Double.doubleToRawLongBits(
+            if (w.isNullAt(4)) Double.NaN else w.getDouble(4)), s"$name sum $i")
+        assert(g.getInt(5) == GoldenData.ladderSchema(v), s"$name schema $i")
+        assert(g.getArray(7).toIntArray().toSeq == w.getArray(5).toIntArray().toSeq,
+          s"$name nidx $i")
+        assert(counts(g.getArray(8)) == counts(w.getArray(6)), s"$name ncnt $i")
+      }
+    }
+  }
+
+  test("hist and float-hist block writers are byte-identical to the committed dirs") {
+    val spark = SparkTestBase.spark
+    for ((name, float) <- Seq("histwriterblock" -> false,
+        "floathistwriterblock" -> true)) {
+      val tmp = java.nio.file.Files
+        .createTempDirectory("golden_ladder_regen").toFile
+      try {
+        val ulids = GoldenData.writeLadderBlock(spark, tmp.getPath, float)
+        val want = Option(new java.io.File(root, name).listFiles())
+          .getOrElse(Array.empty).map(_.getName).sorted.toSeq
+        assert(want.length == 1 && ulids == want, s"ULID drift in $name")
+        for (f <- Seq("index", "meta.json", "tombstones", "chunks/000001")) {
+          val got = java.nio.file.Files.readAllBytes(
+            new java.io.File(tmp, s"${want.head}/$f").toPath)
+          assert(got.toSeq == committed(s"$name/${want.head}/$f").toSeq,
+            s"writer drift in $name/$f")
+        }
+      } finally graft.tools.Fs.deleteRecursively(tmp)
     }
   }
 }

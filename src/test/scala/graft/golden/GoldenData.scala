@@ -1,7 +1,12 @@
 package graft.golden
 
-import graft.tsdb.ChunkCodec
-import graft.tsdb.block.{ChunkencHistogram => CH, TsdbBlockFormat => F}
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types._
+
+import graft.tsdb.{ChunkCodec, ChunkencHistCodec}
+import graft.tsdb.block.{ChunkencHistogram => CH, TsdbBlockFormat => F, TsdbBlockStore}
 
 /** The ONE definition of every golden fixture's content AND its
   * writer-produced bytes. The committed files under
@@ -305,6 +310,148 @@ object GoldenData {
       numChunks = 1)
     F.writeEmptyTombstones(dir)
   }
+
+  // ---- the histogram appender's writers: shard cells and blocks ----
+
+  /** `samplesPerChunk` of the ladder cells and blocks: small, so the
+    * ladder below hits cap cuts. */
+  val ladderCap = 4
+
+  /** NHCB bound list of the ladder's custom-bucket variant (indexes
+    * 0..3, 3 the +Inf overflow). */
+  val ladderBounds: Array[Double] = Array(0.25, 1.0, 4.0)
+
+  /** The appender's cut-ladder input, one (zero, idx, cnt, sum) per
+    * sample, 15 s apart. With `samplesPerChunk` = [[ladderCap]] it
+    * hits: a layout change (s1, bucket 2 appears), a null sum (s2), a
+    * cap cut (s4), a zero-count drop (s5), a bucket decrease (s6), a
+    * bucket vanishing (s7), a layout change (s9), a reset landing
+    * exactly on a cap boundary (s11; under `exactLayout` s5 lands on
+    * one) and a closing cap cut (s15). */
+  private val ladder: Seq[(Long, Array[Int], Array[Long], java.lang.Double)] = Seq(
+    (1L, Array(0, 1), Array(2L, 3L), 1.5),
+    (2L, Array(0, 1, 2), Array(3L, 4L, 1L), 2.5),
+    (2L, Array(0, 1, 2), Array(4L, 5L, 2L), null),
+    (3L, Array(0, 1, 2), Array(5L, 6L, 3L), 4.0),
+    (3L, Array(0, 1, 2), Array(6L, 7L, 4L), 5.0),
+    (1L, Array(0, 1, 2), Array(6L, 7L, 4L), 5.5),
+    (1L, Array(0, 1, 2), Array(1L, 7L, 4L), 6.0),
+    (2L, Array(0, 2), Array(2L, 5L), 7.0),
+    (3L, Array(0, 2), Array(3L, 6L), 8.0),
+    (4L, Array(0, 2, 3), Array(4L, 7L, 1L), 9.0),
+    (5L, Array(0, 2, 3), Array(5L, 8L, 2L), 10.0),
+    (0L, Array(0, 2, 3), Array(1L, 1L, 1L), 0.5),
+    (1L, Array(0, 2, 3), Array(2L, 2L, 2L), 1.0),
+    (2L, Array(0, 2, 3), Array(3L, 3L, 3L), 1.5),
+    (3L, Array(0, 2, 3), Array(4L, 4L, 4L), 2.0),
+    (4L, Array(0, 2, 3), Array(5L, 5L, 5L), 2.5))
+
+  /** The signed variant's negative side: bucket 3 appears at s3 (a
+    * negative-only layout change) and bucket 1 drops at s13 (a
+    * negative-only reset). */
+  private def ladderNeg(i: Int): (Array[Int], Array[Long]) =
+    if (i < 3) (Array(1), Array(i + 1L))
+    else if (i == 13) (Array(1, 3), Array(1L, 1L))
+    else (Array(1, 3), Array(i + 1L, i.toLong))
+
+  /** Float counts of the ladder: affine, so every decrease survives,
+    * and fractional, so the totals depend on summation order. */
+  private def floatCount(c: Long): Double = c * 0.5 + 0.1
+
+  val ladderVariants: Seq[String] = Seq("base", "signed", "nhcb", "gauge")
+
+  def ladderSchema(variant: String): Int = variant match {
+    case "nhcb" => CH.CustomBucketsSchema
+    case "signed" => 1
+    case _ => 0
+  }
+
+  /** The ladder as sample structs of [[ChunkencHistCodec]]'s cells:
+    * (ts, zero, idx, cnt, sum, nidx, ncnt), double counts when
+    * `float`. NHCB samples carry a zero zero count, unsigned ones
+    * empty negative arrays. */
+  def ladderSamples(variant: String, float: Boolean): ArrayData = {
+    def counts(a: Array[Long]): ArrayData =
+      if (float) new GenericArrayData(a.map(floatCount))
+      else new GenericArrayData(a)
+    new GenericArrayData(ladder.zipWithIndex.map { case ((z, idx, cnt, sum), i) =>
+      val zero: Any =
+        if (variant == "nhcb") (if (float) 0.0 else 0L)
+        else if (float) floatCount(z) else z
+      val (nidx, ncnt) =
+        if (variant == "signed") ladderNeg(i) else (Array.empty[Int], Array.empty[Long])
+      InternalRow(1704067200000L + 15000L * i, zero, new GenericArrayData(idx),
+        counts(cnt), sum, new GenericArrayData(nidx), counts(ncnt))
+    }.toArray[Any])
+  }
+
+  /** One [[ChunkencHistCodec]] cell of the ladder. */
+  def ladderCellBytes(variant: String, float: Boolean,
+      exactLayout: Boolean): Array[Byte] = {
+    val cv = if (variant == "nhcb") ladderBounds else Array.empty[Double]
+    val gauge = variant == "gauge"
+    val s = ladderSamples(variant, float)
+    ChunkencHistCodec.encodeArrayData(s, ladderSchema(variant), ladderCap, cv,
+      gauge, exactLayout, float)
+  }
+
+  def ladderCellName(variant: String, float: Boolean,
+      exactLayout: Boolean): String =
+    s"cells/${if (float) "float" else "int"}_$variant" +
+      s"${if (exactLayout) "_exact" else ""}.bin"
+
+  /** Per-sample reset hints of the ladder blocks: s2 is a header-only
+    * reset (its values grow), s6's value reset is overridden by
+    * `not_counter_reset` and s11's (on a cap boundary) by `gauge`. */
+  private def ladderHint(i: Int): String = i match {
+    case 2 => "counter_reset"
+    case 6 => "not_counter_reset"
+    case 11 => "gauge"
+    case _ => "unknown"
+  }
+
+  /** Write the signed ladder (series `job="ladder"`, with
+    * [[ladderHint]]'s hints; its null sum written as 0.75) plus a
+    * 3-sample series `job="short"` as one block under `root`, through
+    * `writeHist`, or `writeFloatHist` when `float`. */
+  def writeLadderBlock(spark: SparkSession, root: String,
+      float: Boolean): Seq[String] = {
+    val count = if (float) DoubleType else LongType
+    val schema = StructType(Seq(
+      StructField("__name__", StringType), StructField("job", StringType),
+      StructField("ts", LongType), StructField("zero", count),
+      StructField("idx", ArrayType(IntegerType)),
+      StructField("cnt", ArrayType(count)), StructField("sum", DoubleType),
+      StructField("nidx", ArrayType(IntegerType)),
+      StructField("ncnt", ArrayType(count)), StructField("hint", StringType)))
+    def counts(a: Array[Long]): Seq[Any] =
+      if (float) a.toSeq.map(floatCount) else a.toSeq
+    val signed = ladderSamples("signed", float)
+    val rows = (0 until signed.numElements()).map { i =>
+      val s = signed.getStruct(i, 7)
+      val (z, idx, cnt, sum) = ladder(i)
+      val (nidx, ncnt) = ladderNeg(i)
+      Row("golden_ladder", "ladder", s.getLong(0),
+        if (float) floatCount(z) else z, idx.toSeq, counts(cnt),
+        if (sum == null) 0.75 else sum.doubleValue, nidx.toSeq, counts(ncnt),
+        ladderHint(i))
+    } ++ (0 until 3).map { i =>
+      Row("golden_ladder", "short", 1704067200000L + 20000L * i,
+        if (float) floatCount(i) else i.toLong, Seq(0), counts(Array(i + 1L)),
+        i * 1.25, Seq.empty[Int], Seq.empty[Any], "unknown")
+    }
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 2), schema)
+    val labels = Seq("__name__", "job")
+    if (float) TsdbBlockStore.writeFloatHist(df, root, labels, "ts", "zero",
+      "idx", "cnt", "sum", schema = 1, samplesPerChunk = ladderCap,
+      negIdxCol = Some("nidx"), negCountsCol = Some("ncnt"),
+      resetHintCol = Some("hint"))
+    else TsdbBlockStore.writeHist(df, root, labels, "ts", "zero",
+      "idx", "cnt", "sum", schema = 1, samplesPerChunk = ladderCap,
+      negIdxCol = Some("nidx"), negCountsCol = Some("ncnt"),
+      resetHintCol = Some("hint"))
+  }
 }
 
 /** Regenerates `src/test/resources/golden/` from [[GoldenData]].
@@ -346,5 +493,17 @@ object GoldenGen {
     if (signedRoot.exists()) graft.tools.Fs.deleteRecursively(signedRoot)
     GoldenData.writeGoldenSignedBlock(new java.io.File(signedRoot, "block"))
     println("golden signed block dir written")
+    new java.io.File(root, "cells").mkdirs()
+    for (v <- GoldenData.ladderVariants; float <- Seq(false, true);
+         exact <- Seq(false, true))
+      put(GoldenData.ladderCellName(v, float, exact),
+        GoldenData.ladderCellBytes(v, float, exact))
+    for ((name, float) <- Seq("histwriterblock" -> false,
+        "floathistwriterblock" -> true)) {
+      val dir = new java.io.File(root, name)
+      if (dir.exists()) graft.tools.Fs.deleteRecursively(dir)
+      GoldenData.writeLadderBlock(graft.SparkTestBase.spark, dir.getPath, float)
+      println(s"golden $name dir written")
+    }
   }
 }
