@@ -118,7 +118,9 @@ object TsdbBlockStore {
     * optional per-sample reset-hint column: an explicit hint
     * (compaction re-writing hinted reads) beats value comparison — the
     * same ladder the query fold runs, so header-only resets survive a
-    * rewrite. */
+    * rewrite. A null hint reads as `unknown`, what
+    * `readHistLabels(withResetHint = true)` gives a chunk with no
+    * header. */
   private final class HistSampleBuf[A <: AnyRef](family: HistFamily[A],
       tsIdx: Int, zeroIdx: Int, idxIdx: Int, cntIdx: Int, sumIdx: Int,
       schema: Int, zeroThreshold: Double, gauge: Boolean, cap: Int,
@@ -132,7 +134,7 @@ object TsdbBlockStore {
     private def negCnt(r: InternalRow): A =
       if (hasNeg) family.counts(r.getArray(negCntIdx)) else family.noCounts
     private def hint(r: InternalRow): Int =
-      if (hintIdx < 0) ChunkencHistogram.UnknownCounterReset
+      if (hintIdx < 0 || r.isNullAt(hintIdx)) ChunkencHistogram.UnknownCounterReset
       else r.getUTF8String(hintIdx).toString match {
         case "counter_reset" => ChunkencHistogram.CounterReset
         case "not_counter_reset" => ChunkencHistogram.NotCounterReset

@@ -528,6 +528,48 @@ class TsdbBlockHistSpec extends AnyFunSuite {
     } finally { deleteRec(root); deleteRec(out) }
   }
 
+  test("a null reset hint writes as unknown in both histogram families") {
+    import spark.implicits._
+    // the counts drop at i = 3, so the values alone cut a
+    // CounterReset chunk there
+    val samples = (0 until 6).map { i =>
+      val c = if (i >= 3) i - 2 else (i + 1) * 2
+      ("api", i * 60000L, Seq(1, 2), Seq(c, c + 1), i * 0.5)
+    }
+    def write(float: Boolean, secondHint: Option[String]): Seq[Seq[Any]] = {
+      val root = java.nio.file.Files.createTempDirectory("graft_nhnull").toFile
+      try {
+        val rows = samples.map { case (job, ts, idx, cnt, hsum) =>
+          (job, ts, idx, cnt, hsum,
+            if (ts == 60000L) secondHint else Some("unknown"))
+        }
+        if (float) TsdbBlockStore.writeFloatHist(
+          rows.map { case (j, ts, idx, cnt, h, hint) =>
+            (j, ts, 0.0, idx, cnt.map(_.toDouble), h, hint)
+          }.toDF("job", "ts", "zero", "idx", "cnt", "hsum", "hint"),
+          root.getPath, Seq("job"), "ts", "zero", "idx", "cnt", "hsum",
+          samplesPerChunk = 120, resetHintCol = Some("hint"))
+        else TsdbBlockStore.writeHist(
+          rows.map { case (j, ts, idx, cnt, h, hint) =>
+            (j, ts, 0L, idx, cnt.map(_.toLong), h, hint)
+          }.toDF("job", "ts", "zero", "idx", "cnt", "hsum", "hint"),
+          root.getPath, Seq("job"), "ts", "zero", "idx", "cnt", "hsum",
+          samplesPerChunk = 120, resetHintCol = Some("hint"))
+        val back =
+          if (float) TsdbBlockStore.readFloatHistLabels(spark, root.getPath, Seq("job"))
+          else TsdbBlockStore.readHistLabels(spark, root.getPath, Seq("job"))
+        val headers = TsdbBlockStore.histChunkHeaders(spark, root.getPath, Seq("job"))
+        (back.orderBy("ts").collect() ++ headers.orderBy("chunk_mint").collect())
+          .map(_.toSeq).toSeq
+      } finally deleteRec(root)
+    }
+    for (float <- Seq(false, true)) {
+      val hinted = write(float, Some("unknown"))
+      assert(hinted.exists(_.contains("counter_reset")), s"float=$float")
+      assert(write(float, None) == hinted, s"float=$float")
+    }
+  }
+
   test("mixed directories: each family's reader sees only its chunks") {
     val root = java.nio.file.Files.createTempDirectory("graft_nhx").toFile
     try {
